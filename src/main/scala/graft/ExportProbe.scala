@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical export-sizing probe (dev tool, like ScaleProbe): builds
@@ -20,14 +19,7 @@ object ExportProbe {
       if (args.length > 0 && args(0) != "skew") args(0).toInt else 1000
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val work = if (args.length > 2) args(2) else "/tmp/graft-export-probe"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def rmr(p: String): Unit = {
       val d = new java.io.File(p)

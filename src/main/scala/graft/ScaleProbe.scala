@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops._
 
@@ -34,14 +34,7 @@ object ScaleProbe {
     val replicas = if (a.length > 0) a(0).toInt else 20
     val degenerate = if (a.length > 1) a(1).toInt else 5000
     val sfDir = if (a.length > 2) a(2) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
@@ -540,9 +533,9 @@ object ScaleProbe {
     // ------------------------------------------------ time-series family
     // replicate events across disjoint user-id spaces: same per-user
     // density, replicas x more keys — the window partitions independently
-    // events.ts is TIMESTAMP(NANOS) parquet — read via the long path and
-    // truncate to micros exactly like SparkEntry.t
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // events.ts is TIMESTAMP(NANOS) parquet — read via the long path
+    // (GraftSession sets nanosAsLong) and truncate to micros exactly
+    // like SparkEntry.t
     val evRaw = spark.read.parquet(s"$sfDir/events.parquet")
     val evBase = (if (evRaw.schema("ts").dataType ==
         org.apache.spark.sql.types.LongType)

@@ -16,15 +16,17 @@ object RunAll {
     require(args.length >= 3,
       "usage: runMain graft.pipelines.RunAll <inputDir> <warehouseDir> <runDate>")
     val Array(inputDir, outDir, runDate) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
+    try {
+      val alerts = run(spark, inputDir, outDir, runDate)
+      println(s"[runall] wrote warehouse to $outDir (alerts: ${alerts.size})")
+    } finally spark.stop()
+  }
 
+  /** One daily tick: all eight jobs over `inputDir` into the warehouse
+    * at `outDir`; returns the alerts the jobs raised. */
+  def run(spark: SparkSession, inputDir: String, outDir: String,
+      runDate: String): Seq[String] = {
     val alerts = scala.collection.mutable.ListBuffer.empty[String]
     val alert: Pipelines.Alert = m => { alerts += m; System.err.println(s"[alert] $m") }
 
@@ -49,8 +51,10 @@ object RunAll {
 
     // E2 Screaming Frog HTML (K3: slim append + content append + content
     // replace) — only `content` is written twice, so only it persists
-    val (slim, content) = Pipelines.sfHtml(
-      Pipelines.readCsv(spark, in("internal_html.csv")), runDate, alert = alert)
+    // the raw frame is bound once: it also feeds the images job below,
+    // and each read would pay a schema-inference pass over the file
+    val rawHtml = Pipelines.readCsv(spark, in("internal_html.csv"))
+    val (slim, content) = Pipelines.sfHtml(rawHtml, runDate, alert = alert)
     content.persist()
     try {
       Pipelines.appendDaily(slim, s"$outDir/html_slim")
@@ -80,7 +84,6 @@ object RunAll {
     // images: crawler image export ∪ picture rows from the RAW html export
     // (sfHtml's outputs have already dropped Picture rows, so the picture
     // side comes from the raw frame, like the reference's sf_images script)
-    val rawHtml = Pipelines.readCsv(spark, in("internal_html.csv"))
     val htmlPictures = rawHtml
       .filter(graft.ops.Urls.doctype(
         org.apache.spark.sql.functions.col("Address"),
@@ -99,8 +102,6 @@ object RunAll {
       Pipelines.hreflang(Pipelines.readCsv(spark,
         in("hreflang_non200_hreflang_urls.csv")), runDate),
       s"$outDir/hreflang_non200")
-
-    println(s"[runall] wrote warehouse to $outDir (alerts: ${alerts.size})")
-    spark.stop()
+    alerts.toList
   }
 }

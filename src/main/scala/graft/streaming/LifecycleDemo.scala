@@ -54,14 +54,7 @@ object LifecycleDemo {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: runMain graft.streaming.LifecycleDemo <docsJsonl> <rootDir>")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     try run(spark, args(0), args(1))
     finally spark.stop()
   }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 
 /** Structured Streaming view of the engine (SURVEY §2.11).
   *
@@ -310,6 +310,18 @@ object Streaming {
         ()
       }
 
+  /** The Append-mode micro-batch writer every store sink shares: each
+    * non-empty batch goes to `f` with its batch id. No-data batches
+    * (watermark advancement) must not touch the store. */
+  private def batchSink(input: DataFrame, checkpoint: String)(
+      f: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    input.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) f(batch, batchId)
+      }
+
   /** Maintain an upsert table from a change stream: each micro-batch is
     * merged into the key-hash-bucketed parquet table at `tablePath`
     * with [[graft.ops.Warehouse.mergeCdcBucketed]] — sequence-first
@@ -332,16 +344,10 @@ object Streaming {
   def cdcSink(changes: DataFrame, tablePath: String, checkpoint: String,
               keyCols: Seq[String], seqCols: Seq[String],
               isDelete: org.apache.spark.sql.Column, nBuckets: Int = 64) =
-    changes.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.ops.Warehouse.mergeCdcBucketed(batch.sparkSession,
-            tablePath, batch, keyCols, seqCols, isDelete, nBuckets)
-        }
-        ()
-      }
+    batchSink(changes, checkpoint) { (batch, _) =>
+      graft.ops.Warehouse.mergeCdcBucketed(batch.sparkSession,
+        tablePath, batch, keyCols, seqCols, isDelete, nBuckets)
+    }
 
   /** Incrementally-maintained BM25 term statistics over a document
     * stream — the corpus-refresh story for [[graft.ops.Retrieval]]:
@@ -374,14 +380,9 @@ object Streaming {
     * never re-read. */
   def termStatsSink(docs: DataFrame, idCol: String, textCol: String,
                     statsDir: String, checkpoint: String) =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          mergeTermStatsBatch(batch, idCol, textCol, statsDir, batchId)
-        ()
-      }
+    batchSink(docs, checkpoint) { (batch, batchId) =>
+      mergeTermStatsBatch(batch, idCol, textCol, statsDir, batchId)
+    }
 
   private type HPath = org.apache.hadoop.fs.Path
 
@@ -487,15 +488,10 @@ object Streaming {
   def sourceStatsSink(docs: DataFrame, sourceCol: String,
                       tokensExpr: Column, statsDir: String,
                       checkpoint: String) =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          mergeSourceStatsBatch(batch, sourceCol, tokensExpr, statsDir,
-            batchId)
-        ()
-      }
+    batchSink(docs, checkpoint) { (batch, batchId) =>
+      mergeSourceStatsBatch(batch, sourceCol, tokensExpr, statsDir,
+        batchId)
+    }
 
   /** Strip Catalyst's fresh lambda-variable ids from a rendered
     * expression before fingerprint comparison. The Scala functions API
@@ -642,14 +638,9 @@ object Streaming {
   def benchmarkIndexSink(docs: DataFrame, textCol: String,
                          statsDir: String, checkpoint: String,
                          n: Int = 8) =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          mergeBenchmarkNgramBatch(batch, textCol, statsDir, batchId, n)
-        ()
-      }
+    batchSink(docs, checkpoint) { (batch, batchId) =>
+      mergeBenchmarkNgramBatch(batch, textCol, statsDir, batchId, n)
+    }
 
   private[graft] def mergeBenchmarkNgramBatch(batch: DataFrame,
       textCol: String, statsDir: String, batchId: Long,
@@ -810,17 +801,12 @@ object Streaming {
   def dsirStatsSink(docs: DataFrame, idCol: String, textCol: String,
                     isTarget: org.apache.spark.sql.Column, statsDir: String,
                     checkpoint: String, buckets: Int = 64) =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          mergeStoreBatch(statsDir, batchId, Seq(
-            StorePart("lm", Seq("bucket"), Seq("ct", "cr")) ->
-              graft.ops.Retrieval.dsirCounts(
-                batch, idCol, textCol, isTarget, buckets)))
-        ()
-      }
+    batchSink(docs, checkpoint) { (batch, batchId) =>
+      mergeStoreBatch(statsDir, batchId, Seq(
+        StorePart("lm", Seq("bucket"), Seq("ct", "cr")) ->
+          graft.ops.Retrieval.dsirCounts(
+            batch, idCol, textCol, isTarget, buckets)))
+    }
 
   /** Continuously-ingested corpus dedup against an UNBOUNDED
     * persistent history — the complement of
@@ -849,15 +835,10 @@ object Streaming {
                      indexDir: String, checkpoint: String,
                      numHashes: Int = 8, bands: Int = 4,
                      shingleSize: Int = 3) =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          mergeDedupIndexBatch(batch, textCol, idCol, indexDir, batchId,
-            numHashes, bands, shingleSize)
-        ()
-      }
+    batchSink(docs, checkpoint) { (batch, batchId) =>
+      mergeDedupIndexBatch(batch, textCol, idCol, indexDir, batchId,
+        numHashes, bands, shingleSize)
+    }
 
   /** Number of `bh=` hash buckets each batch directory is partitioned
     * into, and the bucketing function — MUST match between write and
@@ -963,15 +944,10 @@ object Streaming {
                        indexDir: String, checkpoint: String,
                        dfTable: DataFrame, n: Int = 3,
                        minJaccard: Double = 0.5) =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          mergeJaccardIndexBatch(batch, textCol, idCol, indexDir,
-            batchId, dfTable, n, minJaccard)
-        ()
-      }
+    batchSink(docs, checkpoint) { (batch, batchId) =>
+      mergeJaccardIndexBatch(batch, textCol, idCol, indexDir,
+        batchId, dfTable, n, minJaccard)
+    }
 
   private[graft] def jaccardPrefixBucket(h: Column): Column =
     pmod(crc32(h), lit(DedupIndexBuckets)).cast("int")
@@ -1177,16 +1153,11 @@ object Streaming {
                          shingleSize: Int = 3,
                          benchmarkDir: Option[String] = None,
                          deconMinHits: Long = 1L) =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          curationIngestBatch(batch, textCol, idCol, rootDir, batchId,
-            minQuality, lenLo, lenHi, numHashes, bands, shingleSize,
-            benchmarkDir, deconMinHits)
-        ()
-      }
+    batchSink(docs, checkpoint) { (batch, batchId) =>
+      curationIngestBatch(batch, textCol, idCol, rootDir, batchId,
+        minQuality, lenLo, lenHi, numHashes, bands, shingleSize,
+        benchmarkDir, deconMinHits)
+    }
 
   /** The corpus's schema-evolution POLICY: a batch whose columns
     * diverge from the standing corpus is REJECTED before any effect.
@@ -3634,16 +3605,11 @@ object Streaming {
       minJaccard: Double = 0.5,
       benchmarkDir: Option[String] = None,
       deconMinHits: Long = 1L) =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          curationIngestBatchExact(batch, textCol, idCol, rootDir,
-            batchId, minQuality, lenLo, lenHi, dfTable, n, minJaccard,
-            benchmarkDir, deconMinHits)
-        ()
-      }
+    batchSink(docs, checkpoint) { (batch, batchId) =>
+      curationIngestBatchExact(batch, textCol, idCol, rootDir,
+        batchId, minQuality, lenLo, lenHi, dfTable, n, minJaccard,
+        benchmarkDir, deconMinHits)
+    }
 
   private[graft] def curationIngestBatchExact(batch: DataFrame,
       textCol: String, idCol: String, rootDir: String, batchId: Long,
@@ -3700,15 +3666,10 @@ object Streaming {
   def hashIndexSink(rows: DataFrame, hashCol: String, idCol: String,
                     indexDir: String, checkpoint: String,
                     bits: Int = 64, bands: Int = 8, maxHamming: Int = 3) =
-    rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          mergeHashIndexBatch(batch, hashCol, idCol, indexDir, batchId,
-            bits, bands, maxHamming)
-        ()
-      }
+    batchSink(rows, checkpoint) { (batch, batchId) =>
+      mergeHashIndexBatch(batch, hashCol, idCol, indexDir, batchId,
+        bits, bands, maxHamming)
+    }
 
   /** Bucketing of hash-band index rows into `hb=` dirs — a layout
     * constant shared by write and probe, like [[dedupIndexBucket]]. */
@@ -3791,20 +3752,15 @@ object Streaming {
   def vectorIndexSink(vectors: DataFrame, embCol: String, idCol: String,
                       centroids: DataFrame, indexDir: String,
                       checkpoint: String) =
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          withStoreLock(batch.sparkSession, Seq(indexDir)) {
-            healCompactRoot(batch.sparkSession, indexDir)
-            graft.ops.Similarity.assignToCentroids(
-                batch, embCol, idCol, centroids)
-              .write.mode("overwrite").partitionBy("cluster")
-              .parquet(s"$indexDir/batch=$batchId")
-          }
-        ()
+    batchSink(vectors, checkpoint) { (batch, batchId) =>
+      withStoreLock(batch.sparkSession, Seq(indexDir)) {
+        healCompactRoot(batch.sparkSession, indexDir)
+        graft.ops.Similarity.assignToCentroids(
+            batch, embCol, idCol, centroids)
+          .write.mode("overwrite").partitionBy("cluster")
+          .parquet(s"$indexDir/batch=$batchId")
       }
+    }
 
   /** The PQ variant of [[vectorIndexSink]]: per micro-batch, assign
     * vectors to their coarse centroid AND encode them against a fixed
@@ -3827,20 +3783,15 @@ object Streaming {
                   m: Int, dim: Int,
                   indexDir: String, checkpoint: String,
                   residual: Boolean = false) =
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          withStoreLock(batch.sparkSession, Seq(indexDir)) {
-            healCompactRoot(batch.sparkSession, indexDir)
-            encodePqRows(batch, embCol, idCol, centroids, codebook,
-                m, dim, residual)
-              .write.mode("overwrite").partitionBy("cluster")
-              .parquet(s"$indexDir/batch=$batchId")
-          }
-        ()
+    batchSink(vectors, checkpoint) { (batch, batchId) =>
+      withStoreLock(batch.sparkSession, Seq(indexDir)) {
+        healCompactRoot(batch.sparkSession, indexDir)
+        encodePqRows(batch, embCol, idCol, centroids, codebook,
+            m, dim, residual)
+          .write.mode("overwrite").partitionBy("cluster")
+          .parquet(s"$indexDir/batch=$batchId")
       }
+    }
 
   /** Assign + PQ-encode one frame into exactly the rows [[pqIndexSink]]
     * persists — (idCol, cluster, codes, recon_err) — shared by the
@@ -4168,16 +4119,11 @@ object Streaming {
     * maintenance point as index compaction). */
   def wordHistSink(docs: DataFrame, textCol: String, statsDir: String,
                    checkpoint: String) =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          mergeStoreBatch(statsDir, batchId, Seq(
-            StorePart("hist", Seq("word"), Seq("cnt")) ->
-              graft.ops.Bpe.wordHistogram(batch, textCol)))
-        ()
-      }
+    batchSink(docs, checkpoint) { (batch, batchId) =>
+      mergeStoreBatch(statsDir, batchId, Seq(
+        StorePart("hist", Seq("word"), Seq("cnt")) ->
+          graft.ops.Bpe.wordHistogram(batch, textCol)))
+    }
 
   /** Read a [[wordHistSink]] store as the (word, cnt) frame
     * [[graft.ops.Bpe.trainBpeOnHistogram]] consumes. Side-effect-free
@@ -4198,19 +4144,14 @@ object Streaming {
   def driftHistSink(rows: DataFrame, valueCol: String, statsDir: String,
                     checkpoint: String, lo: Double, hi: Double,
                     nBuckets: Int = 10) =
-    rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          mergeStoreBatch(statsDir, batchId, Seq(
-            StorePart("hist", Seq("bucket"), Seq("n")) ->
-              batch.where(col(valueCol).isNotNull)
-                .groupBy(graft.ops.Profiling.psiBucket(col(valueCol),
-                  lo, hi, nBuckets).as("bucket"))
-                .agg(count(lit(1)).as("n"))))
-        ()
-      }
+    batchSink(rows, checkpoint) { (batch, batchId) =>
+      mergeStoreBatch(statsDir, batchId, Seq(
+        StorePart("hist", Seq("bucket"), Seq("n")) ->
+          batch.where(col(valueCol).isNotNull)
+            .groupBy(graft.ops.Profiling.psiBucket(col(valueCol),
+              lo, hi, nBuckets).as("bucket"))
+            .agg(count(lit(1)).as("n"))))
+    }
 
   /** Read a [[driftHistSink]] store as its (bucket, n) histogram.
     * Side-effect-free (see [[readableStoreDir]]). */
@@ -4242,16 +4183,11 @@ object Streaming {
     * frequency monitor of a continuously-ingested corpus. */
   def cmsSink(toks: DataFrame, tokenCol: String, statsDir: String,
               checkpoint: String, d: Int = 4) =
-    toks.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          mergeStoreBatch(statsDir, batchId, Seq(
-            StorePart("cells", Seq("sketch_row", "bucket"), Seq("cnt")) ->
-              graft.ops.Sketch.cmsBuild(batch, tokenCol, d)))
-        ()
-      }
+    batchSink(toks, checkpoint) { (batch, batchId) =>
+      mergeStoreBatch(statsDir, batchId, Seq(
+        StorePart("cells", Seq("sketch_row", "bucket"), Seq("cnt")) ->
+          graft.ops.Sketch.cmsBuild(batch, tokenCol, d)))
+    }
 
   /** Read a [[cmsSink]] store as the (sketch_row, bucket, cnt) frame
     * [[graft.ops.Sketch.cmsEstimate]] consumes. Side-effect-free (see
@@ -4286,24 +4222,19 @@ object Streaming {
                     orderCols: Seq[Column], valCol: String,
                     alpha: Double, beta: Double,
                     statsDir: String, checkpoint: String) =
-    points.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          mergeStoreBatch(statsDir, batchId, Seq(
-            StorePart("holt", Seq(keyCol), Nil) ->
-              graft.ops.TimeSeries.holtBatchArr(
-                batch, keyCol, orderCols, valCol)),
-            customMerge = Map("holt" -> { (prior, delta) =>
-              val empty = delta.select(col(keyCol)).limit(0)
-                .select(col(keyCol), lit(0L).as("n_obs"),
-                  lit(0.0).as("level"), lit(0.0).as("trend"))
-              graft.ops.TimeSeries.holtFold(
-                prior.getOrElse(empty), delta, keyCol, alpha, beta)
-            }))
-        ()
-      }
+    batchSink(points, checkpoint) { (batch, batchId) =>
+      mergeStoreBatch(statsDir, batchId, Seq(
+        StorePart("holt", Seq(keyCol), Nil) ->
+          graft.ops.TimeSeries.holtBatchArr(
+            batch, keyCol, orderCols, valCol)),
+        customMerge = Map("holt" -> { (prior, delta) =>
+          val empty = delta.select(col(keyCol)).limit(0)
+            .select(col(keyCol), lit(0L).as("n_obs"),
+              lit(0.0).as("level"), lit(0.0).as("trend"))
+          graft.ops.TimeSeries.holtFold(
+            prior.getOrElse(empty), delta, keyCol, alpha, beta)
+        }))
+    }
 
   /** Read a [[holtStatsSink]] store as (keyCol, n_obs, level, trend,
     * forecast_1) — the exact shape [[graft.ops.TimeSeries.holtLinear]]
@@ -4332,14 +4263,9 @@ object Streaming {
     * standing merge unions ≤ 2k counter rows. */
   def mgSink(rows: DataFrame, tokenCol: String, k: Int,
              statsDir: String, checkpoint: String) =
-    rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          mergeMgBatch(batch, tokenCol, k, statsDir, batchId)
-        ()
-      }
+    batchSink(rows, checkpoint) { (batch, batchId) =>
+      mergeMgBatch(batch, tokenCol, k, statsDir, batchId)
+    }
 
   private[graft] def mergeMgBatch(batch: DataFrame, tokenCol: String,
       k: Int, statsDir: String, batchId: Long): Unit = {
@@ -4416,15 +4342,10 @@ object Streaming {
   def prioritySampleSink(rows: DataFrame, idCol: String,
                          weightCol: String, n: Int,
                          statsDir: String, checkpoint: String) =
-    rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          mergePrioritySampleBatch(batch, idCol, weightCol, n,
-            statsDir, batchId)
-        ()
-      }
+    batchSink(rows, checkpoint) { (batch, batchId) =>
+      mergePrioritySampleBatch(batch, idCol, weightCol, n,
+        statsDir, batchId)
+    }
 
   private[graft] def mergePrioritySampleBatch(batch: DataFrame,
       idCol: String, weightCol: String, n: Int, statsDir: String,
@@ -4498,14 +4419,9 @@ object Streaming {
     * config. */
   def hllSink(rows: DataFrame, keyCol: String, valueCol: String,
               statsDir: String, checkpoint: String, lgK: Int = 12) =
-    rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          mergeHllBatch(batch, keyCol, valueCol, statsDir, lgK, batchId)
-        ()
-      }
+    batchSink(rows, checkpoint) { (batch, batchId) =>
+      mergeHllBatch(batch, keyCol, valueCol, statsDir, lgK, batchId)
+    }
 
   private[graft] def mergeHllBatch(batch: DataFrame, keyCol: String,
       valueCol: String, statsDir: String, lgK: Int,
@@ -4607,26 +4523,20 @@ object Streaming {
   def kmeansStatsSink(vectors: DataFrame, embCol: String, idCol: String,
                       centroids: DataFrame, statsDir: String,
                       checkpoint: String) =
-    vectors.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          // one assignment pass feeds both deltas — checkpointed so
-          // the broadcast argmax fold runs once per micro-batch
-          val assigned = graft.ops.Similarity.assignToCentroids(
-            batch, embCol, idCol, centroids).localCheckpoint()
-          mergeStoreBatch(statsDir, batchId, Seq(
-            StorePart("sums", Seq("cluster", "dim"), Seq("s")) ->
-              assigned.select(col("cluster"),
-                posexplode(col(embCol)).as(Seq("dim", "x")))
-                .groupBy("cluster", "dim")
-                .agg(sum(col("x").cast("double")).as("s")),
-            StorePart("counts", Seq("cluster"), Seq("n")) ->
-              assigned.groupBy("cluster").agg(count(lit(1)).as("n"))))
-        }
-        ()
-      }
+    batchSink(vectors, checkpoint) { (batch, batchId) =>
+      // one assignment pass feeds both deltas — checkpointed so
+      // the broadcast argmax fold runs once per micro-batch
+      val assigned = graft.ops.Similarity.assignToCentroids(
+        batch, embCol, idCol, centroids).localCheckpoint()
+      mergeStoreBatch(statsDir, batchId, Seq(
+        StorePart("sums", Seq("cluster", "dim"), Seq("s")) ->
+          assigned.select(col("cluster"),
+            posexplode(col(embCol)).as(Seq("dim", "x")))
+            .groupBy("cluster", "dim")
+            .agg(sum(col("x").cast("double")).as("s")),
+        StorePart("counts", Seq("cluster"), Seq("n")) ->
+          assigned.groupBy("cluster").agg(count(lit(1)).as("n"))))
+    }
 
   /** One Lloyd update from a [[kmeansStatsSink]] store: per cluster,
     * the element-wise mean of every vector streamed into it, as
