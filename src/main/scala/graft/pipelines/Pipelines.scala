@@ -1,7 +1,12 @@
 package graft.pipelines
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.ops._
 
 /** The reference's eight ETL pipelines (SURVEY §3 E1-E3 + the five sibling
@@ -30,14 +35,57 @@ object Pipelines {
 
   // --------------------------------------------------------------- sources
 
-  /** S1: header CSV scan with schema inference. */
-  def readCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", true).option("inferSchema", true).csv(path)
+  /** Declared types of the export columns, keyed by header name: the
+    * types schema inference gives on every reference-shaped export.
+    * Every other column, a crawler's custom-extraction columns included,
+    * reads as string. A cell that does not parse as its column's type
+    * reads as null, so one bad day cannot turn a numeric column into a
+    * string column in the append-history tables. */
+  val SourceTypes: Map[String, DataType] = (
+    Seq("Status Code", "Size (bytes)", "Word Count", "Sentence Count",
+      "Crawl Depth", "Unique Inlinks", "Unique Outlinks",
+      "Days Since Last Crawled", "number_of_deals 1", "Clicks",
+      "Impressions", "Occurrences", "Ahrefs Backlinks - Exact",
+      "Ahrefs RefDomains - Exact").map(_ -> IntegerType) ++
+    Seq("Average Words Per Sentence", "Flesch Reading Ease Score",
+      "Text Ratio", "Link Score", "CTR", "Position",
+      "Ahrefs URL Rating - Exact", "Ahrefs Domain Rating", "Page Rank",
+      "Chei Rank").map(_ -> DoubleType) ++
+    Seq("Crawl Timestamp", "Last Crawl").map(_ -> TimestampType) ++
+    Seq("Follow", "travellogic 1").map(_ -> BooleanType)).toMap
 
-  /** S2: delimiter/encoding variant (Midoco: ';' + latin-1). */
+  /** S1: scan of the header CSV file at `path` with [[SourceTypes]]
+    * declared: integer counts/status/sizes, double scores/rates/positions,
+    * timestamp crawl times, boolean flags, string for every other column. */
+  def readCsv(spark: SparkSession, path: String): DataFrame =
+    readDeclared(spark, path, Map.empty)
+
+  /** S2: delimiter/encoding variant (Midoco: ';' + latin-1), typed like
+    * [[readCsv]] (no Midoco column is in [[SourceTypes]]: all strings). */
   def readCsvLatin1(spark: SparkSession, path: String, sep: String = ";"): DataFrame =
-    spark.read.option("header", true).option("inferSchema", true)
-      .option("sep", sep).option("encoding", "ISO-8859-1").csv(path)
+    readDeclared(spark, path, Map("sep" -> sep, "encoding" -> "ISO-8859-1"))
+
+  /** The file's header line is read on the driver with the scan's own
+    * separator, encoding and quoting, and named by Spark's header rules
+    * (empty -> `_c<i>`, duplicates get their index appended); the scan
+    * then runs with the declared schema, so a read starts no Spark job
+    * and makes no inference pass over the data. */
+  private def readDeclared(spark: SparkSession, path: String,
+      opts: Map[String, String]): DataFrame = {
+    val options = opts + ("header" -> "true")
+    val csv = new CSVOptions(options, true,
+      spark.conf.get("spark.sql.session.timeZone"))
+    val names = CSVUtils.readHeaderLine(new Path(path), csv,
+        spark.sparkContext.hadoopConfiguration)
+      .map(line => CSVUtils.makeSafeHeader(
+        new CsvParser(csv.asParserSettings).parseLine(line),
+        spark.conf.get("spark.sql.caseSensitive").toBoolean, csv))
+      .getOrElse(Array.empty[String])
+    spark.read
+      .schema(StructType(names.map(n =>
+        StructField(n, SourceTypes.getOrElse(n, StringType)))))
+      .options(options).csv(path)
+  }
 
   // ----------------------------------------------------------------- sinks
 
@@ -64,11 +112,13 @@ object Pipelines {
 
   /** S5: the Audisto crawl list arrives as a JSON array of
     * `{id, timestamps: {started}}` records (reference:
-    * Audisto/audisto.py:61-82); read it as a table and project to
-    * (id, crawl_time) with the started-timestamp truncated to a date,
-    * exactly like the reference's `pd.to_datetime(...).dt.date`. */
+    * Audisto/audisto.py:61-82); read it with that schema declared
+    * (`id` long, `timestamps.started` string; other fields are not read)
+    * and project to (id, crawl_time) with the started-timestamp truncated
+    * to a date, exactly like the reference's `pd.to_datetime(...).dt.date`. */
   def readCrawlList(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("multiLine", true).json(path)
+    spark.read.schema("id BIGINT, timestamps STRUCT<started: STRING>")
+      .option("multiLine", true).json(path)
       .select(col("id"),
         // the reference's exact format first; fall back to Spark's ISO-8601
         // parsing so fractional seconds / +00:00 offsets don't silently
@@ -195,8 +245,8 @@ object Pipelines {
       .withColumn("travelogic_agents",
         if (agentCols.isEmpty) lit("")
         else Casts.concatSkipNull(", ", agentCols.toSeq.map(col)))
-      // C6: timestamps -> day strings (cast first: inferSchema may have
-      // already typed the column as timestamp; cast of a string is a no-op)
+      // C6: timestamps -> day strings (cast first: the source reads the
+      // column as timestamp; cast of a string is a no-op)
       .withColumn("Crawl Timestamp",
         Dates.dayString(col("Crawl Timestamp").cast("string")))
       .withColumn("Last Crawl",

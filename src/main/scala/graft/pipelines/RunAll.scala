@@ -50,9 +50,10 @@ object RunAll {
     }
 
     // E2 Screaming Frog HTML (K3: slim append + content append + content
-    // replace) — only `content` is written twice, so only it persists
-    // the raw frame is bound once: it also feeds the images job below,
-    // and each read would pay a schema-inference pass over the file
+    // replace) — only `content` is written twice, so only it persists.
+    // The raw frame is bound once: it also feeds the images job below.
+    // Its column types are declared (Pipelines.SourceTypes), so binding
+    // it starts no job
     val rawHtml = Pipelines.readCsv(spark, in("internal_html.csv"))
     val (slim, content) = Pipelines.sfHtml(rawHtml, runDate, alert = alert)
     content.persist()

@@ -12,6 +12,64 @@ class PipelinesSpec extends SparkSpec {
     getClass.getResource("/" + name).getPath
   private val runDate = "2024-05-01"
 
+  private val csvFixtures: Seq[String] =
+    new java.io.File(res("internal_html.csv")).getParentFile.list()
+      .filter(_.endsWith(".csv")).sorted.toSeq
+  private def isLatin1(name: String) = name == "midoco_report.csv"
+  private def declaredRead(name: String) =
+    if (isLatin1(name)) Pipelines.readCsvLatin1(spark, res(name))
+    else Pipelines.readCsv(spark, res(name))
+
+  /** Jobs started on this thread while `f` runs, its listener events
+    * drained before counting. */
+  private def jobsStartedBy(f: => Unit): Int = {
+    val tag = "graft.spec.jobsStartedBy"
+    val id = java.util.UUID.randomUUID().toString
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) == id))
+          started.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, id)
+    try f finally {
+      sc.setLocalProperty(tag, null)
+      org.apache.spark.GraftListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    started.get
+  }
+
+  test("source type catalogue: every CSV fixture reads with the schema " +
+      "inference gives (names, order, types)") {
+    assert(csvFixtures.size === 12)
+    csvFixtures.foreach { name =>
+      val inferred = {
+        val r = spark.read.option("header", true).option("inferSchema", true)
+        if (isLatin1(name))
+          r.option("sep", ";").option("encoding", "ISO-8859-1").csv(res(name))
+        else r.csv(res(name))
+      }.schema
+      assert(declaredRead(name).schema === inferred, name)
+    }
+    // a column outside the catalogue reads as string
+    assert(Pipelines.readCsv(spark, res("internal_html.csv")).schema("content-1")
+      .dataType === org.apache.spark.sql.types.StringType)
+  }
+
+  test("source reads start no Spark job, up to and including .schema") {
+    // the listener sees jobs: an inferring read starts some
+    assert(jobsStartedBy(spark.read.option("header", true)
+      .option("inferSchema", true).csv(res("all_inlinks.csv")).schema) > 0)
+    assert(jobsStartedBy {
+      csvFixtures.foreach(name => declaredRead(name).schema)
+      Pipelines.readCrawlList(spark, res("audisto_crawls_list.json")).schema
+    } === 0)
+  }
+
   test("E1 head stage: crawl list JSON -> today's crawl id; empty day alerts") {
     val crawls = Pipelines.readCrawlList(spark, res("audisto_crawls_list.json"))
     assert(crawls.columns.toSeq === Seq("id", "crawl_time"))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.pipelines.RunAll
 
 /** The daily tick end to end: two `RunAll.run` ticks over the shipped
@@ -57,5 +58,50 @@ class RunAllSpec extends SparkSpec {
     assert(images.count() === 3L)
     assert(images.where(col("address") ===
       "https://www.example.de/media/strand.jpg").count() === 2L)
+  }
+
+  test("schema drift: a day with empty or junk numeric cells appends " +
+      "with the declared types, and both partitions read back") {
+    // day 2: the shipped inputs, but `Word Count` empty on every row and
+    // `Status Code` junk on one non-root row of internal_html.csv — under
+    // schema inference both columns read as string that day
+    val base = java.nio.file.Paths.get("src/test/resources")
+    val day2In = java.nio.file.Files.createTempDirectory("graft-drift-in")
+    new java.io.File(base.toString).list().foreach { f =>
+      java.nio.file.Files.copy(base.resolve(f), day2In.resolve(f))
+    }
+    val html = day2In.resolve("internal_html.csv")
+    val header +: rows =
+      java.nio.file.Files.readAllLines(html).asScala.toSeq
+    val split = ",(?=(?:[^\"]*\"[^\"]*\")*[^\"]*$)" // commas outside quotes
+    val names = header.split(split, -1).toSeq
+    val (status, words) =
+      (names.indexOf("Status Code"), names.indexOf("Word Count"))
+    java.nio.file.Files.write(html, (header +: rows.zipWithIndex.map {
+      case (row, i) =>
+        val cells = row.split(split, -1)
+        cells(words) = ""
+        if (i == 1) cells(status) = "n/a"
+        cells.mkString(",")
+    }).asJava)
+
+    val wh = java.nio.file.Files.createTempDirectory("graft-drift").toString
+    assert(RunAll.run(spark, base.toString, wh, day1).isEmpty)
+    assert(RunAll.run(spark, day2In.toString, wh, day2).isEmpty)
+
+    val slim = spark.read.parquet(s"$wh/html_slim")
+    assert(slim.schema("word_count").dataType.typeName === "integer")
+    assert(slim.schema("status_code").dataType.typeName === "integer")
+    Seq(day1, day2).foreach { d =>
+      val part = spark.read.parquet(s"$wh/html_slim/crawl_date=$d")
+      assert(part.schema("word_count").dataType.typeName === "integer", d)
+      assert(part.schema("status_code").dataType.typeName === "integer", d)
+    }
+    // rows, non-null word counts, non-null status codes per day
+    val byDay = slim.groupBy(col("crawl_date").cast("string"))
+      .agg(count(lit(1)), count("word_count"), count("status_code"))
+      .collect().map(r => r.getString(0) ->
+        (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+    assert(byDay === Map(day1 -> (6L, 6L, 6L), day2 -> (6L, 0L, 5L)))
   }
 }
