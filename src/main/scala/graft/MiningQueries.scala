@@ -295,8 +295,7 @@ object MiningQueries {
     // never decompress; the corpus scan factor is still nprobe/nlist.
     // (The lazy plan recomputes the residual frame once per consumer —
     // codebook, codes, cluster attach; a production offline build
-    // persists `res` once. Streaming.pqIndexSink(residual = true) IS
-    // that materialized form, per batch.)
+    // persists `res` once.)
     "q180_ivfpq_residual" -> ((s, dir) => {
       val emb = rd(s, dir, "embeddings")
       val cents = emb.filter(col("vec_id") < 16)

@@ -378,8 +378,8 @@ object RetrievalQueries {
     // with a bounded under-estimate, in k counters where the exact
     // histogram is vocabulary-sized. The complementary sketch to
     // q171's CMS (actual heavy-hitter SET + under-estimate vs point
-    // queries + over-estimate); the streaming fold lives in
-    // Streaming.mgSink. One TakeOrderedAndProject for the threshold.
+    // queries + over-estimate). One TakeOrderedAndProject for the
+    // threshold.
     "q206_mg_heavy_hitters" -> ((s, dir) => {
       val toks = rd(s, dir, "documents")
         .select(explode(Text.tokens(col("text"))).as("tok"))

@@ -91,11 +91,11 @@ object Bpe {
     trainBpeOnHistogram(wordHistogram(docs, textCol), numMerges)
 
   /** [[trainBpe]] over an already-built (word, cnt) histogram — the
-    * entry point for incrementally-maintained histograms
-    * ([[graft.streaming.Streaming.wordHistSink]] folds per-batch
-    * histograms into a standing store; counts are additive, so
-    * re-training from the store equals training from the full corpus
-    * without rescanning it). */
+    * entry point for incrementally-maintained histograms (the curation
+    * store folds per-batch histograms into its `stats/hist` part,
+    * [[graft.streaming.Streaming.readWordHistogram]]; counts are
+    * additive, so re-training from the store equals training from the
+    * full corpus without rescanning it). */
   def trainBpeOnHistogram(histogram: DataFrame,
                           numMerges: Int): Seq[MergeRule] = {
     val hist = histogram.localCheckpoint()

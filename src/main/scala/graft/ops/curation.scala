@@ -423,13 +423,11 @@ object Curation {
 
   /** The store-fed form of [[tokenBudgetAllocation]]: `capacity` is
     * the per-source capacity table (source, tokens_avail) directly —
-    * e.g. the standing
-    * [[graft.streaming.Streaming.sourceStatsSink]] store a streaming
-    * ingest maintains — so planning runs over O(sources) rows with NO
-    * corpus rescan (the reference's pre-computed daily-rollup
-    * pattern, README.md:15). The corpus-fed overload above is this
-    * plus one map-side-combined aggregation; both produce identical
-    * plans on the same capacity facts (spec-asserted). */
+    * e.g. a standing rollup an ingest maintains — so planning runs
+    * over O(sources) rows with NO corpus rescan (the reference's
+    * pre-computed daily-rollup pattern, README.md:15). The corpus-fed
+    * overload above is this plus one map-side-combined aggregation, so
+    * both produce identical plans on the same capacity facts. */
   def tokenBudgetAllocationFromCapacity(capacity: DataFrame,
                                         weights: DataFrame,
                                         budget: Double): DataFrame = {

@@ -104,9 +104,8 @@ object Profiling {
     * immediately; conversely KS ignores tail reshuffles PSI scores).
     * Binned KS underestimates the continuous statistic by at most one
     * bin's mass — size nBuckets accordingly. Same histogram shape as
-    * [[psiOfHists]], so it reads the SAME streaming drift store
-    * ([[graft.streaming]] `driftHistSink`): both gates from one
-    * accumulated state.
+    * [[psiOfHists]], so both gates can read one accumulated
+    * histogram.
     *
     * Output: one row (ks, n_base, n_cur). Constant-size after the
     * bucket join; a window over ≤ nBuckets rows is the only sort. */

@@ -8,11 +8,10 @@ import org.apache.spark.sql.functions._
   * Nearest Neighbor Search"): split each d-dim vector into `m`
   * subvectors, k-means each subspace independently, and represent a
   * vector by its `m` centroid codes — d×4 bytes collapse to m bytes.
-  * Combined with the IVF index (Similarity.ivfTopK /
-  * Streaming.ivfIndexSink) this is the IVF-PQ layout production ANN
-  * systems run at 10^9+ vectors: the inverted file prunes the
-  * candidate set, PQ codes + a per-query distance table score it
-  * without touching raw vectors.
+  * Combined with the IVF index (Similarity.ivfTopK) this is the IVF-PQ
+  * layout production ANN systems run at 10^9+ vectors: the inverted
+  * file prunes the candidate set, PQ codes + a per-query distance
+  * table score it without touching raw vectors.
   *
   * Everything here is deterministic (seeded by lowest vector ids,
   * fixed iteration count, centroids rounded to 6 dp after every
@@ -244,9 +243,8 @@ object Quantize {
   }
 
   /** [[pqAdcTopK]] over ALREADY-ENCODED vectors — the serving path of
-    * a persisted PQ index (e.g.
-    * [[graft.streaming.Streaming.pqIndexSink]]), where codes were
-    * computed at ingest and raw vectors are not stored at all. `codes`
+    * a persisted PQ index, where codes were computed at ingest and raw
+    * vectors are not stored at all. `codes`
     * is (idCol, codes: array<int>); `excludeSelf` drops rows whose id
     * equals the query id (corpus-as-queries dedup mode). */
   def adcTopKOverCodes(codes: DataFrame, queries: DataFrame,
@@ -262,8 +260,8 @@ object Quantize {
       .select(col("__qid"), col("__m"), col("__code"),
         l2sq(col("__sv"), col("__cvec")).as("__dq"))
     val joined = codesLong.join(broadcast(dtable), Seq("__m", "__code"))
-    // an id ingested more than once (at-least-once sources re-feeding
-    // pqIndexSink) contributes dup x m code rows; dividing by the
+    // an id ingested more than once (an at-least-once source re-feeding
+    // the index) contributes dup x m code rows; dividing by the
     // duplication factor keeps the distance honest instead of silently
     // demoting the vector by a doubled sum. count/m is exact (every id
     // carries a multiple of m rows), and for the unique-id case the
@@ -272,8 +270,7 @@ object Quantize {
     // duplicated id carries different codes (a changed re-feed that
     // skipped upstream dedup), the division averages two versions'
     // distances into a value corresponding to no real vector — resolve
-    // changed re-feeds first (ivfPqSearchIndex's latest-wins window
-    // does exactly that before calling here)
+    // changed re-feeds first (a latest-wins window per id)
     val scored = (if (excludeSelf) joined.where(col("__id") =!= col("__qid"))
       else joined)
       .groupBy(col("__qid"), col("__id"))

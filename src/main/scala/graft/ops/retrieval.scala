@@ -36,8 +36,7 @@ object Retrieval {
   /** Corpus-level BM25 statistics, factored out of [[bm25]] so they can
     * be maintained INCREMENTALLY (both measures are additive over
     * disjoint document sets, so [[Warehouse.mergeAggDelta]] folds a new
-    * batch in without rescanning the corpus — the streaming path,
-    * [[graft.streaming.Streaming.termStatsSink]]).
+    * batch in without rescanning the corpus).
     *
     * Returns (terms, globals): `terms` = one row per distinct term with
     * its document frequency `df`; `globals` = one row keyed `k = 1`
@@ -62,8 +61,8 @@ object Retrieval {
   /** Okapi BM25 of `docs` scored against EXTERNAL corpus statistics —
     * the shape of [[bm25Stats]]'s return. The docs being scored need
     * not be the corpus the statistics describe: score a query batch
-    * against a standing index, or a full corpus against statistics a
-    * stream maintained. `bm25(docs) == bm25Against(docs, bm25Stats(docs))`
+    * against a standing index, or a full corpus against statistics
+    * maintained elsewhere. `bm25(docs) == bm25Against(docs, bm25Stats(docs))`
     * exactly (dl sums are integers, so avgdl = total_dl/n_docs is the
     * same double the one-pass avg produces). Terms of `docs` absent
     * from `terms` are dropped (df unknown — in the self-scoring case
@@ -117,13 +116,11 @@ object Retrieval {
                   isTarget: Column, buckets: Int = 64): DataFrame = {
     require(buckets >= 2 && buckets <= 65536,
       s"buckets must be in [2, 65536], got $buckets")
-    // self-scoring case: ONE tokenize+bucket pass serves both the
-    // count table and the scoring stream (the composed
-    // dsirCounts-then-dsirWeightsAgainst form tokenizes the corpus
-    // twice — the same rows, different projections). Pinned: the LM
-    // must fully aggregate before the broadcast-join scoring pass can
-    // start, so without the cache the second consumer re-runs the
-    // tokenizer. Narrow fixed-width rows (id, bool, int).
+    // ONE tokenize+bucket pass serves both the count table and the
+    // scoring stream. Pinned: the LM must fully aggregate before the
+    // broadcast-join scoring pass can start, so without the cache the
+    // second consumer re-runs the tokenizer. Narrow fixed-width rows
+    // (id, bool, int).
     val toks = docs.select(col(idCol).as("doc_id"), isTarget.as("is_target"),
         explode(Text.tokens(col(textCol))).as("tok"))
       .select(col("doc_id"), col("is_target"),
@@ -135,54 +132,14 @@ object Retrieval {
     scoreBucketedToks(toks.select("doc_id", "bucket"), counts, buckets)
   }
 
-  /** The DSIR feature-LM count table, factored out of [[dsirWeights]]:
-    * one row per md5 feature bucket with `ct` (target-document token
-    * count) and `cr` (all-document token count). Both are additive over
-    * disjoint document sets, so a stream maintains this table with
-    * [[Warehouse.mergeAggDelta]]
-    * ([[graft.streaming.Streaming.dsirStatsSink]]) and the merged
-    * result equals a batch recompute over everything streamed. */
-  def dsirCounts(docs: DataFrame, idCol: String, textCol: String,
-                 isTarget: Column, buckets: Int = 64): DataFrame = {
-    require(buckets >= 2 && buckets <= 65536,
-      s"buckets must be in [2, 65536], got $buckets")
-    docs.select(isTarget.as("is_target"),
-        explode(Text.tokens(col(textCol))).as("tok"))
-      .withColumn("bucket", pmod(Sampling.splitBucket(col("tok")), lit(buckets)))
-      .groupBy("bucket").agg(
-        sum(when(col("is_target"), 1L).otherwise(0L)).as("ct"),
-        count(lit(1)).as("cr"))
-  }
-
-  /** DSIR importance weights for `docs` scored against an EXTERNAL
-    * count table (the [[dsirCounts]] shape). The docs being scored
-    * need not be the corpus the counts came from — score fresh
-    * documents against the LM a stream maintained.
-    * `dsirWeights(docs, t) == dsirWeightsAgainst(docs, dsirCounts(docs,
-    * t))` exactly. `buckets` must match the value the counts were
-    * built with (it is the Laplace smoothing denominator). */
-  def dsirWeightsAgainst(docs: DataFrame, idCol: String, textCol: String,
-                         counts: DataFrame, buckets: Int = 64): DataFrame = {
-    require(buckets >= 2 && buckets <= 65536,
-      s"buckets must be in [2, 65536], got $buckets")
-    val toks = docs.select(col(idCol).as("doc_id"),
-        explode(Text.tokens(col(textCol))).as("tok"))
-      .withColumn("bucket", pmod(Sampling.splitBucket(col("tok")), lit(buckets)))
-    scoreBucketedToks(toks, counts, buckets)
-  }
-
-  /** Shared scoring tail of [[dsirWeights]] / [[dsirWeightsAgainst]]:
-    * LM from the count table, broadcast onto a pre-bucketed token
-    * stream, one doc-keyed aggregate. */
+  /** Scoring tail of [[dsirWeights]]: LM from the count table,
+    * broadcast onto a pre-bucketed token stream, one doc-keyed
+    * aggregate. */
   private def scoreBucketedToks(toks: DataFrame, counts: DataFrame,
                                 buckets: Int): DataFrame = {
     // constant-size (exactly `buckets` rows) LM; Laplace +1 smoothing.
-    // Densified over the full bucket spine so a scored token landing in
-    // a bucket the corpus never produced still gets its smoothed
-    // log-ratio instead of silently dropping out of the inner join —
-    // only reachable when scoring docs foreign to the count table (in
-    // the self-scoring [[dsirWeights]] case absent buckets have no
-    // tokens to score, so this changes nothing).
+    // Densified over the full bucket spine (absent buckets have no
+    // tokens to score, so this changes no weight).
     val totals = counts.agg(sum("ct").as("tt"), sum("cr").as("tr"))
     val dense = toks.sparkSession.range(buckets)
       .select(col("id").cast("int").as("bucket"))
@@ -219,8 +176,8 @@ object Retrieval {
   }
 
   /** [[bm25Search]] against an external stats store (the
-    * [[bm25Stats]] shape — e.g. one a stream maintains via
-    * [[graft.streaming.Streaming.termStatsSink]]): rank `docs` for a
+    * [[bm25Stats]] shape, e.g. folded batch by batch with
+    * [[Warehouse.mergeAggDelta]]): rank `docs` for a
     * bag-of-terms query using the standing corpus statistics, without
     * rescanning the corpus that produced them. */
   def bm25SearchAgainst(docs: DataFrame, idCol: String, textCol: String,

@@ -65,8 +65,8 @@ object Similarity {
     * per-query rank, which compiles to WindowGroupLimit (per-partition
     * k-row heaps BEFORE the exchange, so the shuffle carries ≤ k rows
     * per (query, partition), not the corpus×queries cross product). At
-    * billion-vector scale feed the candidate set from the ANN indexes
-    * (ivfSearchIndexBatch) and re-rank here — same output contract. */
+    * billion-vector scale feed the candidate set from an ANN index
+    * ([[ivfTopK]]) and re-rank here — same output contract. */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, embCol: String,
                     idCol: String, labelCol: String, k: Int): DataFrame = {
     val joined = Scale.widen(corpus).crossJoin(
@@ -323,14 +323,12 @@ object Similarity {
     * Scale: assignment is row-local — zero corpus shuffle (a crossJoin
     * + row_number window would shuffle corpus×nlist rows through a
     * sort). At 100 TB you'd persist the assignment partitioned by
-    * cluster id so probes touch only nprobe/nlist of the files —
-    * exactly what [[graft.streaming.Streaming.vectorIndexSink]]
-    * maintains incrementally. */
+    * cluster id so probes touch only nprobe/nlist of the files. */
   /** The `nprobe` centroid ids nearest the query (cosine desc, cid
     * tie-break) as a one-column `cluster` frame — the probe-selection
-    * rule shared by [[ivfTopK]] and the streaming index query
-    * ([[graft.streaming.Streaming.ivfSearchIndex]]), factored out so
-    * the two can never diverge. */
+    * rule of [[ivfTopK]] and the IVF-PQ queries
+    * ([[graft.ops.Quantize]]), factored out so they can never
+    * diverge. */
   def probedCentroids(centroids: DataFrame, queryVec: Column,
                       nprobe: Int): DataFrame =
     probedCentroidsAdaptive(centroids, queryVec, nprobe,
@@ -411,9 +409,7 @@ object Similarity {
     // using-column self-join there can silently resolve the probe key
     // against the corpus's SAME-exprId id column (kept rows become
     // "id ∈ probed cluster ids" — wrong results, no error); the
-    // literal filter has no second lineage to mis-resolve against,
-    // and is what the partitioned on-disk variant
-    // (Streaming.ivfSearchIndex) does anyway
+    // literal filter has no second lineage to mis-resolve against
     val probed = probedCentroidsAdaptive(centroids, queryVec, nprobe,
       widenMargin).collect().map(_.get(0))
     assigned.where(col("cluster").isin(probed.toSeq: _*))

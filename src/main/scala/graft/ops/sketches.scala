@@ -24,10 +24,9 @@ import org.apache.spark.sql.functions._
   * `CountMinSketch` (opaque hashing, in-JVM merge — right for a
   * one-shot aggregation). This one keeps the grid as PLAIN (row,
   * bucket, cnt) ROWS, which is what makes it (a) replayable by an
-  * external engine cell-for-cell and (b) additively mergeable by the
-  * stats-store machinery ([[graft.streaming.Streaming.cmsSink]]) —
-  * counts fold across micro-batches with mergeAggDelta, no sketch
-  * binary to deserialize.
+  * external engine cell-for-cell and (b) additively mergeable —
+  * counts fold across batches with [[Warehouse.mergeAggDelta]], no
+  * sketch binary to deserialize.
   */
 object Sketch {
 
@@ -76,8 +75,7 @@ object Sketch {
     * above N/(k+1) survives. The trim form IS a valid MG summary of
     * the counted stream (Agarwal et al. 2012), which also makes it
     * MERGEABLE: pointwise-add two summaries and trim again, and the
-    * union's guarantee still holds with N the combined total — the
-    * property [[graft.streaming.Streaming.mgSink]] folds on. The
+    * union's guarantee still holds with N the combined total. The
     * complementary tool to [[cmsBuild]]: CMS answers point queries
     * over-estimating, MG returns the actual heavy-hitter SET with an
     * under-estimate bound, in k counters where the exact histogram

@@ -134,10 +134,9 @@ object TimeSeries {
     * level + trend) — the one-step-ahead forecast a freshness monitor
     * extrapolates with. The recurrence runs as ONE row-local fold over
     * the key's sorted values (collected per key — sized for per-entity
-    * series; an unbounded stream belongs in the stats-store pattern,
-    * [[graft.streaming.Streaming.holtStatsSink]]), with every
-    * coefficient passed as the SAME double literal the oracle replays,
-    * so the arithmetic is engine-identical.
+    * series, bounded by `maxObs`), with every coefficient passed as
+    * the SAME double literal the oracle replays, so the arithmetic is
+    * engine-identical.
     *
     * `maxObs` guards the per-key collect: a key with more observations
     * fails loudly (raise_error names the key and count) instead of
@@ -161,8 +160,7 @@ object TimeSeries {
           raise_error(concat(lit("holtLinear: key '"),
             col(keyCol).cast("string"), lit("' has "),
             col("__cnt").cast("string"),
-            lit(s" observations, above maxObs=$maxObs — use" +
-              " Streaming.holtStatsSink for unbounded series"))))
+            lit(s" observations, above maxObs=$maxObs"))))
         .otherwise(col(valCol).cast("double")))
       .groupBy(keyCol)
       .agg(count(lit(1)).as("n_obs"),
@@ -182,73 +180,5 @@ object TimeSeries {
       .select(col(keyCol), col("n_obs"),
         col("__st.l").as("level"), col("__st.b").as("trend"),
         (col("__st.l") + col("__st.b")).as("forecast_1"))
-  }
-
-  /** One micro-batch's per-key sorted observation arrays — the "delta"
-    * the streaming Holt store ([[graft.streaming.Streaming
-    * .holtStatsSink]]) folds into its standing state. Kept separate
-    * from [[holtFold]] so the (bounded) batch collect happens once per
-    * batch, before the state join. */
-  private[graft] def holtBatchArr(df: DataFrame, keyCol: String,
-                                  orderCols: Seq[Column],
-                                  valCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keyCol).orderBy(orderCols: _*)
-    df.withColumn("__rn", row_number().over(w))
-      .groupBy(keyCol)
-      .agg(count(lit(1)).as("__bn"),
-        array_sort(collect_list(struct(col("__rn"),
-          col(valCol).cast("double").as("__v")))).as("__arr"))
-  }
-
-  /** Continue the [[holtLinear]] recurrence from standing per-key
-    * state: `state` is (keyCol, n_obs, level, trend) — exactly 2
-    * doubles + a count per key — and `batchArr` is
-    * [[holtBatchArr]]'s per-key sorted values for ONE new batch.
-    * Returns the next state over the UNION of keys: untouched keys
-    * pass through unchanged, new keys initialize l₁ = y₁, b₁ = 0 and
-    * fold the rest, existing keys fold every batch value from their
-    * stored (level, trend). Because the batch fold runs the SAME
-    * double arithmetic in the SAME order as [[holtLinear]]'s one-shot
-    * fold, chaining holtFold over any batch split of a series is
-    * CELL-EXACT equal to holtLinear over the whole series
-    * (StreamingSpec asserts it) — the recurrence is a left fold, and
-    * left folds compose by carrying the accumulator.
-    *
-    * Observations must arrive time-ordered ACROSS batches per key
-    * (append-only feeds; the recurrence is order-sensitive and a
-    * late row cannot be retro-folded — that is inherent to keeping
-    * O(1) state per key instead of the series). */
-  def holtFold(state: DataFrame, batchArr: DataFrame, keyCol: String,
-               alpha: Double, beta: Double): DataFrame = {
-    require(alpha > 0 && alpha < 1, s"alpha must be in (0,1), got $alpha")
-    require(beta > 0 && beta < 1, s"beta must be in (0,1), got $beta")
-    val a = lit(alpha); val a1 = lit(1.0 - alpha)
-    val bb = lit(beta); val b1 = lit(1.0 - beta)
-    val prior = state.select(col(keyCol), col("n_obs").as("__pn"),
-      col("level").as("__pl"), col("trend").as("__pt"))
-    batchArr.join(prior, Seq(keyCol), "full_outer")
-      .withColumn("__init", when(col("__pn").isNotNull,
-          struct(col("__pl").as("l"), col("__pt").as("b")))
-        .otherwise(struct(
-          element_at(col("__arr"), 1).getField("__v").as("l"),
-          lit(0.0).as("b"))))
-      .withColumn("__rest", when(col("__pn").isNotNull, col("__arr"))
-        .otherwise(expr("slice(__arr, 2, size(__arr) - 1)")))
-      .withColumn("__st", aggregate(col("__rest"), col("__init"),
-        (st, e) => {
-          val lNew = a * e.getField("__v") +
-            a1 * (st.getField("l") + st.getField("b"))
-          struct(lNew.as("l"),
-            (bb * (lNew - st.getField("l")) +
-              b1 * st.getField("b")).as("b"))
-        }))
-      .select(col(keyCol),
-        (coalesce(col("__pn"), lit(0L)) +
-          coalesce(col("__bn"), lit(0L))).as("n_obs"),
-        when(col("__bn").isNull, col("__pl"))
-          .otherwise(col("__st").getField("l")).as("level"),
-        when(col("__bn").isNull, col("__pt"))
-          .otherwise(col("__st").getField("b")).as("trend"))
   }
 }

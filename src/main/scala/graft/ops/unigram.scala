@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale: everything after the word histogram is vocabulary-sized —
   * the corpus is touched once ([[Bpe.wordHistogram]], or not at all
-  * when training from the stream-maintained
-  * [[graft.streaming.Streaming.wordHistSink]] store). The Viterbi DP
+  * when training from the curation store's histogram,
+  * [[graft.streaming.Streaming.readWordHistogram]]). The Viterbi DP
   * is a row-local fold per histogram word (O(len × maxPieceLen) with
   * an O(candidates) scan per step), piece tables broadcast.
   */

@@ -161,225 +161,6 @@ object Warehouse {
     }
   }
 
-  /** Apply a CDC change stream to a base snapshot: per key, the
-    * highest-`seq` change wins; a winning change whose `isDelete`
-    * predicate holds removes the key from the result; keys untouched by
-    * the stream keep their base row. Base and changes must share a
-    * schema (the base is a snapshot of the same record shape).
-    *
-    * Changes outrank base rows at equal `seq` (the stream is newer
-    * information than the snapshot it was captured against).
-    */
-  /** Key-hash bucket column for a bucketed CDC table: which
-    * `__kb=<n>` partition a row's key lives in. Must be computed the
-    * same way on every batch, so `nBuckets` is part of the table's
-    * layout contract and must not change over its lifetime. */
-  private def keyBucket(keyCols: Seq[String], nBuckets: Int): Column =
-    pmod(hash(keyCols.map(col): _*), lit(nBuckets)).cast("int")
-
-  /** Read a table maintained by [[mergeCdcBucketed]] without its
-    * internal `__kb` layout column. */
-  def readBucketed(spark: org.apache.spark.sql.SparkSession,
-                   path: String): DataFrame =
-    spark.read.parquet(path).drop("__kb")
-
-  /** Partition-scoped CDC merge: maintain a parquet table laid out as
-    * `path/__kb=<hash(key) mod nBuckets>/` and, per change batch,
-    * rewrite ONLY the buckets containing the batch's keys. This is the
-    * merge a 100 TB base table needs — per-batch I/O is
-    * O(touched buckets), not O(table): with a well-sized `nBuckets` a
-    * batch touching k distinct keys reads and rewrites at most k
-    * buckets (~k/nBuckets of the table), while untouched buckets'
-    * files are never opened, so readers, caches, and incremental
-    * backups see them byte-identical.
-    *
-    * Merge semantics per bucket are exactly [[applyCdc]] (sequence-
-    * first latest-wins, delete tombstones) — the same code runs here
-    * and in the batch q103 path. Each touched bucket is swapped in via
-    * [[atomicSwap]] with its backup parked under `path/.cdc.backup/`,
-    * and every call begins by healing any crashed predecessor
-    * (restore swapped-out buckets, drop the partial tmp), so a crash
-    * at ANY point leaves a table that a checkpoint-replayed batch
-    * re-merges to the correct state (applyCdc of the same changes is a
-    * fixpoint). Dot-prefixed work dirs are invisible to parquet
-    * readers of `path`.
-    *
-    * Returns the touched bucket ids (empty when `changes` is empty).
-    * A bucket whose merge result is empty (every key deleted) has its
-    * partition directory removed. */
-  def mergeCdcBucketed(spark: org.apache.spark.sql.SparkSession,
-                       path: String, changes: DataFrame,
-                       keyCols: Seq[String], seqCols: Seq[String],
-                       isDelete: Column, nBuckets: Int = 64): Seq[Int] =
-    rewriteTouchedBuckets(spark, path, changes, keyCols, nBuckets,
-      Some(changes.schema)) { (base, ch) =>
-      applyCdc(base, ch, keyCols, seqCols, isDelete)
-    }
-
-  /** Targeted key deletion over the bucketed layout — the
-    * right-to-be-forgotten / takedown pass a 100 TB keyed table needs:
-    * locate the `__kb` buckets the doomed keys hash into, anti-join
-    * ONLY those buckets, swap them back in. I/O is O(touched buckets)
-    * like [[mergeCdcBucketed]] (whose crash-healing and atomic-swap
-    * discipline this shares); untouched buckets' files are never
-    * opened. Returns the touched bucket ids. */
-  def deleteKeysBucketed(spark: org.apache.spark.sql.SparkSession,
-                         path: String, keys: DataFrame,
-                         keyCols: Seq[String],
-                         nBuckets: Int = 64): Seq[Int] = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hPath)) return Nil
-    // schema resolves INSIDE the skeleton, after crash-healing and
-    // flat-layout migration — reading it here would throw on the very
-    // recovery states the skeleton exists to heal
-    rewriteTouchedBuckets(spark, path,
-      keys.select(keyCols.map(col): _*).distinct(), keyCols, nBuckets,
-      None) { (base, ks) =>
-      base.join(ks, keyCols, "left_anti")
-    }
-  }
-
-  /** Shared bucketed-rewrite skeleton of [[mergeCdcBucketed]] and
-    * [[deleteKeysBucketed]]: heal a crashed predecessor, migrate a
-    * flat layout if present, locate the buckets `driver`'s keys hash
-    * into, read ONLY those buckets (as independent roots with the row
-    * schema — no partition discovery, `__kb` never enters the merge),
-    * apply `merge(base, driver)`, and atomically swap the rewritten
-    * buckets in (a bucket whose result is empty has its directory
-    * removed). Returns the touched bucket ids (empty for an empty
-    * driver). `schema` = None derives the row schema from the healed
-    * table's bucket dirs (a table emptied of every bucket then merges
-    * nothing and returns Nil). */
-  private def rewriteTouchedBuckets(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      driver: DataFrame, keyCols: Seq[String], nBuckets: Int,
-      schemaOpt: Option[org.apache.spark.sql.types.StructType])(
-      merge: (DataFrame, DataFrame) => DataFrame): Seq[Int] = {
-    require(nBuckets > 0 && nBuckets <= 65536,
-      s"nBuckets in [1,65536], got $nBuckets")
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmpRoot = new org.apache.hadoop.fs.Path(hPath, ".cdc.tmp")
-    val backupRoot = new org.apache.hadoop.fs.Path(hPath, ".cdc.backup")
-    // heal a crashed predecessor: restore any bucket that was renamed
-    // aside but never replaced, then drop backups/tmp wholesale
-    if (fs.exists(backupRoot)) {
-      fs.listStatus(backupRoot).foreach { st =>
-        restoreFromBackup(fs,
-          new org.apache.hadoop.fs.Path(hPath, st.getPath.getName),
-          st.getPath)
-      }
-      fs.delete(backupRoot, true)
-    }
-    fs.delete(tmpRoot, true)
-    migrateFlatIfNeeded(spark, fs, hPath, schemaOpt, keyCols, nBuckets)
-
-    // resolve the row schema AFTER heal + migration: the layout is now
-    // guaranteed to be clean __kb= dirs (or empty)
-    val derived = schemaOpt.orElse {
-      val dirs =
-        if (!fs.exists(hPath)) Array.empty[org.apache.hadoop.fs.Path]
-        else fs.listStatus(hPath)
-          .filter(_.getPath.getName.startsWith("__kb="))
-          .map(_.getPath)
-      if (dirs.isEmpty) None // nothing stored -> nothing to merge
-      else Some(spark.read.parquet(dirs.map(_.toString): _*).schema)
-    }
-    if (derived.isEmpty) return Nil
-    val schema = derived.get
-
-    val bucket = keyBucket(keyCols, nBuckets)
-    val ch = driver.persist()
-    try {
-      val touched = ch.select(bucket.as("__kb")).distinct()
-        .collect().map(_.getInt(0)).sorted.toSeq
-      if (touched.isEmpty) return Nil
-      val existing = touched
-        .map(b => new org.apache.hadoop.fs.Path(hPath, s"__kb=$b"))
-        .filter(fs.exists)
-      val base =
-        if (existing.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            schema)
-        else spark.read.schema(schema)
-          .parquet(existing.map(_.toString): _*)
-      val merged = merge(base, ch)
-      merged.withColumn("__kb", bucket)
-        .repartition(col("__kb")) // one writer wave per bucket, not per task
-        .write.mode(SaveMode.Overwrite).partitionBy("__kb")
-        .parquet(tmpRoot.toString)
-      fs.mkdirs(backupRoot)
-      touched.foreach { b =>
-        atomicSwap(fs,
-          new org.apache.hadoop.fs.Path(hPath, s"__kb=$b"),
-          new org.apache.hadoop.fs.Path(tmpRoot, s"__kb=$b"),
-          new org.apache.hadoop.fs.Path(backupRoot, s"__kb=$b"))
-      }
-      fs.delete(backupRoot, true)
-      fs.delete(tmpRoot, true)
-      touched
-    } finally ch.unpersist()
-  }
-
-  /** One-time layout migration for [[mergeCdcBucketed]]: a table
-    * previously maintained as FLAT part files (the pre-bucketed
-    * whole-table merge, or any plain parquet write) would otherwise be
-    * invisible to the bucket-scoped reads — the merge would silently
-    * treat the base as empty AND later leave a root that mixes flat
-    * files with `__kb=` dirs (a partition-discovery error for
-    * readers). Detect root-level data files, rewrite them into the
-    * bucketed layout, and only then let the merge proceed.
-    *
-    * Crash-safe and idempotent without an O(table) window: the flat
-    * files stay readable until the very end — base = root flat files ∪
-    * any `.cdc.migrated/` leftovers, derived `__kb=` dirs from an
-    * interrupted attempt are discarded and re-derived, flat files are
-    * renamed into `.cdc.migrated/` only after every bucket is in
-    * place, and the marker dir is dropped last. A crash at ANY point
-    * re-runs the migration from the identical logical base. */
-  private def migrateFlatIfNeeded(spark: org.apache.spark.sql.SparkSession,
-      fs: HFs, hPath: HPath,
-      schemaOpt: Option[org.apache.spark.sql.types.StructType],
-      keyCols: Seq[String], nBuckets: Int): Unit = {
-    if (!fs.exists(hPath)) return
-    val migratedRoot = new HPath(hPath, ".cdc.migrated")
-    def isData(p: HPath): Boolean = {
-      val n = p.getName
-      !n.startsWith(".") && !n.startsWith("_")
-    }
-    val flat = fs.listStatus(hPath).toSeq
-      .filter(st => st.isFile && isData(st.getPath)).map(_.getPath)
-    val parked =
-      if (fs.exists(migratedRoot))
-        fs.listStatus(migratedRoot).toSeq.filter(_.isFile).map(_.getPath)
-      else Nil
-    if (flat.isEmpty && parked.isEmpty) return
-    // derived bucket dirs from a crashed attempt are re-derivable from
-    // the still-present flat files — drop and rebuild
-    fs.listStatus(hPath).filter(_.getPath.getName.startsWith("__kb="))
-      .foreach(st => fs.delete(st.getPath, true))
-    val tmp = new HPath(hPath, ".cdc.migrate.tmp")
-    fs.delete(tmp, true)
-    // parquet is self-describing, so a caller without a schema in hand
-    // (deleteKeysBucketed) lets the flat files speak for themselves
-    schemaOpt.map(spark.read.schema(_)).getOrElse(spark.read)
-      .parquet((flat ++ parked).map(_.toString): _*)
-      .withColumn("__kb", keyBucket(keyCols, nBuckets))
-      .repartition(col("__kb"))
-      .write.mode(SaveMode.Overwrite).partitionBy("__kb")
-      .parquet(tmp.toString)
-    fs.listStatus(tmp).filter(_.getPath.getName.startsWith("__kb="))
-      .foreach { st =>
-        fs.rename(st.getPath, new HPath(hPath, st.getPath.getName))
-      }
-    fs.delete(tmp, true)
-    fs.mkdirs(migratedRoot)
-    flat.foreach(p => fs.rename(p, new HPath(migratedRoot, p.getName)))
-    fs.delete(migratedRoot, true)
-  }
-
   /** Snapshot diff — the data-diff between two versions of a keyed
     * table (regression gate between corpus refreshes, CDC
     * reconciliation audit, "what changed since yesterday"): one row
@@ -419,6 +200,15 @@ object Warehouse {
           .as("changed_cols"): _*)
   }
 
+  /** Apply a CDC change stream to a base snapshot: per key, the
+    * highest-`seq` change wins; a winning change whose `isDelete`
+    * predicate holds removes the key from the result; keys untouched by
+    * the stream keep their base row. Base and changes must share a
+    * schema (the base is a snapshot of the same record shape).
+    *
+    * Changes outrank base rows at equal `seq` (the stream is newer
+    * information than the snapshot it was captured against).
+    */
   def applyCdc(base: DataFrame, changes: DataFrame, keyCols: Seq[String],
                seqCols: Seq[String], isDelete: Column): DataFrame = {
     val b = base.withColumn("__del", lit(false)).withColumn("__src", lit(0))

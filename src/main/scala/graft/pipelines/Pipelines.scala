@@ -87,6 +87,14 @@ object Pipelines {
       .options(options).csv(path)
   }
 
+  /** Stamp the run date as the `crawl_date` column, typed `date`: the
+    * append tables partition by it, and a `crawl_date=` directory reads
+    * back as a date, so the replace tables store the same type and every
+    * warehouse table agrees. A malformed `runDate` fails here, on the
+    * driver. */
+  private def withCrawlDate(runDate: String)(df: DataFrame): DataFrame =
+    df.withColumn("crawl_date", lit(java.time.LocalDate.parse(runDate)))
+
   // ----------------------------------------------------------------- sinks
 
   /** K1: append-history sink partitioned by crawl_date. */
@@ -158,7 +166,7 @@ object Pipelines {
       .withColumn("Page Rank", col("Page Rank").cast("double"))
       .withColumn("Chei Rank", col("Chei Rank").cast("double"))
     val leveled = Urls.withUrlLevels(kept, "Url")
-      .withColumn("crawl_date", lit(runDate))
+      .transform(withCrawlDate(runDate))
     Names.renamed(Names.normalizeAll(leveled), Map("url" -> "address"))
   }
 
@@ -255,7 +263,7 @@ object Pipelines {
       .withColumn("doctype", Urls.doctype(col("Address"), cfg.pictureExts))
       .withColumn("website_type", Urls.websiteType(col("Address"),
         cfg.internalRe, cfg.whitelabelRe))
-      .withColumn("crawl_date", lit(runDate))
+      .transform(withCrawlDate(runDate))
 
     // C11: fill-null + double cast (intended semantics of quirk Q1)
     val filled = MetricCols.foldLeft(derived) { (d, c) =>
@@ -315,7 +323,7 @@ object Pipelines {
         Dates.daysBetween(col("reisebeginn"), col("buchungsdatum")))
       .withColumn("personenzahl", Casts.coerceLong(col("personenzahl")))
       .withColumn("buchungsnummer", Casts.coerceLong(col("buchungsnummer")))
-      .withColumn("crawl_date", lit(runDate))
+      .transform(withCrawlDate(runDate))
       .select((MidocoRenames.values.toSeq.sorted ++
         Seq("vorausbuchungstage", "crawl_date")).map(col): _*)
   }
@@ -333,7 +341,7 @@ object Pipelines {
       .withColumn("destination_type", Urls.websiteType(col("Destination"),
         cfg.internalRe, cfg.whitelabelRe))
     val leveled = Urls.withUrlLevels(classified, "Destination")
-      .withColumn("crawl_date", lit(runDate))
+      .transform(withCrawlDate(runDate))
     Names.normalizeAll(leveled)
   }
 
@@ -351,7 +359,7 @@ object Pipelines {
       .withColumn("doctype", Urls.doctype(col("Address"), cfg.pictureExts))
       .filter(col("doctype") === "HTML")
     Names.normalizeAll(
-      Urls.withUrlLevels(typed, "Address").withColumn("crawl_date", lit(runDate)))
+      Urls.withUrlLevels(typed, "Address").transform(withCrawlDate(runDate)))
   }
 
   /** Backlink-metrics pipeline (reference: sf_with_backlinkdata.py:66-87). */
@@ -360,7 +368,7 @@ object Pipelines {
     val typed = raw
       .withColumn("doctype", Urls.doctype(col("Address"), cfg.pictureExts))
     Names.normalizeAll(
-      Urls.withUrlLevels(typed, "Address").withColumn("crawl_date", lit(runDate)))
+      Urls.withUrlLevels(typed, "Address").transform(withCrawlDate(runDate)))
   }
 
   /** Image pipeline (reference: sf_images_data.py:87-171): crawler image
@@ -373,7 +381,7 @@ object Pipelines {
       htmlPictures)
     val renamed = Names.renamed(Names.normalizeAll(
       Urls.withUrlLevels(unioned, "Address")
-        .withColumn("crawl_date", lit(runDate))),
+        .transform(withCrawlDate(runDate))),
       Map("size_(bytes)" -> "image_size"))
     renamed
   }
@@ -381,5 +389,5 @@ object Pipelines {
   /** Hreflang pipeline (reference: sf_hreflang_data.py:68-88): rename
     * normalization (P5) + date stamp only; both tables replace (K2). */
   def hreflang(raw: DataFrame, runDate: String): DataFrame =
-    Names.normalizeAll(raw).withColumn("crawl_date", lit(runDate))
+    Names.normalizeAll(raw).transform(withCrawlDate(runDate))
 }

@@ -1,27 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
-/** Structured Streaming view of the engine (SURVEY §2.11).
-  *
-  * The reference's temporal model is cron-fired daily batch with
-  * append-history tables (K1) and replace-as-latest tables (K2/K3) — i.e.
-  * hand-rolled micro-batching. This module is the streaming-native
-  * re-expression over an `events`-shaped source (event_id, ts, user_id,
-  * event_type, value, props):
-  *
-  *  - watermarked tumbling-window aggregation (the daily-trend dashboards)
-  *  - in-stream dedup bounded by the watermark (exactly-once-ish ingest)
-  *  - arbitrary per-key state via mapGroupsWithState (running per-user
-  *    aggregates, the streaming analogue of append-history self-joins)
-  *  - foreachBatch dual sink = K3's append-history + replace-latest fanout
-  *
-  * Scale posture: state stores are per-key (user_id / window) and bounded
-  * by the watermark, so executors hold O(active keys), not O(history);
-  * sink files partition by day exactly like the batch K1 path.
-  */
 /** Per-EPISODE swap-wait bookkeeping for the schema gate's
   * absent-root-with-backup state: one deadline + exponential backoff
   * per episode, where an episode ends the moment the root (or the
@@ -55,260 +37,27 @@ private[graft] final class SwapWait(waitMs: Long) {
   }
 }
 
+/** The streaming curation store (SURVEY §2.11): a continuously
+  * ingested training corpus kept under one root directory.
+  *
+  * Each micro-batch is quality-gated, optionally decontaminated
+  * against a standing benchmark n-gram registry
+  * ([[Streaming.benchmarkIndexSink]]), near-dup admitted against a
+  * standing index (MinHash LSH or exact Jaccard), written as payload
+  * under `corpus/batch=<id>/`, and folded into the `stats/` store
+  * ([[Streaming.curationIngestSink]] /
+  * [[Streaming.curationIngestSinkExact]]). Around the ingest sit the
+  * store's maintenance passes: retroactive decontamination sweeps,
+  * stats rebuild and repair, compaction, named snapshots with diffs
+  * and exports, and `fsck` audits.
+  *
+  * Every effect is exactly-once under a checkpoint replay: per-batch
+  * directories are deterministic paths rewritten identically, and the
+  * aggregate stores swap wholesale behind a `_batch` high-water mark.
+  * Writers and maintenance passes on one root serialize through the
+  * store lease ([[Streaming.withStoreLock]]).
+  */
 object Streaming {
-
-  /** File-based streaming source over an events-shaped parquet directory:
-    * the production entry point (readStream picks up files as they land —
-    * the streaming analogue of the reference's daily batch drop).
-    * Pass the schema explicitly in production — the inference fallback
-    * reads the directory eagerly and fails if the first drop hasn't
-    * landed yet. */
-  def eventsFileStream(spark: SparkSession, path: String,
-                       schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val s = schema.getOrElse(spark.read.parquet(path).schema)
-    spark.readStream.schema(s).parquet(path)
-  }
-
-  /** Watermarked tumbling-window counts per event type (daily-trend shape;
-    * watermark bounds late data, which the reference never handled —
-    * its cron rerun just overwrote the day). */
-  def windowedCounts(events: DataFrame, watermark: String = "10 minutes",
-                     windowLen: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("sum_value"))
-      .select(col("window.start").as("window_start"),
-        col("event_type"), col("n"), col("sum_value"))
-
-  /** In-stream exact dedup on event_id, state bounded by the watermark. */
-  def dedupedStream(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", watermark).dropDuplicates("event_id")
-
-  /** In-stream dedup where the duplicate's OWN timestamp may lag the
-    * original past the watermark: `dropDuplicatesWithinWatermark` keys
-    * state on event_id alone and expires an entry only when the
-    * watermark passes the FIRST-seen event time plus the delay, so a
-    * replay carrying a fresher timestamp (at-least-once sources
-    * re-stamping on retry) is still dropped. State stays
-    * watermark-bounded — one entry per id within the delay, the exact
-    * contract Spark added the operator for. */
-  def dedupedWithinWatermarkStream(events: DataFrame,
-                                   watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** In-stream NEAR-dup suppression: key the watermark-bounded dedup
-    * state on the row-local simhash of a text column instead of an exact
-    * id — boilerplate variants that hash to the same signature are
-    * dropped on arrival, the streaming analogue of the batch simhash
-    * dedup (ops/dedup.scala). State is one entry per distinct signature
-    * inside the watermark, not per document: at ingest scale the state
-    * store holds the (much smaller) signature vocabulary. */
-  def nearDupSuppressedStream(docs: DataFrame, textCol: String,
-                              tsCol: String = "ts",
-                              watermark: String = "10 minutes"): DataFrame =
-    docs
-      .withColumn("simhash_key", graft.ops.Text.simhash(col(textCol)))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicates("simhash_key")
-
-  case class UserStat(user_id: Long, n_events: Long, sum_value: Double)
-
-  /** Arbitrary stateful processing: running per-user totals via
-    * mapGroupsWithState — the custom-state extension point
-    * (KeyValueGroupedDataset) the prompt's §streaming calls for. */
-  def runningUserStats(events: Dataset[(Long, Double)]): Dataset[UserStat] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .mapGroupsWithState[UserStat, UserStat](GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[(Long, Double)], state: GroupState[UserStat]) =>
-          val prev = state.getOption.getOrElse(UserStat(user, 0L, 0.0))
-          val (n, s) = rows.foldLeft((prev.n_events, prev.sum_value)) {
-            case ((cn, cs), (_, v)) => (cn + 1, cs + v)
-          }
-          val next = UserStat(user, n, s)
-          state.update(next)
-          next
-      }
-  }
-
-  /** Watermarked stream-stream interval join: each left event joins the
-    * right events of the same key from the preceding `within` interval
-    * (e.g. clicks correlated to the errors just before them). Both sides
-    * carry watermarks and the join condition bounds event time on both
-    * ends, so Spark can expire right-side state — without the bound the
-    * state store would grow forever. Inner join => append output mode.
-    * Output: all left columns, plus the right side's columns minus its
-    * duplicate key and with its `ts` renamed `right_ts` — no ambiguous
-    * names survive, so downstream selects need no qualifier. */
-  def intervalJoin(left: DataFrame, right: DataFrame, keyCol: String,
-                   watermark: String = "10 minutes",
-                   within: String = "10 minutes"): DataFrame = {
-    val l = left.withWatermark("ts", watermark).alias("l")
-    val r = right.withWatermark("ts", watermark).alias("r")
-    val rightCols = right.columns.filterNot(_ == keyCol).map {
-      case "ts" => col("r.ts").as("right_ts")
-      case c => col(s"r.$c")
-    }
-    l.join(r,
-        expr(s"l.$keyCol = r.$keyCol AND " +
-          s"r.ts BETWEEN l.ts - INTERVAL $within AND l.ts"))
-      .select(col("l.*") +: rightCols.toSeq: _*)
-  }
-
-  /** Stream-static enrichment: join each micro-batch against a static
-    * dimension table — the canonical "attach user/product attributes to
-    * the event stream" stage. The static side is planned per micro-batch
-    * (broadcast when small), needs NO watermark and holds NO state:
-    * unlike stream-stream joins this is stateless, so it composes with
-    * any output mode. Left join keeps events whose key has no dimension
-    * row yet (late dimension arrival must not drop facts). */
-  def enrichWithDim(events: DataFrame, dim: DataFrame,
-                    keyCol: String): DataFrame =
-    events.join(broadcast(dim), Seq(keyCol), "left")
-
-  case class SessionState(start: Long, last: Long, n: Long, sum: Double)
-  case class SessionOut(user_id: Long, session_start: Long, session_end: Long,
-                        n_events: Long, sum_value: Double)
-
-  /** Streaming sessionization via flatMapGroupsWithState — the streaming
-    * analogue of the batch sessionize queries (q46/q56): a session closes
-    * when `gapMs` passes with no event, emitted exactly once. Event-time
-    * timeout + the upstream watermark close idle sessions without waiting
-    * for the key's next event, and bound state to O(active users).
-    * Input rows are (user_id, event ts, value); timestamps ride as epoch
-    * millis in the emitted rows (encoder-simple, timezone-free). */
-  def sessionizeStream(events: Dataset[(Long, java.sql.Timestamp, Double)],
-                       gapMs: Long = 1800000L): Dataset[SessionOut] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[SessionState, SessionOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, rows: Iterator[(Long, java.sql.Timestamp, Double)],
-         state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionOut(user, s.start, s.last, s.n, s.sum))
-          } else {
-            // within a micro-batch, order by event time so gap logic is
-            // deterministic regardless of arrival order inside the batch
-            val sorted = rows.toSeq.sortBy(_._2.getTime)
-            val closed = scala.collection.mutable.Buffer.empty[SessionOut]
-            var cur = state.getOption
-            for ((_, ts, v) <- sorted) {
-              val t = ts.getTime
-              cur = cur match {
-                case Some(s) if t - s.last > gapMs =>
-                  closed += SessionOut(user, s.start, s.last, s.n, s.sum)
-                  Some(SessionState(t, t, 1L, v))
-                case Some(s) =>
-                  // min-merge the start too: a late-but-admitted event can
-                  // precede the session's first-seen event
-                  Some(SessionState(math.min(s.start, t), math.max(s.last, t),
-                    s.n + 1, s.sum + v))
-                case None =>
-                  Some(SessionState(t, t, 1L, v))
-              }
-            }
-            cur.foreach { s =>
-              state.update(s)
-              // a late-but-admitted event can put last+gap BEHIND the
-              // current watermark (rows are filtered with the previous
-              // batch's watermark, timeouts validate against this one) —
-              // clamping avoids GroupStateImpl's IllegalArgumentException
-              // killing the query; the session then times out immediately
-              // after this batch, which is the correct outcome for an
-              // already-expired session
-              state.setTimeoutTimestamp(
-                math.max(s.last + gapMs, state.getCurrentWatermarkMs() + 1))
-            }
-            closed.iterator
-          }
-      }
-  }
-
-  case class KeyedDoc(key: String, doc_id: Long)
-
-  /** [[capPerKeyStream]]'s processor: one ValueState[Long] counter per
-    * key holding how many rows have been emitted. State is a counter —
-    * O(1) per key regardless of how many documents a hot domain sends —
-    * and an optional TTL lets a long-running ingest forget cold domains.
-    */
-  class PerKeyCapProcessor(n: Int, ttl: TTLConfig)
-      extends StatefulProcessor[String, KeyedDoc, KeyedDoc] {
-    @transient private var seen: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[Long]("seen",
-        org.apache.spark.sql.Encoders.scalaLong, ttl)
-
-    override def handleInputRows(key: String, rows: Iterator[KeyedDoc],
-                                 timerValues: TimerValues): Iterator[KeyedDoc] = {
-      val already = if (seen.exists()) seen.get() else 0L
-      val room = math.max(0L, n - already)
-      // rows.take would leave the emit count unknown until the sink pulls
-      // the iterator — materialize the (≤ n) kept rows so state updates
-      // inside this call, as the processor contract requires
-      val kept = rows.take(if (room > Int.MaxValue) Int.MaxValue
-        else room.toInt).toSeq
-      if (kept.nonEmpty) seen.update(already + kept.size)
-      kept.iterator
-    }
-  }
-
-  /** Streaming per-key document cap via transformWithState (the Spark 4
-    * arbitrary-state API): emit only the first `n` documents per key —
-    * the incremental form of [[graft.ops.Curation.capPerKey]]'s
-    * "max N documents per domain" rule, enforced at ingest instead of by
-    * a later batch sweep. Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass` =
-    * `...state.RocksDBStateStoreProvider`), which is also the right
-    * choice at scale: state lives off-heap/on-disk per executor.
-    *
-    * Semantics note: "first n" is arrival order within each key, which
-    * across partitions is nondeterministic like any streaming race —
-    * the cap itself (never more than n per key) is exact. */
-  def capPerKeyStream(docs: Dataset[KeyedDoc], n: Int,
-                      ttl: TTLConfig = TTLConfig.NONE): Dataset[KeyedDoc] = {
-    import docs.sparkSession.implicits._
-    require(n > 0, s"cap must be positive, got $n")
-    docs.groupByKey(_.key)
-      .transformWithState(new PerKeyCapProcessor(n, ttl),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  /** K3 dual-sink fanout in streaming form: every micro-batch appends a
-    * batch-stamped snapshot to a day-partitioned history table AND
-    * overwrites a small "latest state" table — the reference's
-    * append+replace pair (sf_html_data.py:176-185), incremental.
-    *
-    * Runs in Complete mode so each batch carries the FULL aggregation
-    * state: the latest-table overwrite can never drop windows that didn't
-    * change this batch (Update mode would), and history rows carry
-    * `batch_id` so consumers select one snapshot instead of summing
-    * across them — mirroring the reference's one-snapshot-per-run
-    * append-history. */
-  def dualSink(counts: DataFrame, historyPath: String, latestPath: String,
-               checkpoint: String) =
-    counts.writeStream
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch
-          .withColumn("day", date_format(col("window_start"), "yyyy-MM-dd"))
-          .withColumn("batch_id", lit(batchId))
-        b.persist()
-        // No-data batches (watermark advancement) must not clobber the
-        // latest-state table with an empty overwrite.
-        if (!b.isEmpty) {
-          b.write.mode("append").partitionBy("day").parquet(historyPath)
-          b.write.mode("overwrite").parquet(latestPath)
-        }
-        b.unpersist()
-        ()
-      }
 
   /** The Append-mode micro-batch writer every store sink shares: each
     * non-empty batch goes to `f` with its batch id. No-data batches
@@ -322,68 +71,6 @@ object Streaming {
         if (!batch.isEmpty) f(batch, batchId)
       }
 
-  /** Maintain an upsert table from a change stream: each micro-batch is
-    * merged into the key-hash-bucketed parquet table at `tablePath`
-    * with [[graft.ops.Warehouse.mergeCdcBucketed]] — sequence-first
-    * latest-wins with delete tombstones (the applyCdc semantics of the
-    * batch q103 path; the same merge code runs in both), but
-    * PARTITION-SCOPED: only the `__kb` buckets containing the batch's
-    * keys are read and rewritten, so per-batch I/O is O(touched
-    * buckets), never O(table) — a 100 TB base table absorbs a small
-    * batch by rewriting a few buckets while every other partition's
-    * files stay byte-identical. Each bucket swap is
-    * rename-aside/rename-in (no delete-first window), and merge start
-    * heals any crashed predecessor before touching data, so a crashed
-    * batch replays idempotently off the checkpoint (applyCdc of the
-    * same changes is a fixpoint).
-    *
-    * Consumers read the table with plain `spark.read.parquet` (the
-    * `__kb` layout column rides along as a partition column) or
-    * [[graft.ops.Warehouse.readBucketed]] to drop it. `nBuckets` is
-    * part of the table layout and must not change across restarts. */
-  def cdcSink(changes: DataFrame, tablePath: String, checkpoint: String,
-              keyCols: Seq[String], seqCols: Seq[String],
-              isDelete: org.apache.spark.sql.Column, nBuckets: Int = 64) =
-    batchSink(changes, checkpoint) { (batch, _) =>
-      graft.ops.Warehouse.mergeCdcBucketed(batch.sparkSession,
-        tablePath, batch, keyCols, seqCols, isDelete, nBuckets)
-    }
-
-  /** Incrementally-maintained BM25 term statistics over a document
-    * stream — the corpus-refresh story for [[graft.ops.Retrieval]]:
-    * as documents land, fold each micro-batch's
-    * [[graft.ops.Retrieval.bm25Stats]] delta into a standing stats
-    * store with [[graft.ops.Warehouse.mergeAggDelta]], so
-    * `bm25Against(anything, readTermStats(statsDir))` always scores
-    * against the corpus seen so far WITHOUT ever rescanning it. Both
-    * measures (per-term document frequency; corpus doc count and
-    * total token length) are additive over disjoint document sets, so
-    * the merged store equals a batch `bm25Stats` over everything
-    * streamed — exactly, not approximately — provided each document
-    * arrives once (an append-only corpus feed; re-upserts of a doc_id
-    * would double-count, which is a property of df itself, not of
-    * this sink).
-    *
-    * Exactly-once across failures: the store directory (`terms/`
-    * parquet, `globals/` parquet, `_batch` high-water mark) is
-    * replaced WHOLESALE per micro-batch via
-    * [[graft.ops.Warehouse.atomicSwap]] — merge reads the old store,
-    * writes the complete next state to a tmp dir, and swaps. A crash
-    * anywhere leaves either the old store (the checkpoint replays the
-    * batch and the merge reruns) or the new one (the replayed batch
-    * id ≤ `_batch` and is skipped) — never a half-merged state, the
-    * failure mode a two-table in-place update would have.
-    *
-    * Scale: per batch this shuffles the BATCH (tf/df aggs) and
-    * rewrites the stats store, which is vocabulary-sized — O(distinct
-    * terms), independent of corpus size; the 100 TB corpus itself is
-    * never re-read. */
-  def termStatsSink(docs: DataFrame, idCol: String, textCol: String,
-                    statsDir: String, checkpoint: String) =
-    batchSink(docs, checkpoint) { (batch, batchId) =>
-      mergeTermStatsBatch(batch, idCol, textCol, statsDir, batchId)
-    }
-
   private type HPath = org.apache.hadoop.fs.Path
 
   /** One sub-table of an incrementally-maintained stats store:
@@ -395,11 +82,12 @@ object Streaming {
   /** Fold one micro-batch's delta tables into a stats store, replacing
     * the store directory WHOLESALE via
     * [[graft.ops.Warehouse.atomicSwap]] with a `_batch` high-water
-    * mark — the shared exactly-once machinery of [[termStatsSink]] and
-    * [[dsirStatsSink]]. A crash leaves either the old store (the
-    * checkpoint replays the batch; the merge reruns) or the new one
-    * (the replayed id ≤ `_batch` and is skipped); a half-merged state
-    * is unrepresentable because the whole store swaps in one rename. */
+    * mark — the shared exactly-once machinery of the curation stats
+    * store and the benchmark registry. A crash leaves either the old
+    * store (the checkpoint replays the batch; the merge reruns) or the
+    * new one (the replayed id ≤ `_batch` and is skipped); a half-merged
+    * state is unrepresentable because the whole store swaps in one
+    * rename. */
   private[graft] def mergeStoreBatch(statsDir: String, batchId: Long,
       deltas: Seq[(StorePart, DataFrame)],
       customMerge: Map[String, (Option[DataFrame], DataFrame) => DataFrame]
@@ -431,9 +119,8 @@ object Streaming {
     }
     deltas.foreach { case (part, delta) =>
       // a part's merge is additive (mergeAggDelta) unless the caller
-      // supplies a custom fold — e.g. the Holt store's state carry,
-      // which must run even when no prior exists (its delta is raw
-      // observation arrays, not fold-ready state)
+      // supplies a custom fold — e.g. the unit guards of the `meta` and
+      // `units` parts, which check the prior before merging
       val prior =
         if (fs.exists(new HPath(dir, part.name)))
           Some(spark.read.parquet(s"$statsDir/${part.name}"))
@@ -469,153 +156,6 @@ object Streaming {
     graft.ops.Warehouse.atomicSwap(fs, dir, tmp, backup)
   }
 
-  /** Per-source CAPACITY store for mixture planning: maintains
-    * (source, tokens_avail, n_docs) additively per micro-batch under
-    * the shared exactly-once store discipline ([[mergeStoreBatch]] —
-    * `_batch` mark, wholesale swap). Feed the standing table to
-    * [[graft.ops.Curation.tokenBudgetAllocationFromCapacity]] and the
-    * mixture-planning step is O(sources) — the 100 TB corpus is
-    * tokenized once as it streams past, never rescanned at planning
-    * time. `tokensExpr` is evaluated per batch row (e.g.
-    * `size(Text.tokens(col("text")))`) and its SQL form is persisted
-    * in a `meta/` row at the first merge: a later session configured
-    * with a DIFFERENT expression fails loudly instead of silently
-    * mixing units into the accumulated capacities (the [[hllSink]]
-    * lgK discipline applied to this sink's unit). A store created
-    * before the guard carries no fingerprint to check — its first
-    * post-upgrade merge stamps the CURRENT expression, so keep the
-    * expression stable across that upgrade yourself. */
-  def sourceStatsSink(docs: DataFrame, sourceCol: String,
-                      tokensExpr: Column, statsDir: String,
-                      checkpoint: String) =
-    batchSink(docs, checkpoint) { (batch, batchId) =>
-      mergeSourceStatsBatch(batch, sourceCol, tokensExpr, statsDir,
-        batchId)
-    }
-
-  /** Strip Catalyst's fresh lambda-variable ids from a rendered
-    * expression before fingerprint comparison. The Scala functions API
-    * names higher-order-function lambda variables `x`/`y`/`z` plus a
-    * GLOBAL counter (`x_1636`), so the SAME expression rebuilt in a
-    * later session renders differently — a raw string compare would
-    * falsely reject an identical restart. SQL-parsed lambdas keep
-    * their literal names and are untouched.
-    *
-    * LEGACY ONLY: string-level erasure cannot tell Catalyst's counter
-    * from a real column that happens to be named `y_2020` — two
-    * genuinely different columns of that shape would compare equal,
-    * false-accepting exactly the mixed-units hazard the guard exists
-    * for. New stores stamp [[tokensFingerprint]] (a tree-level
-    * rename that touches only lambda-variable NODES); this normalizer
-    * remains solely to keep pre-canonical stores readable. */
-  private[graft] def normalizeLambdaIds(rendered: String): String =
-    rendered.replaceAll("""\b([xyz])_\d+\b""", "$1")
-
-  /** Canonical fingerprint of a tokenizer expression: rename the
-    * lambda-variable nodes in the EXPRESSION TREE (deterministic
-    * traversal order), then render. Column references are different
-    * node types and pass through untouched — `col("y_2020")` and
-    * `col("y_2021")` stay distinct where the legacy string erasure
-    * conflated them, while the same lambda rebuilt under a fresh
-    * global counter canonicalizes identically. */
-  private[graft] def tokensFingerprint(frame: DataFrame,
-      c: Column): String = {
-    import org.apache.spark.sql.catalyst.expressions.{
-      Alias, AttributeReference, ExprId, NamedLambdaVariable}
-    var i = 0
-    val renames = scala.collection.mutable.Map.empty[String, String]
-    def canon(old: String): String =
-      renames.getOrElseUpdate(old, { i += 1; s"__lv$i" })
-    // the Column's Expression via public plan surface: the ANALYZED
-    // one-column select carries it under an auto-alias (whose NAME
-    // embeds the session-variant lambda ids — unwrap it). Rendering
-    // is toString AFTER zeroing every exprId: attribute/lambda NAMES
-    // must survive (they are the units being guarded — .sql would
-    // erase lambda identity entirely), but the per-session id
-    // counters must not
-    val zero = ExprId(0, new java.util.UUID(0L, 0L))
-    val expr = frame.select(c).queryExecution.analyzed
-      .expressions.head match {
-        case a: Alias => a.child
-        case e => e
-      }
-    expr.transformUp {
-      case v: NamedLambdaVariable =>
-        v.copy(name = canon(s"${v.name}#${v.exprId.id}"), exprId = zero)
-      case a: AttributeReference => a.withExprId(zero)
-    }.toString
-  }
-
-  private[graft] def mergeSourceStatsBatch(batch: DataFrame,
-      sourceCol: String, tokensExpr: Column, statsDir: String,
-      batchId: Long): Unit = {
-    // the unit fingerprint: the expression's CANONICAL rendered form
-    // ([[tokensFingerprint]] — lambda nodes renamed in the tree, so a
-    // rebuilt identical expression matches while a different real
-    // column does not). A CHANGED expression is exactly the
-    // mixed-units hazard the guard exists to catch. Stores stamped
-    // before the canonical form keep their legacy rendering (first
-    // writer wins) and are compared modulo [[normalizeLambdaIds]]
-    // against this session's legacy rendering
-    val fp = tokensFingerprint(batch, tokensExpr)
-    val fpLegacy = tokensExpr.toString
-    mergeStoreBatch(statsDir, batchId, Seq(
-      StorePart("meta", Seq("tokens_expr"), Seq("n_batches")) ->
-        batch.sparkSession.range(1)
-          .select(lit(fp).as("tokens_expr"), lit(1L).as("n_batches")),
-      StorePart("capacity", Seq("source"),
-        Seq("tokens_avail", "n_docs")) ->
-        batch.groupBy(col(sourceCol).as("source"))
-          .agg(sum(tokensExpr.cast("double")).as("tokens_avail"),
-            count(lit(1)).as("n_docs"))),
-      customMerge = Map("meta" -> { (prior, delta) =>
-        prior match {
-          case Some(p) =>
-            val fps = p.select("tokens_expr").collect()
-              .map(_.getString(0)).toSeq
-            // acceptance, narrowest first: canonical match (new
-            // stores); exact legacy match (pre-canonical store, no
-            // session-varying parts); normalized legacy match ONLY
-            // for lambda-bearing stored fps — the one shape whose
-            // rendering legitimately varies per session. Lambda-free
-            // fps never take the erasure path, so real columns named
-            // like lambda ids (x_1 vs x_2) stay distinct
-            // a legacy fp is lambda-bearing iff a counter-named
-            // variable sits in a lambda PARAMETER position — directly
-            // before the arrow (`x_17 -> …`) or inside the paren
-            // group before it (`(x_17, y_18) -> …`). Adjacency
-            // matters: a real column named x_1 elsewhere in an
-            // expression that also has a SQL-parsed lambda
-            // (`(acc, e) -> …`) must NOT unlock the erasure path, or
-            // x_1 vs x_2 reconfigurations would blur
-            val legacyLambda = fps.exists(f =>
-              f.matches("""(?s).*\b[xyz]_\d+\s*->.*""") ||
-                f.matches(
-                  """(?s).*\([^()]*\b[xyz]_\d+[^()]*\)\s*->.*"""))
-            require(fps == Seq(fp) || fps == Seq(fpLegacy) ||
-                (legacyLambda &&
-                  fps.map(normalizeLambdaIds) ==
-                    Seq(normalizeLambdaIds(fpLegacy))),
-              s"source-capacity store at $statsDir accumulated tokens " +
-                s"under ${fps.mkString(",")} but this sink is configured " +
-                s"with $fp — the capacities would silently mix units; " +
-                "pass the original expression or rebuild the store")
-            // keep the store's ORIGINAL rendering (first writer wins):
-            // re-stamping this session's lambda ids would fork the
-            // meta key and mergeAggDelta would grow a second row
-            p.select(col("tokens_expr"),
-              (col("n_batches") + lit(1L)).as("n_batches"))
-          case None => delta
-        }
-      }))
-  }
-
-  /** The standing (source, tokens_avail, n_docs) table of a
-    * [[sourceStatsSink]] — the `capacity` input of
-    * [[graft.ops.Curation.tokenBudgetAllocationFromCapacity]]. */
-  def readSourceCapacity(spark: SparkSession, statsDir: String): DataFrame =
-    spark.read.parquet(s"${readableStoreDir(spark, statsDir)}/capacity")
-
   /** Standing BENCHMARK n-gram registry for decontamination: stream
     * evaluation sets in as they are registered (benchmarks arrive over
     * time — new eval suites, held-out splits, customer test sets) and
@@ -633,7 +173,7 @@ object Streaming {
     * The gram width `n` is a UNIT (an n=8 store probed at n=13 would
     * silently match nothing), so it is stamped into a `meta/` row at
     * the first merge; a sink configured with a different `n` fails
-    * loudly (the [[hllSink]] lgK discipline), and the reader takes `n`
+    * loudly, and the reader takes `n`
     * from the store rather than trusting the caller. */
   def benchmarkIndexSink(docs: DataFrame, textCol: String,
                          statsDir: String, checkpoint: String,
@@ -748,16 +288,6 @@ object Streaming {
     }
   }
 
-  private[graft] def mergeTermStatsBatch(batch: DataFrame, idCol: String,
-      textCol: String, statsDir: String, batchId: Long): Unit = {
-    val (dTerms, dGlobals) =
-      graft.ops.Retrieval.bm25Stats(batch, idCol, textCol)
-    mergeStoreBatch(statsDir, batchId, Seq(
-      StorePart("terms", Seq("term"), Seq("df")) -> dTerms,
-      StorePart("globals", Seq("k"), Seq("n_docs", "total_dl"))
-        -> dGlobals.coalesce(1)))
-  }
-
   /** The readable root of a swap-maintained store WITHOUT mutating
     * anything: the store dir if present, else the backup left by a
     * crashed [[graft.ops.Warehouse.atomicSwap]]. Reads must not run
@@ -773,73 +303,6 @@ object Streaming {
     if (!fs.exists(dir) && fs.exists(backup)) backup.toString else statsDir
   }
 
-  /** Read a [[termStatsSink]] store as the (terms, globals) pair
-    * [[graft.ops.Retrieval.bm25Against]] consumes. Side-effect-free
-    * (see [[readableStoreDir]]). */
-  def readTermStats(spark: SparkSession,
-                    statsDir: String): (DataFrame, DataFrame) = {
-    val root = readableStoreDir(spark, statsDir)
-    (spark.read.parquet(s"$root/terms"),
-      spark.read.parquet(s"$root/globals"))
-  }
-
-  /** Incrementally-maintained DSIR feature-LM counts over a document
-    * stream — [[termStatsSink]]'s machinery applied to
-    * [[graft.ops.Retrieval.dsirCounts]]: per micro-batch, fold the
-    * batch's per-bucket (target, raw) token counts into a standing
-    * `lm/` table, so `dsirWeightsAgainst(anything,
-    * readDsirCounts(statsDir))` scores against the corpus streamed so
-    * far without rescanning it. Same additivity argument (counts over
-    * disjoint document sets sum), same append-only-feed precondition,
-    * and the same wholesale-swap exactly-once guarantee via
-    * [[mergeStoreBatch]]. The store is at most `buckets` rows — the
-    * per-batch rewrite is constant-size regardless of corpus scale.
-    *
-    * `isTarget` must be computable from the batch's own columns (e.g.
-    * a source label), and `buckets` must match the value used when
-    * scoring. */
-  def dsirStatsSink(docs: DataFrame, idCol: String, textCol: String,
-                    isTarget: org.apache.spark.sql.Column, statsDir: String,
-                    checkpoint: String, buckets: Int = 64) =
-    batchSink(docs, checkpoint) { (batch, batchId) =>
-      mergeStoreBatch(statsDir, batchId, Seq(
-        StorePart("lm", Seq("bucket"), Seq("ct", "cr")) ->
-          graft.ops.Retrieval.dsirCounts(
-            batch, idCol, textCol, isTarget, buckets)))
-    }
-
-  /** Continuously-ingested corpus dedup against an UNBOUNDED
-    * persistent history — the complement of
-    * [[nearDupSuppressedStream]]'s watermark-bounded state-store
-    * variant: each micro-batch is admission-gated against a standing
-    * [[graft.ops.Dedup.minhashIndex]] of everything ever admitted
-    * (`admitAgainstIndex`: anti-join on the band key, plus in-batch
-    * lowest-id-wins), and the admitted documents' band rows are
-    * appended to the index.
-    *
-    * Exactly-once WITHOUT rewriting the store: the index is
-    * append-only, so each batch writes its admitted rows to a
-    * deterministic `batch=<id>/` subdirectory (overwrite mode). On
-    * replay the standing index is read EXCLUDING the current batch id
-    * — any partial leftover from a crash is deleted first, the
-    * admission decision replays against exactly the pre-crash state,
-    * and the subdirectory is rewritten with identical content.
-    * Per-batch I/O is O(admitted batch rows), never O(index) — the
-    * property the wholesale-swap stats stores (vocabulary-sized) don't
-    * need but a corpus-sized index does.
-    *
-    * The admitted corpus is recovered from the index itself: distinct
-    * `(id, batch)` — or compose with a payload sink keyed on the
-    * admitted ids. */
-  def dedupIndexSink(docs: DataFrame, textCol: String, idCol: String,
-                     indexDir: String, checkpoint: String,
-                     numHashes: Int = 8, bands: Int = 4,
-                     shingleSize: Int = 3) =
-    batchSink(docs, checkpoint) { (batch, batchId) =>
-      mergeDedupIndexBatch(batch, textCol, idCol, indexDir, batchId,
-        numHashes, bands, shingleSize)
-    }
-
   /** Number of `bh=` hash buckets each batch directory is partitioned
     * into, and the bucketing function — MUST match between write and
     * probe (both live here; the value is a layout constant of the
@@ -848,7 +311,17 @@ object Streaming {
   private[graft] def dedupIndexBucket(bandHash: Column): Column =
     pmod(crc32(bandHash), lit(DedupIndexBuckets)).cast("int")
 
-  /** Returns the admitted subset (materialized) so composite sinks
+  /** Admit one batch against an UNBOUNDED standing MinHash index
+    * ([[graft.ops.Dedup.admitProbed]]: anti-join on the band key plus
+    * in-batch lowest-id-wins) and append the admitted documents' band
+    * rows under `batch=<id>/bh=<k>/`.
+    *
+    * Exactly-once without rewriting the store: a replay deletes any
+    * partial leftover of its own batch dir, re-decides against exactly
+    * the pre-crash standing state, and rewrites identical content.
+    * Per-batch I/O is O(batch + touched buckets), never O(index).
+    *
+    * Returns the admitted subset (materialized) so composite sinks
     * ([[curationIngestSink]]) can write payloads / fold stats without
     * re-running the admission joins. */
   private[graft] def mergeDedupIndexBatch(batch: DataFrame, textCol: String,
@@ -908,52 +381,33 @@ object Streaming {
     admitted
   }
 
-  /** Read a [[dedupIndexSink]] index: every admitted document's band
+  /** Read a MinHash dedup index ([[mergeDedupIndexBatch]], the
+    * `index/` of a [[curationIngestSink]] root): every admitted
+    * document's band
     * rows plus the `batch` and `bh` (band-hash bucket) partition
     * columns of the `batch=<id>/bh=<k>/` layout it is stored in. */
   def readDedupIndex(spark: SparkSession, indexDir: String): DataFrame =
     spark.read.parquet(indexDir)
-
-  /** Streaming ingestion with EXACT-Jaccard near-dup admission — the
-    * exact-threshold form of [[dedupIndexSink]] (whose LSH banding is
-    * probabilistic): per micro-batch, order the batch's shingle sets
-    * under the FROZEN df order, admit documents below `minJaccard`
-    * against every stored document and every earlier batch document
-    * ([[graft.ops.Dedup]]'s prefix-filter machinery — recall exactly
-    * 1.0), and append the admitted rows to the standing two-table
-    * layout: `prefix/batch=<id>/jb=<k>/szb=<b>/` (candidate probe
-    * rows, bucketed by digest with a ⌊log2 sz⌋ size-band subdir) and
-    * `arrays/batch=<id>/ab=<k>/` (packed digest sets for
-    * verification, bucketed by id). Reads prune BOTH trees: the probe
-    * touches only the `jb=` buckets the batch's prefix digests hash
-    * into AND only the `szb=` bands inside the batch's
-    * size-compatibility envelope [t·mn, mx/t] (a large batch whose
-    * digests touch every `jb=` bucket still skips the band dirs its
-    * sizes cannot match — read I/O bounded by the batch's size
-    * envelope, not index age; a batch whose sizes span the whole
-    * corpus distribution degrades gracefully to the `jb=` prune), and
-    * verification touches only the `ab=` buckets of candidate store
-    * ids — per-batch I/O is O(batch + matched rows), never O(index).
-    *
-    * `dfTable` must be the frozen [[graft.ops.Dedup.shingleDfTable]]
-    * snapshot pinned at index creation. Exactly-once by the
-    * [[dedupIndexSink]] discipline: deterministic per-batch paths in
-    * both trees, crash leftovers deleted, replays re-decide against
-    * the pre-crash standing state and rewrite identical content. */
-  def jaccardIndexSink(docs: DataFrame, textCol: String, idCol: String,
-                       indexDir: String, checkpoint: String,
-                       dfTable: DataFrame, n: Int = 3,
-                       minJaccard: Double = 0.5) =
-    batchSink(docs, checkpoint) { (batch, batchId) =>
-      mergeJaccardIndexBatch(batch, textCol, idCol, indexDir,
-        batchId, dfTable, n, minJaccard)
-    }
 
   private[graft] def jaccardPrefixBucket(h: Column): Column =
     pmod(crc32(h), lit(DedupIndexBuckets)).cast("int")
   private[graft] def jaccardArrayBucket(id: Column): Column =
     pmod(crc32(id.cast("string")), lit(DedupIndexBuckets)).cast("int")
 
+  /** EXACT-Jaccard admission of one batch — the exact-threshold form
+    * of [[mergeDedupIndexBatch]] (whose LSH banding is
+    * probabilistic): order the batch's shingle sets under the FROZEN
+    * `dfTable` ([[graft.ops.Dedup.shingleDfTable]], pinned at index
+    * creation), admit documents below `minJaccard` against every
+    * stored and every earlier in-batch document (recall exactly 1.0),
+    * and append the admitted rows to the two-table layout:
+    * `prefix/batch=<id>/jb=<k>/szb=<b>/` (candidate probe rows, bucketed
+    * by digest with a ⌊log2 sz⌋ size band) and
+    * `arrays/batch=<id>/ab=<k>/` (packed digest sets for verification,
+    * bucketed by id). Reads prune both trees, so per-batch I/O is
+    * O(batch + matched rows), never O(index). Exactly-once by the
+    * [[mergeDedupIndexBatch]] discipline. Returns the admitted subset
+    * (materialized). */
   private[graft] def mergeJaccardIndexBatch(batch: DataFrame,
       textCol: String, idCol: String, indexDir: String, batchId: Long,
       dfTable: DataFrame, n: Int, minJaccard: Double): DataFrame =
@@ -1075,7 +529,8 @@ object Streaming {
     admitted
   }
 
-  /** The admitted (id, ord, sz) sets of a [[jaccardIndexSink]] (plus
+  /** The admitted (id, ord, sz) sets of an exact-Jaccard index
+    * ([[mergeJaccardIndexBatch]]) (plus
     * `batch`/`ab` partition columns); admitted ids = `distinct(id)`. */
   def readJaccardIndexArrays(spark: SparkSession,
                              indexDir: String): DataFrame =
@@ -3089,15 +2544,15 @@ object Streaming {
   /** O(metadata) integrity audit of ONE standing store directory —
     * the generic form of [[fsckCurationStore]] for stores that live
     * outside a curation root: aggregate stores fed by
-    * [[mergeStoreBatch]] (HLL, source-capacity, drift histograms, the
-    * benchmark n-gram registry) and batch-dir index stores
-    * (dedup / exact-Jaccard / vector). Checks both swap families, the
-    * `_batch` mark's readability, `batch=` dirs without `_SUCCESS`
-    * (the replayable-trailing-batch signature), and the exact index's
-    * embedded `df_table` swap pair. Same finding schema and heal
-    * discipline as [[fsckCurationStore]] — and safe to heal here: no
-    * store outside the curation corpus is compacted by move-carry, so
-    * these scratches never hold an only copy. */
+    * [[mergeStoreBatch]] (the benchmark n-gram registry, a curation
+    * stats store) and batch-dir index stores (dedup / exact-Jaccard).
+    * Checks both swap families, the `_batch` mark's readability,
+    * `batch=` dirs without `_SUCCESS` (the replayable-trailing-batch
+    * signature), and the exact index's embedded `df_table` swap pair.
+    * Same finding schema and heal discipline as [[fsckCurationStore]]
+    * — and safe to heal here: no store outside the curation corpus is
+    * compacted by move-carry, so these scratches never hold an only
+    * copy. */
   def fsckStore(spark: SparkSession, storeDir: String,
       heal: Boolean = false): DataFrame =
     // same discipline as [[fsckCurationStore]]: audits are lock-free,
@@ -3155,7 +2610,7 @@ object Streaming {
     // crashed-holder signature worth surfacing
     leaseFinding(fs, storeDir,
       spark.sparkContext.hadoopConfiguration).foreach(out += _)
-    // batch dirs live directly under the store (dedup/vector index)
+    // batch dirs live directly under the store (dedup index)
     // or under the exact index's prefix/ and arrays/ subtrees
     for (sub <- Seq("", "/prefix", "/arrays");
         root = s"$storeDir$sub"
@@ -3545,12 +3000,11 @@ object Streaming {
           length(col(textCol)).cast("double"), lenLo, lenHi, 10)
           .as("bucket"))
           .agg(count(lit(1)).as("n")),
-      // the length-bucket bounds are a UNIT (the hllSink lgK
-      // discipline): an ingest reconfigured mid-stream would silently
-      // mix bucket scales into the accumulated counts, and the sweep's
-      // stats-delta pin needs the bounds to bucket tombstoned docs the
-      // same way. A pre-unit store stamps them at its first
-      // post-upgrade merge
+      // the length-bucket bounds are a UNIT: an ingest reconfigured
+      // mid-stream would silently mix bucket scales into the
+      // accumulated counts, and the sweep's stats-delta pin needs the
+      // bounds to bucket tombstoned docs the same way. A pre-unit store
+      // stamps them at its first post-upgrade merge
       StorePart("units", Seq("len_lo", "len_hi"), Seq("n_batches")) ->
         admitted.sparkSession.range(1)
           .select(lit(lenLo).as("len_lo"), lit(lenHi).as("len_hi"),
@@ -3575,7 +3029,7 @@ object Streaming {
   /** The length-bucket bounds stamped into a curation stats store's
     * `units` part, or None for a store that predates the unit stamp
     * (or no store at all). */
-  private def readStatsUnits(spark: SparkSession,
+  private[graft] def readStatsUnits(spark: SparkSession,
       statsDir: String): Option[(Double, Double)] = {
     val rootStr = readableStoreDir(spark, statsDir)
     val units = new HPath(s"$rootStr/units")
@@ -3590,7 +3044,7 @@ object Streaming {
 
   /** [[curationIngestSink]] with the EXACT-Jaccard admission gate in
     * place of the LSH one — the quality-over-throughput composition:
-    * gate → [[jaccardIndexSink]]'s standing-index admission (recall
+    * gate → [[mergeJaccardIndexBatch]]'s standing-index admission (recall
     * exactly 1.0 at `minJaccard`, no band-coincidence suppression) →
     * payload → stats, all four effects exactly-once under one replay
     * discipline. `dfTable` is the frozen order pinned at index
@@ -3645,921 +3099,12 @@ object Streaming {
   def readCurationCorpus(spark: SparkSession, rootDir: String): DataFrame =
     spark.read.parquet(s"$rootDir/corpus")
 
-  /** Streaming ingestion with HASH-keyed near-dup admission —
-    * [[dedupIndexSink]]'s discipline for corpora whose similarity key
-    * is a precomputed integer hash (text simhash, image aHash computed
-    * upstream): per micro-batch, band the batch's hashes
-    * ([[graft.ops.Dedup.hashBandIndex]] — bit shifts, no shingling),
-    * prune the standing index to the touched `hb=` buckets, admit rows
-    * with no Hamming ≤ `maxHamming` neighbor in store or batch
-    * (EXACT-distance verification on collisions, pigeonhole recall 1.0
-    * while maxHamming < bands), and append the admitted band rows
-    * under `batch=<id>/hb=<k>/`.
-    *
-    * Exactly-once by deterministic per-batch paths (crash leftovers
-    * deleted, replay re-decides against the pre-crash state and
-    * rewrites identical content); per-batch I/O is O(admitted rows +
-    * touched buckets), never O(index). Null-hash rows (undecodable
-    * images) are ADMITTED but absent from the index — recover the
-    * admitted corpus from a payload sink, not the index, if nulls
-    * matter. */
-  def hashIndexSink(rows: DataFrame, hashCol: String, idCol: String,
-                    indexDir: String, checkpoint: String,
-                    bits: Int = 64, bands: Int = 8, maxHamming: Int = 3) =
-    batchSink(rows, checkpoint) { (batch, batchId) =>
-      mergeHashIndexBatch(batch, hashCol, idCol, indexDir, batchId,
-        bits, bands, maxHamming)
-    }
-
-  /** Bucketing of hash-band index rows into `hb=` dirs — a layout
-    * constant shared by write and probe, like [[dedupIndexBucket]]. */
-  private[graft] def hashIndexBucket(bandIdx: Column,
-                                     bandValue: Column): Column =
-    pmod(crc32(concat_ws("|", bandIdx, bandValue)),
-      lit(DedupIndexBuckets)).cast("int")
-
-  private[graft] def mergeHashIndexBatch(batch: DataFrame, hashCol: String,
-      idCol: String, indexDir: String, batchId: Long, bits: Int,
-      bands: Int, maxHamming: Int): Unit =
-    withStoreLock(batch.sparkSession, Seq(indexDir)) {
-      healCompactRoot(batch.sparkSession, indexDir)
-      mergeHashIndexBody(batch, hashCol, idCol, indexDir, batchId,
-        bits, bands, maxHamming)
-    }
-
-  private def mergeHashIndexBody(batch: DataFrame, hashCol: String,
-      idCol: String, indexDir: String, batchId: Long, bits: Int,
-      bands: Int, maxHamming: Int): Unit = {
-    val spark = batch.sparkSession
-    val dir = new HPath(indexDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new HPath(dir, s"batch=$batchId"), true)
-    val hasPrior = fs.exists(dir) &&
-      fs.listStatus(dir).exists(_.getPath.getName.startsWith("batch="))
-    // ONE banding pass: the same materialized probe feeds the
-    // touched-bucket prune, both admission joins (store + in-batch,
-    // via admitHashProbed) and the write frame below
-    val probe = graft.ops.Dedup.hashBandIndex(batch, hashCol, idCol,
-      bits, bands).localCheckpoint()
-    val standing =
-      if (hasPrior) {
-        val touched = probe
-          .select(hashIndexBucket(col("band_idx"), col("band_value"))
-            .as("hb"))
-          .distinct().collect().map(_.getInt(0))
-        spark.read.parquet(indexDir)
-          .where(col("hb").isin(touched.toSeq: _*))
-          .drop("batch", "hb")
-      } else probe.limit(0)
-    val admitted = graft.ops.Dedup.admitHashProbed(batch, idCol, probe,
-      standing, bits, maxHamming)
-    // same write-frame empty guard as [[mergeDedupIndexBatch]]: a
-    // batch whose admitted rows carry no band rows (all null hashes)
-    // writes nothing rather than a _SUCCESS-only dir that would wedge
-    // the next batch's schema inference
-    val bandRows = probe.join(
-        admitted.select(col(idCol).as("id")), Seq("id"), "left_semi")
-      .withColumn("hb",
-        hashIndexBucket(col("band_idx"), col("band_value")))
-      .localCheckpoint()
-    if (!bandRows.isEmpty)
-      bandRows.write.mode("overwrite").partitionBy("hb")
-        .parquet(s"$indexDir/batch=$batchId")
-  }
-
-  /** Read a [[hashIndexSink]] index: admitted rows' band rows plus the
-    * `batch` / `hb` partition columns. Admitted (non-null-hash) ids =
-    * `distinct(id)`. */
-  def readHashIndex(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(indexDir)
-
-  /** Streaming IVF vector-index maintenance — the vector-database
-    * ingestion path: each micro-batch of (id, embedding) rows is
-    * assigned its coarse centroid row-locally
-    * ([[graft.ops.Similarity.assignToCentroids]] — broadcast centroid
-    * array, zero batch shuffle beyond the partitioned write) and
-    * appended under `batch=<id>/cluster=<cid>/`, so the on-disk layout
-    * IS the inverted file: a query that probes `nprobe` centroids
-    * reads only those `cluster=` directories (partition pruning),
-    * touching ~nprobe/nlist of the corpus bytes no matter how much
-    * history has accumulated.
-    *
-    * Exactly-once by the same discipline as [[dedupIndexSink]]:
-    * deterministic per-batch paths, overwrite on replay — and unlike a
-    * monolithic index rebuild, per-batch I/O is O(batch). Centroids
-    * are FIXED for the life of the index (re-centering rewrites it;
-    * that is an offline compaction, not a streaming concern). */
-  def vectorIndexSink(vectors: DataFrame, embCol: String, idCol: String,
-                      centroids: DataFrame, indexDir: String,
-                      checkpoint: String) =
-    batchSink(vectors, checkpoint) { (batch, batchId) =>
-      withStoreLock(batch.sparkSession, Seq(indexDir)) {
-        healCompactRoot(batch.sparkSession, indexDir)
-        graft.ops.Similarity.assignToCentroids(
-            batch, embCol, idCol, centroids)
-          .write.mode("overwrite").partitionBy("cluster")
-          .parquet(s"$indexDir/batch=$batchId")
-      }
-    }
-
-  /** The PQ variant of [[vectorIndexSink]]: per micro-batch, assign
-    * vectors to their coarse centroid AND encode them against a fixed
-    * PQ codebook, persisting `batch=<id>/cluster=<cid>/` rows of
-    * (id, codes, recon_err) — the streaming IVF-PQ index. The raw
-    * vector is NOT stored: the index holds m small ints per vector, so
-    * at 10^9 vectors the inverted lists are ~m bytes/vector instead of
-    * 4·dim. Coarse centroids and codebook are pinned for the index
-    * lifetime (same contract as [[vectorIndexSink]]'s centroids);
-    * re-training either is a compaction-time rebuild.
-    * Exactly-once by path determinism, like [[vectorIndexSink]].
-    * [[compactVectorIndex]] with `recenter = false` compacts this
-    * index unchanged (it is layout-, not schema-, bound); re-centering
-    * is impossible IN PLACE by design — raw vectors are not stored —
-    * so a centroid/codebook refresh means re-encoding from source:
-    * [[rebuildPqIndex]] is that pass, the honest cost of the
-    * codes-only footprint. */
-  def pqIndexSink(vectors: DataFrame, embCol: String, idCol: String,
-                  centroids: DataFrame, codebook: DataFrame,
-                  m: Int, dim: Int,
-                  indexDir: String, checkpoint: String,
-                  residual: Boolean = false) =
-    batchSink(vectors, checkpoint) { (batch, batchId) =>
-      withStoreLock(batch.sparkSession, Seq(indexDir)) {
-        healCompactRoot(batch.sparkSession, indexDir)
-        encodePqRows(batch, embCol, idCol, centroids, codebook,
-            m, dim, residual)
-          .write.mode("overwrite").partitionBy("cluster")
-          .parquet(s"$indexDir/batch=$batchId")
-      }
-    }
-
-  /** Assign + PQ-encode one frame into exactly the rows [[pqIndexSink]]
-    * persists — (idCol, cluster, codes, recon_err) — shared by the
-    * streaming sink and [[rebuildPqIndex]] so the two can never
-    * diverge in schema or encoding. */
-  private def encodePqRows(batch: DataFrame, embCol: String, idCol: String,
-                           centroids: DataFrame, codebook: DataFrame,
-                           m: Int, dim: Int,
-                           residual: Boolean): DataFrame = {
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      batch, embCol, idCol, centroids)
-    if (!residual)
-      assigned.select(col(idCol), col("cluster"))
-        .join(graft.ops.Quantize.pqEncode(
-          batch, codebook, embCol, idCol, m, dim), idCol)
-    else {
-      // production form: encode x - coarse centroid, so the
-      // pinned codebook only covers the residual distribution
-      val res = assigned
-        .join(broadcast(centroids),
-          col("cluster") === col("cid"))
-        .select(col(idCol), col("cluster"),
-          zip_with(
-            transform(col(embCol), x => x.cast("double")),
-            transform(col("cvec"), x => x.cast("double")),
-            (x, c) => x - c).as("__res"))
-      res.select(col(idCol), col("cluster"))
-        .join(graft.ops.Quantize.pqEncode(
-          res, codebook, "__res", idCol, m, dim), idCol)
-    }
-  }
-
-  /** Offline (re)build of a [[pqIndexSink]] index from its SOURCE
-    * corpus — the codebook/centroid-refresh path the sink's docstring
-    * defers here. The sink pins centroids and codebook for the index
-    * lifetime and stores codes only, so when either drifts (PSI gate,
-    * recall gate), re-encoding from source is the only honest rebuild:
-    * this pass encodes every corpus vector against the NEW
-    * centroids/codebook ([[encodePqRows]] — byte-identical schema to
-    * the sink's batches) and atomically swaps a fresh
-    * `batch=-1/cluster=<cid>/` tree in place of the old index
-    * ([[graft.ops.Warehouse.atomicSwap]] discipline: readers race two
-    * renames, never a half-written tree; a crashed rebuild heals on
-    * the next maintenance call). `batch = -1` sits below every
-    * micro-batch id, so a resuming stream appends new batches on top
-    * exactly as after [[compactVectorIndex]], and the per-id
-    * latest-wins window keeps preferring streamed updates over the
-    * rebuilt baseline. Runs under the index root's store lease
-    * ([[withStoreLock]]) so a live stream's merges queue behind the
-    * swap — note the rebuild holds the lease for its whole corpus
-    * pass, so size the waiting merges' patience (or schedule rebuilds
-    * in quiet windows) accordingly.
-    *
-    * Scale: one corpus pass — assignment is row-local against the
-    * broadcast centroid table, encoding shuffles one row per (vector,
-    * subspace) ([[graft.ops.Quantize.pqEncode]]), and the write is
-    * repartitioned by cluster so each inverted list lands as one file
-    * set. Cost is linear in corpus size with no all-pairs stage —
-    * the honest price of refreshing a codes-only index. */
-  def rebuildPqIndex(spark: SparkSession, corpus: DataFrame,
-                     embCol: String, idCol: String,
-                     centroids: DataFrame, codebook: DataFrame,
-                     m: Int, dim: Int, indexDir: String,
-                     residual: Boolean = false): Unit =
-    withStoreLock(spark, Seq(indexDir)) {
-      swapInCompacted(spark, indexDir) { (tmp, _) =>
-        encodePqRows(corpus, embCol, idCol, centroids, codebook,
-            m, dim, residual)
-          .repartition(col("cluster"))
-          .write.mode("overwrite").partitionBy("cluster")
-          .parquet(s"$tmp/batch=-1")
-      }
-    }
-
-  /** Query a [[pqIndexSink]] index: probe the `nprobe` best coarse
-    * centroids' partition directories (same prune as
-    * [[ivfSearchIndex]]), then rank ONLY those inverted lists by PQ
-    * asymmetric distance — m broadcast table lookups per candidate,
-    * raw vectors never read because they were never stored. Returns
-    * (idCol, cluster, adc_dist), k rows. */
-  def ivfPqSearchIndex(spark: SparkSession, indexDir: String,
-                       centroids: DataFrame, codebook: DataFrame,
-                       queryVec: Column, nprobe: Int, k: Int,
-                       m: Int, dim: Int, idCol: String = "id",
-                       widenMargin: Double = -1.0,
-                       residual: Boolean = false): DataFrame = {
-    val probed = graft.ops.Similarity
-      .probedCentroidsAdaptive(centroids, queryVec, nprobe, widenMargin)
-      .collect().map(_.get(0))
-    // latest-wins over re-ingested ids: an id re-fed with CHANGED data
-    // in a later batch would otherwise average its old and new ADC
-    // distances into a vector that never existed. The dedup window
-    // runs over the PRUNED lists only (nprobe/nlist of the index), so
-    // its shuffle is bounded by the probed rows a query reads anyway.
-    // Known limit of pruning before deduping: a re-ingest whose NEW
-    // vector moved to a different coarse cluster leaves the stale row
-    // behind in its old list — if a query probes only the old cluster,
-    // the superseded codes can still surface (the new row is in an
-    // unprobed list, so the window never sees the pair). Compaction
-    // (compactVectorIndex) removes such shadows index-wide; between
-    // compactions, callers that re-feed MOVED vectors should treat
-    // results as at-least-once reads or dedup by id across all
-    // clusters at the cost of the prune.
-    // After compaction every row carries batch = -1; remaining
-    // duplicates are identical-code re-feeds, where any pick is right
-    // — resolve true updates before compacting.
-    val pruned = spark.read.parquet(indexDir)
-      .where(col("cluster").isin(probed.toSeq: _*))
-    val lists = pruned
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col(idCol)).orderBy(col("batch").desc)))
-      .where(col("__rn") === 1).drop("__rn", "batch")
-    if (!residual) {
-      val qdf = spark.range(1).select(lit(0L).as("__q"),
-        queryVec.as("__qv"))
-      graft.ops.Quantize.adcTopKOverCodes(
-          lists.select(col(idCol), col("codes")), qdf, codebook,
-          "__qv", idCol, "__q", m, dim, k)
-        .join(lists.select(col(idCol), col("cluster")), idCol)
-        .select(col(idCol), col("cluster"), col("adc_dist"))
-    } else {
-      // per-cluster query residuals drive a per-cluster distance table
-      val qres = centroids.where(col("cid").isin(probed.toSeq: _*))
-        .select(col("cid").cast("long").as("cluster"),
-          zip_with(transform(queryVec, x => x.cast("double")),
-            transform(col("cvec"), x => x.cast("double")),
-            (x, c) => x - c).as("__qres"))
-      graft.ops.Quantize.residualAdcTopK(
-        lists.select(col(idCol), col("cluster"), col("codes")),
-        qres, codebook, "__qres", idCol, m, dim, k)
-    }
-  }
-
-  /** Batched [[ivfPqSearchIndex]]: score a whole queries DataFrame
-    * (qidCol, qvecCol) against the index in ONE pass — the retrieval-
-    * layer serving shape, where thousands of queries arrive per batch
-    * and a per-query driver loop (probe-collect + index read each)
-    * would dominate. Probe selection is per query
-    * ([[graft.ops.Similarity.probedCentroidsBatch]] — same rank +
-    * widening rules as the single-query path); the index is read once,
-    * pruned to the UNION of all queries' probed cluster directories
-    * (still a partition-directory prune; each query is then scored
-    * only through its own probe pairs); latest-wins re-ingest
-    * resolution runs once over that pruned read, with the same
-    * cross-cluster staleness caveat as [[ivfPqSearchIndex]]. Returns
-    * (qid, idCol, cluster, adc_dist), k rows per query.
-    * A 1-row batch returns exactly what [[ivfPqSearchIndex]] returns
-    * (StreamingSpec asserts the parity). */
-  def ivfPqSearchIndexBatch(spark: SparkSession, indexDir: String,
-                            centroids: DataFrame, codebook: DataFrame,
-                            queries: DataFrame, qidCol: String,
-                            qvecCol: String, nprobe: Int, k: Int,
-                            m: Int, dim: Int, idCol: String = "id",
-                            widenMargin: Double = -1.0,
-                            residual: Boolean = false): DataFrame = {
-    // probe pairs are |queries|×nprobe rows — computed once, reused by
-    // the literal directory filter AND the per-query scoring join
-    val pairs = graft.ops.Similarity.probedCentroidsBatch(
-      centroids, queries, qidCol, qvecCol, nprobe, widenMargin)
-      .localCheckpoint()
-    // bounded by nlist: the union of probed cluster ids, applied as a
-    // literal isin so the read is a partition-directory prune
-    val probedUnion = pairs.select("cluster").distinct()
-      .collect().map(_.getLong(0))
-    val pruned = spark.read.parquet(indexDir)
-      .where(col("cluster").isin(probedUnion.toSeq: _*))
-    val lists = pruned
-      .withColumn("__rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col(idCol)).orderBy(col("batch").desc)))
-      .where(col("__rn") === 1).drop("__rn", "batch")
-    def toD(c: Column) = transform(c, x => x.cast("double"))
-    val queryProbes =
-      if (!residual) pairs.select(col("qid"), col("cluster"),
-        toD(col("qvec")).as("__qpv"))
-      else pairs.select(col("qid"), col("cluster"),
-        zip_with(toD(col("qvec")), toD(col("cvec")),
-          (x, c) => x - c).as("__qpv"))
-    graft.ops.Quantize.adcTopKPerProbe(
-      lists.select(col(idCol), col("cluster"), col("codes")),
-      queryProbes, codebook, "__qpv", idCol, "qid", m, dim, k)
-  }
-
-  /** Batched [[ivfSearchIndex]] over a raw-vector [[vectorIndexSink]]
-    * index: per-query probe selection, ONE index read pruned to the
-    * union of probed cluster directories, then per-query cosine top-k
-    * through each query's own probe pairs (qid-partitioned rank —
-    * WindowGroupLimit keeps per-task heaps, vs the single-query path's
-    * TakeOrderedAndProject). Returns (qid, idCol, cluster, cosine_sim),
-    * k rows per query. */
-  def ivfSearchIndexBatch(spark: SparkSession, indexDir: String,
-                          centroids: DataFrame, queries: DataFrame,
-                          qidCol: String, qvecCol: String,
-                          nprobe: Int, k: Int, idCol: String = "id",
-                          embCol: String = "emb",
-                          widenMargin: Double = -1.0): DataFrame = {
-    val pairs = graft.ops.Similarity.probedCentroidsBatch(
-      centroids, queries, qidCol, qvecCol, nprobe, widenMargin)
-      .localCheckpoint()
-    val probedUnion = pairs.select("cluster").distinct()
-      .collect().map(_.getLong(0))
-    spark.read.parquet(indexDir)
-      .where(col("cluster").isin(probedUnion.toSeq: _*))
-      // broadcast the |queries|×nprobe probe pairs (vec included):
-      // candidates join their probing queries on cluster — per-query
-      // pruning survives the shared read, zero index-side shuffle
-      .join(broadcast(pairs.select(col("qid"),
-        col("cluster"), col("qvec"))), Seq("cluster"))
-      .withColumn("cosine_sim",
-        round(graft.ops.Similarity.cosine(col(embCol), col("qvec")), 6))
-      .withColumn("__rk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("qid").orderBy(col("cosine_sim").desc, col(idCol))))
-      .where(col("__rk") <= k)
-      .select(col("qid"), col(idCol), col("cluster"), col("cosine_sim"))
-  }
-
-  /** Query a [[vectorIndexSink]] index: cosine top-k against the
-    * query vector over the `nprobe` best centroids' partitions only —
-    * the `cluster IN (...)` filter is a partition-directory prune, so
-    * the scan never opens the other clusters' files. */
-  def ivfSearchIndex(spark: SparkSession, indexDir: String,
-                     centroids: DataFrame, queryVec: Column,
-                     nprobe: Int, k: Int, idCol: String = "id",
-                     embCol: String = "emb",
-                     widenMargin: Double = -1.0): DataFrame = {
-    // widenMargin ≥ 0 probes every centroid within that cosine margin
-    // of the best even beyond nprobe (boundary-query recall recovery,
-    // Similarity.probedCentroidsAdaptive); negative = fixed nprobe
-    val probed = graft.ops.Similarity
-      .probedCentroidsAdaptive(centroids, queryVec, nprobe, widenMargin)
-      .collect().map(_.get(0))
-    spark.read.parquet(indexDir)
-      .where(col("cluster").isin(probed.toSeq: _*))
-      .withColumn("cosine_sim",
-        round(graft.ops.Similarity.cosine(col(embCol), queryVec), 6))
-      .orderBy(col("cosine_sim").desc, col(idCol))
-      .select(col(idCol), col("cluster"), col("cosine_sim"))
-      .limit(k)
-  }
-
-  /** Recall@k gate for a [[vectorIndexSink]] index: mean over the
-    * query vectors of |IVF top-k ∩ brute-force top-k| / k, both sides
-    * computed over the SAME accumulated index tree (so the gate
-    * measures probe-selection loss, not ingestion lag). Run it after
-    * every [[compactVectorIndex]] — compaction is the natural
-    * maintenance point, and after a re-centering it is the check that
-    * the moved centroids still route queries to the right inverted
-    * lists (StreamingSpec asserts a floor per compaction state).
-    * Cost: one full-tree scan per query vector for the brute side —
-    * an offline-maintenance price, not a serving-path one; sample the
-    * query set accordingly. */
-  def ivfIndexRecall(spark: SparkSession, indexDir: String,
-                     centroids: DataFrame, queryVecs: Seq[Column],
-                     nprobe: Int, k: Int, idCol: String = "id",
-                     embCol: String = "emb",
-                     widenMargin: Double = -1.0): Double = {
-    require(queryVecs.nonEmpty, "need at least one query vector")
-    val all = spark.read.parquet(indexDir)
-    val recalls = queryVecs.map { qv =>
-      val ivf = ivfSearchIndex(spark, indexDir, centroids, qv, nprobe,
-          k, idCol, embCol, widenMargin)
-        .select(idCol).collect().map(_.get(0)).toSet
-      val brute = all
-        .withColumn("__sim",
-          round(graft.ops.Similarity.cosine(col(embCol), qv), 6))
-        .orderBy(col("__sim").desc, col(idCol))
-        .limit(k)
-        .select(idCol).collect().map(_.get(0))
-      if (brute.isEmpty) 1.0
-      else brute.count(ivf.contains).toDouble / brute.length
-    }
-    recalls.sum / recalls.size
-  }
-
-  /** Recall@k gate for a [[pqIndexSink]] index — the codes-only
-    * analogue of [[ivfIndexRecall]]: mean over the query vectors of
-    * |probed ADC top-k ∩ EXHAUSTIVE ADC top-k| / k, where the
-    * exhaustive side probes every centroid (nprobe = nlist) through
-    * the SAME serving path — raw vectors are never stored in this
-    * index, so exhaustive ADC over all inverted lists IS the honest
-    * brute force, and the gate isolates pure probe-selection loss
-    * (quantization loss needs raw vectors; measure it offline with
-    * the q150-style recall QA before pinning the codebook). Run after
-    * every [[compactVectorIndex]] / [[rebuildPqIndex]], like
-    * [[ivfIndexRecall]]; cost is one full-tree ADC pass per query —
-    * offline-maintenance pricing, sample the query set accordingly. */
-  def ivfPqIndexRecall(spark: SparkSession, indexDir: String,
-                       centroids: DataFrame, codebook: DataFrame,
-                       queryVecs: Seq[Column], nprobe: Int, k: Int,
-                       m: Int, dim: Int, idCol: String = "id",
-                       widenMargin: Double = -1.0,
-                       residual: Boolean = false): Double = {
-    require(queryVecs.nonEmpty, "need at least one query vector")
-    val nlist = centroids.count().toInt // bounded: the centroid table
-    val recalls = queryVecs.map { qv =>
-      val probed = ivfPqSearchIndex(spark, indexDir, centroids, codebook,
-          qv, nprobe, k, m, dim, idCol, widenMargin, residual)
-        .select(idCol).collect().map(_.get(0)).toSet
-      val brute = ivfPqSearchIndex(spark, indexDir, centroids, codebook,
-          qv, nlist, k, m, dim, idCol, -1.0, residual)
-        .select(idCol).collect().map(_.get(0))
-      if (brute.isEmpty) 1.0
-      else brute.count(probed.contains).toDouble / brute.length
-    }
-    recalls.sum / recalls.size
-  }
-
-  /** Read a [[dsirStatsSink]] store as the count table
-    * [[graft.ops.Retrieval.dsirWeightsAgainst]] consumes.
-    * Side-effect-free (see [[readableStoreDir]]). */
-  def readDsirCounts(spark: SparkSession, statsDir: String): DataFrame =
-    spark.read.parquet(s"${readableStoreDir(spark, statsDir)}/lm")
-
-  /** Incrementally-maintained word histogram over a document stream —
-    * the tokenizer-training member of the stats-store family
-    * ([[termStatsSink]]'s exactly-once machinery applied to
-    * [[graft.ops.Bpe.wordHistogram]]): per micro-batch, fold the
-    * batch's (word, cnt) counts into a standing `hist/` table. Counts
-    * are additive, so `Bpe.trainBpeOnHistogram(readWordHistogram(...))`
-    * re-learns the merge table from the corpus streamed SO FAR without
-    * rescanning it — the periodic tokenizer-refresh step of a
-    * continuously-ingested training corpus (run it at the same
-    * maintenance point as index compaction). */
-  def wordHistSink(docs: DataFrame, textCol: String, statsDir: String,
-                   checkpoint: String) =
-    batchSink(docs, checkpoint) { (batch, batchId) =>
-      mergeStoreBatch(statsDir, batchId, Seq(
-        StorePart("hist", Seq("word"), Seq("cnt")) ->
-          graft.ops.Bpe.wordHistogram(batch, textCol)))
-    }
-
-  /** Read a [[wordHistSink]] store as the (word, cnt) frame
-    * [[graft.ops.Bpe.trainBpeOnHistogram]] consumes. Side-effect-free
+  /** Read the `hist` part of a curation stats store (`<root>/stats`)
+    * as the (word, cnt) frame [[graft.ops.Bpe.trainBpeOnHistogram]]
+    * consumes. Side-effect-free
     * (see [[readableStoreDir]]). */
   def readWordHistogram(spark: SparkSession, statsDir: String): DataFrame =
     spark.read.parquet(s"${readableStoreDir(spark, statsDir)}/hist")
-
-  /** Stream-maintained distribution-drift monitor: fold each
-    * micro-batch's values into a standing fixed-bin histogram
-    * ([[graft.ops.Profiling.psiBucket]] bins, so the accumulated
-    * histogram is cell-identical to batch-bucketing everything
-    * streamed so far), under [[termStatsSink]]'s exactly-once
-    * machinery. [[streamPsi]] then scores the store against a pinned
-    * base histogram — the continuous version of the
-    * [[graft.ops.Profiling.psi]] corpus-refresh gate: per batch the
-    * store merge touches ≤ nBuckets rows, and the PSI read is
-    * constant-size, no matter how much history has streamed. */
-  def driftHistSink(rows: DataFrame, valueCol: String, statsDir: String,
-                    checkpoint: String, lo: Double, hi: Double,
-                    nBuckets: Int = 10) =
-    batchSink(rows, checkpoint) { (batch, batchId) =>
-      mergeStoreBatch(statsDir, batchId, Seq(
-        StorePart("hist", Seq("bucket"), Seq("n")) ->
-          batch.where(col(valueCol).isNotNull)
-            .groupBy(graft.ops.Profiling.psiBucket(col(valueCol),
-              lo, hi, nBuckets).as("bucket"))
-            .agg(count(lit(1)).as("n"))))
-    }
-
-  /** Read a [[driftHistSink]] store as its (bucket, n) histogram.
-    * Side-effect-free (see [[readableStoreDir]]). */
-  def readDriftHist(spark: SparkSession, statsDir: String): DataFrame =
-    spark.read.parquet(s"${readableStoreDir(spark, statsDir)}/hist")
-
-  /** PSI of the streamed-so-far distribution against a pinned base
-    * (bucket, n) histogram — one row, [[graft.ops.Profiling]]'s
-    * retrain thresholds apply (> 0.1 investigate, > 0.25 retrain). */
-  def streamPsi(spark: SparkSession, statsDir: String,
-                baseHist: DataFrame, eps: Double = 1e-6): DataFrame =
-    graft.ops.Profiling.psiOfHists(baseHist,
-      readDriftHist(spark, statsDir), eps)
-
-  /** Kolmogorov-Smirnov gate over the SAME [[driftHistSink]] store —
-    * the location-sensitive companion of [[streamPsi]]
-    * ([[graft.ops.Profiling.ksOfHists]]): both gates read one
-    * accumulated histogram state; no extra streaming machinery. */
-  def streamKs(spark: SparkSession, statsDir: String,
-               baseHist: DataFrame): DataFrame =
-    graft.ops.Profiling.ksOfHists(baseHist, readDriftHist(spark, statsDir))
-
-  /** Stream-maintained count-min sketch over a token stream
-    * ([[graft.ops.Sketch]]): each micro-batch's d×256 cell delta folds
-    * additively into the standing grid — CMS cells are pure counts, so
-    * the accumulated sketch is cell-identical to batch-building over
-    * everything streamed so far. Per batch the merge touches ≤ d×256
-    * rows no matter the vocabulary or history — the constant-state
-    * frequency monitor of a continuously-ingested corpus. */
-  def cmsSink(toks: DataFrame, tokenCol: String, statsDir: String,
-              checkpoint: String, d: Int = 4) =
-    batchSink(toks, checkpoint) { (batch, batchId) =>
-      mergeStoreBatch(statsDir, batchId, Seq(
-        StorePart("cells", Seq("sketch_row", "bucket"), Seq("cnt")) ->
-          graft.ops.Sketch.cmsBuild(batch, tokenCol, d)))
-    }
-
-  /** Read a [[cmsSink]] store as the (sketch_row, bucket, cnt) frame
-    * [[graft.ops.Sketch.cmsEstimate]] consumes. Side-effect-free (see
-    * [[readableStoreDir]]). */
-  def readCms(spark: SparkSession, statsDir: String): DataFrame =
-    spark.read.parquet(s"${readableStoreDir(spark, statsDir)}/cells")
-
-  /** Incrementally-maintained Holt linear (level, trend) state per
-    * key — the stats-store form of
-    * [[graft.ops.TimeSeries.holtLinear]] that the batch operator's
-    * docstring defers unbounded streams to: per micro-batch, fold the
-    * batch's time-ordered observations into a standing `holt/` table
-    * of (key, n_obs, level, trend) via
-    * [[graft.ops.TimeSeries.holtFold]]. Per-key state is
-    * CONSTANT-SIZE — two doubles and a count — no matter how long the
-    * series runs, which removes exactly the unbounded per-key collect
-    * the batch form guards with `maxObs`. Chained per-batch folds are
-    * cell-exact equal to the one-shot recurrence over the union (left
-    * folds compose by carrying the accumulator; StreamingSpec asserts
-    * it), so the store always holds what `holtLinear` over the full
-    * history WOULD return, without the history.
-    *
-    * Exactly-once via the [[mergeStoreBatch]] wholesale-swap
-    * machinery shared with [[termStatsSink]] (`_batch` mark skips
-    * checkpoint replays — essential here, since re-folding a batch
-    * into already-folded state would corrupt it, unlike the additive
-    * stores where the mark only prevents double counts). Feed must be
-    * append-only and time-ordered across batches per key — the
-    * natural shape of a freshness/telemetry stream; a late row cannot
-    * be retro-folded into O(1) state. */
-  def holtStatsSink(points: DataFrame, keyCol: String,
-                    orderCols: Seq[Column], valCol: String,
-                    alpha: Double, beta: Double,
-                    statsDir: String, checkpoint: String) =
-    batchSink(points, checkpoint) { (batch, batchId) =>
-      mergeStoreBatch(statsDir, batchId, Seq(
-        StorePart("holt", Seq(keyCol), Nil) ->
-          graft.ops.TimeSeries.holtBatchArr(
-            batch, keyCol, orderCols, valCol)),
-        customMerge = Map("holt" -> { (prior, delta) =>
-          val empty = delta.select(col(keyCol)).limit(0)
-            .select(col(keyCol), lit(0L).as("n_obs"),
-              lit(0.0).as("level"), lit(0.0).as("trend"))
-          graft.ops.TimeSeries.holtFold(
-            prior.getOrElse(empty), delta, keyCol, alpha, beta)
-        }))
-    }
-
-  /** Read a [[holtStatsSink]] store as (keyCol, n_obs, level, trend,
-    * forecast_1) — the exact shape [[graft.ops.TimeSeries.holtLinear]]
-    * returns, so consumers swap freely between the batch and streamed
-    * forms. Side-effect-free (see [[readableStoreDir]]). */
-  def readHoltStats(spark: SparkSession, statsDir: String): DataFrame =
-    spark.read.parquet(s"${readableStoreDir(spark, statsDir)}/holt")
-      .withColumn("forecast_1", col("level") + col("trend"))
-
-  /** Stream-maintained Misra-Gries heavy hitters: per micro-batch,
-    * count the batch's tokens exactly, trim to a k-counter summary
-    * ([[graft.ops.Sketch.mgSummary]]), and fold into the standing
-    * `mg/` table by pointwise-add + re-trim — the MERGEABLE-summaries
-    * composition (Agarwal et al. 2012), so after any number of
-    * batches every item with total frequency above N/(k+1) is present
-    * with `true − N/(k+1) ≤ cnt ≤ true`. A `meta/` row accumulates N
-    * (total occurrences) so readers can state the bound. State is k
-    * counters + one meta row FOREVER, where [[wordHistSink]] grows
-    * with the vocabulary — this is the store for "what dominates the
-    * stream" (hot domains, boilerplate n-grams, trending queries)
-    * when the full histogram is not worth its footprint.
-    *
-    * Exactly-once via [[mergeStoreBatch]]'s `_batch` mark (essential:
-    * re-folding a batch would double-count). The per-batch driver
-    * touch is one (k+1)-row collect for the trim threshold; the
-    * standing merge unions ≤ 2k counter rows. */
-  def mgSink(rows: DataFrame, tokenCol: String, k: Int,
-             statsDir: String, checkpoint: String) =
-    batchSink(rows, checkpoint) { (batch, batchId) =>
-      mergeMgBatch(batch, tokenCol, k, statsDir, batchId)
-    }
-
-  private[graft] def mergeMgBatch(batch: DataFrame, tokenCol: String,
-      k: Int, statsDir: String, batchId: Long): Unit = {
-    // both deltas stay LAZY: every eager action (the count shuffle,
-    // the trim's top-(k+1) collect) runs inside the custom merge,
-    // AFTER mergeStoreBatch's `_batch` replay check — a replayed
-    // batch skips at the mark without re-aggregating anything
-    // null tokens never count (they are absent rows, not a "null"
-    // heavy hitter) and are excluded from N so the bound stays tight
-    val occ = batch.where(col(tokenCol).isNotNull)
-    val counts = occ.groupBy(tokenCol).agg(count(lit(1)).as("cnt"))
-    val nTotal = occ.agg(count(lit(1)).as("n_total"))
-      .select(lit(k).as("sk"), col("n_total"))
-    mergeStoreBatch(statsDir, batchId, Seq(
-      StorePart("mg", Seq(tokenCol), Nil) -> counts,
-      StorePart("meta", Seq("sk"), Seq("n_total")) -> nTotal),
-      customMerge = Map("mg" -> { (prior, delta) =>
-        // exact batch counts ARE an error-0 MG summary, so one trim of
-        // the summed union is the mergeable-summaries composition
-        // (tighter than pre-trimming the batch); checkpointed so the
-        // trim's threshold collect and filtered output share one
-        // aggregation (the mgSummary contract)
-        val u = prior match {
-          case None => delta
-          case Some(p) => p.unionByName(delta).groupBy(tokenCol)
-            .agg(sum("cnt").as("cnt"))
-        }
-        graft.ops.Sketch.mgSummary(u.localCheckpoint(), tokenCol, k)
-      }))
-  }
-
-  /** Read a [[mgSink]] store: (tokenCol, cnt_min, cnt_max) — the
-    * under-estimated counter and the guarantee ceiling
-    * cnt + ⌊N/(k+1)⌋. Every item whose true frequency exceeds
-    * N/(k+1) has a row. Fails loudly if the store was fed under more
-    * than one k (the meta key): summaries trimmed under mixed ks have
-    * no single stated bound — pin k per statsDir.
-    * Side-effect-free (see [[readableStoreDir]]). */
-  def readMgHeavyHitters(spark: SparkSession, statsDir: String): DataFrame = {
-    val root = readableStoreDir(spark, statsDir)
-    val meta = spark.read.parquet(s"$root/meta").collect()
-    require(meta.length == 1,
-      s"mg store at $statsDir was fed under ${meta.length} distinct k " +
-        "values; the N/(k+1) guarantee requires one k per store")
-    val bound = meta(0).getLong(1) / (meta(0).getInt(0) + 1L)
-    spark.read.parquet(s"$root/mg")
-      .select(col("*"), col("cnt").as("cnt_min"),
-        (col("cnt") + lit(bound)).as("cnt_max"))
-      .drop("cnt")
-  }
-
-  /** Stream-maintained exact-n weighted sample WITHOUT replacement —
-    * the A-Res reservoir (Efraimidis & Spirakis 2006) as a stats
-    * store: per micro-batch, rank the batch by the deterministic
-    * priority ln(u)/w ([[graft.ops.Curation.prioritySample]]'s exact
-    * expression — u is the row's stable md5 uniform), keep its top
-    * `n`, and merge with the standing reservoir by re-ranking the
-    * union. Because a row's priority never changes, top-n is
-    * MERGEABLE (top-n of a union = top-n of unioned top-ns), so the
-    * store always equals the batch sample over everything streamed so
-    * far — the sampling member of the stats-store family (a standing
-    * eval/inspection subset of an unbounded ingest), with state
-    * bounded at n rows regardless of stream length.
-    *
-    * Exactly-once via [[mergeStoreBatch]]'s `_batch` mark; priorities
-    * are deterministic, so even a replayed merge reproduces the same
-    * reservoir — the mark keeps the store bytes deterministic. An id
-    * genuinely re-streamed in a DIFFERENT batch (at-least-once
-    * upstream source) is dropped by an id-dedup in the merge before
-    * the top-n, so the reservoir always holds n DISTINCT ids; the
-    * surviving payload is deterministic — first-seen across batches,
-    * least-content-hash within one batch (micro-batch rows carry no
-    * order to be "first" in). Rows with weight ≤ 0 never enter. */
-  def prioritySampleSink(rows: DataFrame, idCol: String,
-                         weightCol: String, n: Int,
-                         statsDir: String, checkpoint: String) =
-    batchSink(rows, checkpoint) { (batch, batchId) =>
-      mergePrioritySampleBatch(batch, idCol, weightCol, n,
-        statsDir, batchId)
-    }
-
-  private[graft] def mergePrioritySampleBatch(batch: DataFrame,
-      idCol: String, weightCol: String, n: Int, statsDir: String,
-      batchId: Long): Unit = {
-    val delta = batch
-      .where(col(weightCol).cast("double") > 0)
-      .withColumn("__pri", graft.ops.Curation.aresPriority(
-        col(idCol), col(weightCol)))
-      .orderBy(col("__pri").desc, col(idCol)).limit(n)
-    mergeStoreBatch(statsDir, batchId, Seq(
-      StorePart("sample", Seq(idCol), Nil) -> delta),
-      customMerge = Map("sample" -> { (prior, d) =>
-        // dedupe by id BEFORE the top-n: an id genuinely streamed in
-        // two different batches (at-least-once upstream, not a replay
-        // — the _batch mark already absorbs those) re-enters the
-        // union with its identical deterministic priority, and
-        // keeping both rows would over-represent the id while
-        // shrinking the DISTINCT sample below n. The STANDING row
-        // wins (delta anti-joined on the reservoir's ids), so the
-        // cross-batch survivor is first-seen; WITHIN a batch carrying
-        // one id twice with different payloads there is no "first"
-        // (micro-batch rows are unordered), so the survivor is the
-        // payload with the least content hash — deterministic across
-        // shuffles and replays, unlike dropDuplicates' arbitrary pick
-        val payload = d.columns.filterNot(_ == idCol)
-        val dd = d.withColumn("__rn",
-            row_number().over(org.apache.spark.sql.expressions.Window
-              .partitionBy(col(idCol))
-              .orderBy(xxhash64(payload.map(col).toIndexedSeq: _*))))
-          .where(col("__rn") === 1).drop("__rn")
-        prior.map(p => p.unionByName(
-            dd.join(p.select(idCol), Seq(idCol), "left_anti")))
-          .getOrElse(dd)
-          .orderBy(col("__pri").desc, col(idCol)).limit(n)
-      }))
-  }
-
-  /** Read a [[prioritySampleSink]] store in exactly the shape
-    * [[graft.ops.Curation.prioritySample]] returns (payload columns +
-    * rounded `priority`), so consumers swap freely between the batch
-    * and streamed forms. Side-effect-free (see [[readableStoreDir]]). */
-  def readPrioritySample(spark: SparkSession, statsDir: String): DataFrame =
-    spark.read.parquet(s"${readableStoreDir(spark, statsDir)}/sample")
-      .withColumn("priority", round(col("__pri"), 6)).drop("__pri")
-
-  /** Stream-maintained per-key approximate distinct counts via
-    * mergeable DataSketches HLL: per micro-batch, sketch the batch's
-    * values per key (`hll_sketch_agg`) and union into a standing
-    * `hll/` (key, sketch) table. Sketch union is register-wise max —
-    * commutative, associative, duplicate-insensitive — so the store's
-    * per-key estimate equals sketching everything streamed so far in
-    * one pass, regardless of batching (StreamingSpec asserts estimate
-    * equality with the batch recompute). Per-key state is ONE
-    * fixed-size sketch (~2^lgK bytes) no matter how many distinct
-    * values stream — the cardinality member of the stats-store family
-    * (distinct users per day, vocabulary per source, URL hosts per
-    * crawl), where the exact stores ([[wordHistSink]]) would grow with
-    * the distinct count itself.
-    *
-    * Exactly-once via [[mergeStoreBatch]]'s `_batch` mark. HLL union
-    * is idempotent, so a replayed merge would not even over-count —
-    * the mark keeps the store bytes deterministic. The store records
-    * its `lgK` in a `meta/` row and a sink configured with a
-    * DIFFERENT lgK fails its first merge with a per-store message
-    * (mismatched sketch configs cannot union; without the guard
-    * `hll_union` would throw opaquely and wedge the stream on every
-    * replay of that batch). A store created before the guard — hll
-    * data, no meta row — is probed instead: one stored sketch's
-    * lgConfigK is read and the same check applies, so the meta row
-    * stamped by the first post-upgrade merge records the store's TRUE
-    * config. */
-  def hllSink(rows: DataFrame, keyCol: String, valueCol: String,
-              statsDir: String, checkpoint: String, lgK: Int = 12) =
-    batchSink(rows, checkpoint) { (batch, batchId) =>
-      mergeHllBatch(batch, keyCol, valueCol, statsDir, lgK, batchId)
-    }
-
-  private[graft] def mergeHllBatch(batch: DataFrame, keyCol: String,
-      valueCol: String, statsDir: String, lgK: Int,
-      batchId: Long): Unit = {
-    // the meta part comes FIRST: a store fed under a different
-    // lgK in an earlier session must fail with the per-store
-    // message below, not hll_union's opaque sketch-config error
-    // mid-merge (which would wedge the stream on every replay
-    // of this batch with no pointer to the cause)
-    mergeStoreBatch(statsDir, batchId, Seq(
-            StorePart("meta", Seq("lg_k"), Seq("n_batches")) ->
-              batch.sparkSession.range(1)
-                .select(lit(lgK).as("lg_k"), lit(1L).as("n_batches")),
-            StorePart("hll", Seq(keyCol), Nil) ->
-              batch.groupBy(keyCol)
-                .agg(hll_sketch_agg(col(valueCol), lit(lgK)).as("sketch"))),
-            customMerge = Map(
-              "meta" -> { (prior, delta) =>
-                val storedLgK = prior match {
-                  case Some(p) =>
-                    p.select("lg_k").collect().map(_.getInt(0)).toSeq
-                  case None =>
-                    // a store created BEFORE the meta guard has hll
-                    // data but no meta row: probe ONE stored sketch's
-                    // lgConfigK instead of letting hll_union throw its
-                    // opaque config error — and so the meta row this
-                    // merge stamps records the store's TRUE config,
-                    // never mislabels it with the sink's
-                    val spark = delta.sparkSession
-                    val hllPath = new HPath(
-                      s"${readableStoreDir(spark, statsDir)}/hll")
-                    val fs = hllPath.getFileSystem(
-                      spark.sparkContext.hadoopConfiguration)
-                    if (!fs.exists(hllPath)) Nil
-                    else spark.read.parquet(hllPath.toString)
-                      .select("sketch").limit(1).collect()
-                      .map(r => org.apache.datasketches.hll.HllSketch
-                        .heapify(r.getAs[Array[Byte]](0))
-                        .getLgConfigK).toSeq
-                }
-                require(storedLgK.isEmpty || storedLgK == Seq(lgK),
-                  s"hll store at $statsDir was built with lgK=" +
-                    s"${storedLgK.mkString(",")} but this sink is " +
-                    s"configured with lgK=$lgK — sketches with " +
-                    "different configs cannot union; match lgK or " +
-                    "rebuild the store")
-                prior.map(p => graft.ops.Warehouse.mergeAggDelta(
-                    p, delta, Seq("lg_k"), Seq("n_batches")))
-                  .getOrElse(delta)
-              },
-              "hll" -> { (prior, delta) =>
-              prior match {
-                case None => delta
-                case Some(p) =>
-                  p.select(col(keyCol), col("sketch").as("__a"))
-                    .join(delta.select(col(keyCol),
-                      col("sketch").as("__b")), Seq(keyCol), "full_outer")
-                    .select(col(keyCol),
-                      when(col("__a").isNull, col("__b"))
-                        .when(col("__b").isNull, col("__a"))
-                        .otherwise(hll_union(col("__a"), col("__b")))
-                        .as("sketch"))
-              }
-            }))
-  }
-
-  /** Read a [[hllSink]] store as (key, n_distinct) estimates.
-    * Side-effect-free (see [[readableStoreDir]]). */
-  def readHllDistinct(spark: SparkSession, statsDir: String): DataFrame =
-    spark.read.parquet(s"${readableStoreDir(spark, statsDir)}/hll")
-      .withColumn("n_distinct",
-        hll_sketch_estimate(col("sketch")).cast("long"))
-      .drop("sketch")
-
-  /** Raw (key, sketch) frame of a [[hllSink]] store — for further
-    * unions (cross-store merges, roll-ups across key grains). */
-  def readHllSketches(spark: SparkSession, statsDir: String): DataFrame =
-    spark.read.parquet(s"${readableStoreDir(spark, statsDir)}/hll")
-
-  /** Stream-maintained k-means assignment statistics under PINNED
-    * centroids: per micro-batch, assign the batch's vectors to their
-    * argmax-cosine centroid ([[graft.ops.Similarity.assignToCentroids]]
-    * — the same row-local broadcast fold the vector-index sinks use)
-    * and fold the per-cluster (count, per-dimension sum) deltas into a
-    * standing store. [[readKmeansUpdate]] then yields ONE exact Lloyd
-    * update over everything streamed so far without rescanning any
-    * history — the centroid-refresh feed for index maintenance: stream
-    * vectors through [[pqIndexSink]]/[[vectorIndexSink]] AND this sink,
-    * and at the maintenance point read the refreshed centroids and
-    * hand them to [[rebuildPqIndex]] / [[compactVectorIndex]].
-    *
-    * Additive state: counts and dimension-sums over disjoint batches
-    * sum, so the accumulated stats are cell-identical to assigning the
-    * whole streamed union against the same pinned centroids in one
-    * batch pass (StreamingSpec asserts the refreshed centroids equal
-    * the batch Lloyd update exactly). Store size = k × dim + k rows —
-    * constant in corpus size; the per-batch merge touches at most
-    * that many rows. */
-  def kmeansStatsSink(vectors: DataFrame, embCol: String, idCol: String,
-                      centroids: DataFrame, statsDir: String,
-                      checkpoint: String) =
-    batchSink(vectors, checkpoint) { (batch, batchId) =>
-      // one assignment pass feeds both deltas — checkpointed so
-      // the broadcast argmax fold runs once per micro-batch
-      val assigned = graft.ops.Similarity.assignToCentroids(
-        batch, embCol, idCol, centroids).localCheckpoint()
-      mergeStoreBatch(statsDir, batchId, Seq(
-        StorePart("sums", Seq("cluster", "dim"), Seq("s")) ->
-          assigned.select(col("cluster"),
-            posexplode(col(embCol)).as(Seq("dim", "x")))
-            .groupBy("cluster", "dim")
-            .agg(sum(col("x").cast("double")).as("s")),
-        StorePart("counts", Seq("cluster"), Seq("n")) ->
-          assigned.groupBy("cluster").agg(count(lit(1)).as("n"))))
-    }
-
-  /** One Lloyd update from a [[kmeansStatsSink]] store: per cluster,
-    * the element-wise mean of every vector streamed into it, as
-    * (cid, cvec, n) — the exact centroid-frame shape
-    * [[graft.ops.Similarity.assignToCentroids]] (and therefore the
-    * index sinks, [[rebuildPqIndex]], [[compactVectorIndex]]) consume,
-    * so the refreshed centroids plug straight back into assignment.
-    * Clusters no batch vector ever reached are absent — callers keep
-    * the pinned centroid for those (the standard Lloyd convention).
-    * Side-effect-free (see [[readableStoreDir]]). */
-  def readKmeansUpdate(spark: SparkSession, statsDir: String): DataFrame = {
-    val root = readableStoreDir(spark, statsDir)
-    val sums = spark.read.parquet(s"$root/sums")
-    val counts = spark.read.parquet(s"$root/counts")
-    sums.groupBy("cluster")
-      .agg(expr("transform(array_sort(collect_list(struct(dim, s))), " +
-        "p -> p.s)").as("__sv"))
-      .join(counts, Seq("cluster"))
-      .select(col("cluster").as("cid"),
-        expr("transform(__sv, x -> x / n)").as("cvec"), col("n"))
-  }
-
-  // ------------------------------------------------ index maintenance
 
   /** The ONE definition of a store root's lease path —
     * `.<name>.lock` SIBLING to the root (the maintenance swap renames
@@ -4990,14 +3535,13 @@ object Streaming {
     ()
   }
 
-  /** Offline compaction for a [[dedupIndexSink]] index: merge the
+  /** Offline compaction for a MinHash dedup index: merge the
     * accumulated `batch=<id>/` directories into a single `batch=-1/`
     * tree — same `bh=` bucket partitioning, ~one file per bucket,
     * rows sorted by `band_hash` within each so parquet row-group
     * min/max stats prune point probes. Without this the per-batch
     * directories accumulate forever and file listing/opening comes to
-    * dominate every admission probe (the sinks' docstrings defer
-    * exactly this chore here).
+    * dominate every admission probe.
     *
     * The HIGHEST batch id is carried through UNCHANGED, never folded:
     * if the stream stopped mid-crash, that trailing batch may be
@@ -5021,27 +3565,12 @@ object Streaming {
     * StreamingSpec's interleaving test runs compaction mid-stream and
     * asserts the admitted set equals the sequential replay. */
   def compactDedupIndex(spark: SparkSession, indexDir: String): Unit =
-    compactBandedIndex(spark, indexDir, "bh", Seq("bh", "band_hash"))
-
-  /** Offline compaction for a [[hashIndexSink]] index: collapse the
-    * per-batch `batch=<id>/hb=<k>/` trees into one sorted
-    * `batch=-1/hb=<k>/` tree — same atomic-swap discipline,
-    * live-stream lease and keep-last-batch rule as
-    * [[compactDedupIndex]], and admission decisions are identical
-    * across compaction (the probe reads the same rows from fewer,
-    * sorted files; StreamingSpec asserts it). */
-  def compactHashIndex(spark: SparkSession, indexDir: String): Unit =
-    compactBandedIndex(spark, indexDir, "hb",
-      Seq("hb", "band_idx", "band_value"))
-
-  private def compactBandedIndex(spark: SparkSession, indexDir: String,
-      bucketCol: String, sortCols: Seq[String]): Unit =
     withStoreLock(spark, Seq(indexDir)) {
-      compactBandedIndexBody(spark, indexDir, bucketCol, sortCols)
+      compactDedupIndexBody(spark, indexDir)
     }
 
-  private def compactBandedIndexBody(spark: SparkSession, indexDir: String,
-      bucketCol: String, sortCols: Seq[String]): Unit = {
+  private def compactDedupIndexBody(spark: SparkSession,
+      indexDir: String): Unit = {
     healCompactRoot(spark, indexDir)
     val fs = new HPath(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -5053,9 +3582,9 @@ object Streaming {
     swapInCompacted(spark, indexDir) { (tmp, fsi) =>
       spark.read.parquet(indexDir)
         .where(col("batch") =!= keep).drop("batch")
-        .repartition(DedupIndexBuckets, col(bucketCol))
-        .sortWithinPartitions(sortCols.map(col): _*)
-        .write.mode("overwrite").partitionBy(bucketCol)
+        .repartition(DedupIndexBuckets, col("bh"))
+        .sortWithinPartitions(col("bh"), col("band_hash"))
+        .write.mode("overwrite").partitionBy("bh")
         .parquet(s"$tmp/batch=-1")
       carryBatchDir(spark, fsi, new HPath(s"$indexDir/batch=$keep"),
         new HPath(s"$tmp/batch=$keep"))
@@ -5209,7 +3738,7 @@ object Streaming {
     }
   }
 
-  /** Offline (re)build of a [[jaccardIndexSink]] index from its
+  /** Offline (re)build of an exact-Jaccard index from its
     * ADMITTED corpus under a NEW frozen order — the drift path the
     * sink pins away: as the corpus grows past the reference snapshot
     * the original [[graft.ops.Dedup.shingleDfTable]] described,
@@ -5218,19 +3747,18 @@ object Streaming {
     * up (decisions stay EXACT — DedupSpec asserts admission is
     * order-independent — only the pruning the order exists for
     * degrades). Re-deriving the order and re-indexing from source is
-    * the honest refresh, the [[rebuildPqIndex]] analogue for the
-    * exact-dedup store: writes the sink's `prefix/batch=-1/jb=` +
-    * `arrays/batch=-1/ab=` layout plus the new `df_table/` under ONE
-    * atomic swap. A resuming stream appends above `-1` — pass it the
-    * NEW order ([[readJaccardDfTable]]). `corpus` must be the
-    * admitted documents (e.g. the payloads backing
+    * the honest refresh for the exact-dedup store: writes the
+    * `prefix/batch=-1/jb=` + `arrays/batch=-1/ab=` layout plus the new
+    * `df_table/` under ONE atomic swap. A resuming stream appends above
+    * `-1` — pass it the NEW order ([[readJaccardDfTable]]). `corpus`
+    * must be the admitted documents (e.g. the payloads backing
     * `readJaccardIndexArrays` ids) — rebuild re-indexes, it does not
     * re-dedup — documents admitted between the `corpus` snapshot and
     * the rebuild's lease acquisition are absent from the rebuilt
     * index, so snapshot as close to the rebuild as practical (merges
     * that queue BEHIND the lease are safe: they re-run after the swap
     * and append above `batch=-1`). Runs under the index root's store
-    * lease for its whole corpus pass, like [[rebuildPqIndex]]. */
+    * lease for its whole corpus pass. */
   def rebuildJaccardIndex(spark: SparkSession, corpus: DataFrame,
                           textCol: String, idCol: String,
                           indexDir: String, n: Int = 3,
@@ -5270,7 +3798,7 @@ object Streaming {
     }
   }
 
-  /** Offline compaction for a [[jaccardIndexSink]] index: collapse
+  /** Offline compaction for an exact-Jaccard index: collapse
     * BOTH trees' per-batch dirs — `prefix/batch=<id>/jb=<k>/` into a
     * single `prefix/batch=-1/jb=<k>/` (sorted by digest, so point
     * probes prune parquet row groups) and `arrays/batch=<id>/ab=<k>/`
@@ -5351,99 +3879,5 @@ object Streaming {
           new HPath(s"$tmp/df_table"), false,
           spark.sparkContext.hadoopConfiguration)
     }
-  }
-
-  /** Offline compaction (and optional re-centering) for a
-    * [[vectorIndexSink]] index: merge the `batch=<id>/cluster=<cid>/`
-    * directories into `batch=-1/cluster=<cid>/`, one coalesced file
-    * set per cluster. With `recenter = true` it additionally runs one
-    * Lloyd update — each centroid moves to the element-wise mean of
-    * its accumulated members, every vector is re-assigned row-locally
-    * against the moved centroids, and the NEW `(cid, cvec)` frame is
-    * returned (materialized before the swap); pass it to subsequent
-    * [[vectorIndexSink]] / [[ivfSearchIndex]] calls. Without
-    * re-centering the input centroids are returned unchanged and the
-    * on-disk assignment is preserved byte-for-byte (search parity
-    * asserted in StreamingSpec). Same live-stream lease AND
-    * keep-last-batch rule as [[compactDedupIndex]]: the highest real
-    * batch dir is carried unchanged, so a crash-interrupted trailing
-    * batch replays into exactly the dir it wrote (deterministic-path
-    * overwrite) instead of being folded into `batch=-1` AND rewritten
-    * — no duplicate ids after a crash. Consequently re-centering
-    * covers the FOLDED set only: the carried batch's vectors join the
-    * Lloyd update at the next compaction (once newer batches arrive it
-    * is no longer the trailing dir), and keep their old assignment
-    * until a replay or that compaction reassigns them — an
-    * approximation-quality transient, never a correctness one. A
-    * stream that has STOPPED appending leaves its last batch carried
-    * forever; after a clean stop (checkpoint drained, no replay
-    * possible) pass `assumeCleanStop = true` to fold every dir and
-    * re-center over all vectors — the caller asserts what the
-    * compactor cannot observe. */
-  def compactVectorIndex(spark: SparkSession, indexDir: String,
-                         centroids: DataFrame, recenter: Boolean = false,
-                         idCol: String = "id",
-                         embCol: String = "emb",
-                         assumeCleanStop: Boolean = false): DataFrame =
-    withStoreLock(spark, Seq(indexDir)) {
-      compactVectorIndexBody(spark, indexDir, centroids, recenter,
-        idCol, embCol, assumeCleanStop)
-    }
-
-  private def compactVectorIndexBody(spark: SparkSession, indexDir: String,
-      centroids: DataFrame, recenter: Boolean,
-      idCol: String, embCol: String,
-      assumeCleanStop: Boolean = false): DataFrame = {
-    // heal a crashed previous compaction BEFORE the root read — the
-    // read would otherwise fail on a mid-swap state and the backup
-    // holding the only copy would stay unreachable forever
-    healCompactRoot(spark, indexDir)
-    val fs = new HPath(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = batchDirIds(fs, new HPath(indexDir))
-    // keep-last-batch: the highest REAL batch dir is carried unchanged
-    // (a crashed stream's replay overwrites it in place); everything
-    // else folds into batch=-1. assumeCleanStop folds it too — the
-    // caller has asserted no replay can arrive
-    val keep =
-      if (assumeCleanStop) -1L
-      else ids.filter(_ >= 0L).foldLeft(-1L)(math.max)
-    if (!recenter &&
-        ids.filterNot(id => id == keep || id == -1L).isEmpty)
-      return centroids // already {batch=-1, latest}: nothing to fold
-    val folded = {
-      val t = spark.read.parquet(indexDir)
-      (if (keep >= 0L) t.where(col("batch") =!= keep) else t)
-        .drop("batch")
-    }
-    if (folded.isEmpty) return centroids // only the carried batch exists
-    val newCents =
-      if (!recenter) centroids
-      else {
-        // one Lloyd update over the FOLDED members: mean per
-        // (cluster, dimension) then repack — an n×d-row shuffle, the
-        // right cost center for an offline maintenance op
-        folded.select(col("cluster").as("cid"),
-            posexplode(col(embCol)).as(Seq("__p", "__v")))
-          .groupBy("cid", "__p").agg(avg("__v").as("__m"))
-          .groupBy("cid")
-          .agg(transform(
-            array_sort(collect_list(struct(col("__p"), col("__m")))),
-            e => e.getField("__m").cast("float")).as("cvec"))
-          .localCheckpoint() // materialize BEFORE the swap moves paths
-      }
-    val rows =
-      if (recenter) graft.ops.Similarity.assignToCentroids(
-        folded.drop("cluster"), embCol, idCol, newCents)
-      else folded
-    swapInCompacted(spark, indexDir) { (tmp, fsi) =>
-      rows.repartition(col("cluster"))
-        .write.mode("overwrite").partitionBy("cluster")
-        .parquet(s"$tmp/batch=-1")
-      if (keep >= 0L)
-        carryBatchDir(spark, fsi, new HPath(s"$indexDir/batch=$keep"),
-          new HPath(s"$tmp/batch=$keep"))
-    }
-    newCents
   }
 }

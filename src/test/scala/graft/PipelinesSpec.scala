@@ -11,6 +11,7 @@ class PipelinesSpec extends SparkSpec {
   private def res(name: String): String =
     getClass.getResource("/" + name).getPath
   private val runDate = "2024-05-01"
+  private val runDay = java.sql.Date.valueOf(runDate)
 
   private val csvFixtures: Seq[String] =
     new java.io.File(res("internal_html.csv")).getParentFile.list()
@@ -102,7 +103,7 @@ class PipelinesSpec extends SparkSpec {
     assert(deep.getAs[String]("directory") === "reisen")
     assert(deep.getAs[String]("page_level1") === "spanien")
     assert(deep.getAs[String]("page_level2") === "mallorca")
-    assert(deep.getAs[String]("crawl_date") === runDate)
+    assert(deep.getAs[java.sql.Date]("crawl_date") === runDay)
   }
 
   test("E1 audisto golden: full output frame equals the expected table") {
@@ -115,13 +116,13 @@ class PipelinesSpec extends SparkSpec {
       .collect().map(_.toSeq)
     val expected = Seq(
       Seq("https://blog.example.de/tipps/packliste", 0.21, 0.61,
-        "blog.example.de", "tipps", "packliste", null, null, null, runDate),
+        "blog.example.de", "tipps", "packliste", null, null, null, runDay),
       Seq("https://www.example.de/", 0.91, 0.12,
-        "www.example.de", null, null, null, null, null, runDate),
+        "www.example.de", null, null, null, null, null, runDay),
       Seq("https://www.example.de/reisen/", 0.55, 0.33,
-        "www.example.de", "reisen", null, null, null, null, runDate),
+        "www.example.de", "reisen", null, null, null, null, runDay),
       Seq("https://www.example.de/reisen/spanien/mallorca", 0.41, 0.52,
-        "www.example.de", "reisen", "spanien", "mallorca", null, null, runDate))
+        "www.example.de", "reisen", "spanien", "mallorca", null, null, runDay))
     assert(out.toSeq === expected)
   }
 
@@ -241,7 +242,8 @@ class PipelinesSpec extends SparkSpec {
     Pipelines.replaceTable(Pipelines.audisto(raw, "2024-05-04"), s"$tmp/state")
     val state = spark.read.parquet(s"$tmp/state")
     assert(state.count() === 2) // replaced, not accumulated
-    assert(rows(state.select("crawl_date").distinct()).flatten === Seq("2024-05-04"))
+    assert(rows(state.select("crawl_date").distinct()).flatten ===
+      Seq(java.sql.Date.valueOf("2024-05-04")))
   }
 
   test("observedGate: metrics ride the sink pass, no second scan") {

@@ -45,7 +45,7 @@ class RunAllSpec extends SparkSpec {
     }
     replaceTables.foreach { t =>
       val days = spark.read.parquet(s"$wh/$t").select("crawl_date")
-        .distinct().collect().map(_.getString(0)).toSeq
+        .distinct().collect().map(_.getDate(0).toString).toSeq
       assert(days === Seq(day2), t)
       assert(count(t, day2) === tick1Replace(t), t)
       assert(tick1Replace(t) > 0, t)
@@ -58,6 +58,24 @@ class RunAllSpec extends SparkSpec {
     assert(images.count() === 3L)
     assert(images.where(col("address") ===
       "https://www.example.de/media/strand.jpg").count() === 2L)
+  }
+
+  test("crawl_date is one type, date, in all 11 tables") {
+    val wh = java.nio.file.Files.createTempDirectory("graft-crawl-date")
+      .toString
+    assert(RunAll.run(spark, "src/test/resources", wh, day1).isEmpty)
+    val tables = appendTables ++ replaceTables
+    val types = tables.map { t =>
+      t -> spark.read.parquet(s"$wh/$t").schema("crawl_date").dataType
+    }.toMap
+    assert(types.values.toSet ===
+      Set(org.apache.spark.sql.types.DateType), types)
+    // a grouped read hands back the same value from every table
+    tables.foreach { t =>
+      val days = spark.read.parquet(s"$wh/$t").groupBy("crawl_date").count()
+        .collect().map(_.getDate(0).toString).toSeq
+      assert(days === Seq(day1), t)
+    }
   }
 
   test("schema drift: a day with empty or junk numeric cells appends " +

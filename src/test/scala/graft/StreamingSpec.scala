@@ -1,6 +1,5 @@
 package graft
 
-import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.streaming.Streaming
@@ -9,203 +8,6 @@ import org.apache.hadoop.fs.{Path => HPath}
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
   implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-  private def ts(minute: Int): Timestamp =
-    Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
-
-  case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
-                event_type: String, value: Double)
-
-  test("windowedCounts aggregates tumbling windows per event type") {
-    val in = MemoryStream[Ev]
-    val q = Streaming.windowedCounts(in.toDF(), "10 minutes", "1 hour")
-      .writeStream.format("memory").queryName("wc").outputMode("complete").start()
-    try {
-      in.addData(
-        Ev(1, ts(5), 1, "click", 1.0), Ev(2, ts(10), 1, "click", 2.0),
-        Ev(3, ts(15), 2, "error", 5.0))
-      q.processAllAvailable()
-      val out = spark.table("wc")
-        .select("event_type", "n", "sum_value").orderBy("event_type")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-      assert(out.toSeq === Seq(("click", 2L, 3.0), ("error", 1L, 5.0)))
-    } finally q.stop()
-  }
-
-  test("dedupedStream drops replayed event ids") {
-    val in = MemoryStream[Ev]
-    val q = Streaming.dedupedStream(in.toDF(), "10 minutes")
-      .writeStream.format("memory").queryName("dd").outputMode("append").start()
-    try {
-      in.addData(Ev(1, ts(1), 1, "click", 1.0), Ev(2, ts(2), 1, "click", 1.0))
-      q.processAllAvailable()
-      in.addData(Ev(1, ts(1), 1, "click", 1.0), Ev(3, ts(3), 1, "click", 1.0))
-      q.processAllAvailable()
-      assert(spark.table("dd").count() === 3) // replayed id 1 dropped
-    } finally q.stop()
-  }
-
-  case class Doc(doc_id: Long, ts: Timestamp, text: String)
-
-  test("nearDupSuppressedStream drops same-simhash docs across batches") {
-    val in = MemoryStream[Doc]
-    val q = Streaming.nearDupSuppressedStream(in.toDF(), "text")
-      .writeStream.format("memory").queryName("nd").outputMode("append").start()
-    try {
-      // identical token streams share a simhash even with different ids
-      in.addData(Doc(1, ts(1), "the quick brown fox"),
-        Doc(2, ts(2), "the quick brown fox"))
-      q.processAllAvailable()
-      in.addData(Doc(3, ts(3), "THE  Quick   BROWN fox"), // tokens equal too
-        Doc(4, ts(4), "an entirely different document body"))
-      q.processAllAvailable()
-      val kept = spark.table("nd").select("doc_id").as[Long].collect().sorted
-      assert(kept.toSeq === Seq(1L, 4L)) // 2 and 3 suppressed as near-dups
-    } finally q.stop()
-  }
-
-  test("runningUserStats keeps per-user state across micro-batches") {
-    val in = MemoryStream[(Long, Double)]
-    val q = Streaming.runningUserStats(in.toDS())
-      .writeStream.format("memory").queryName("us").outputMode("update").start()
-    try {
-      in.addData((1L, 1.0), (1L, 2.0), (2L, 10.0))
-      q.processAllAvailable()
-      in.addData((1L, 3.0))
-      q.processAllAvailable()
-      // update mode emits one row per key per batch; latest row per key wins
-      val latest = spark.table("us").groupBy("user_id")
-        .agg(max("n_events").as("n"), max("sum_value").as("s"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(latest === Set((1L, 3L, 6.0), (2L, 1L, 10.0)))
-    } finally q.stop()
-  }
-
-  test("sessionizeStream closes a session once the gap passes (flatMapGroupsWithState)") {
-    val in = MemoryStream[(Long, Timestamp, Double)]
-    val q = Streaming.sessionizeStream(
-        in.toDS().toDF("user_id", "ts", "value")
-          .withWatermark("ts", "0 seconds")
-          .as[(Long, Timestamp, Double)],
-        gapMs = 30 * 60 * 1000L)
-      .writeStream.format("memory").queryName("sess").outputMode("append").start()
-    try {
-      // user 1: two events 10 min apart (one session); user 2: one event
-      in.addData((1L, ts(0), 1.0), (1L, ts(10), 2.0), (2L, ts(5), 9.0))
-      q.processAllAvailable()
-      assert(spark.table("sess").count() === 0) // nothing closed yet
-      // user 1 returns 2 hours later -> gap logic closes user 1's first
-      // session (2 events); the batch also advances the watermark past
-      // user 2's timeout, so its idle session closes via EventTimeTimeout
-      // without another user-2 event
-      in.addData((1L, Timestamp.valueOf("2024-01-01 12:30:00"), 5.0))
-      q.processAllAvailable()
-      val closed = spark.table("sess")
-        .select("user_id", "n_events", "sum_value").orderBy("user_id")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      assert(closed.toSeq === Seq((1L, 2L, 3.0), (2L, 1L, 9.0)))
-    } finally q.stop()
-  }
-
-  test("intervalJoin: stream-stream join bounded to the preceding window") {
-    val clicks = MemoryStream[Ev]
-    val errors = MemoryStream[Ev]
-    val joined = Streaming.intervalJoin(
-      clicks.toDF().select(col("user_id"), col("ts"),
-        col("event_id").as("click_id")),
-      errors.toDF().select(col("user_id"), col("ts"),
-        col("event_id").as("error_id")),
-      keyCol = "user_id", watermark = "10 minutes", within = "10 minutes")
-    val q = joined.select(col("click_id"), col("error_id"))
-      .writeStream.format("memory").queryName("ij").outputMode("append").start()
-    try {
-      // an error <=10 min before a same-user click joins it; older or
-      // other-user errors never join
-      errors.addData(
-        Ev(100, ts(0), 1, "error", 1.0),   // 5 min before click 1
-        Ev(101, ts(30), 1, "error", 1.0),  // 5 min before click 2
-        Ev(102, ts(30), 2, "error", 1.0))  // other user
-      clicks.addData(Ev(1, ts(5), 1, "click", 1.0), Ev(2, ts(35), 1, "click", 1.0))
-      q.processAllAvailable()
-      val pairs = spark.table("ij").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(pairs === Set((1L, 100L), (2L, 101L)))
-    } finally q.stop()
-  }
-
-  test("file stream over events parquet matches the batch aggregation") {
-    // stream the real fixture through windowedCounts and compare against
-    // the identical batch computation — batch/stream parity
-    // file streams need a directory; stage the fixture into one
-    val dir = java.nio.file.Files.createTempDirectory("graft-events")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
-      dir.resolve("events.parquet"))
-    val src = dir.toString
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    def fixTs(df: org.apache.spark.sql.DataFrame) =
-      if (df.schema("ts").dataType.typeName == "long")
-        df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      else if (df.schema("ts").dataType.typeName == "timestamp_ntz")
-        // watermarks require TIMESTAMP; NTZ -> LTZ is exact under UTC
-        df.withColumn("ts", col("ts").cast("timestamp"))
-      else df
-    val batchDf = fixTs(spark.read.parquet(src))
-    val q = Streaming.windowedCounts(
-        fixTs(Streaming.eventsFileStream(spark, src)), "1 hour", "1 day")
-      .writeStream.format("memory").queryName("fsp").outputMode("complete")
-      .start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("fsp")
-        .groupBy("event_type").agg(sum("n").as("n"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val batch = batchDf.groupBy("event_type").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(streamed === batch)
-    } finally q.stop()
-  }
-
-  test("dualSink: append-history plus replace-latest per micro-batch (K3)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream").toString
-    val in = MemoryStream[Ev]
-    val counts = Streaming.windowedCounts(in.toDF(), "10 minutes", "1 hour")
-    val q = Streaming.dualSink(counts, s"$tmp/history", s"$tmp/latest",
-      s"$tmp/ckpt").start()
-    try {
-      in.addData(Ev(1, ts(5), 1, "click", 1.0))
-      q.processAllAvailable()
-      in.addData(Ev(2, ts(20), 1, "click", 2.0))
-      q.processAllAvailable()
-      val hist = spark.read.parquet(s"$tmp/history")
-      val latest = spark.read.parquet(s"$tmp/latest")
-      // history accumulates one batch-stamped snapshot per batch; latest
-      // holds the full final state of the single open window
-      assert(hist.count() >= 2)
-      assert(hist.select("batch_id").distinct().count() >= 2)
-      assert(latest.count() === 1)
-      assert(latest.select("n").head().getLong(0) === 2L)
-      assert(hist.columns.contains("day")) // day-partitioned like K1
-    } finally q.stop()
-  }
-
-  test("enrichWithDim: stream-static left join keeps unmatched events") {
-    val in = MemoryStream[Ev]
-    val dim = Seq((1L, "gold"), (2L, "silver")).toDF("user_id", "tier")
-    val q = Streaming.enrichWithDim(in.toDF(), dim, "user_id")
-      .writeStream.format("memory").queryName("enriched")
-      .outputMode("append").start()
-    try {
-      in.addData(
-        Ev(1, ts(1), 1, "click", 1.0),
-        Ev(2, ts(2), 2, "click", 2.0),
-        Ev(3, ts(3), 99, "click", 3.0)) // no dim row -> kept, tier null
-      q.processAllAvailable()
-      val out = spark.table("enriched").select("event_id", "tier")
-        .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-      assert(out === Map(1L -> Some("gold"), 2L -> Some("silver"), 3L -> None))
-    } finally q.stop()
-  }
 
   test("curation ops run unchanged in a stream: quality gate + chunking") {
     // the row-local curation stages (normalize, quality score, chunk)
@@ -238,203 +40,6 @@ class StreamingSpec extends SparkSpec {
       assert(rows(out.filter($"doc_id" === 3).select("chunk_md5")
           .orderBy("chunk_md5")) ==
         rows(batch.select("chunk_md5").orderBy("chunk_md5")))
-    } finally q.stop()
-  }
-
-  test("capPerKeyStream caps per key across micro-batches (transformWithState)") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    // transformWithState requires the RocksDB state store provider
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Streaming.KeyedDoc]
-    val q = Streaming.capPerKeyStream(in.toDS(), n = 2)
-      .writeStream.format("memory").queryName("cap_stream")
-      .outputMode("append").start()
-    try {
-      in.addData(Streaming.KeyedDoc("a.de", 1), Streaming.KeyedDoc("a.de", 2),
-        Streaming.KeyedDoc("b.de", 10))
-      q.processAllAvailable()
-      // a.de is at its cap; later batches must not emit more of it
-      in.addData(Streaming.KeyedDoc("a.de", 3), Streaming.KeyedDoc("b.de", 11),
-        Streaming.KeyedDoc("b.de", 12), Streaming.KeyedDoc("c.de", 20))
-      q.processAllAvailable()
-      val out = spark.table("cap_stream")
-      assert(rows(out.filter($"key" === "a.de").select("doc_id")
-        .orderBy("doc_id")).flatten == Seq(1L, 2L))
-      assert(out.filter($"key" === "b.de").count() === 2) // 10 + one of 11/12
-      assert(rows(out.filter($"key" === "c.de").select("doc_id"))
-        .flatten == Seq(20L))
-    } finally {
-      q.stop()
-      prev match {
-        case Some(p) =>
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("dedupedWithinWatermark drops a replay re-stamped with a fresh ts") {
-    // at-least-once sources often RE-STAMP the duplicate on retry: the
-    // replay of id 1 arrives with a newer event time. Plain watermark
-    // dedup keyed on (id) still holds state, but this operator's
-    // contract is explicit about it — the duplicate must be dropped.
-    val in = MemoryStream[Ev]
-    val q = Streaming.dedupedWithinWatermarkStream(in.toDF(), "10 minutes")
-      .writeStream.format("memory").queryName("ddww").outputMode("append")
-      .start()
-    try {
-      in.addData(Ev(1, ts(1), 1, "click", 1.0), Ev(2, ts(2), 1, "click", 1.0))
-      q.processAllAvailable()
-      in.addData(Ev(1, ts(8), 1, "click", 1.0), // replay, fresher ts
-        Ev(3, ts(9), 1, "click", 1.0))
-      q.processAllAvailable()
-      assert(spark.table("ddww").count() === 3)
-      assert(spark.table("ddww").select("event_id").as[Long].collect()
-        .toSet === Set(1L, 2L, 3L))
-    } finally q.stop()
-  }
-
-  case class Cdc(k: Long, seq: Long, v: String)
-
-  test("cdcSink maintains an upsert table across micro-batches") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cdc").toString
-    val in = MemoryStream[Cdc]
-    val q = Streaming.cdcSink(in.toDF(), s"$tmp/table", s"$tmp/ckpt",
-      Seq("k"), Seq("seq"), col("v") === "DEL", nBuckets = 16).start()
-    try {
-      // batch 1: spread keys over several buckets so batch 2 provably
-      // leaves some of them alone
-      in.addData((1L to 12L).map(k => Cdc(k, 1, s"v$k")): _*)
-      q.processAllAvailable()
-      def fileStates = new java.io.File(s"$tmp/table").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("__kb="))
-        .flatMap(d => d.listFiles().map(f =>
-          (f.getPath, f.length(), f.lastModified()))).toSet
-      val before = fileStates
-      // batch 2: update k=1, delete k=2, insert k=30, and a STALE
-      // replay of k=30 that must lose to the same-batch newer row
-      in.addData(Cdc(1, 2, "a2"), Cdc(2, 2, "DEL"), Cdc(30, 2, "c"),
-        Cdc(30, 1, "stale"))
-      q.processAllAvailable()
-      val out = spark.read.parquet(s"$tmp/table")
-        .collect().map(r => r.getAs[Long]("k") -> r.getAs[String]("v"))
-        .toMap
-      val expected = (3L to 12L).map(k => k -> s"v$k").toMap ++
-        Map(1L -> "a2", 30L -> "c")
-      assert(out === expected)
-      // partition-scoped merge: every file in a bucket NOT containing
-      // k∈{1,2,30} is byte-identical (same path, length, mtime) —
-      // batch 2 never opened or rewrote it
-      val touched = Seq(1L, 2L, 30L).toDF("k")
-        .select(pmod(hash(col("k")), lit(16)).cast("int"))
-        .collect().map(_.getInt(0)).toSet
-      val untouchedBefore = before.filterNot { case (p, _, _) =>
-        touched.exists(b => p.contains(s"__kb=$b/")) }
-      assert(untouchedBefore.nonEmpty, "fixture never exercised the claim")
-      assert(untouchedBefore.subsetOf(fileStates))
-      // readBucketed hides the layout column
-      assert(!graft.ops.Warehouse.readBucketed(spark, s"$tmp/table")
-        .columns.contains("__kb"))
-    } finally q.stop()
-  }
-
-  test("wordHistSink: streamed histogram re-trains the exact batch BPE table") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-whist").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text").where(col("text").isNotNull)
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.wordHistSink(
-      in.toDF().toDF("doc_id", "text"), "text",
-      s"$tmp/stats", s"$tmp/ckpt").start()
-    try {
-      val all = docs.as[(Long, String)].collect()
-      all.grouped((all.length + 2) / 3).foreach { g =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      // merged store == batch histogram over the union, cell-exactly
-      val streamed = Streaming.readWordHistogram(spark, s"$tmp/stats")
-      val batch = graft.ops.Bpe.wordHistogram(docs, "text")
-      assert(streamed.count() === batch.count())
-      assert(streamed.unionAll(batch).distinct().count() === batch.count())
-      // tokenizer refresh: training from the store == training from
-      // the full corpus, rule for rule (incl. counts)
-      val fromStore = graft.ops.Bpe.trainBpeOnHistogram(streamed, 5)
-      val fromCorpus = graft.ops.Bpe.trainBpe(docs, "text", 5)
-      assert(fromStore === fromCorpus)
-      // and the unigram-LM trains identically from the same store
-      val uniStore = graft.ops.UnigramLm.trainUnigram(streamed,
-        vocabWords = 100, topPieces = 32).collect().map(_.toSeq).toSeq
-      val uniCorpus = graft.ops.UnigramLm.trainUnigram(
-        graft.ops.Bpe.wordHistogram(docs, "text"),
-        vocabWords = 100, topPieces = 32).collect().map(_.toSeq).toSeq
-      assert(uniStore === uniCorpus)
-    } finally q.stop()
-  }
-
-  test("driftHistSink accumulates the exact batch histogram and PSI") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-drift").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("n_chars").cast("double").as("v"))
-    val in = MemoryStream[(Long, Double)]
-    val q = Streaming.driftHistSink(
-      in.toDF().toDF("doc_id", "v"), "v",
-      s"$tmp/stats", s"$tmp/ckpt", lo = 0.0, hi = 600.0).start()
-    try {
-      val all = docs.as[(Long, Double)].collect()
-      all.grouped((all.length + 2) / 3).foreach { g =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      // accumulated store == bucketing the full corpus batch, cell-exact
-      val streamed = Streaming.readDriftHist(spark, s"$tmp/stats")
-      val batch = docs
-        .groupBy(graft.ops.Profiling.psiBucket(col("v"), 0.0, 600.0, 10)
-          .as("bucket"))
-        .agg(count(lit(1)).as("n"))
-      assert(streamed.count() === batch.count())
-      assert(streamed.unionAll(batch).distinct().count() === batch.count())
-      // streamPsi(store, base) == Profiling.psi(base, corpus) exactly
-      val base = docs.where(col("doc_id") % 2 === 0)
-      val baseHist = base
-        .groupBy(graft.ops.Profiling.psiBucket(col("v"), 0.0, 600.0, 10)
-          .as("bucket"))
-        .agg(count(lit(1)).as("n"))
-      val got = Streaming.streamPsi(spark, s"$tmp/stats", baseHist)
-        .head().getDouble(0)
-      val want = graft.ops.Profiling.psi(base, docs, col("v"), 0.0, 600.0)
-        .head().getDouble(0)
-      assert(math.abs(got - want) < 1e-12)
-      // the even-id half against the whole corpus barely drifts
-      assert(math.abs(got) < 0.1)
-    } finally q.stop()
-  }
-
-  test("holtStatsSink: chained per-batch folds equal the one-shot batch " +
-      "recurrence, cell-exact") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-holt").toString
-    val in = MemoryStream[(String, Long, Double)]
-    val q = Streaming.holtStatsSink(
-      in.toDF().toDF("k", "t", "v"), "k", Seq(col("t")), "v",
-      alpha = 0.3, beta = 0.2, s"$tmp/stats", s"$tmp/ckpt").start()
-    // three keys, 40 time-ordered points each (deterministic values);
-    // the flattened feed is split mid-key across micro-batches, so the
-    // fold must carry state both across batches and across keys
-    val rows = for (k <- Seq("a", "b", "c"); i <- 1 to 40)
-      yield (k, i.toLong, math.sin(i * 0.37) * 10.0 + i * (k.head - 'a'))
-    try {
-      rows.grouped(35).foreach { g =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      val got = Streaming.readHoltStats(spark, s"$tmp/stats")
-        .select("k", "n_obs", "level", "trend", "forecast_1")
-        .orderBy("k").collect().toSeq.map(_.toSeq)
-      val want = graft.ops.TimeSeries.holtLinear(
-          rows.toDF("k", "t", "v"), "k", Seq(col("t").asc), "v",
-          alpha = 0.3, beta = 0.2)
-        .select("k", "n_obs", "level", "trend", "forecast_1")
-        .orderBy("k").collect().toSeq.map(_.toSeq)
-      assert(got === want) // cell-exact: same fold, same double order
     } finally q.stop()
   }
 
@@ -517,7 +122,7 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("jaccardIndexSink: exact-threshold streaming dedup matches the " +
+  test("mergeJaccardIndexBatch: exact-threshold dedup matches the " +
       "sequential batch-admission replay; crash-replay rewrites " +
       "identical content") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-jix").toString
@@ -532,120 +137,116 @@ class StreamingSpec extends SparkSpec {
     val frozen = graft.ops.Dedup.shingleDfTable(
       (b1 ++ b2).toDF("doc_id", "text"), "text", 3)
       .localCheckpoint()
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.jaccardIndexSink(in.toDF().toDF("doc_id", "text"),
-      "text", "doc_id", s"$tmp/index", s"$tmp/ckpt", frozen,
-      n = 3, minJaccard = 0.5).start()
-    try {
-      in.addData(b1.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(b2.toIndexedSeq: _*); q.processAllAvailable()
-      val ids = Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-        .select("id").distinct().collect().map(_.getLong(0)).toSet
-      // sequential batch replay with the SAME frozen order
-      val (ar1, pr1) = graft.ops.Dedup.jaccardIndexTables(
-        b1.toDF("doc_id", "text")
-          .join(Seq(1L, 2L).toDF("doc_id"), Seq("doc_id"), "left_semi"),
-        "text", "doc_id", 3, 0.5, frozen)
-      val adm2 = graft.ops.Dedup.admitAgainstJaccardIndex(
-          b2.toDF("doc_id", "text"), "text", "doc_id", ar1, pr1,
-          3, 0.5, frozen)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(ids === Set(1L, 2L) ++ adm2)
-      assert(ids === Set(1L, 2L, 12L), s"admitted set diverged: $ids")
-      // crash replay of batch 1: identical content re-decided against
-      // the pre-crash standing state
-      val before = Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-        .collect().map(_.toSeq).toSet
-      Streaming.mergeJaccardIndexBatch(b2.toDF("doc_id", "text"), "text",
-        "doc_id", s"$tmp/index", 1L, frozen, 3, 0.5)
-      val after = Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-        .collect().map(_.toSeq).toSet
-      assert(after === before)
-      // compaction: both trees collapse to batch=-1 under ONE atomic
-      // swap; standing rows and a fresh batch's admission decision are
-      // identical before and after
-      val b3 = Seq((20L, d3.replace("walls", "cliffs")), (21L, d1))
-        .toDF("doc_id", "text")
-      def admit3() = graft.ops.Dedup.admitAgainstJaccardIndex(b3, "text",
-          "doc_id",
-          spark.read.parquet(s"$tmp/index/arrays").drop("batch", "ab"),
-          spark.read.parquet(s"$tmp/index/prefix").drop("batch", "jb"),
-          3, 0.5, frozen)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      val rowsPre = Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-        .drop("batch", "ab").collect().map(_.toSeq).toSet
-      val admitPre = admit3()
-      // the frozen order persisted WITH the index round-trips: a later
-      // session re-reading it decides admission identically
-      Streaming.writeJaccardDfTable(frozen, s"$tmp/index")
-      val reread = Streaming.readJaccardDfTable(spark, s"$tmp/index")
-      assert(graft.ops.Dedup.admitAgainstJaccardIndex(b3, "text",
-          "doc_id",
-          spark.read.parquet(s"$tmp/index/arrays").drop("batch", "ab"),
-          spark.read.parquet(s"$tmp/index/prefix").drop("batch", "jb"),
-          3, 0.5, reread)
-        .select("doc_id").collect().map(_.getLong(0)).toSet === admitPre)
-      Streaming.compactJaccardIndex(spark, s"$tmp/index")
-      assert(Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-        .drop("batch", "ab").collect().map(_.toSeq).toSet === rowsPre)
-      assert(admit3() === admitPre)
-      // the persisted frozen order survives the root swap
-      assert(Streaming.readJaccardDfTable(spark, s"$tmp/index")
-        .collect().map(_.toSeq).toSet ===
-        frozen.collect().map(_.toSeq).toSet)
-      // replay of the carried latest batch (1) after compaction:
-      // its dir was NOT folded, so delete-and-redecide reproduces
-      // identical standing content
-      Streaming.mergeJaccardIndexBatch(b2.toDF("doc_id", "text"), "text",
-        "doc_id", s"$tmp/index", 1L, frozen, 3, 0.5)
-      assert(Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-        .drop("batch", "ab").collect().map(_.toSeq).toSet === rowsPre)
-      // crashed writeJaccardDfTable swap (order only in the backup):
-      // the reader falls back, and a subsequent compaction heals the
-      // backup BEFORE the root swap instead of destroying it
-      import java.nio.file.{Files => JF, Paths, StandardCopyOption}
-      JF.move(Paths.get(s"$tmp/index/df_table"),
-        Paths.get(s"$tmp/index/.df_table.compact.old"),
-        StandardCopyOption.ATOMIC_MOVE)
-      assert(Streaming.readJaccardDfTable(spark, s"$tmp/index")
-        .collect().map(_.toSeq).toSet ===
-        frozen.collect().map(_.toSeq).toSet)
-      Streaming.mergeJaccardIndexBatch(
-        Seq((30L, d2 + " entirely new words appended here"))
-          .toDF("doc_id", "text"),
-        "text", "doc_id", s"$tmp/index", 3L, frozen, 3, 0.5)
-      Streaming.compactJaccardIndex(spark, s"$tmp/index")
-      assert(Streaming.readJaccardDfTable(spark, s"$tmp/index")
-        .collect().map(_.toSeq).toSet ===
-        frozen.collect().map(_.toSeq).toSet)
-      // a post-compaction merge appends above batch=-1 and decides
-      // identically (21 is stored 1's exact dup -> suppressed)
-      Streaming.mergeJaccardIndexBatch(b3, "text", "doc_id",
-        s"$tmp/index", 2L, frozen, 3, 0.5)
-      val idsAfter = Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-        .select("id").distinct().collect().map(_.getLong(0)).toSet
-      assert(idsAfter === Set(1L, 2L, 12L) ++ admitPre)
-      // OFFLINE REBUILD under a freshly-derived order: the admitted
-      // corpus re-indexes into the batch=-1 layout + new df_table
-      // under one swap; admission stays EXACT (order-independent)
-      // and the stream appends above -1 with the new order
-      val admittedDocs = (b1 ++ b2).toDF("doc_id", "text")
-        .join(idsAfter.toSeq.toDF("doc_id"), Seq("doc_id"), "left_semi")
-      Streaming.rebuildJaccardIndex(spark, admittedDocs, "text",
-        "doc_id", s"$tmp/index", 3, 0.5)
-      assert(Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-        .select("id").distinct().collect().map(_.getLong(0)).toSet
-        === idsAfter)
-      val frozen2 = Streaming.readJaccardDfTable(spark, s"$tmp/index")
-      Streaming.mergeJaccardIndexBatch(
-        Seq((40L, d1),                           // dup of stored 1
-          (41L, "brand new unrelated content about migratory geese"))
-          .toDF("doc_id", "text"),
-        "text", "doc_id", s"$tmp/index", 5L, frozen2, 3, 0.5)
-      assert(Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-        .select("id").distinct().collect().map(_.getLong(0)).toSet
-        === idsAfter + 41L)
-    } finally q.stop()
+    Streaming.mergeJaccardIndexBatch(b1.toDF("doc_id", "text"), "text",
+      "doc_id", s"$tmp/index", 0L, frozen, 3, 0.5)
+    Streaming.mergeJaccardIndexBatch(b2.toDF("doc_id", "text"), "text",
+      "doc_id", s"$tmp/index", 1L, frozen, 3, 0.5)
+    val ids = Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
+      .select("id").distinct().collect().map(_.getLong(0)).toSet
+    // sequential batch replay with the SAME frozen order
+    val (ar1, pr1) = graft.ops.Dedup.jaccardIndexTables(
+      b1.toDF("doc_id", "text")
+        .join(Seq(1L, 2L).toDF("doc_id"), Seq("doc_id"), "left_semi"),
+      "text", "doc_id", 3, 0.5, frozen)
+    val adm2 = graft.ops.Dedup.admitAgainstJaccardIndex(
+        b2.toDF("doc_id", "text"), "text", "doc_id", ar1, pr1,
+        3, 0.5, frozen)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(ids === Set(1L, 2L) ++ adm2)
+    assert(ids === Set(1L, 2L, 12L), s"admitted set diverged: $ids")
+    // crash replay of batch 1: identical content re-decided against
+    // the pre-crash standing state
+    val before = Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
+      .collect().map(_.toSeq).toSet
+    Streaming.mergeJaccardIndexBatch(b2.toDF("doc_id", "text"), "text",
+      "doc_id", s"$tmp/index", 1L, frozen, 3, 0.5)
+    val after = Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
+      .collect().map(_.toSeq).toSet
+    assert(after === before)
+    // compaction: both trees collapse to batch=-1 under ONE atomic
+    // swap; standing rows and a fresh batch's admission decision are
+    // identical before and after
+    val b3 = Seq((20L, d3.replace("walls", "cliffs")), (21L, d1))
+      .toDF("doc_id", "text")
+    def admit3() = graft.ops.Dedup.admitAgainstJaccardIndex(b3, "text",
+        "doc_id",
+        spark.read.parquet(s"$tmp/index/arrays").drop("batch", "ab"),
+        spark.read.parquet(s"$tmp/index/prefix").drop("batch", "jb"),
+        3, 0.5, frozen)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val rowsPre = Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
+      .drop("batch", "ab").collect().map(_.toSeq).toSet
+    val admitPre = admit3()
+    // the frozen order persisted WITH the index round-trips: a later
+    // session re-reading it decides admission identically
+    Streaming.writeJaccardDfTable(frozen, s"$tmp/index")
+    val reread = Streaming.readJaccardDfTable(spark, s"$tmp/index")
+    assert(graft.ops.Dedup.admitAgainstJaccardIndex(b3, "text",
+        "doc_id",
+        spark.read.parquet(s"$tmp/index/arrays").drop("batch", "ab"),
+        spark.read.parquet(s"$tmp/index/prefix").drop("batch", "jb"),
+        3, 0.5, reread)
+      .select("doc_id").collect().map(_.getLong(0)).toSet === admitPre)
+    Streaming.compactJaccardIndex(spark, s"$tmp/index")
+    assert(Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
+      .drop("batch", "ab").collect().map(_.toSeq).toSet === rowsPre)
+    assert(admit3() === admitPre)
+    // the persisted frozen order survives the root swap
+    assert(Streaming.readJaccardDfTable(spark, s"$tmp/index")
+      .collect().map(_.toSeq).toSet ===
+      frozen.collect().map(_.toSeq).toSet)
+    // replay of the carried latest batch (1) after compaction:
+    // its dir was NOT folded, so delete-and-redecide reproduces
+    // identical standing content
+    Streaming.mergeJaccardIndexBatch(b2.toDF("doc_id", "text"), "text",
+      "doc_id", s"$tmp/index", 1L, frozen, 3, 0.5)
+    assert(Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
+      .drop("batch", "ab").collect().map(_.toSeq).toSet === rowsPre)
+    // crashed writeJaccardDfTable swap (order only in the backup):
+    // the reader falls back, and a subsequent compaction heals the
+    // backup BEFORE the root swap instead of destroying it
+    import java.nio.file.{Files => JF, Paths, StandardCopyOption}
+    JF.move(Paths.get(s"$tmp/index/df_table"),
+      Paths.get(s"$tmp/index/.df_table.compact.old"),
+      StandardCopyOption.ATOMIC_MOVE)
+    assert(Streaming.readJaccardDfTable(spark, s"$tmp/index")
+      .collect().map(_.toSeq).toSet ===
+      frozen.collect().map(_.toSeq).toSet)
+    Streaming.mergeJaccardIndexBatch(
+      Seq((30L, d2 + " entirely new words appended here"))
+        .toDF("doc_id", "text"),
+      "text", "doc_id", s"$tmp/index", 3L, frozen, 3, 0.5)
+    Streaming.compactJaccardIndex(spark, s"$tmp/index")
+    assert(Streaming.readJaccardDfTable(spark, s"$tmp/index")
+      .collect().map(_.toSeq).toSet ===
+      frozen.collect().map(_.toSeq).toSet)
+    // a post-compaction merge appends above batch=-1 and decides
+    // identically (21 is stored 1's exact dup -> suppressed)
+    Streaming.mergeJaccardIndexBatch(b3, "text", "doc_id",
+      s"$tmp/index", 2L, frozen, 3, 0.5)
+    val idsAfter = Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
+      .select("id").distinct().collect().map(_.getLong(0)).toSet
+    assert(idsAfter === Set(1L, 2L, 12L) ++ admitPre)
+    // OFFLINE REBUILD under a freshly-derived order: the admitted
+    // corpus re-indexes into the batch=-1 layout + new df_table
+    // under one swap; admission stays EXACT (order-independent)
+    // and the stream appends above -1 with the new order
+    val admittedDocs = (b1 ++ b2).toDF("doc_id", "text")
+      .join(idsAfter.toSeq.toDF("doc_id"), Seq("doc_id"), "left_semi")
+    Streaming.rebuildJaccardIndex(spark, admittedDocs, "text",
+      "doc_id", s"$tmp/index", 3, 0.5)
+    assert(Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
+      .select("id").distinct().collect().map(_.getLong(0)).toSet
+      === idsAfter)
+    val frozen2 = Streaming.readJaccardDfTable(spark, s"$tmp/index")
+    Streaming.mergeJaccardIndexBatch(
+      Seq((40L, d1),                           // dup of stored 1
+        (41L, "brand new unrelated content about migratory geese"))
+        .toDF("doc_id", "text"),
+      "text", "doc_id", s"$tmp/index", 5L, frozen2, 3, 0.5)
+    assert(Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
+      .select("id").distinct().collect().map(_.getLong(0)).toSet
+      === idsAfter + 41L)
   }
 
   test("jaccard index written before the size-banded layout: merges and " +
@@ -796,62 +397,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("hashIndexSink: cross-batch Hamming admission matches the " +
-      "sequential batch replay; crash-replay rewrites identical content") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-hix").toString
-    val h1 = 0x0F0F0F0F0F0F0F0FL
-    val b1 = Seq((1L, h1), (2L, 0x7777777777777777L),
-      (3L, h1 ^ (1L << 5)))                     // near-dup of 1 in-batch
-    val b2 = Seq((10L, h1 ^ (1L << 63)),        // hamming 1 to stored 1
-      (11L, 0x1234567890ABCDEFL),               // new -> admitted
-      (12L, 0x7777777777777777L))               // exact dup of stored 2
-    val in = MemoryStream[(Long, Long)]
-    val q = Streaming.hashIndexSink(in.toDF().toDF("id", "h"), "h", "id",
-      s"$tmp/index", s"$tmp/ckpt", bits = 64, bands = 8,
-      maxHamming = 3).start()
-    try {
-      in.addData(b1.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(b2.toIndexedSeq: _*); q.processAllAvailable()
-      val admitted = Streaming.readHashIndex(spark, s"$tmp/index")
-        .select("id").distinct().collect().map(_.getLong(0)).toSet
-      // batch replay: 1 and 2 admitted (3 is 1's in-batch near-dup);
-      // then 10 collides with stored 1, 12 with stored 2, 11 admitted
-      assert(admitted === Set(1L, 2L, 11L))
-      // the index prunes per-batch reads to touched hb= buckets and
-      // keeps per-batch dirs — both batches present
-      val batches = Streaming.readHashIndex(spark, s"$tmp/index")
-        .select("batch").distinct().collect().map(_.getInt(0)).toSet
-      assert(batches === Set(0, 1))
-      // crash-replay: re-merging batch 1 against the same pre-state
-      // rewrites identical content (deterministic decision)
-      val before = Streaming.readHashIndex(spark, s"$tmp/index")
-        .collect().map(_.toSeq).toSet
-      Streaming.mergeHashIndexBatch(
-        b2.toDF("id", "h"), "h", "id", s"$tmp/index", 1L, 64, 8, 3)
-      val after = Streaming.readHashIndex(spark, s"$tmp/index")
-        .collect().map(_.toSeq).toSet
-      assert(after === before)
-      // compaction: same rows (batch dirs collapsed), same admission
-      // decision for a fresh probe batch
-      val b3 = Seq((20L, h1 ^ (1L << 2)), (21L, 0x0123456789ABCDEFL))
-        .toDF("id", "h")
-      def admit3() = graft.ops.Dedup.admitAgainstHashIndex(b3, "h", "id",
-          Streaming.readHashIndex(spark, s"$tmp/index")
-            .drop("batch", "hb"),
-          bits = 64, bands = 8, maxHamming = 3)
-        .select("id").collect().map(_.getLong(0)).toSet
-      val preCompact = admit3()
-      Streaming.compactHashIndex(spark, s"$tmp/index")
-      val rowsAfter = Streaming.readHashIndex(spark, s"$tmp/index")
-        .drop("batch", "hb").collect().map(_.toSeq).toSet
-      // rows carried (id, h, band_idx, band_value, batch, hb) — the
-      // partition columns drop, the data rows survive identically
-      assert(rowsAfter === before.map(_.dropRight(2)))
-      assert(admit3() === preCompact)
-      assert(preCompact === Set(21L)) // 20 is hamming-1 to stored h1
-    } finally q.stop()
-  }
-
   test("ingest sinks survive a degenerate first batch: a fully " +
       "gated-out / shingle-less / null-hash batch 0 writes NO batch " +
       "dir and the next batch proceeds (no schema-inference wedge)") {
@@ -901,383 +446,25 @@ class StreamingSpec extends SparkSpec {
     assert(!new java.io.File(s"$tmpJ/index/arrays/batch=2").exists())
     assert(!new java.io.File(s"$tmpJ/index/prefix/batch=2").exists())
 
-    // hash index: batch 0 all null hashes (undecodable images)
-    val tmpH = java.nio.file.Files.createTempDirectory("graft-hix0").toString
-    Streaming.mergeHashIndexBatch(
-      Seq((1L, Option.empty[Long])).toDF("id", "h"),
-      "h", "id", s"$tmpH/index", 0L, 64, 8, 3)
+    // MinHash dedup index: batch 0 all null text, so no band hash at all
+    val tmpH = java.nio.file.Files.createTempDirectory("graft-mix0").toString
+    Streaming.mergeDedupIndexBatch(
+      Seq((1L, null.asInstanceOf[String])).toDF("doc_id", "text"),
+      "text", "doc_id", s"$tmpH/index", 0L)
     assert(!new java.io.File(s"$tmpH/index").exists())
-    Streaming.mergeHashIndexBatch(
-      Seq((2L, Some(0x0F0F0F0F0F0F0F0FL))).toDF("id", "h"),
-      "h", "id", s"$tmpH/index", 1L, 64, 8, 3)
-    assert(Streaming.readHashIndex(spark, s"$tmpH/index")
+    Streaming.mergeDedupIndexBatch(
+      Seq((2L, prose)).toDF("doc_id", "text"),
+      "text", "doc_id", s"$tmpH/index", 1L)
+    assert(Streaming.readDedupIndex(spark, s"$tmpH/index")
       .select("id").distinct().collect().map(_.getLong(0)).toSet
       === Set(2L))
-    // mixed later batch: null-hash (admitted, band-less) + exact dup
-    // of the stored hash (suppressed) -> empty write frame, no dir
-    Streaming.mergeHashIndexBatch(
-      Seq((3L, Option.empty[Long]), (4L, Some(0x0F0F0F0F0F0F0F0FL)))
-        .toDF("id", "h"),
-      "h", "id", s"$tmpH/index", 2L, 64, 8, 3)
+    // mixed later batch: null text (admitted, band-less) + exact dup
+    // of the stored doc (suppressed) -> empty write frame, no dir
+    Streaming.mergeDedupIndexBatch(
+      Seq((3L, null.asInstanceOf[String]), (4L, prose))
+        .toDF("doc_id", "text"),
+      "text", "doc_id", s"$tmpH/index", 2L)
     assert(!new java.io.File(s"$tmpH/index/batch=2").exists())
-  }
-
-  test("mgSink: streamed Misra-Gries store keeps every token above " +
-      "N/(k+1) within the under-estimate bound, in k-bounded state; " +
-      "crash-replay is a no-op") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mg").toString
-    val words = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(explode(graft.ops.Text.tokens(col("text"))).as("word"))
-    val k = 20
-    val in = MemoryStream[String]
-    val q = Streaming.mgSink(in.toDF().toDF("word"), "word", k,
-      s"$tmp/stats", s"$tmp/ckpt").start()
-    try {
-      val all = words.as[String].collect()
-      val batches = all.grouped((all.length + 2) / 3).toSeq
-      batches.foreach { g =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      val store = Streaming.readMgHeavyHitters(spark, s"$tmp/stats")
-        .collect().map(r => r.getString(0) ->
-          (r.getLong(1), r.getLong(2))).toMap
-      assert(store.size <= k) // bounded state, forever
-      val exact = all.groupBy(identity).view.mapValues(_.length.toLong)
-      val bound = all.length.toLong / (k + 1)
-      // the MG guarantee after ANY merge tree: every heavy item
-      // present, counters under-estimate by at most N/(k+1)
-      exact.filter(_._2 > bound).foreach { case (w, n) =>
-        assert(store.contains(w), s"heavy item '$w' ($n > $bound) missing")
-      }
-      store.foreach { case (w, (lo, hi)) =>
-        val n = exact(w)
-        assert(lo <= n && n <= hi, s"'$w': true $n outside [$lo, $hi]")
-      }
-      // crash replay of the last batch: `_batch` mark skips the fold
-      Streaming.mergeMgBatch(batches.last.toSeq.toDF("word"), "word", k,
-        s"$tmp/stats", (batches.size - 1).toLong)
-      val after = Streaming.readMgHeavyHitters(spark, s"$tmp/stats")
-        .collect().map(r => r.getString(0) ->
-          (r.getLong(1), r.getLong(2))).toMap
-      assert(after === store)
-    } finally q.stop()
-  }
-
-  test("prioritySampleSink: streamed A-Res reservoir equals the batch " +
-      "weighted sample over the union; crash-replay is a no-op; state " +
-      "bounded at n") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ares").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"))
-    val in = MemoryStream[(Long, Long)]
-    val q = Streaming.prioritySampleSink(in.toDF().toDF("doc_id", "n_chars"),
-      "doc_id", "n_chars", n = 25, s"$tmp/stats", s"$tmp/ckpt").start()
-    try {
-      val all = docs.as[(Long, Long)].collect()
-      val batches = all.grouped((all.length + 2) / 3).toSeq
-      batches.zipWithIndex.foreach { case (g, _) =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      val got = Streaming.readPrioritySample(spark, s"$tmp/stats")
-        .select("doc_id", "priority").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSet
-      // a row's priority never changes, so the mergeable reservoir
-      // must equal the one-pass batch sample over everything streamed
-      val want = graft.ops.Curation.prioritySample(docs,
-          col("doc_id"), col("n_chars"), n = 25)
-        .select("doc_id", "priority").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSet
-      assert(got === want)
-      assert(got.size === 25) // bounded state
-      // crash replay of the last batch: `_batch` mark skips the merge,
-      // store bytes unchanged
-      Streaming.mergePrioritySampleBatch(
-        batches.last.toSeq.toDF("doc_id", "n_chars"),
-        "doc_id", "n_chars", 25, s"$tmp/stats", (batches.size - 1).toLong)
-      val after = Streaming.readPrioritySample(spark, s"$tmp/stats")
-        .select("doc_id", "priority").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSet
-      assert(after === got)
-      // a batch whose weights are all <= 0 contributes nothing and the
-      // standing reservoir survives the merge untouched
-      Streaming.mergePrioritySampleBatch(
-        Seq((9999L, 0L), (9998L, -5L)).toDF("doc_id", "n_chars"),
-        "doc_id", "n_chars", 25, s"$tmp/stats", batches.size.toLong)
-      assert(Streaming.readPrioritySample(spark, s"$tmp/stats")
-        .select("doc_id", "priority").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSet === got)
-    } finally q.stop()
-  }
-
-  test("hllSink: streamed per-key distinct estimates equal the batch " +
-      "sketch over the union, duplicates across batches collapse") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-hll").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("lang"), col("doc_id"))
-    val in = MemoryStream[(String, Long)]
-    val q = Streaming.hllSink(in.toDF().toDF("lang", "doc_id"),
-      "lang", "doc_id", s"$tmp/stats", s"$tmp/ckpt").start()
-    try {
-      val all = docs.as[(String, Long)].collect()
-      // three batches with the FIRST batch re-sent at the end: a
-      // distinct-count store must not double-count replayed values
-      val batches = all.grouped((all.length + 2) / 3).toSeq
-      (batches :+ batches.head).foreach { g =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      val got = Streaming.readHllDistinct(spark, s"$tmp/stats")
-        .orderBy("lang").collect().toSeq.map(_.toSeq)
-      val want = docs
-        .groupBy("lang")
-        .agg(hll_sketch_estimate(hll_sketch_agg(col("doc_id"), lit(12)))
-          .cast("long").as("n_distinct"))
-        .orderBy("lang").collect().toSeq.map(_.toSeq)
-      assert(got === want) // union of sketches == sketch of union
-      // sanity: estimates near the exact distinct counts (tight at
-      // these cardinalities)
-      val exact = docs.groupBy("lang")
-        .agg(countDistinct("doc_id").as("n")).orderBy("lang")
-        .collect().map(_.getLong(1))
-      got.map(_(1).asInstanceOf[Long]).zip(exact).foreach { case (e, x) =>
-        assert(math.abs(e - x) <= math.max(1L, (x * 0.05).toLong),
-          s"estimate $e vs exact $x")
-      }
-    } finally q.stop()
-  }
-
-  test("kmeansStatsSink: streamed assignment stats yield the exact " +
-      "batch Lloyd update; refreshed centroids feed assignment") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-kms").toString
-    val emb = spark.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val centroids = emb.where(col("vec_id") < 6)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val in = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.kmeansStatsSink(
-      in.toDF().toDF("vec_id", "embedding"), "embedding", "vec_id",
-      centroids, s"$tmp/stats", s"$tmp/ckpt").start()
-    try {
-      val all = emb.as[(Long, Array[Float])].collect()
-      all.grouped((all.length + 2) / 3).foreach { g =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      val got = Streaming.readKmeansUpdate(spark, s"$tmp/stats")
-        .orderBy("cid").collect()
-        .map(r => (r.getLong(0), r.getSeq[Double](1), r.getLong(2)))
-      // batch Lloyd update over the whole union with the same pinned
-      // centroids: per cluster, count + per-dimension sum / count
-      val want = graft.ops.Similarity.assignToCentroids(
-          emb, "embedding", "vec_id", centroids)
-        .select(col("cluster"),
-          posexplode(col("embedding")).as(Seq("dim", "x")))
-        .groupBy("cluster", "dim")
-        .agg(sum(col("x").cast("double")).as("s"),
-          count(lit(1)).as("n"))
-        .groupBy("cluster")
-        .agg(expr("transform(array_sort(collect_list(struct(dim, s))), " +
-          "p -> p.s)").as("sv"), first("n").as("n"))
-        .orderBy("cluster").collect()
-        .map(r => (r.getLong(0),
-          r.getSeq[Double](1).map(_ / r.getLong(2)), r.getLong(2)))
-      assert(got.length === want.length)
-      got.zip(want).foreach { case ((gc, gv, gn), (wc, wv, wn)) =>
-        assert(gc === wc && gn === wn)
-        gv.zip(wv).foreach { case (g, w) =>
-          assert(math.abs(g - w) <= 1e-9 * math.max(1.0, math.abs(w)),
-            s"cluster $gc centroid drifted: $g vs $w")
-        }
-      }
-      // the refreshed frame is assignment-ready: same (cid, cvec) shape
-      val re = graft.ops.Similarity.assignToCentroids(emb, "embedding",
-        "vec_id", Streaming.readKmeansUpdate(spark, s"$tmp/stats")
-          .select("cid", "cvec"))
-      assert(re.count() === emb.count())
-    } finally q.stop()
-  }
-
-  test("cmsSink accumulates the exact batch sketch and estimates match") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cms").toString
-    val toks = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(explode(graft.ops.Text.tokens(col("text"))).as("tok"))
-    val in = MemoryStream[String]
-    val q = Streaming.cmsSink(in.toDF().toDF("tok"), "tok",
-      s"$tmp/stats", s"$tmp/ckpt", d = 4).start()
-    try {
-      val all = toks.as[String].collect()
-      all.grouped((all.length + 2) / 3).foreach { g =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      // accumulated cells == batch-building over the union, cell-exact
-      val streamed = Streaming.readCms(spark, s"$tmp/stats")
-      val batch = graft.ops.Sketch.cmsBuild(toks, "tok", d = 4)
-      assert(streamed.count() === batch.count())
-      assert(streamed.unionAll(batch).distinct().count() === batch.count())
-      // estimates from the streamed sketch bound exact counts
-      val top = toks.groupBy("tok").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("tok")).limit(5)
-      val est = graft.ops.Sketch.cmsEstimate(streamed, top, "tok", d = 4)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      top.collect().foreach { r =>
-        assert(est(r.getString(0)) >= r.getLong(1))
-      }
-    } finally q.stop()
-  }
-
-  test("termStatsSink maintains BM25 stats equal to a batch recompute") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bm25").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text")
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.termStatsSink(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      s"$tmp/stats", s"$tmp/ckpt").start()
-    try {
-      // three disjoint micro-batches covering the whole fixture
-      val all = docs.as[(Long, String)].collect()
-      all.grouped((all.length + 2) / 3).foreach { g =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      val (mTerms, mGlobals) = Streaming.readTermStats(spark, s"$tmp/stats")
-      // merged store == batch stats over the union, cell-exactly
-      val (bTerms, bGlobals) = graft.ops.Retrieval.bm25Stats(
-        docs, "doc_id", "text")
-      assert(mTerms.count() === bTerms.count())
-      assert(mTerms.unionAll(bTerms).distinct().count() === bTerms.count())
-      assert(mGlobals.drop("k").collect().toSeq ===
-        bGlobals.drop("k").collect().toSeq)
-      // scoring any docs against the maintained store == batch bm25
-      val viaStore = graft.ops.Retrieval.bm25Against(
-        docs, "doc_id", "text", mTerms, mGlobals)
-      val viaBatch = graft.ops.Retrieval.bm25(docs, "doc_id", "text")
-      assert(viaStore.count() === viaBatch.count())
-      assert(viaStore.unionAll(viaBatch).distinct().count() ===
-        viaBatch.count())
-      // search composes the same way
-      val hits = graft.ops.Retrieval.bm25SearchAgainst(docs, "doc_id",
-        "text", mTerms, mGlobals, Seq("the", "data"))
-      assert(hits.count() > 0)
-      // a checkpoint-replayed (already-merged) batch id is a no-op:
-      // the _batch high-water mark rejects it, so nothing double-counts
-      val statsBefore = mGlobals.collect().toSeq
-      Streaming.mergeTermStatsBatch(
-        docs.limit(5), "doc_id", "text", s"$tmp/stats", batchId = 0L)
-      val (_, gAfter) = Streaming.readTermStats(spark, s"$tmp/stats")
-      assert(gAfter.collect().toSeq === statsBefore)
-    } finally q.stop()
-  }
-
-  test("sourceStatsSink: store-fed budget allocation equals the " +
-      "corpus-fed plan over the streamed-so-far corpus; replay is a no-op") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-srcstats").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "source", "text")
-    val tokExpr = size(graft.ops.Text.tokens(col("text")))
-    val in = MemoryStream[(Long, String, String)]
-    val q = Streaming.sourceStatsSink(
-      in.toDF().toDF("doc_id", "source", "text"), "source", tokExpr,
-      s"$tmp/stats", s"$tmp/ckpt").start()
-    try {
-      val all = docs.as[(Long, String, String)].collect()
-      val weights = Seq(("web", 3.0), ("wiki", 1.0), ("books", 1.0),
-        ("code", 0.5), ("news", 1.5)).toDF("source", "weight")
-      val slices = all.grouped((all.length + 2) / 3).toSeq
-      slices.zipWithIndex.foreach { case (g, i) =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-        // store-fed == corpus-fed ON THE STREAMED-SO-FAR corpus,
-        // cell-exact, at every intermediate state
-        val soFar = slices.take(i + 1).flatten
-          .toDF("doc_id", "source", "text")
-        val fed = graft.ops.Curation.tokenBudgetAllocationFromCapacity(
-          Streaming.readSourceCapacity(spark, s"$tmp/stats"),
-          weights, budget = 5000.0)
-        val scan = graft.ops.Curation.tokenBudgetAllocation(
-          soFar, col("source"), tokExpr, weights, budget = 5000.0)
-        assert(fed.orderBy("source").collect().toSeq ===
-          scan.orderBy("source").collect().toSeq)
-      }
-      // a checkpoint-replayed batch id is rejected by the _batch mark
-      val before = Streaming.readSourceCapacity(spark, s"$tmp/stats")
-        .collect().toSeq
-      Streaming.mergeSourceStatsBatch(docs.limit(5), "source", tokExpr,
-        s"$tmp/stats", batchId = 0L)
-      assert(Streaming.readSourceCapacity(spark, s"$tmp/stats")
-        .collect().toSeq === before)
-      // unit guard: a later session with a DIFFERENT tokens expression
-      // fails loudly instead of silently mixing units
-      val e = intercept[IllegalArgumentException] {
-        Streaming.mergeSourceStatsBatch(docs.limit(5), "source",
-          length(col("text")), s"$tmp/stats", batchId = 99L)
-      }
-      assert(e.getMessage.contains("mix units"))
-      // a DIFFERENT lambda-bearing expression must also fail: the
-      // lambda-id normalization may not blur genuinely distinct units
-      // into a false accept
-      val e2 = intercept[IllegalArgumentException] {
-        Streaming.mergeSourceStatsBatch(docs.limit(5), "source",
-          size(filter(graft.ops.Text.tokens(col("text")),
-            t => length(t) > lit(3))), s"$tmp/stats", batchId = 99L)
-      }
-      assert(e2.getMessage.contains("mix units"))
-      // ... while the SAME expression (rebuilt, not the same object)
-      // keeps accumulating
-      Streaming.mergeSourceStatsBatch(docs.limit(5), "source",
-        size(graft.ops.Text.tokens(col("text"))), s"$tmp/stats",
-        batchId = 100L)
-      // a store from BEFORE the guard (no meta part) is adopted: the
-      // first merge stamps the current fingerprint
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new HPath(s"$tmp/stats/meta"), true)
-      Streaming.mergeSourceStatsBatch(docs.limit(5), "source", tokExpr,
-        s"$tmp/stats", batchId = 101L)
-      assert(spark.read.parquet(s"$tmp/stats/meta")
-        .select("tokens_expr").collect().map(_.getString(0)).toSeq
-        === Seq(Streaming.tokensFingerprint(docs, tokExpr)))
-      // a fresh store keyed on a REAL column that happens to be named
-      // like a Catalyst lambda id: a same-shaped expression over a
-      // DIFFERENT such column must be rejected — string-level lambda
-      // erasure would have conflated x_1 and x_2 into a false accept
-      val d2 = docs.limit(5)
-        .withColumn("x_1", length(col("text")).cast("double"))
-        .withColumn("x_2", (length(col("text")) * 2).cast("double"))
-      Streaming.mergeSourceStatsBatch(d2, "source", col("x_1"),
-        s"$tmp/stats2", batchId = 0L)
-      val e3 = intercept[IllegalArgumentException] {
-        Streaming.mergeSourceStatsBatch(d2, "source", col("x_2"),
-          s"$tmp/stats2", batchId = 1L)
-      }
-      assert(e3.getMessage.contains("mix units"))
-      // the same real-column expression keeps accumulating, of course
-      Streaming.mergeSourceStatsBatch(d2, "source", col("x_1"),
-        s"$tmp/stats2", batchId = 1L)
-      // back-compat: a legacy lambda-bearing fingerprint (stamped as
-      // the raw rendering by a pre-canonical build) still accepts the
-      // rebuilt identical expression via the normalized fallback
-      val legacyFs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      legacyFs.delete(new HPath(s"$tmp/stats/meta"), true)
-      Seq((tokExpr.toString, 1L)).toDF("tokens_expr", "n_batches")
-        .write.parquet(s"$tmp/stats/meta")
-      Streaming.mergeSourceStatsBatch(docs.limit(5), "source",
-        size(graft.ops.Text.tokens(col("text"))), s"$tmp/stats",
-        batchId = 102L)
-      // MULTI-ARG lambdas render '(x_1, y_2) -> …' in legacy stamps
-      // (parenthesis between the counter id and the arrow): the
-      // lambda-bearing gate must still classify them and accept the
-      // rebuilt identical expression
-      def aggExpr() = aggregate(split(col("text"), " "), lit(0),
-        (acc, x) => acc + length(x))
-      Streaming.mergeSourceStatsBatch(docs.limit(5), "source",
-        aggExpr(), s"$tmp/stats3", batchId = 0L)
-      legacyFs.delete(new HPath(s"$tmp/stats3/meta"), true)
-      assert(aggExpr().toString.contains("->")) // legacy shape sanity
-      Seq((aggExpr().toString, 1L)).toDF("tokens_expr", "n_batches")
-        .write.parquet(s"$tmp/stats3/meta")
-      Streaming.mergeSourceStatsBatch(docs.limit(5), "source",
-        aggExpr(), s"$tmp/stats3", batchId = 1L)
-    } finally q.stop()
   }
 
   test("benchmarkIndexSink: store-fed decontamination equals the batch " +
@@ -3406,187 +2593,77 @@ class StreamingSpec extends SparkSpec {
       ("lease", "warn", ".dix.lock.release.cccc")))
   }
 
-  test("hllSink lgK guard: mismatched config fails per-store, and a " +
-      "pre-guard store (data, no meta) is probed, not mislabeled") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-hllg").toString
-    val docs = Seq(("de", 1L), ("de", 2L), ("en", 3L))
-      .toDF("lang", "doc_id")
-    // first session establishes the store through the REAL streaming
-    // path (batch 0 against a fresh store)
-    val in = MemoryStream[(String, Long)]
-    val q = Streaming.hllSink(in.toDF().toDF("lang", "doc_id"),
-      "lang", "doc_id", s"$tmp/stats", s"$tmp/ck1", lgK = 12).start()
-    try {
-      in.addData(("de", 1L), ("de", 2L), ("en", 3L))
-      q.processAllAvailable()
-    } finally q.stop()
-    // later sessions drive the merge DIRECTLY with explicit batch ids
-    // past the store's _batch mark — a fresh checkpoint would replay
-    // batch 0 and be skipped before any guard runs
-    def rootMsg(t: Throwable): String = {
-      var c: Throwable = t
-      val sb = new StringBuilder
-      while (c != null) { sb.append(c.getMessage).append('\n'); c = c.getCause }
-      sb.toString
-    }
-    // branch 1 — meta present, mismatched lgK: fails with the
-    // per-store message, not hll_union's opaque error
-    val e = intercept[Exception] {
-      Streaming.mergeHllBatch(docs, "lang", "doc_id", s"$tmp/stats",
-        lgK = 11, batchId = 99L)
-    }
-    assert(rootMsg(e).contains("was built with lgK=12"))
-    // branch 2 — pre-guard store: hll data but NO meta row. The probe
-    // heapifies one stored sketch, reads its lgConfigK=12, and the
-    // same mismatch is caught — the store is never mislabeled
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new HPath(s"$tmp/stats/meta"), true)
-    val e2 = intercept[Exception] {
-      Streaming.mergeHllBatch(docs, "lang", "doc_id", s"$tmp/stats",
-        lgK = 11, batchId = 100L)
-    }
-    assert(rootMsg(e2).contains("was built with lgK=12"))
-    // branch 3 — a MATCHING sink adopts the meta-less store, stamping
-    // the TRUE config into meta; estimates keep accumulating (same
-    // values union idempotently, so the counts are unchanged)
-    Streaming.mergeHllBatch(docs, "lang", "doc_id", s"$tmp/stats",
-      lgK = 12, batchId = 101L)
-    assert(spark.read.parquet(s"$tmp/stats/meta")
-      .select("lg_k").collect().map(_.getInt(0)).toSeq === Seq(12))
-    assert(Streaming.readHllDistinct(spark, s"$tmp/stats")
-      .orderBy("lang").collect().map(r => (r.getString(0), r.getLong(1)))
-      .toSeq === Seq(("de", 2L), ("en", 1L)))
-  }
-
-  test("prioritySampleSink: an id twice in ONE batch with different " +
-      "payloads keeps a deterministic survivor") {
-    // same rows, opposite arrival order -> identical store bytes
-    val rows = Seq((1L, 50L, "a"), (1L, 50L, "b"), (2L, 30L, "c"))
-    def run(dir: String, data: Seq[(Long, Long, String)]): Seq[Seq[Any]] = {
-      Streaming.mergePrioritySampleBatch(
-        data.toDF("doc_id", "n_chars", "payload"),
-        "doc_id", "n_chars", 10, dir, 0L)
-      Streaming.readPrioritySample(spark, dir)
-        .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    }
-    val fwd = run(java.nio.file.Files
-      .createTempDirectory("graft-ares-d1").toString + "/s", rows)
-    val rev = run(java.nio.file.Files
-      .createTempDirectory("graft-ares-d2").toString + "/s", rows.reverse)
-    assert(fwd === rev)
-    assert(fwd.map(_.head) === Seq(1L, 2L)) // n DISTINCT ids
-  }
-
   test("stats-store reads survive a mid-swap crash state WITHOUT mutating it") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-ts2").toString
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text").limit(10)
-    Streaming.mergeTermStatsBatch(docs, "doc_id", "text",
-      s"$tmp/stats", batchId = 0L)
+    // the curation stats store of a root at `tmp` (word histogram,
+    // length buckets, units) — written by the ingest's shared tail
+    Streaming.ingestTail(docs, "text", tmp, batchId = 0L,
+      lenLo = 0.0, lenHi = 1000.0)
     // simulate a writer dying between atomicSwap's renames: the store
     // dir is parked as the backup, the new dir never arrived
     val dir = new java.io.File(s"$tmp/stats")
     val backup = new java.io.File(s"$tmp/.stats.stats.old")
     assert(dir.renameTo(backup))
-    val (terms, globals) = Streaming.readTermStats(spark, s"$tmp/stats")
-    assert(terms.count() > 0 && globals.count() === 1) // backup side read
+    // backup side read, for the histogram and the one-row units part
+    assert(Streaming.readWordHistogram(spark, s"$tmp/stats").count() > 0 &&
+      Streaming.readStatsUnits(spark, s"$tmp/stats") === Some((0.0, 1000.0)))
     // the read healed NOTHING — a live writer's pending rename must
     // not find its destination occupied
     assert(backup.exists() && !dir.exists())
     // the writer's own next merge heals and proceeds
-    Streaming.mergeTermStatsBatch(docs, "doc_id", "text",
-      s"$tmp/stats", batchId = 1L)
+    Streaming.ingestTail(docs, "text", tmp, batchId = 1L,
+      lenLo = 0.0, lenHi = 1000.0)
     assert(dir.exists() && !backup.exists())
-    val (t2, _) = Streaming.readTermStats(spark, s"$tmp/stats")
-    assert(t2.count() > 0)
+    assert(Streaming.readWordHistogram(spark, s"$tmp/stats").count() > 0)
   }
 
-  test("dsirStatsSink maintains a feature LM equal to a batch recompute") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dsir").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text")
-    val isTarget = pmod(col("doc_id"), lit(7)) === 0
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.dsirStatsSink(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text",
-      isTarget, s"$tmp/stats", s"$tmp/ckpt", buckets = 64).start()
-    try {
-      val all = docs.as[(Long, String)].collect()
-      all.grouped((all.length + 2) / 3).foreach { g =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      val mCounts = Streaming.readDsirCounts(spark, s"$tmp/stats")
-      val bCounts = graft.ops.Retrieval.dsirCounts(
-        docs, "doc_id", "text", isTarget, 64)
-      assert(mCounts.count() === bCounts.count())
-      assert(mCounts.unionAll(bCounts).distinct().count() === bCounts.count())
-      // scoring against the maintained LM == the one-shot batch path
-      val viaStore = graft.ops.Retrieval.dsirWeightsAgainst(
-        docs, "doc_id", "text", mCounts, 64)
-      val viaBatch = graft.ops.Retrieval.dsirWeights(
-        docs, "doc_id", "text", isTarget, 64)
-      assert(viaStore.count() === viaBatch.count())
-      assert(viaStore.unionAll(viaBatch).distinct().count() ===
-        viaBatch.count())
-      // a foreign doc whose tokens miss corpus buckets still scores
-      // (densified LM, smoothed log-ratio), rather than losing tokens
-      val foreign = Seq((9999L, "zzqx wvzk qqqj")).toDF("doc_id", "text")
-      val fScored = graft.ops.Retrieval.dsirWeightsAgainst(
-        foreign, "doc_id", "text", mCounts, 64).collect()
-      assert(fScored.length === 1 && fScored.head.getAs[Long]("n_toks") === 3L)
-    } finally q.stop()
-  }
-
-  test("dedupIndexSink gates each batch against the full admitted history") {
+  test("mergeDedupIndexBatch gates each batch against the full admitted " +
+      "history") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-dix").toString
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.dedupIndexSink(
-      in.toDF().toDF("doc_id", "text"), "text", "doc_id",
-      s"$tmp/index", s"$tmp/ckpt").start()
-    try {
-      val all = docs.as[(Long, String)].collect()
-      val batches = all.grouped((all.length + 2) / 3).toSeq
-      batches.foreach { g =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      val index = Streaming.readDedupIndex(spark, s"$tmp/index")
-      val admitted = index.select("id").distinct()
-        .as[Long].collect().toSet
-      // expected: replay the same batches through the BATCH ops,
-      // maintaining the index by hand
-      var expIndex = graft.ops.Dedup.minhashIndex(
-        docs.limit(0), "text", "doc_id")
-      var expected = Set.empty[Long]
-      batches.foreach { g =>
-        val b = g.toIndexedSeq.toDF("doc_id", "text")
-        val adm = graft.ops.Dedup.admitAgainstIndex(
-          b, "text", "doc_id", expIndex)
-        expected ++= adm.select("doc_id").as[Long].collect()
-        expIndex = expIndex.unionAll(
-          graft.ops.Dedup.minhashIndex(adm, "text", "doc_id"))
-      }
-      assert(admitted === expected)
-      assert(admitted.size < all.length, "fixture held no duplicates")
-      // the admitted corpus is candidate-pair-free: every later
-      // near-copy was turned away at the gate
-      val texts = docs.where(col("doc_id").isin(admitted.toSeq: _*))
-      assert(graft.ops.Dedup.minhashCandidatePairs(
-        texts, "text", "doc_id").count() === 0L)
-      // a crash-replay of an already-written batch id is a no-op: the
-      // standing index excludes that id, so the decision replays
-      // identically and the subdir is rewritten with the same rows
-      val before = index.orderBy("id", "band_idx")
-        .collect().toSeq
-      Streaming.mergeDedupIndexBatch(
-        batches.head.toIndexedSeq.toDF("doc_id", "text"),
-        "text", "doc_id", s"$tmp/index", batchId = 0L)
-      val after = Streaming.readDedupIndex(spark, s"$tmp/index")
-        .orderBy("id", "band_idx").collect().toSeq
-      assert(after === before)
-    } finally q.stop()
+    val all = docs.as[(Long, String)].collect()
+    val batches = all.grouped((all.length + 2) / 3).toSeq
+    batches.zipWithIndex.foreach { case (g, i) =>
+      Streaming.mergeDedupIndexBatch(g.toIndexedSeq.toDF("doc_id", "text"),
+        "text", "doc_id", s"$tmp/index", batchId = i.toLong)
+    }
+    val index = Streaming.readDedupIndex(spark, s"$tmp/index")
+    val admitted = index.select("id").distinct()
+      .as[Long].collect().toSet
+    // expected: replay the same batches through the BATCH ops,
+    // maintaining the index by hand
+    var expIndex = graft.ops.Dedup.minhashIndex(
+      docs.limit(0), "text", "doc_id")
+    var expected = Set.empty[Long]
+    batches.foreach { g =>
+      val b = g.toIndexedSeq.toDF("doc_id", "text")
+      val adm = graft.ops.Dedup.admitAgainstIndex(
+        b, "text", "doc_id", expIndex)
+      expected ++= adm.select("doc_id").as[Long].collect()
+      expIndex = expIndex.unionAll(
+        graft.ops.Dedup.minhashIndex(adm, "text", "doc_id"))
+    }
+    assert(admitted === expected)
+    assert(admitted.size < all.length, "fixture held no duplicates")
+    // the admitted corpus is candidate-pair-free: every later
+    // near-copy was turned away at the gate
+    val texts = docs.where(col("doc_id").isin(admitted.toSeq: _*))
+    assert(graft.ops.Dedup.minhashCandidatePairs(
+      texts, "text", "doc_id").count() === 0L)
+    // a crash-replay of an already-written batch id is a no-op: the
+    // standing index excludes that id, so the decision replays
+    // identically and the subdir is rewritten with the same rows
+    val before = index.orderBy("id", "band_idx")
+      .collect().toSeq
+    Streaming.mergeDedupIndexBatch(
+      batches.head.toIndexedSeq.toDF("doc_id", "text"),
+      "text", "doc_id", s"$tmp/index", batchId = 0L)
+    val after = Streaming.readDedupIndex(spark, s"$tmp/index")
+      .orderBy("id", "band_idx").collect().toSeq
+    assert(after === before)
   }
 
   test("dedup admission never shuffles the standing index (plan) and " +
@@ -4108,561 +3185,6 @@ class StreamingSpec extends SparkSpec {
       === mtime)
     assert(Streaming.readDedupIndex(spark, indexDir)
       .drop("batch", "bh").collect().map(_.toSeq).toSet === rows)
-  }
-
-  test("compactVectorIndex: search parity without recenter; recenter " +
-       "returns usable centroids") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cvx").toString
-    val indexDir = s"$tmp/index"
-    val emb = spark.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val centroids = emb.where(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    emb.as[(Long, Array[Float])].collect().grouped(200).zipWithIndex
-      .foreach { case (g, i) =>
-        graft.ops.Similarity.assignToCentroids(
-            g.toIndexedSeq.toDF("vec_id", "embedding"),
-            "embedding", "vec_id", centroids)
-          .write.mode("overwrite").partitionBy("cluster")
-          .parquet(s"$indexDir/batch=$i")
-      }
-    val qv = {
-      val v = emb.where(col("vec_id") === 11L)
-        .select("embedding").as[Array[Float]].collect().head
-      array(v.toIndexedSeq.map(lit): _*)
-    }
-    def search() = Streaming.ivfSearchIndex(spark, indexDir, centroids,
-        qv, nprobe = 3, k = 5, idCol = "vec_id", embCol = "embedding")
-      .collect().map(r => (r.getLong(0), r.getDouble(2))).toSeq
-    val before = search()
-    // per-compaction quality gate: recall@5 of the pruned probe vs
-    // brute force over the same tree, for three member queries
-    val gateQs = Seq(11L, 42L, 77L).map { id =>
-      val v = emb.where(col("vec_id") === id)
-        .select("embedding").as[Array[Float]].collect().head
-      array(v.toIndexedSeq.map(lit): _*)
-    }
-    def recall(cents: org.apache.spark.sql.DataFrame) =
-      Streaming.ivfIndexRecall(spark, indexDir, cents, gateQs,
-        nprobe = 3, k = 5, idCol = "vec_id", embCol = "embedding")
-    val recallBefore = recall(centroids)
-    assert(recallBefore >= 0.6,
-      s"pre-compaction recall floor violated: $recallBefore")
-    val sameCents = Streaming.compactVectorIndex(spark, indexDir, centroids,
-      recenter = false, idCol = "vec_id", embCol = "embedding")
-    assert(search() === before)
-    assert(sameCents eq centroids)
-    // compaction preserves probe results exactly -> recall identical
-    assert(recall(centroids) === recallBefore)
-    // keep-last layout: the consolidated batch=-1 plus the carried
-    // highest batch dir (crash-replay target), nothing else
-    val dirsAfter = new java.io.File(indexDir).listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.getName).sorted
-    assert(dirsAfter.length === 2 && dirsAfter.head === "batch=-1" &&
-      dirsAfter(1).stripPrefix("batch=").toLong >= 0L)
-    // re-centering: every vector survives, centroids move to member
-    // means, and the returned frame drives the search
-    val newCents = Streaming.compactVectorIndex(spark, indexDir, centroids,
-      recenter = true, idCol = "vec_id", embCol = "embedding")
-    assert(newCents.count() > 0 && newCents.columns.toSet ===
-      Set("cid", "cvec"))
-    val n = spark.read.parquet(indexDir).count()
-    assert(n === emb.count())
-    val after = Streaming.ivfSearchIndex(spark, indexDir, newCents,
-        qv, nprobe = 3, k = 5, idCol = "vec_id", embCol = "embedding")
-      .collect()
-    assert(after.length === 5)
-    // the query vector IS corpus vector 11 — any sane index finds it
-    assert(after.map(_.getLong(0)).contains(11L))
-    // the gate after a RE-CENTERING compaction: moved centroids must
-    // still route the member queries to their true neighbors
-    val recallAfter = Streaming.ivfIndexRecall(spark, indexDir, newCents,
-      gateQs, nprobe = 3, k = 5, idCol = "vec_id", embCol = "embedding")
-    info(s"post-recenter recall@5: $recallAfter")
-    assert(recallAfter >= 0.5,
-      s"post-recenter recall floor violated: $recallAfter")
-    // boundary widening can only add probed clusters -> recall is
-    // monotone in widenMargin
-    val recallWide = Streaming.ivfIndexRecall(spark, indexDir, newCents,
-      gateQs, nprobe = 3, k = 5, idCol = "vec_id", embCol = "embedding",
-      widenMargin = 0.05)
-    info(s"widened (margin 0.05) recall@5: $recallWide")
-    assert(recallWide >= recallAfter)
-  }
-
-  test("compactVectorIndex keep-last: a crash-interrupted trailing " +
-      "batch survives compact + replay with no duplicate ids") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cvx-crash")
-      .toString
-    val indexDir = s"$tmp/index"
-    val emb = spark.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val centroids = emb.where(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val groups = emb.as[(Long, Array[Float])].collect()
-      .grouped(300).toSeq
-    def writeBatch(i: Int): Unit =
-      graft.ops.Similarity.assignToCentroids(
-          groups(i).toIndexedSeq.toDF("vec_id", "embedding"),
-          "embedding", "vec_id", centroids)
-        .write.mode("overwrite").partitionBy("cluster")
-        .parquet(s"$indexDir/batch=$i")
-    (0 until groups.length).foreach(writeBatch)
-    // the last batch dir simulates a CRASH: fully written but its
-    // checkpoint offset never committed, so the resumed stream will
-    // replay it
-    val before = spark.read.parquet(indexDir).drop("batch")
-      .orderBy("vec_id").collect().map(_.toSeq).toSeq
-    Streaming.compactVectorIndex(spark, indexDir, centroids,
-      recenter = false, idCol = "vec_id", embCol = "embedding")
-    // replay of the trailing batch: deterministic-path overwrite of
-    // the CARRIED dir — not a second copy next to a folded one
-    writeBatch(groups.length - 1)
-    val after = spark.read.parquet(indexDir)
-    assert(after.select("vec_id").distinct().count() === after.count(),
-      "replayed trailing batch duplicated ids in the compacted tree")
-    assert(after.drop("batch").orderBy("vec_id").collect()
-      .map(_.toSeq).toSeq === before)
-    // after a CLEAN stop the caller can assert no replay is possible:
-    // assumeCleanStop folds the carried batch too — one consolidated
-    // dir, same rows
-    Streaming.compactVectorIndex(spark, indexDir, centroids,
-      recenter = false, idCol = "vec_id", embCol = "embedding",
-      assumeCleanStop = true)
-    assert(new java.io.File(indexDir).listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.getName).toSeq
-      === Seq("batch=-1"))
-    assert(spark.read.parquet(indexDir).drop("batch")
-      .orderBy("vec_id").collect().map(_.toSeq).toSeq === before)
-  }
-
-  test("vectorIndexSink builds a partition-pruned IVF index across batches") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-vix").toString
-    val emb = spark.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val centroids = emb.where(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val qv = {
-      val v = emb.where(col("vec_id") === 11L)
-        .select("embedding").as[Array[Float]].collect().head
-      array(v.toIndexedSeq.map(lit): _*)
-    }
-    val in = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.vectorIndexSink(
-      in.toDF().toDF("vec_id", "embedding"), "embedding", "vec_id",
-      centroids, s"$tmp/index", s"$tmp/ckpt").start()
-    try {
-      val all = emb.as[(Long, Array[Float])].collect()
-      all.grouped((all.length + 1) / 2).foreach { g =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      val got = Streaming.ivfSearchIndex(spark, s"$tmp/index", centroids,
-        qv, nprobe = 3, k = 10, idCol = "vec_id", embCol = "embedding")
-      val expected = graft.ops.Similarity.ivfTopK(emb, "embedding",
-        "vec_id", centroids, qv, nprobe = 3, k = 10)
-      assert(got.collect().toSeq.map(_.toSeq) ===
-        expected.collect().toSeq.map(_.toSeq))
-      // the cluster IN (...) predicate is a PARTITION filter — pruned
-      // at the directory level, not evaluated per row post-scan
-      val planStr = got.queryExecution.executedPlan.toString
-      val pf = planStr.linesIterator
-        .find(_.contains("PartitionFilters")).getOrElse("")
-      assert(pf.contains("cluster"),
-        s"cluster predicate did not become a partition filter:\n$planStr")
-      val allClusters = spark.read.parquet(s"$tmp/index")
-        .select("cluster").distinct().count()
-      assert(allClusters > 3, "fixture landed in too few clusters")
-      // the batched entry point: each query's slice equals its
-      // single-query search, off one shared index read
-      val qids = Seq(11L, 42L)
-      val queries = emb.where(col("vec_id").isin(qids: _*))
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val batch = Streaming.ivfSearchIndexBatch(spark, s"$tmp/index",
-        centroids, queries, "qid", "qv", nprobe = 3, k = 10,
-        idCol = "vec_id", embCol = "embedding")
-      qids.foreach { qid =>
-        val qvi = {
-          val v = emb.where(col("vec_id") === qid)
-            .select("embedding").as[Array[Float]].collect().head
-          array(v.toIndexedSeq.map(lit): _*)
-        }
-        val single = Streaming.ivfSearchIndex(spark, s"$tmp/index",
-            centroids, qvi, nprobe = 3, k = 10, idCol = "vec_id",
-            embCol = "embedding")
-          .collect().toSeq.map(_.toSeq)
-        val slice = batch.where(col("qid") === qid)
-          .select("vec_id", "cluster", "cosine_sim")
-          .orderBy(col("cosine_sim").desc, col("vec_id"))
-          .collect().toSeq.map(_.toSeq)
-        assert(slice === single, s"batch slice for qid=$qid diverged")
-      }
-      assert(batch.queryExecution.executedPlan.toString.linesIterator
-        .count(l => l.contains("Scan parquet") && l.contains("batch#")) === 1,
-        "raw-index batch search must read the index exactly once")
-    } finally q.stop()
-  }
-
-  test("pqIndexSink: streamed IVF-PQ index matches the batch computation") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pqix").toString
-    val emb = spark.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val centroids = emb.where(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val codebook = graft.ops.Quantize.pqCodebook(emb, "embedding",
-      "vec_id", m = 4, k = 8, iters = 2, dim = 64).cache()
-    codebook.count()
-    val qv = {
-      val v = emb.where(col("vec_id") === 11L)
-        .select("embedding").as[Array[Float]].collect().head
-      array(v.toIndexedSeq.map(lit): _*)
-    }
-    val in = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.pqIndexSink(
-      in.toDF().toDF("vec_id", "embedding"), "embedding", "vec_id",
-      centroids, codebook, m = 4, dim = 64,
-      s"$tmp/index", s"$tmp/ckpt").start()
-    try {
-      val all = emb.as[(Long, Array[Float])].collect()
-      all.grouped((all.length + 1) / 2).foreach { g =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      val got = Streaming.ivfPqSearchIndex(spark, s"$tmp/index",
-        centroids, codebook, qv, nprobe = 3, k = 10, m = 4, dim = 64,
-        idCol = "vec_id")
-      // batch equivalent over the SAME vectors: assign, prune to the
-      // probed clusters, ADC-rank the pre-encoded candidates
-      val assigned = graft.ops.Similarity.assignToCentroids(
-        emb, "embedding", "vec_id", centroids)
-      val probed = graft.ops.Similarity.probedCentroids(centroids, qv, 3)
-        .collect().map(_.get(0))
-      val candCodes = graft.ops.Quantize.pqEncode(emb, codebook,
-          "embedding", "vec_id", m = 4, dim = 64)
-        .join(assigned.where(col("cluster").isin(probed.toSeq: _*))
-          .select("vec_id", "cluster"), "vec_id")
-      val qdf = spark.range(1).select(lit(0L).as("__q"), qv.as("__qv"))
-      val expected = graft.ops.Quantize.adcTopKOverCodes(
-          candCodes.select(col("vec_id"), col("codes")), qdf, codebook,
-          "__qv", "vec_id", "__q", m = 4, dim = 64, k = 10)
-        .join(candCodes.select("vec_id", "cluster"), "vec_id")
-        .select(col("vec_id"), col("cluster"), col("adc_dist"))
-      assert(got.orderBy("adc_dist", "vec_id").collect().toSeq.map(_.toSeq)
-        === expected.orderBy("adc_dist", "vec_id").collect().toSeq.map(_.toSeq))
-      // the index stores codes, never raw vectors
-      val cols = spark.read.parquet(s"$tmp/index").columns.toSet
-      assert(cols.contains("codes") && !cols.contains("embedding"))
-      // probe prune happens at the partition-directory level
-      val planStr = got.queryExecution.executedPlan.toString
-      val pf = planStr.linesIterator
-        .find(_.contains("PartitionFilters")).getOrElse("")
-      assert(pf.contains("cluster"),
-        s"cluster predicate did not become a partition filter:\n$planStr")
-      // codes-only recall gate (exhaustive-ADC brute side): floor
-      // before compaction, and nprobe = nlist is 1.0 by construction
-      val gateQs = Seq(11L, 42L, 77L).map { id =>
-        val v = emb.where(col("vec_id") === id)
-          .select("embedding").as[Array[Float]].collect().head
-        array(v.toIndexedSeq.map(lit): _*)
-      }
-      def pqRecall(np: Int) = Streaming.ivfPqIndexRecall(spark,
-        s"$tmp/index", centroids, codebook, gateQs, nprobe = np, k = 5,
-        m = 4, dim = 64, idCol = "vec_id")
-      val recallBefore = pqRecall(3)
-      info(s"pre-compaction ADC recall@5 (nprobe=3): $recallBefore")
-      // the fixture's centroids are arbitrary members (vec_id < 8, no
-      // training) and the full-space codebook ranks in L2 while probes
-      // route by cosine, so nprobe=3/8 recall is genuinely modest —
-      // the gate's job is to SURFACE that; assert a floor plus the
-      // structural properties: widening the probe can only help, and
-      // the exhaustive probe is 1.0 by construction
-      assert(recallBefore >= 0.2,
-        s"pre-compaction ADC recall floor violated: $recallBefore")
-      assert(pqRecall(6) >= recallBefore,
-        "ADC recall must be monotone in nprobe")
-      assert(pqRecall(8) === 1.0)
-      // compaction (layout-bound, schema-agnostic) collapses the
-      // batch dirs and leaves search results identical
-      val before = got.collect().toSeq.map(_.toSeq)
-      Streaming.compactVectorIndex(spark, s"$tmp/index", centroids,
-        recenter = false, idCol = "vec_id", embCol = "embedding")
-      val after = Streaming.ivfPqSearchIndex(spark, s"$tmp/index",
-        centroids, codebook, qv, nprobe = 3, k = 10, m = 4, dim = 64,
-        idCol = "vec_id").collect().toSeq.map(_.toSeq)
-      assert(after.sortBy(_.toString) === before.sortBy(_.toString))
-      // the gate after compaction: probe results are preserved
-      // exactly, so recall is identical per compaction state
-      assert(pqRecall(3) === recallBefore)
-      val batchDirs = new java.io.File(s"$tmp/index").listFiles()
-        .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-        .map(_.getName).sorted
-      // keep-last layout: batch=-1 plus the carried highest batch dir
-      assert(batchDirs.length === 2 && batchDirs.head === "batch=-1" &&
-        batchDirs(1).stripPrefix("batch=").toLong >= 0L)
-    } finally { q.stop(); codebook.unpersist() }
-  }
-
-  test("ivfPqSearchIndex: a re-ingested id resolves latest-wins, not averaged") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pqlw").toString
-    val emb = spark.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val centroids = emb.where(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val codebook = graft.ops.Quantize.pqCodebook(emb, "embedding",
-      "vec_id", m = 4, k = 8, iters = 2, dim = 64).cache()
-    codebook.count()
-    val all = emb.as[(Long, Array[Float])].collect()
-    val qv = array(all.find(_._1 == 11L).get._2.toIndexedSeq.map(lit): _*)
-    val stale = all.head            // id X, original vector
-    val fresh = (stale._1, all(7)._2) // id X re-ingested with NEW data
-    val in = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.pqIndexSink(
-      in.toDF().toDF("vec_id", "embedding"), "embedding", "vec_id",
-      centroids, codebook, m = 4, dim = 64,
-      s"$tmp/index", s"$tmp/ckpt").start()
-    try {
-      in.addData(all.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(fresh); q.processAllAvailable()
-      // expected = batch computation over the corpus with X REPLACED
-      val latestRows = all.map(r => if (r._1 == fresh._1) fresh else r)
-      val latest = latestRows.toIndexedSeq.toDF("vec_id", "embedding")
-      val got = Streaming.ivfPqSearchIndex(spark, s"$tmp/index",
-          centroids, codebook, qv, nprobe = 8, k = all.length,
-          m = 4, dim = 64, idCol = "vec_id")
-        .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-      val assigned = graft.ops.Similarity.assignToCentroids(
-        latest, "embedding", "vec_id", centroids)
-      val qdf = spark.range(1).select(lit(-1L).as("__q"), qv.as("__qv"))
-      val expected = graft.ops.Quantize.adcTopKOverCodes(
-          graft.ops.Quantize.pqEncode(latest, codebook, "embedding",
-            "vec_id", m = 4, dim = 64).select(col("vec_id"), col("codes")),
-          qdf, codebook, "__qv", "vec_id", "__q", m = 4, dim = 64,
-          k = all.length)
-        .collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
-      assert(got(fresh._1) === expected(fresh._1),
-        "re-ingested id must score by its LATEST encoding")
-      assert(got === expected)
-    } finally { q.stop(); codebook.unpersist() }
-  }
-
-  test("ivfPqSearchIndexBatch: one index read serves N queries, each " +
-      "matching the single-query path") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pqmq").toString
-    val emb = spark.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val centroids = emb.where(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val codebook = graft.ops.Quantize.pqCodebook(emb, "embedding",
-      "vec_id", m = 4, k = 8, iters = 2, dim = 64).cache()
-    codebook.count()
-    val in = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.pqIndexSink(
-      in.toDF().toDF("vec_id", "embedding"), "embedding", "vec_id",
-      centroids, codebook, m = 4, dim = 64,
-      s"$tmp/index", s"$tmp/ckpt").start()
-    try {
-      val all = emb.as[(Long, Array[Float])].collect()
-      all.grouped((all.length + 1) / 2).foreach { g =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      val qids = Seq(11L, 23L, 42L)
-      val queries = emb.where(col("vec_id").isin(qids: _*))
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val got = Streaming.ivfPqSearchIndexBatch(spark, s"$tmp/index",
-        centroids, codebook, queries, "qid", "qv", nprobe = 3, k = 10,
-        m = 4, dim = 64, idCol = "vec_id")
-      // each query's slice must equal the single-query serving path
-      qids.foreach { qid =>
-        val qv = array(
-          all.find(_._1 == qid).get._2.toIndexedSeq.map(lit): _*)
-        val single = Streaming.ivfPqSearchIndex(spark, s"$tmp/index",
-            centroids, codebook, qv, nprobe = 3, k = 10, m = 4, dim = 64,
-            idCol = "vec_id")
-          .orderBy("adc_dist", "vec_id").collect().toSeq.map(_.toSeq)
-        val slice = got.where(col("qid") === qid)
-          .select("vec_id", "cluster", "adc_dist")
-          .orderBy("adc_dist", "vec_id").collect().toSeq.map(_.toSeq)
-        assert(slice === single, s"batch slice for qid=$qid diverged")
-      }
-      // the whole batch is served by ONE scan of the index directory —
-      // identified by its `batch` partition column (the cached
-      // codebook's InMemoryRelation also PRINTS parquet scans of the
-      // embeddings fixture in its child plan; those are not re-reads)
-      val plan = got.queryExecution.executedPlan.toString
-      val indexScans = plan.linesIterator
-        .count(l => l.contains("Scan parquet") && l.contains("batch#"))
-      assert(indexScans === 1,
-        s"expected exactly one index scan for the batch, got $indexScans:\n$plan")
-      val pf = plan.linesIterator
-        .find(_.contains("PartitionFilters")).getOrElse("")
-      assert(pf.contains("cluster"),
-        s"union probe filter did not become a partition filter:\n$plan")
-    } finally { q.stop(); codebook.unpersist() }
-  }
-
-  test("rebuildPqIndex: codebook/centroid refresh re-encodes from source " +
-      "with search parity, and compaction composes") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pqrb").toString
-    val emb = spark.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val centsA = emb.where(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val cbA = graft.ops.Quantize.pqCodebook(emb, "embedding",
-      "vec_id", m = 4, k = 8, iters = 2, dim = 64).cache()
-    cbA.count()
-    val in = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.pqIndexSink(
-      in.toDF().toDF("vec_id", "embedding"), "embedding", "vec_id",
-      centsA, cbA, m = 4, dim = 64,
-      s"$tmp/index", s"$tmp/ckpt").start()
-    try {
-      val all = emb.as[(Long, Array[Float])].collect()
-      all.grouped((all.length + 1) / 2).foreach { g =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    // drift detected -> refresh BOTH the coarse centroids and the
-    // codebook (different seed vectors), rebuild offline from source
-    val centsB = emb.where(col("vec_id") >= 8 && col("vec_id") < 16)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    val cbB = graft.ops.Quantize.pqCodebook(
-      emb.where(col("vec_id") >= 100), "embedding",
-      "vec_id", m = 4, k = 8, iters = 2, dim = 64).cache()
-    cbB.count()
-    Streaming.rebuildPqIndex(spark, emb, "embedding", "vec_id",
-      centsB, cbB, m = 4, dim = 64, s"$tmp/index")
-    // the rebuilt tree is the single batch=-1 layout the sink's
-    // maintenance contract promises
-    assert(new java.io.File(s"$tmp/index").listFiles()
-      .filter(_.getName.startsWith("batch=")).map(_.getName).toSeq
-      === Seq("batch=-1"))
-    val qv = {
-      val v = emb.where(col("vec_id") === 11L)
-        .select("embedding").as[Array[Float]].collect().head
-      array(v.toIndexedSeq.map(lit): _*)
-    }
-    def search() = Streaming.ivfPqSearchIndex(spark, s"$tmp/index",
-        centsB, cbB, qv, nprobe = 3, k = 10, m = 4, dim = 64,
-        idCol = "vec_id")
-      .orderBy("adc_dist", "vec_id").collect().toSeq.map(_.toSeq)
-    val got = search()
-    // parity vs a fresh batch encode against the NEW centroids/codebook
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb, "embedding", "vec_id", centsB)
-    val probed = graft.ops.Similarity.probedCentroids(centsB, qv, 3)
-      .collect().map(_.get(0))
-    val candCodes = graft.ops.Quantize.pqEncode(emb, cbB,
-        "embedding", "vec_id", m = 4, dim = 64)
-      .join(assigned.where(col("cluster").isin(probed.toSeq: _*))
-        .select("vec_id", "cluster"), "vec_id")
-    val qdf = spark.range(1).select(lit(0L).as("__q"), qv.as("__qv"))
-    val expectedB = graft.ops.Quantize.adcTopKOverCodes(
-        candCodes.select(col("vec_id"), col("codes")), qdf, cbB,
-        "__qv", "vec_id", "__q", m = 4, dim = 64, k = 10)
-      .join(candCodes.select("vec_id", "cluster"), "vec_id")
-      .select(col("vec_id"), col("cluster"), col("adc_dist"))
-      .orderBy("adc_dist", "vec_id").collect().toSeq.map(_.toSeq)
-    assert(got === expectedB)
-    // compactVectorIndex composes (layout-bound): results unchanged
-    Streaming.compactVectorIndex(spark, s"$tmp/index", centsB,
-      recenter = false, idCol = "vec_id", embCol = "embedding")
-    assert(search() === got)
-    cbA.unpersist(); cbB.unpersist()
-  }
-
-  test("pqIndexSink residual mode matches the batch residual IVF-PQ") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pqres").toString
-    val emb = spark.read
-      .parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select("vec_id", "embedding")
-    val centroids = emb.where(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
-    def toD(c: org.apache.spark.sql.Column) =
-      transform(c, x => x.cast("double"))
-    // batch residual frame + codebook (pinned for the index lifetime)
-    val assigned = graft.ops.Similarity.assignToCentroids(
-      emb, "embedding", "vec_id", centroids)
-    val res = assigned
-      .join(broadcast(centroids), col("cluster") === col("cid"))
-      .select(col("vec_id"), col("cluster"),
-        zip_with(toD(col("embedding")), toD(col("cvec")),
-          (x, c) => x - c).as("res"))
-    val codebook = graft.ops.Quantize.pqCodebook(res, "res", "vec_id",
-      m = 4, k = 8, iters = 2, dim = 64).cache()
-    codebook.count()
-    val qv = {
-      val v = emb.where(col("vec_id") === 23L)
-        .select("embedding").as[Array[Float]].collect().head
-      array(v.toIndexedSeq.map(lit): _*)
-    }
-    val in = MemoryStream[(Long, Array[Float])]
-    val q = Streaming.pqIndexSink(
-      in.toDF().toDF("vec_id", "embedding"), "embedding", "vec_id",
-      centroids, codebook, m = 4, dim = 64,
-      s"$tmp/index", s"$tmp/ckpt", residual = true).start()
-    try {
-      val all = emb.as[(Long, Array[Float])].collect()
-      all.grouped((all.length + 1) / 2).foreach { g =>
-        in.addData(g.toIndexedSeq: _*); q.processAllAvailable()
-      }
-      val got = Streaming.ivfPqSearchIndex(spark, s"$tmp/index",
-          centroids, codebook, qv, nprobe = 3, k = 10, m = 4, dim = 64,
-          idCol = "vec_id", residual = true)
-        .orderBy("adc_dist", "vec_id").collect().toSeq.map(_.toSeq)
-      // batch equivalent (the q180 assembly over the same vectors)
-      val probed = graft.ops.Similarity.probedCentroids(centroids, qv, 3)
-        .collect().map(_.get(0))
-      val codes = graft.ops.Quantize.pqEncode(res, codebook, "res",
-          "vec_id", m = 4, dim = 64)
-        .join(res.select(col("vec_id"), col("cluster")), "vec_id")
-        .select(col("vec_id"), col("cluster"), col("codes"))
-      val qres = centroids.where(col("cid").isin(probed.toSeq: _*))
-        .select(col("cid").cast("long").as("cluster"),
-          zip_with(toD(qv), toD(col("cvec")), (x, c) => x - c).as("qr"))
-      val expected = graft.ops.Quantize.residualAdcTopK(
-          codes.where(col("cluster").isin(probed.toSeq: _*)),
-          qres, codebook, "qr", "vec_id", m = 4, dim = 64, k = 10)
-        .orderBy("adc_dist", "vec_id").collect().toSeq.map(_.toSeq)
-      assert(got === expected)
-      // the batched entry point agrees with the single-query one in
-      // residual mode too (a 1-row batch is the degenerate case)
-      val q23 = emb.where(col("vec_id") === 23L)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val batch1 = Streaming.ivfPqSearchIndexBatch(spark, s"$tmp/index",
-          centroids, codebook, q23, "qid", "qv", nprobe = 3, k = 10,
-          m = 4, dim = 64, idCol = "vec_id", residual = true)
-        .select("vec_id", "cluster", "adc_dist")
-        .orderBy("adc_dist", "vec_id").collect().toSeq.map(_.toSeq)
-      assert(batch1 === got)
-    } finally { q.stop(); codebook.unpersist() }
-  }
-
-  test("Trigger.AvailableNow drains the backlog then stops on its own") {
-    // batch-drain mode: process everything that exists, checkpoint,
-    // terminate — the scheduled-ingest shape (cron-like catch-up runs)
-    // without leaving a continuous query running
-    val dir = java.nio.file.Files.createTempDirectory("graft-avnow")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
-      dir.resolve("events.parquet"))
-    val src = dir.toString
-    val q = Streaming.eventsFileStream(spark, src)
-      .groupBy("event_type").agg(count(lit(1)).as("n"))
-      .writeStream.format("memory").queryName("avnow")
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    assert(q.awaitTermination(120000)) // self-terminates after the drain
-    val streamed = spark.table("avnow")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val batch = spark.read.parquet(src).groupBy("event_type").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(streamed === batch)
   }
 
   test("fsck: a hits-history gap (interleaved minHits=1 sweep) is an " +

@@ -92,75 +92,6 @@ class WarehouseSpec extends SparkSpec {
     assert(a == b && a.nonEmpty && a.size < 200)
   }
 
-  test("mergeCdcBucketed equals whole-table applyCdc, rewrites only touched buckets") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mcb").toString
-    val path = s"$tmp/t"
-    val seed = (1L to 20L).map(k => (k, 1L, s"v$k")).toDF("k", "seq", "v")
-    Warehouse.mergeCdcBucketed(spark, path, seed,
-      Seq("k"), Seq("seq"), col("v") === "DEL", nBuckets = 8)
-    def files = new java.io.File(path).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("__kb="))
-      .flatMap(d => d.listFiles().map(f =>
-        (f.getPath, f.length(), f.lastModified()))).toSet
-    val before = files
-    val delta = Seq((1L, 2L, "x"), (2L, 2L, "DEL"), (40L, 2L, "new"))
-      .toDF("k", "seq", "v")
-    val touched = Warehouse.mergeCdcBucketed(spark, path, delta,
-      Seq("k"), Seq("seq"), col("v") === "DEL", nBuckets = 8)
-    // result == one-shot applyCdc over the full base
-    val got = rows(Warehouse.readBucketed(spark, path).orderBy("k"))
-    val want = rows(Warehouse.applyCdc(seed, delta, Seq("k"), Seq("seq"),
-      col("v") === "DEL").orderBy("k"))
-    assert(got == want)
-    // buckets outside the touched set were never rewritten
-    val untouched = before.filterNot { case (p, _, _) =>
-      touched.exists(b => p.contains(s"__kb=$b/")) }
-    assert(untouched.nonEmpty && untouched.subsetOf(files))
-    // no work dirs left behind
-    assert(!new java.io.File(s"$path/.cdc.tmp").exists())
-    assert(!new java.io.File(s"$path/.cdc.backup").exists())
-  }
-
-  test("deleteKeysBucketed removes keys, touching only their buckets") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-del").toString
-    val path = s"$tmp/t"
-    val seed = (1L to 20L).map(k => (k, 1L, s"v$k")).toDF("k", "seq", "v")
-    Warehouse.mergeCdcBucketed(spark, path, seed,
-      Seq("k"), Seq("seq"), col("v") === "DEL", nBuckets = 8)
-    def files = new java.io.File(path).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("__kb="))
-      .flatMap(d => d.listFiles().map(f =>
-        (f.getPath, f.length(), f.lastModified()))).toSet
-    val before = files
-    val touched = Warehouse.deleteKeysBucketed(spark, path,
-      Seq(3L, 7L, 999L).toDF("k"), Seq("k"), nBuckets = 8)
-    val got = rows(Warehouse.readBucketed(spark, path)
-      .select("k").orderBy("k")).map(_.head)
-    assert(got == (1L to 20L).filterNot(Set(3L, 7L)).toSeq)
-    // buckets outside the touched set were never opened or rewritten
-    val untouched = before.filterNot { case (p, _, _) =>
-      touched.exists(b => p.contains(s"__kb=$b/")) }
-    assert(untouched.nonEmpty && untouched.subsetOf(files))
-    // idempotent: a second run touches the same buckets, same result
-    val again = Warehouse.deleteKeysBucketed(spark, path,
-      Seq(3L, 7L).toDF("k"), Seq("k"), nBuckets = 8)
-    assert(again.toSet.subsetOf(touched.toSet))
-    assert(rows(Warehouse.readBucketed(spark, path)
-      .select("k").orderBy("k")).map(_.head) == got)
-    // deleting on a missing table is a no-op
-    assert(Warehouse.deleteKeysBucketed(spark, s"$tmp/absent",
-      Seq(1L).toDF("k"), Seq("k")) == Nil)
-    // delete EVERYTHING (all bucket dirs removed, empty root left),
-    // then delete again: schema resolution must not throw — the
-    // emptied table merges nothing and reports no touched buckets
-    Warehouse.deleteKeysBucketed(spark, path,
-      (1L to 20L).toDF("k"), Seq("k"), nBuckets = 8)
-    assert(new java.io.File(path).listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("__kb=")) == 0)
-    assert(Warehouse.deleteKeysBucketed(spark, path,
-      Seq(5L).toDF("k"), Seq("k"), nBuckets = 8) == Nil)
-  }
-
   test("snapshotDiff classifies added/removed/changed with column detail") {
     val v1 = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("k", "s", "x")
@@ -183,53 +114,6 @@ class WarehouseSpec extends SparkSpec {
     val d = Warehouse.snapshotDiff(v1, v2, Seq("k")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(d === Map(1L -> "changed", 2L -> "changed"))
-  }
-
-  test("mergeCdcBucketed migrates a pre-existing FLAT table in place") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mcb3").toString
-    val path = s"$tmp/t"
-    // a table maintained by the old whole-table merge: plain part files
-    val flatBase = Seq((1L, 1L, "a"), (2L, 1L, "b"), (3L, 1L, "c"))
-      .toDF("k", "seq", "v")
-    flatBase.write.parquet(path)
-    val delta = Seq((2L, 2L, "b2"), (4L, 2L, "d")).toDF("k", "seq", "v")
-    Warehouse.mergeCdcBucketed(spark, path, delta,
-      Seq("k"), Seq("seq"), col("v") === "DEL", nBuckets = 4)
-    // the flat rows took part in the merge (latest-wins held against
-    // them) and the root is now purely bucketed
-    val out = Warehouse.readBucketed(spark, path)
-      .collect().map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
-    assert(out === Map(1L -> "a", 2L -> "b2", 3L -> "c", 4L -> "d"))
-    val rootFiles = new java.io.File(path).listFiles()
-      .filter(f => f.isFile && !f.getName.startsWith(".") &&
-        !f.getName.startsWith("_"))
-    assert(rootFiles.isEmpty)
-    assert(!new java.io.File(s"$path/.cdc.migrated").exists())
-  }
-
-  test("mergeCdcBucketed heals a crash between the swap renames") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-mcb2").toString
-    val path = s"$tmp/t"
-    val seed = Seq((1L, 1L, "a"), (2L, 1L, "b")).toDF("k", "seq", "v")
-    Warehouse.mergeCdcBucketed(spark, path, seed,
-      Seq("k"), Seq("seq"), col("v") === "DEL", nBuckets = 4)
-    // simulate a writer dying between rename-aside and rename-in:
-    // one bucket sits in .cdc.backup with its target missing
-    val dirs = new java.io.File(path).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("__kb="))
-    assert(dirs.nonEmpty)
-    val victim = dirs.head
-    val backupRoot = new java.io.File(s"$path/.cdc.backup")
-    backupRoot.mkdirs()
-    assert(victim.renameTo(new java.io.File(backupRoot, victim.getName)))
-    // the checkpoint-replayed batch merges against the HEALED table
-    val replay = Seq((1L, 2L, "a2")).toDF("k", "seq", "v")
-    Warehouse.mergeCdcBucketed(spark, path, replay,
-      Seq("k"), Seq("seq"), col("v") === "DEL", nBuckets = 4)
-    val out = Warehouse.readBucketed(spark, path)
-      .collect().map(r => r.getAs[Long]("k") -> r.getAs[String]("v")).toMap
-    assert(out === Map(1L -> "a2", 2L -> "b"))
-    assert(!backupRoot.exists())
   }
 
   test("compact merges small files to the target count, rows intact") {
