@@ -134,12 +134,12 @@ object ScaleProbe {
       Dedup.admitAgainstIndex(batch, "text", "doc_id",
         Dedup.minhashIndex(store, "text", "doc_id"))
     }
-    // streaming admission against an ON-DISK bucketed index: feed the
-    // corpus through mergeDedupIndexBatch in equal slices (sliced by
-    // BASE doc so each batch is mostly novel and the index genuinely
-    // grows) and report per-batch wall time — the bh= partition prune
-    // plus the broadcast-streamed index join must keep it ~flat while
-    // the standing index grows ~linearly
+    // streaming admission against an ON-DISK index: feed the corpus
+    // through mergeDedupIndexBatch in equal slices (sliced by BASE doc
+    // so each batch is mostly novel and the index genuinely grows) and
+    // report per-batch wall time — one sorted file set per batch plus
+    // the broadcast-streamed two-column index scan must keep it ~flat
+    // while the standing index grows ~linearly
     // shared scaffold for the two standing-store ingestion probes:
     // slice by BASE doc (doc_id / replicas) so each batch is mostly
     // novel and the standing store genuinely grows — the load-bearing

@@ -175,22 +175,6 @@ object Retrieval {
       .agg(count(lit(1)).as("n_matched"), sum("bm25").as("score"))
   }
 
-  /** [[bm25Search]] against an external stats store (the
-    * [[bm25Stats]] shape, e.g. folded batch by batch with
-    * [[Warehouse.mergeAggDelta]]): rank `docs` for a
-    * bag-of-terms query using the standing corpus statistics, without
-    * rescanning the corpus that produced them. */
-  def bm25SearchAgainst(docs: DataFrame, idCol: String, textCol: String,
-                        termStats: DataFrame, globals: DataFrame,
-                        queryTerms: Seq[String], k1: Double = 1.2,
-                        b: Double = 0.75): DataFrame = {
-    require(queryTerms.nonEmpty, "need at least one query term")
-    bm25Against(docs, idCol, textCol, termStats, globals, k1, b)
-      .where(col("term").isin(queryTerms: _*))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_matched"), sum("bm25").as("score"))
-  }
-
   /** Reciprocal-rank fusion (Cormack et al. 2009) of two ranked
     * retrieval lists — the standard hybrid-search combiner (lexical
     * BM25 ⊕ embedding cosine) that needs no score calibration because

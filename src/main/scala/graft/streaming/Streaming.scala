@@ -303,10 +303,13 @@ object Streaming {
     if (!fs.exists(dir) && fs.exists(backup)) backup.toString else statsDir
   }
 
-  /** Number of `bh=` hash buckets each batch directory is partitioned
-    * into, and the bucketing function — MUST match between write and
-    * probe (both live here; the value is a layout constant of the
-    * index, not a tunable per call). */
+  /** Number of hash buckets a band hash (or a Jaccard digest / id)
+    * maps to, and the MinHash index's bucketing function. In the
+    * MinHash dedup index `bh` is a DATA column each batch's files are
+    * sorted by, so Parquet row-group min/max narrow a bucket probe; the
+    * exact-Jaccard index partitions its `jb=`/`ab=` dirs by the same
+    * count. A layout constant of both indexes, not a tunable per
+    * call. */
   private[graft] val DedupIndexBuckets = 64
   private[graft] def dedupIndexBucket(bandHash: Column): Column =
     pmod(crc32(bandHash), lit(DedupIndexBuckets)).cast("int")
@@ -314,12 +317,17 @@ object Streaming {
   /** Admit one batch against an UNBOUNDED standing MinHash index
     * ([[graft.ops.Dedup.admitProbed]]: anti-join on the band key plus
     * in-batch lowest-id-wins) and append the admitted documents' band
-    * rows under `batch=<id>/bh=<k>/`.
+    * rows under `batch=<id>/`: a few Parquet files sorted by
+    * (`bh`, `band_hash`), as many as the batch has partitions, however
+    * many buckets its band hashes touch.
     *
     * Exactly-once without rewriting the store: a replay deletes any
     * partial leftover of its own batch dir, re-decides against exactly
     * the pre-crash standing state, and rewrites identical content.
-    * Per-batch I/O is O(batch + touched buckets), never O(index).
+    * Per-batch writes are O(batch); the standing read scans the two
+    * band-key columns with their declared types (no footer inference,
+    * no partition fan-out to list) and streams into a broadcast join,
+    * and [[compactDedupIndex]] bounds the number of files it opens.
     *
     * Returns the admitted subset (materialized) so composite sinks
     * ([[curationIngestSink]]) can write payloads / fold stats without
@@ -340,54 +348,78 @@ object Streaming {
     val dir = new HPath(indexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // a crashed attempt may have left a partial subdir for THIS batch;
-    // remove it so the root read only sees complete prior batches
+    // remove it so the standing read only sees complete prior batches
     fs.delete(new HPath(dir, s"batch=$batchId"), true)
-    val hasPrior = fs.exists(dir) &&
-      fs.listStatus(dir).exists(_.getPath.getName.startsWith("batch="))
-    // band the batch ONCE; the same frame feeds the touched-bucket
-    // prune, the admission joins, and (filtered to admitted ids) the
-    // index write
+    // band the batch ONCE; the same frame feeds the admission joins
+    // and (filtered to admitted ids) the index write
     val probe = graft.ops.Dedup.minhashIndex(batch, textCol, idCol,
       numHashes, bands, shingleSize).localCheckpoint()
-    val standing =
-      if (hasPrior) {
-        // partition-pruned read: only the bh= buckets this batch's
-        // band hashes land in are listed/scanned — per-batch read I/O
-        // is O(touched buckets), not O(index), and admitProbed never
-        // shuffles what it reads
-        val touched = probe
-          .select(dedupIndexBucket(col("band_hash")).as("bh"))
-          .distinct().collect().map(_.getInt(0))
-        spark.read.parquet(indexDir)
-          .where(col("bh").isin(touched.toSeq: _*))
-          .drop("batch", "bh")
-      } else graft.ops.Dedup.minhashIndex(batch.limit(0), textCol, idCol,
-        numHashes, bands, shingleSize)
+    val standing = dedupIndexScan(spark, indexDir, Some(DedupIndexKeySchema))
+      .getOrElse(probe.limit(0)).select("band_idx", "band_hash")
     val admitted = graft.ops.Dedup.admitProbed(batch, idCol, probe, standing)
       .localCheckpoint()
     // guard on the WRITE FRAME itself: a batch whose admitted rows
     // carry no band rows (all-null-text, or only band-less docs
-    // admitted) must write NOTHING — a batch= dir holding only
-    // _SUCCESS would make the next batch's standing read fail parquet
-    // schema inference and wedge the stream on every replay (the skip
-    // is deterministic, so a replayed batch skips identically)
+    // admitted) must write NOTHING — the skip is deterministic, so a
+    // replayed batch skips identically, and no batch= dir without
+    // data ever reaches a reader that infers the index schema
     val bandRows = probe.join(
         admitted.select(col(idCol).as("id")), Seq("id"), "left_semi")
       .withColumn("bh", dedupIndexBucket(col("band_hash")))
       .localCheckpoint()
     if (!bandRows.isEmpty)
-      bandRows.write.mode("overwrite").partitionBy("bh")
-        .parquet(s"$indexDir/batch=$batchId")
+      bandRows.sortWithinPartitions("bh", "band_hash")
+        .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
     admitted
+  }
+
+  /** The columns the admission probe reads of a MinHash dedup index:
+    * the band key, and `bh` so that the scans of both layouts
+    * ([[dedupIndexScan]]) union by name. */
+  private[graft] val DedupIndexKeySchema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("band_idx", IntegerType),
+      StructField("band_hash", StringType), StructField("bh", IntegerType)))
+  }
+
+  /** Every `batch=<id>/` dir of a MinHash dedup index in one frame
+    * carrying the `batch` partition column and `bh`; None when the
+    * index holds no batch dir. Dirs written before `bh` became a data
+    * column hold `bh=<k>/` partition dirs instead of files; partition
+    * discovery rejects a tree mixing the two depths, so each layout is
+    * scanned on its own (under `basePath`, so `batch` is still
+    * discovered) and the two are unioned by name. `schema` declares
+    * the data columns to read, `bh` included; None infers them from
+    * the footers. */
+  private[graft] def dedupIndexScan(spark: SparkSession, indexDir: String,
+      schema: Option[org.apache.spark.sql.types.StructType])
+      : Option[DataFrame] = {
+    val dir = new HPath(indexDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val batchDirs =
+      if (!fs.exists(dir)) Seq.empty
+      else fs.listStatus(dir).toSeq.map(_.getPath)
+        .filter(_.getName.startsWith("batch="))
+    val (bucketDirs, fileDirs) = batchDirs.partition(
+      fs.listStatus(_).exists(_.getPath.getName.startsWith("bh=")))
+    def scan(dirs: Seq[HPath]): DataFrame = {
+      val r = spark.read.option("basePath", indexDir)
+      schema.fold(r)(r.schema).parquet(dirs.map(_.toString): _*)
+    }
+    Seq(fileDirs, bucketDirs).filter(_.nonEmpty).map(scan)
+      .reduceOption(_ unionByName _)
   }
 
   /** Read a MinHash dedup index ([[mergeDedupIndexBatch]], the
     * `index/` of a [[curationIngestSink]] root): every admitted
-    * document's band
-    * rows plus the `batch` and `bh` (band-hash bucket) partition
-    * columns of the `batch=<id>/bh=<k>/` layout it is stored in. */
+    * document's band rows (`id`, `text_hash`, `band_idx`,
+    * `band_hash`), the `batch` partition column and the `bh` band-hash
+    * bucket, from `batch=<id>/` dirs of either layout
+    * ([[dedupIndexScan]]). */
   def readDedupIndex(spark: SparkSession, indexDir: String): DataFrame =
-    spark.read.parquet(indexDir)
+    dedupIndexScan(spark, indexDir, None)
+      .getOrElse(spark.read.parquet(indexDir))
+      .select("id", "text_hash", "band_idx", "band_hash", "batch", "bh")
 
   private[graft] def jaccardPrefixBucket(h: Column): Column =
     pmod(crc32(h), lit(DedupIndexBuckets)).cast("int")
@@ -578,7 +610,7 @@ object Streaming {
     * [[graft.ops.Text.qualityScore]] ≥ `minQuality`, (2) near-dup
     * admission against the standing banded index
     * ([[mergeDedupIndexBatch]] — never re-bands history, appends the
-    * admitted band rows under `index/batch=<id>/bh=<k>/`), (3) write
+    * admitted band rows under `index/batch=<id>/`), (3) write
     * the admitted PAYLOADS under `corpus/batch=<id>/`, and (4) fold
     * the admitted batch into the standing stats (word histogram for
     * tokenizer refresh + length drift histogram) under `stats/`.
@@ -800,7 +832,22 @@ object Streaming {
       idCol: String, rootDir: String, batchId: Long, minQuality: Double,
       lenLo: Double, lenHi: Double, numHashes: Int, bands: Int,
       shingleSize: Int, benchmarkDir: Option[String] = None,
-      deconMinHits: Long = 1L): Unit = {
+      deconMinHits: Long = 1L): Unit =
+    curationIngestGated(batch, textCol, idCol, rootDir, batchId,
+        minQuality, lenLo, lenHi, benchmarkDir, deconMinHits) { gated =>
+      mergeDedupIndexBody(gated, textCol, idCol, s"$rootDir/index",
+        batchId, numHashes, bands, shingleSize)
+    }
+
+  /** The ingest both curation sinks share around their dedup gate
+    * `admit`: schema check, quality gate, the optional pinned
+    * decontamination gate, then — under the index and corpus leases —
+    * `admit` on the surviving rows, whose admitted subset
+    * [[ingestTail]] writes as payload and folds into the stats. */
+  private def curationIngestGated(batch: DataFrame, textCol: String,
+      idCol: String, rootDir: String, batchId: Long, minQuality: Double,
+      lenLo: Double, lenHi: Double, benchmarkDir: Option[String],
+      deconMinHits: Long)(admit: DataFrame => DataFrame): Unit = {
     requireCorpusSchema(batch, rootDir)
     val qualGated = batch.where(
       graft.ops.Text.qualityScore(col(textCol)) >= minQuality)
@@ -818,14 +865,13 @@ object Streaming {
     val gated = benchmarkDir.fold(qualGated)(bd =>
       deconGatePinned(qualGated, textCol, idCol, rootDir, batchId,
         bd, deconMinHits).localCheckpoint())
-    if (gated.isEmpty) return
+    // without the decon gate `gated` is `qualGated`, known non-empty
+    if (benchmarkDir.nonEmpty && gated.isEmpty) return
     withStoreLock(batch.sparkSession,
         Seq(s"$rootDir/index", s"$rootDir/corpus")) {
       healCompactRoot(batch.sparkSession, s"$rootDir/index")
       healCurationCorpusRoot(batch.sparkSession, s"$rootDir/corpus")
-      ingestTail(mergeDedupIndexBody(gated, textCol, idCol,
-          s"$rootDir/index", batchId, numHashes, bands, shingleSize),
-        textCol, rootDir, batchId, lenLo, lenHi)
+      ingestTail(admit(gated), textCol, rootDir, batchId, lenLo, lenHi)
     }
   }
 
@@ -3070,29 +3116,14 @@ object Streaming {
       minQuality: Double, lenLo: Double, lenHi: Double,
       dfTable: DataFrame, n: Int, minJaccard: Double,
       benchmarkDir: Option[String] = None,
-      deconMinHits: Long = 1L): Unit = {
-    requireCorpusSchema(batch, rootDir)
-    val qualGated = batch.where(
-      graft.ops.Text.qualityScore(col(textCol)) >= minQuality)
-      .localCheckpoint()
-    // same deterministic skip as the LSH form: a fully gated-out batch
-    // performs NO effects
-    if (qualGated.isEmpty) return
-    // same pinned decontamination ride as the LSH form (the pin keys
-    // on the INGEST batch id, so the two gate variants share it)
-    val gated = benchmarkDir.fold(qualGated)(bd =>
-      deconGatePinned(qualGated, textCol, idCol, rootDir, batchId,
-        bd, deconMinHits).localCheckpoint())
-    if (gated.isEmpty) return
-    withStoreLock(batch.sparkSession,
-        Seq(s"$rootDir/index", s"$rootDir/corpus")) {
-      healCompactRoot(batch.sparkSession, s"$rootDir/index")
-      healCurationCorpusRoot(batch.sparkSession, s"$rootDir/corpus")
-      ingestTail(mergeJaccardIndexBody(gated, textCol, idCol,
-          s"$rootDir/index", batchId, dfTable, n, minJaccard),
-        textCol, rootDir, batchId, lenLo, lenHi)
+      deconMinHits: Long = 1L): Unit =
+    // the decon pin keys on the INGEST batch id, so the two gate
+    // variants share it
+    curationIngestGated(batch, textCol, idCol, rootDir, batchId,
+        minQuality, lenLo, lenHi, benchmarkDir, deconMinHits) { gated =>
+      mergeJaccardIndexBody(gated, textCol, idCol, s"$rootDir/index",
+        batchId, dfTable, n, minJaccard)
     }
-  }
 
   /** The admitted corpus of a [[curationIngestSink]] (payload rows +
     * the `batch` partition column). */
@@ -3537,9 +3568,11 @@ object Streaming {
 
   /** Offline compaction for a MinHash dedup index: merge the
     * accumulated `batch=<id>/` directories into a single `batch=-1/`
-    * tree — same `bh=` bucket partitioning, ~one file per bucket,
-    * rows sorted by `band_hash` within each so parquet row-group
-    * min/max stats prune point probes. Without this the per-batch
+    * dir in the per-batch layout (`bh` a data column, no partition
+    * dirs), globally sorted by `band_hash` so each file covers its own
+    * `band_hash` range and Parquet row-group min/max prune point
+    * probes. Dirs of the older `batch=<id>/bh=<k>/` layout fold in
+    * alongside ([[dedupIndexScan]]). Without this the per-batch
     * directories accumulate forever and file listing/opening comes to
     * dominate every admission probe.
     *
@@ -3580,12 +3613,10 @@ object Streaming {
     // already {batch=-1, latest} would only be identity-rewritten
     if (ids.filterNot(id => id == keep || id == -1L).isEmpty) return
     swapInCompacted(spark, indexDir) { (tmp, fsi) =>
-      spark.read.parquet(indexDir)
+      readDedupIndex(spark, indexDir)
         .where(col("batch") =!= keep).drop("batch")
-        .repartition(DedupIndexBuckets, col("bh"))
-        .sortWithinPartitions(col("bh"), col("band_hash"))
-        .write.mode("overwrite").partitionBy("bh")
-        .parquet(s"$tmp/batch=-1")
+        .orderBy(col("band_hash"))
+        .write.mode("overwrite").parquet(s"$tmp/batch=-1")
       carryBatchDir(spark, fsi, new HPath(s"$indexDir/batch=$keep"),
         new HPath(s"$tmp/batch=$keep"))
     }

@@ -21,29 +21,6 @@ class PipelinesSpec extends SparkSpec {
     if (isLatin1(name)) Pipelines.readCsvLatin1(spark, res(name))
     else Pipelines.readCsv(spark, res(name))
 
-  /** Jobs started on this thread while `f` runs, its listener events
-    * drained before counting. */
-  private def jobsStartedBy(f: => Unit): Int = {
-    val tag = "graft.spec.jobsStartedBy"
-    val id = java.util.UUID.randomUUID().toString
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(tag) == id))
-          started.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(tag, id)
-    try f finally {
-      sc.setLocalProperty(tag, null)
-      org.apache.spark.GraftListenerBus.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    started.get
-  }
-
   test("source type catalogue: every CSV fixture reads with the schema " +
       "inference gives (names, order, types)") {
     assert(csvFixtures.size === 12)
@@ -64,11 +41,12 @@ class PipelinesSpec extends SparkSpec {
   test("source reads start no Spark job, up to and including .schema") {
     // the listener sees jobs: an inferring read starts some
     assert(jobsStartedBy(spark.read.option("header", true)
-      .option("inferSchema", true).csv(res("all_inlinks.csv")).schema) > 0)
+      .option("inferSchema", true).csv(res("all_inlinks.csv")).schema)
+      .size > 0)
     assert(jobsStartedBy {
       csvFixtures.foreach(name => declaredRead(name).schema)
       Pipelines.readCrawlList(spark, res("audisto_crawls_list.json")).schema
-    } === 0)
+    }.size === 0)
   }
 
   test("E1 head stage: crawl list JSON -> today's crawl id; empty day alerts") {

@@ -2667,7 +2667,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("dedup admission never shuffles the standing index (plan) and " +
-       "prunes to touched bh buckets") {
+       "reads each batch as one sorted file set") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     val tmp = java.nio.file.Files.createTempDirectory("graft-pix").toString
@@ -2679,20 +2679,27 @@ class StreamingSpec extends SparkSpec {
     Streaming.mergeDedupIndexBatch(
       seed.toIndexedSeq.toDF("doc_id", "text"), "text", "doc_id",
       indexDir, batchId = 0L)
-    // the bucketed batch=0/bh=k layout is on disk
-    val bhDirs = new java.io.File(s"$indexDir/batch=0").listFiles()
-      .filter(_.getName.startsWith("bh=")).map(_.getName).toSet
-    assert(bhDirs.nonEmpty && bhDirs.subsetOf(
-      (0 until 64).map(k => s"bh=$k").toSet))
+    // batch=0 is a few files, no bh= partition dirs: `bh` is a data
+    // column, and each file is sorted by (bh, band_hash)
+    val batchDir = new java.io.File(s"$indexDir/batch=0")
+    assert(!batchDir.listFiles().exists(_.isDirectory))
+    val parts = batchDir.listFiles().filter(_.getName.endsWith(".parquet"))
+    val buckets = Streaming.readDedupIndex(spark, indexDir)
+      .select("bh").distinct().count()
+    assert(parts.nonEmpty && parts.length < buckets,
+      s"${parts.length} files for $buckets buckets")
+    parts.foreach { f =>
+      val keys = spark.read.parquet(f.getPath).select("bh", "band_hash")
+        .as[(Int, String)].collect().toSeq
+      assert(keys === keys.sorted, s"${f.getName} not sorted by bh, band_hash")
+    }
     // replicate the sink's admission read path and audit the plan
     val batch = batch2.toIndexedSeq.toDF("doc_id", "text")
     val probe = graft.ops.Dedup.minhashIndex(batch, "text", "doc_id")
       .localCheckpoint()
-    val touched = probe
-      .select(Streaming.dedupIndexBucket(col("band_hash")).as("bh"))
-      .distinct().collect().map(_.getInt(0))
-    val standing = spark.read.parquet(indexDir)
-      .where(col("bh").isin(touched.toSeq: _*)).drop("batch", "bh")
+    val standing = Streaming.dedupIndexScan(spark, indexDir,
+        Some(Streaming.DedupIndexKeySchema)).get
+      .select("band_idx", "band_hash")
     val adm = graft.ops.Dedup.admitProbed(batch, "doc_id", probe, standing)
     def indexScans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
       case s: FileSourceScanExec if s.relation.location.rootPaths
@@ -2704,9 +2711,9 @@ class StreamingSpec extends SparkSpec {
       val plan = adm.queryExecution.executedPlan
       val scans = indexScans(plan)
       assert(scans.nonEmpty, "standing index is scanned by admission")
-      // the scan is partition-pruned to the touched buckets
-      assert(scans.forall(_.metadata.get("PartitionFilters")
-        .exists(_.contains("bh"))), s"bh prune missing:\n$plan")
+      // the scan reads the two band-key columns and nothing else
+      assert(scans.forall(_.requiredSchema.fieldNames.toSet ===
+        Set("band_idx", "band_hash")), s"index scan reads more:\n$plan")
       // and the index streams straight into a BroadcastHashJoin: on
       // the path from the index scan up to the first broadcast join
       // (which collapses it to batch-key cardinality) there is NO
@@ -2728,7 +2735,7 @@ class StreamingSpec extends SparkSpec {
           n.isInstanceOf[org.apache.spark.sql.execution.SortExec]),
         s"standing index crosses an Exchange/Sort before the join:\n$plan")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-    // and the pruned-path decision matches the unpruned batch op
+    // and the sink-path decision matches the batch op
     val expect = graft.ops.Dedup.admitAgainstIndex(batch, "text", "doc_id",
         spark.read.parquet(indexDir).drop("batch", "bh"))
       .select("doc_id").as[Long].collect().toSet
@@ -2782,6 +2789,54 @@ class StreamingSpec extends SparkSpec {
     assert(Streaming.readDedupIndex(spark, indexDir)
       .select("id").as[Long].collect().toSet ===
       idxBefore.map(_._1) ++ admBefore)
+  }
+
+  test("an index in the older batch=<id>/bh=<k>/ layout reads, admits " +
+      "and compacts like one written fresh") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-lix").toString
+    val all = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select("doc_id", "text").as[(Long, String)].collect()
+    val slices = all.grouped((all.length + 2) / 3).toSeq
+    def merge(indexDir: String, i: Int): Set[Long] =
+      Streaming.mergeDedupIndexBatch(slices(i).toIndexedSeq.toDF("doc_id",
+          "text"), "text", "doc_id", indexDir, i.toLong)
+        .select("doc_id").as[Long].collect().toSet
+    def rows(indexDir: String, cols: String*): Set[Seq[Any]] =
+      Streaming.readDedupIndex(spark, indexDir).select(cols.map(col): _*)
+        .collect().map(_.toSeq).toSet
+    def bucketDirs(indexDir: String): Seq[String] =
+      new java.io.File(indexDir).listFiles().toSeq
+        .flatMap(b => Option(b.listFiles()).toSeq.flatten)
+        .map(_.getName).filter(_.startsWith("bh="))
+    val fresh = s"$tmp/fresh"
+    val old = s"$tmp/old"
+    merge(fresh, 0)
+    merge(fresh, 1)
+    // batch 0 as the partitionBy("bh") writer laid it out
+    merge(s"$tmp/built", 0)
+    spark.read.parquet(s"$tmp/built/batch=0").write.partitionBy("bh")
+      .parquet(s"$old/batch=0")
+    assert(bucketDirs(old).nonEmpty)
+    // one batch ingested on top: the mixed tree reads like the fresh one
+    merge(old, 1)
+    val cols = Seq("id", "text_hash", "band_idx", "band_hash", "batch", "bh")
+    assert(Streaming.readDedupIndex(spark, old).columns.toSeq === cols)
+    assert(rows(old, cols: _*) === rows(fresh, cols: _*))
+    // compaction folds the old layout into the current one, its files
+    // sorted by band_hash
+    Streaming.compactDedupIndex(spark, old)
+    assert(bucketDirs(old).isEmpty)
+    new java.io.File(s"$old/batch=-1").listFiles()
+      .filter(_.getName.endsWith(".parquet")).foreach { f =>
+        val h = spark.read.parquet(f.getPath).select("band_hash")
+          .as[String].collect().toSeq
+        assert(h === h.sorted, s"${f.getName} not sorted by band_hash")
+      }
+    val key = cols.filterNot(_ == "batch")
+    assert(rows(old, key: _*) === rows(fresh, key: _*))
+    // and the next batch admits exactly what it admits on the fresh tree
+    assert(merge(old, 2) === merge(fresh, 2))
+    assert(rows(old, key: _*) === rows(fresh, key: _*))
   }
 
   test("store lease: compaction interleaved with LIVE merges loses and " +
