@@ -4,39 +4,83 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, RawLocalFileSystem, Path => HPath}
 
-/** Pluggable mutual-exclusion primitive behind
-  * [[Streaming.withStoreLock]] — the ONE seam through which every
-  * standing store's lease touches the filesystem, so a store whose
-  * create/rename are not atomic can be driven through a
-  * conditional-put implementation instead of being silently unsafe.
+/** The mutual-exclusion primitive behind [[Streaming.withStoreLock]]:
+  * every standing store's lease touches its Hadoop filesystem through
+  * these methods alone.
   *
-  * Contract: [[tryAcquire]] must be ATOMIC against concurrent
-  * callers — of N racing attempts on the same absent `lock`, at most
-  * one may return `Some`, and the winner's token must be what
-  * [[readToken]] returns until the lock is released or broken. The
-  * default [[HadoopLockBackend]] guarantees this on local
+  * [[tryAcquire]] is ATOMIC against concurrent callers on local
   * filesystems (kernel-arbitrated `O_EXCL` create) and on HDFS
-  * (namenode-arbitrated create-if-absent); for any OTHER scheme it
-  * falls back to create + settle + double read-back, which narrows
-  * but cannot CLOSE the duplicate-grant window — which is why
-  * [[Streaming.withStoreLock]] rejects known flat-namespace object
-  * stores (s3a and friends) up front unless the user either accepts
-  * the risk explicitly (`graft.lease.assumeAtomicCreate=true` in the
-  * hadoop conf) or names a backend built on the store's
-  * conditional-put API here (`graft.lease.backend=<FQCN>`, no-arg
-  * constructor). A conditional-put implementation overrides
-  * [[tryAcquire]] (PUT-if-absent of the token object), [[release]]
-  * (DELETE-if-token-matches) and [[breakStale]]
-  * (DELETE-if-unchanged-since) and inherits the rest.
+  * (namenode-arbitrated create-if-absent): of N racing attempts on
+  * the same absent `lock`, at most one returns `Some`, and the
+  * winner's token is what [[readToken]] returns until the lock is
+  * released or broken. For any OTHER scheme it falls back to create +
+  * settle + double read-back, which narrows but cannot CLOSE the
+  * duplicate-grant window — which is why [[Streaming.withStoreLock]]
+  * rejects known flat-namespace object stores (s3a and friends) up
+  * front unless the user accepts the risk explicitly
+  * (`graft.lease.assumeAtomicCreate=true` in the hadoop conf).
   */
-trait LockBackend {
+private[graft] object LockBackend {
+
+  /** Read-back spacing of the unknown-scheme fallback in
+    * [[tryAcquire]] (local and HDFS never settle — their create is
+    * atomic). */
+  private val SettleMs = 30L
+
+  private def localFile(fs: FileSystem, lock: HPath): java.io.File =
+    new java.io.File(fs.makeQualified(lock).toUri.getPath)
 
   /** One attempt to take `lock`: atomically create it bearing a
     * fresh unique token and return `Some(token)` on VERIFIED
     * ownership; `None` when the lock is held by someone else (the
-    * caller re-polls and handles staleness). Must not throw on
-    * contention. */
-  def tryAcquire(fs: FileSystem, lock: HPath): Option[String]
+    * caller re-polls and handles staleness). */
+  def tryAcquire(fs: FileSystem, lock: HPath): Option[String] = {
+    val token = newToken()
+    val bytes = token.getBytes(StandardCharsets.UTF_8)
+    fs match {
+      case _: LocalFileSystem | _: RawLocalFileSystem =>
+        // O_EXCL create via NIO — the KERNEL arbitrates, so exactly
+        // one of N racing creators succeeds. Hadoop's own local
+        // create(overwrite = false) exists-checks then creates in
+        // userland, a race the settle-and-read-back below only
+        // narrows
+        try {
+          val f = localFile(fs, lock)
+          Option(f.getParentFile)
+            .foreach(p => java.nio.file.Files.createDirectories(p.toPath))
+          java.nio.file.Files.write(f.toPath, bytes,
+            java.nio.file.StandardOpenOption.CREATE_NEW)
+          Some(token)
+        } catch { case _: java.io.IOException => None }
+      case _ if fs.getUri.getScheme == "hdfs" =>
+        // HDFS create(overwrite = false) is namenode-arbitrated —
+        // exactly one concurrent creator succeeds; no settle needed
+        try {
+          val out = fs.create(lock, false)
+          try out.write(bytes) finally out.close()
+          Some(token)
+        } catch { case _: java.io.IOException => None }
+      case _ =>
+        // unknown scheme: create-if-absent may be check-then-create.
+        // Settle, then read back TWICE (both reads must bear our
+        // token) so N racing creators settle to at most one verified
+        // owner — a duplicate grant now needs the competing write to
+        // land after BOTH of our spaced reads. Narrows but cannot
+        // close the window, which is why withStoreLock's probe
+        // REJECTS known flat object stores rather than relying on
+        // this path
+        try {
+          val out = fs.create(lock, false)
+          try out.write(bytes) finally out.close()
+          Thread.sleep(SettleMs)
+          val r1 = readToken(fs, lock)
+          Thread.sleep(SettleMs)
+          if (r1.contains(token) && readToken(fs, lock).contains(token))
+            Some(token)
+          else None
+        } catch { case _: java.io.IOException => None }
+    }
+  }
 
   /** The token `lock` currently bears, `None` if absent or
     * unreadable — the fence every destructive path checks before
@@ -102,7 +146,7 @@ trait LockBackend {
       else
         // the mtime mismatch PROVES the claim is a FRESH lease whose
         // holder is alive — restore it, never delete it
-        LockBackend.restoreOrPark(fs, claim, lock).foreach { orphan =>
+        restoreOrPark(fs, claim, lock).foreach { orphan =>
           throw new IllegalStateException(
             s"store lease break claimed a LIVE lock $lock and could " +
               s"not restore it (path stayed occupied); parked it at " +
@@ -114,14 +158,14 @@ trait LockBackend {
   /** Fenced release: remove `lock` only while it still bears
     * `token`. A holder paused past the stale window whose lease was
     * broken and re-granted must not delete the new holder's live
-    * lock. The default captures by RENAME before deleting — plain
+    * lock. It captures by RENAME before deleting — plain
     * check-then-delete leaves a millisecond window where a breaker
     * re-grants the lease between the check and the delete and the
     * delete removes the new holder's live lock; renaming to a
     * holder-unique name atomically captures WHATEVER file is at the
     * path, and only a captured file verified to bear our token is
-    * deleted (a captured foreign lock is restored). Never throws —
-    * release runs in `finally` paths. */
+    * deleted (a captured foreign lock is restored). Never throws an
+    * IOException — release runs in `finally` paths. */
   def release(fs: FileSystem, lock: HPath, token: String): Unit =
     try {
       // a TRANSIENT read failure is retried — treating it as
@@ -140,7 +184,7 @@ trait LockBackend {
           catch { case _: java.io.IOException => false }
         if (captured) {
           if (readToken(fs, cap).contains(token)) fs.delete(cap, false)
-          else LockBackend.restoreOrPark(fs, cap, lock).foreach { o =>
+          else restoreOrPark(fs, cap, lock).foreach { o =>
             System.err.println(s"[lease] release of $lock captured a " +
               s"FOREIGN live lock (lease was broken and re-granted in " +
               s"the check→capture window) and could not restore it; " +
@@ -166,9 +210,7 @@ trait LockBackend {
         System.err.println(s"[lease] release of $lock failed with " +
           s"$e — leaving it to the stale window / fsck")
     }
-}
 
-object LockBackend {
   /** A fresh lease token: `<pid>@<host>/<uuid>`. The uuid makes it
     * unique (the fence compares the WHOLE string); the pid@host
     * prefix is operator telemetry — `cat .store.lock` (or the
@@ -176,9 +218,9 @@ object LockBackend {
     * live long hold is distinguishable from a leaked lease without
     * running fsck. The prefix is truncated by ENCODED UTF-8 bytes
     * (not chars — a non-ASCII hostname could otherwise push the
-    * token past [[LockBackend.readToken]]'s 256-byte fence read,
-    * and a fence that never matches would leak every lease for the
-    * stale window). */
+    * token past [[readToken]]'s 256-byte fence read, and a fence
+    * that never matches would leak every lease for the stale
+    * window). */
   private[streaming] def newToken(): String = {
     var who = java.lang.management.ManagementFactory
       .getRuntimeMXBean.getName
@@ -198,7 +240,7 @@ object LockBackend {
     * failure park the file at a `.orphan.<uuid>` sibling (the live
     * holder's lease evidence for a human to adjudicate — NEVER
     * delete it) and return the orphan path. `None` = restored. */
-  private[streaming] def restoreOrPark(fs: FileSystem, claim: HPath,
+  private def restoreOrPark(fs: FileSystem, claim: HPath,
       lock: HPath): Option[HPath] = {
     val restoreDeadline = System.currentTimeMillis() + 10000L
     var restored = fs.rename(claim, lock)
@@ -224,73 +266,4 @@ object LockBackend {
   private[streaming] val unsafeSchemes: Set[String] =
     Set("s3", "s3a", "s3n", "swift", "oss", "cos", "cosn", "obs",
       "gs", "wasb", "wasbs", "adl")
-
-  /** The configured backend: `graft.lease.backend=<FQCN>` (no-arg
-    * constructor) in the hadoop conf, else [[HadoopLockBackend]]. */
-  private[streaming] def resolve(
-      conf: org.apache.hadoop.conf.Configuration): LockBackend =
-    Option(conf.get("graft.lease.backend")).filter(_.nonEmpty) match {
-      case None => HadoopLockBackend
-      case Some(cn) => Class.forName(cn).getDeclaredConstructor()
-        .newInstance().asInstanceOf[LockBackend]
-    }
-}
-
-/** The built-in [[LockBackend]]: picks the strongest atomic
-  * create-if-absent primitive the lock's filesystem offers. */
-object HadoopLockBackend extends LockBackend {
-
-  private def localFile(fs: FileSystem, lock: HPath): java.io.File =
-    new java.io.File(fs.makeQualified(lock).toUri.getPath)
-
-  override def tryAcquire(fs: FileSystem, lock: HPath): Option[String] = {
-    val token = LockBackend.newToken()
-    val bytes = token.getBytes(StandardCharsets.UTF_8)
-    fs match {
-      case _: LocalFileSystem | _: RawLocalFileSystem =>
-        // O_EXCL create via NIO — the KERNEL arbitrates, so exactly
-        // one of N racing creators succeeds. Hadoop's own local
-        // create(overwrite = false) exists-checks then creates in
-        // userland, which is the race the old settle-and-read-back
-        // dance only narrowed; this closes it, and drops the fixed
-        // per-acquisition settle local runs used to pay
-        try {
-          val f = localFile(fs, lock)
-          Option(f.getParentFile)
-            .foreach(p => java.nio.file.Files.createDirectories(p.toPath))
-          java.nio.file.Files.write(f.toPath, bytes,
-            java.nio.file.StandardOpenOption.CREATE_NEW)
-          Some(token)
-        } catch { case _: java.io.IOException => None }
-      case _ if fs.getUri.getScheme == "hdfs" =>
-        // HDFS create(overwrite = false) is namenode-arbitrated —
-        // exactly one concurrent creator succeeds; no settle needed
-        try {
-          val out = fs.create(lock, false)
-          try out.write(bytes) finally out.close()
-          Some(token)
-        } catch { case _: java.io.IOException => None }
-      case _ =>
-        // unknown scheme: create-if-absent may be check-then-create.
-        // Settle, then read back TWICE (both reads must bear our
-        // token) so N racing creators settle to at most one verified
-        // owner — a duplicate grant now needs the competing write to
-        // land after BOTH of our spaced reads. Narrows but cannot
-        // close the window, which is why withStoreLock's probe
-        // REJECTS known flat object stores rather than relying on
-        // this path; `graft.lease.settleMs` tunes the spacing
-        try {
-          val out = fs.create(lock, false)
-          try out.write(bytes) finally out.close()
-          val settle = math.max(1L,
-            fs.getConf.getLong("graft.lease.settleMs", 30L))
-          Thread.sleep(settle)
-          val r1 = readToken(fs, lock)
-          Thread.sleep(settle)
-          if (r1.contains(token) && readToken(fs, lock).contains(token))
-            Some(token)
-          else None
-        } catch { case _: java.io.IOException => None }
-    }
-  }
 }

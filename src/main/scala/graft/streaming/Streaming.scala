@@ -2553,8 +2553,7 @@ object Streaming {
     // ---- stale leases on the curation store roots (stats included:
     // fsck-heal and the stats repairs lock it)
     for (tree <- Seq("corpus", "index", "stats");
-        f <- leaseFinding(fs, s"$rootDir/$tree",
-          spark.sparkContext.hadoopConfiguration))
+        f <- leaseFinding(fs, s"$rootDir/$tree"))
       out += f
     // ---- snapshots: manifests must parse, their pins must hold, and
     // their sweep mark must not be ahead of the decon state
@@ -2654,8 +2653,7 @@ object Streaming {
     // a stale lease (mtime past the default staleAfterMs, heartbeat
     // dead) blocks nothing forever — waiters break it — but it IS the
     // crashed-holder signature worth surfacing
-    leaseFinding(fs, storeDir,
-      spark.sparkContext.hadoopConfiguration).foreach(out += _)
+    leaseFinding(fs, storeDir).foreach(out += _)
     // batch dirs live directly under the store (dedup index)
     // or under the exact index's prefix/ and arrays/ subtrees
     for (sub <- Seq("", "/prefix", "/arrays");
@@ -3148,60 +3146,45 @@ object Streaming {
     * means its holder died without release (the heartbeat would have
     * advanced it) — waiters break it on their own, but it is the
     * crashed-holder signature an audit should surface; a FRESH lock
-    * is a live holder, not a finding. The staleness check goes
-    * through the RESOLVED [[LockBackend]], so a store leased via a
-    * conditional-put backend (`graft.lease.backend`) is audited in
-    * its object store rather than silently skipped because no lock
-    * FILE exists; the token's pid@host prefix names the dead holder
-    * in the detail. A `.lock.orphan.<uuid>` sibling
-    * is a parked LIVE lock from a break/restore conflict — an ERROR a
-    * human must adjudicate. Stale `.lock.break.<uuid>` /
+    * is a live holder, not a finding; the token's pid@host prefix
+    * names the dead holder in the detail. A `.lock.orphan.<uuid>`
+    * sibling is a parked LIVE lock from a break/restore conflict — an
+    * ERROR a human must adjudicate. Stale `.lock.break.<uuid>` /
     * `.lock.release.<uuid>` siblings are claims captured by a breaker
     * or releaser that crashed before the final delete — verified
-    * husks, safe to delete by hand (filesystem-backend only: a
-    * conditional-put backend never creates them). A custom backend
-    * whose audit read throws (cloud-SDK outage shape) degrades to a
-    * named lease-area `warn` — the rest of the fsck pass still
-    * reports. */
+    * husks, safe to delete by hand. An audit read that throws (a
+    * filesystem outage) degrades to a named lease-area `warn` — the
+    * rest of the fsck pass still reports. */
   private def leaseFinding(fs: org.apache.hadoop.fs.FileSystem,
-      storeDir: String,
-      conf: org.apache.hadoop.conf.Configuration): Seq[(String, String,
-        String, String, Boolean)] = {
+      storeDir: String): Seq[(String, String, String, String,
+        Boolean)] = {
     val lock = storeLockPath(new HPath(storeDir))
-    // resolve from the SESSION's conf, not fs.getConf: the FileSystem
-    // cache keeps the Configuration captured at first creation, which
-    // can predate (or differ from) the one carrying
-    // graft.lease.backend
-    val backend = LockBackend.resolve(conf)
     val out = scala.collection.mutable.ListBuffer
       .empty[(String, String, String, String, Boolean)]
     try {
-      backend.mtime(fs, lock).foreach { m =>
+      LockBackend.mtime(fs, lock).foreach { m =>
         val age = System.currentTimeMillis() - m
         if (age > DefaultLeaseStaleMs)
           out += (("lease", lock.toString, "warn",
             s"lease ${age / 60000} min stale, held by " +
-              s"${backend.readToken(fs, lock).getOrElse("<unreadable>")}" +
+              s"${LockBackend.readToken(fs, lock).getOrElse("<unreadable>")}" +
               " — its holder died without release (a live holder " +
               "heartbeats); the next waiter breaks it after the stale " +
               "window, or break it by hand to unblock immediately",
             false))
       }
     } catch {
-      // a backend's audit read can throw the way any cloud SDK does —
-      // and the common outage shape IS IOException (hadoop-aws wraps
-      // AWS errors in it; the repo's own S3 template client throws it
-      // on non-2xx), so IOException must degrade the same way, not be
-      // silently swallowed. The whole fsck pass must not abort: every
-      // OTHER finding still reports, and the lease area degrades to a
-      // named warn instead of a silent skip
+      // getFileStatus can throw a transient IOException on any
+      // Hadoop filesystem; it must degrade, not be silently swallowed.
+      // The whole fsck pass must not abort: every OTHER finding still
+      // reports, and the lease area degrades to a named warn instead
+      // of a silent skip
       case scala.util.control.NonFatal(e) =>
         out += (("lease", lock.toString, "warn",
-          s"the configured lease backend (${backend.getClass.getName}) " +
-            s"threw while auditing this lock ($e) — lease state is " +
-            "UNKNOWN here; the rest of this fsck pass is unaffected. " +
-            "If the error persists, audit the lease in its own store " +
-            "directly", false))
+          s"reading this lock threw $e — lease state is UNKNOWN " +
+            "here; the rest of this fsck pass is unaffected. If the " +
+            "error persists, check the lock's filesystem directly",
+            false))
     }
     try {
       fs.listStatus(lock.getParent).toSeq
@@ -3231,23 +3214,26 @@ object Streaming {
     out.toSeq
   }
 
+  /** The default stale window shared by [[withStoreLock]] and the
+    * fsck lease audit — one constant so the audit's idea of "stale"
+    * cannot drift from the break window waiters actually use. */
+  private[graft] val DefaultLeaseStaleMs = 1800000L
+
   /** Mutual exclusion between a store's per-batch merges and its
     * offline maintenance (compaction / rebuild), so maintenance can
     * run against a LIVE stream: every mutator — sink merge bodies for
     * one batch, compactors/rebuilds for the whole fold+swap — wraps
     * its root mutation in this lease. Acquisition is an ATOMIC
-    * create-if-absent of the sibling `.lock` file through the
-    * resolved [[LockBackend]] (kernel `O_EXCL` on local filesystems,
+    * create-if-absent of the sibling `.lock` file through
+    * [[LockBackend]] (kernel `O_EXCL` on local filesystems,
     * namenode-arbitrated create on HDFS; other schemes settle and
     * double-verify a read-back). Known flat-namespace object stores
     * (s3a and friends) are REJECTED at acquire — their create/rename
     * are not atomic, so the lease cannot guarantee mutual exclusion
-    * there; point standing stores at HDFS/posix, plug a
-    * conditional-put backend (`graft.lease.backend=<FQCN>` hadoop
-    * conf), or accept the risk explicitly
-    * (`graft.lease.assumeAtomicCreate=true`). `roots` are acquired
-    * in sorted order so multi-root holders (the curation ingest)
-    * cannot deadlock each other.
+    * there; keep the lock paths on HDFS/posix, or accept the risk
+    * explicitly (`graft.lease.assumeAtomicCreate=true` hadoop conf).
+    * `roots` are acquired in sorted order so multi-root holders (the
+    * curation ingest) cannot deadlock each other.
     *
     * Liveness is the lease file's modification time: a HEARTBEAT
     * daemon refreshes every held lock's mtime each `staleAfterMs / 4`
@@ -3266,41 +3252,31 @@ object Streaming {
     * Waiters give up with a pointer to the file after `timeoutMs` —
     * a stream wedged behind an unbreakable lease should fail loudly,
     * not silently skip its batch. */
-  /** The default stale window shared by [[withStoreLock]] and the
-    * fsck lease audit — one constant so the audit's idea of "stale"
-    * cannot drift from the break window waiters actually use. */
-  private[graft] val DefaultLeaseStaleMs = 1800000L
-
   private[graft] def withStoreLock[T](spark: SparkSession,
       roots: Seq[String], timeoutMs: Long = 600000L,
       staleAfterMs: Long = DefaultLeaseStaleMs)(body: => T): T = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val backend = LockBackend.resolve(conf)
     val locks = roots.sorted.map { r =>
       val p = storeLockPath(new HPath(r))
       (p.getFileSystem(conf), p)
     }
-    // capability probe: the built-in backend's safety rests on atomic
+    // capability probe: the lease's safety rests on atomic
     // create-if-absent + rename, which flat-namespace object stores
     // do not provide — fail LOUDLY at acquire instead of handing out
-    // a lease that only usually excludes. A custom backend owns its
-    // own semantics and skips the probe.
-    if (backend eq HadoopLockBackend)
-      locks.foreach { case (fs, p) =>
-        val scheme = fs.getUri.getScheme
-        if (LockBackend.unsafeSchemes.contains(scheme) &&
-            !conf.getBoolean("graft.lease.assumeAtomicCreate", false))
-          throw new IllegalStateException(
-            s"store lease $p lives on '$scheme://', a flat-namespace " +
-              "object store without atomic create-if-absent/rename — " +
-              "the lease cannot guarantee mutual exclusion there. " +
-              "Keep standing stores on HDFS/posix, plug a " +
-              "conditional-put lock via graft.lease.backend=<FQCN of " +
-              "a graft.streaming.LockBackend>, or accept the risk " +
-              "explicitly with graft.lease.assumeAtomicCreate=true " +
-              "(hadoop conf). See README 'Operating the standing " +
-              "stores'.")
-      }
+    // a lease that only usually excludes
+    locks.foreach { case (fs, p) =>
+      val scheme = fs.getUri.getScheme
+      if (LockBackend.unsafeSchemes.contains(scheme) &&
+          !conf.getBoolean("graft.lease.assumeAtomicCreate", false))
+        throw new IllegalStateException(
+          s"store lease $p lives on '$scheme://', a flat-namespace " +
+            "object store without atomic create-if-absent/rename — " +
+            "the lease cannot guarantee mutual exclusion there. " +
+            "Keep the store's lock paths on HDFS/posix, or accept " +
+            "the risk explicitly with " +
+            "graft.lease.assumeAtomicCreate=true (hadoop conf). See " +
+            "README 'Operating the standing stores'.")
+    }
     // returns the unique token written into the held lock — the fence
     // the release path checks before deleting
     def acquire(fs: org.apache.hadoop.fs.FileSystem,
@@ -3312,24 +3288,23 @@ object Streaming {
       // for the timeout exception — the token's pid@host prefix names
       // the holder, the mtime dates the last heartbeat
       var nextWaitLog = System.currentTimeMillis() + 30000L
-      // a custom backend's client may throw on a poll (the
-      // ConditionalPutClient contract allows transient IO errors):
-      // a throwing tryAcquire/mtime is CONTENTION, not failure — a
-      // one-blip SDK error must not abort the maintenance body the
-      // lease protects. The deadline bounds a persistent outage, and
-      // its exception then names the last poll error instead of a
-      // holder.
+      // a poll may throw (a filesystem's getFileStatus or create can
+      // fail transiently): a throwing tryAcquire/mtime is CONTENTION,
+      // not failure — a one-blip filesystem error must not abort the
+      // maintenance body the lease protects. The deadline bounds a
+      // persistent outage, and its exception then names the last poll
+      // error instead of a holder.
       var lastPollError: Option[Throwable] = None
       var held: Option[String] = None
       while (held.isEmpty) {
         held =
-          try { val h = backend.tryAcquire(fs, lock)
+          try { val h = LockBackend.tryAcquire(fs, lock)
             lastPollError = None; h }
           catch { case scala.util.control.NonFatal(e) =>
             lastPollError = Some(e); None }
         if (held.isEmpty) {
           val m =
-            try backend.mtime(fs, lock)
+            try LockBackend.mtime(fs, lock)
             catch { case scala.util.control.NonFatal(e) =>
               lastPollError = Some(e); None }
           m match {
@@ -3341,26 +3316,26 @@ object Streaming {
               // the break. Bounded here too: this branch precedes the
               // deadline case, so without its own check a persistent
               // outage would spin past the deadline forever
-              try backend.breakStale(fs, lock, mt)
+              try LockBackend.breakStale(fs, lock, mt)
               catch { case scala.util.control.NonFatal(e) =>
                 lastPollError = Some(e)
                 if (System.currentTimeMillis() > deadline)
                   throw new IllegalStateException(
                     s"store lease $lock stayed stale past $timeoutMs " +
-                      s"ms — the backend's break attempts kept " +
+                      s"ms — the lease's break attempts kept " +
                       s"failing, last error: $e")
                 Thread.sleep(50)
               }
             case Some(mt) if System.currentTimeMillis() > deadline =>
               throw new IllegalStateException(
                 s"store lease $lock held past $timeoutMs ms by " +
-                  s"${backend.readToken(fs, lock).getOrElse("<unreadable>")}" +
+                  s"${LockBackend.readToken(fs, lock).getOrElse("<unreadable>")}" +
                   s" (last heartbeat ${new java.sql.Timestamp(mt)}) — if " +
                   "its holder is dead, delete the file to break the lease")
             case Some(mt) =>
               if (System.currentTimeMillis() >= nextWaitLog) {
                 System.err.println(s"[lease] waiting on $lock held by " +
-                  s"${backend.readToken(fs, lock).getOrElse("<unreadable>")}" +
+                  s"${LockBackend.readToken(fs, lock).getOrElse("<unreadable>")}" +
                   s", last heartbeat ${new java.sql.Timestamp(mt)}")
                 nextWaitLog = System.currentTimeMillis() + 30000L
               }
@@ -3371,7 +3346,7 @@ object Streaming {
               // churn) or every poll threw — say which
               throw new IllegalStateException(
                 s"store lease $lock not acquired within $timeoutMs ms" +
-                  lastPollError.map(e => s" — the backend's polls kept " +
+                  lastPollError.map(e => s" — the lease's polls kept " +
                     s"failing, last error: $e").getOrElse(
                     " despite no standing holder (acquire/break churn)"))
             case None => Thread.sleep(50) // vanished or poll error: re-poll
@@ -3392,11 +3367,11 @@ object Streaming {
         Thread.sleep(hbInterval)
         if (!hbStop) taken.synchronized {
           taken.foreach { case (fs, p, token) =>
-            // NonFatal, not just IOException: a custom backend's
-            // client (an SDK whose errors are RuntimeExceptions) must
-            // not kill the daemon — a dead heartbeat thread lets a
-            // LIVE body's lease go stale and be broken mid-body
-            try backend.heartbeat(fs, p, token)
+            // NonFatal, not just IOException: a filesystem client
+            // whose errors are RuntimeExceptions must not kill the
+            // daemon — a dead heartbeat thread lets a LIVE body's
+            // lease go stale and be broken mid-body
+            try LockBackend.heartbeat(fs, p, token)
             catch { case scala.util.control.NonFatal(_) => () }
           }
         }
@@ -3415,9 +3390,9 @@ object Streaming {
       hb.interrupt()
       hb.join(1000L)
       taken.reverseIterator.foreach { case (fs, p, token) =>
-        // a custom backend's release may not honor the never-throws
-        // contract: one failure must not leak the remaining locks
-        try backend.release(fs, p, token)
+        // release swallows only IOExceptions: any other failure must
+        // not leak the remaining locks
+        try LockBackend.release(fs, p, token)
         catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[lease] release of $p threw $e — " +
             "leaving it to the stale window / fsck")

@@ -36,69 +36,4 @@ class LifecycleDemoSpec extends SparkSpec {
     // a clean lifecycle leaves a clean root
     assert(s.findings === 0L)
   }
-
-  test("the same lifecycle walk runs UNCHANGED on a conditional-put " +
-      "object-store lease — every store mutation (ingest, sweep, " +
-      "repair, snapshot, export, fsck) holds its locks through the " +
-      "pluggable backend, and no lock file ever touches the " +
-      "filesystem") {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("graft.lease.backend",
-      classOf[graft.streaming.InMemoryObjectStoreLockBackend].getName)
-    try {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-lifedemo-os").toString
-      val s = LifecycleDemo.run(spark,
-        "src/test/resources/lifecycle_docs.jsonl", s"$tmp/root")
-      assert(s.admitted === Set(1L, 2L, 4L, 5L, 6L, 7L, 8L, 9L, 10L))
-      assert(s.tombstoned === 1L)
-      assert(s.gapBatches === 1L)
-      assert(s.forcedTombstoned === 1L)
-      assert(s.gapAfterForce === 0L)
-      assert(s.removedInDiff === Set(6L))
-      assert(s.exportedDocs === 8L)
-      assert(s.appliedDocs === Set(1L, 2L, 4L, 5L, 7L, 8L, 9L, 10L))
-      assert(s.findings === 0L)
-      // the lease lived in the object store: no .lock file anywhere
-      // under the root's parent, and nothing left leased after the run
-      def anyLock(d: java.io.File): Boolean =
-        Option(d.listFiles()).exists(_.exists(f =>
-          f.getName.contains(".lock") || (f.isDirectory && anyLock(f))))
-      assert(!anyLock(new java.io.File(tmp)),
-        "object-store lease leaked a lock file onto the filesystem")
-    } finally conf.unset("graft.lease.backend")
-  }
-
-  test("the lifecycle walk also runs UNCHANGED on the SHIPPED " +
-      "S3HttpLockBackend, config-resolved by FQCN, with every lease " +
-      "verb a real conditional HTTP request — SigV4-SIGNED and " +
-      "server-verified — against the S3-shaped endpoint") {
-    val conf = spark.sparkContext.hadoopConfiguration
-    sys.props("graft.lease.s3.endpoint") = S3HttpStubStore.baseUri
-    // the full production config shape: backend + signer by FQCN,
-    // creds from properties; the stub RECOMPUTES every signature
-    sys.props("graft.lease.s3.signer") =
-      classOf[graft.streaming.SigV4Signer].getName
-    sys.props("graft.lease.s3.accessKey") = S3HttpStubStore.SigV4AccessKey
-    sys.props("graft.lease.s3.secretKey") = S3HttpStubStore.SigV4Secret
-    conf.set("graft.lease.backend",
-      classOf[graft.streaming.S3HttpLockBackend].getName)
-    try {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-lifedemo-s3").toString
-      val s = LifecycleDemo.run(spark,
-        "src/test/resources/lifecycle_docs.jsonl", s"$tmp/root")
-      assert(s.admitted === Set(1L, 2L, 4L, 5L, 6L, 7L, 8L, 9L, 10L))
-      assert(s.tombstoned === 1L)
-      assert(s.forcedTombstoned === 1L)
-      assert(s.appliedDocs === Set(1L, 2L, 4L, 5L, 7L, 8L, 9L, 10L))
-      assert(s.findings === 0L)
-    } finally {
-      conf.unset("graft.lease.backend")
-      sys.props -= "graft.lease.s3.endpoint"
-      sys.props -= "graft.lease.s3.signer"
-      sys.props -= "graft.lease.s3.accessKey"
-      sys.props -= "graft.lease.s3.secretKey"
-    }
-  }
 }

@@ -1587,28 +1587,6 @@ class StreamingSpec extends SparkSpec {
     runLifecycleFuzz()
   }
 
-  test("the SAME serializability fuzz runs green with every lease " +
-      "held through the SHIPPED S3HttpLockBackend — four racing " +
-      "threads' store leases contending as SigV4-SIGNED conditional " +
-      "HTTP requests, every signature recomputed server-side") {
-    val conf = spark.sparkContext.hadoopConfiguration
-    sys.props("graft.lease.s3.endpoint") = S3HttpStubStore.baseUri
-    sys.props("graft.lease.s3.signer") =
-      classOf[graft.streaming.SigV4Signer].getName
-    sys.props("graft.lease.s3.accessKey") = S3HttpStubStore.SigV4AccessKey
-    sys.props("graft.lease.s3.secretKey") = S3HttpStubStore.SigV4Secret
-    conf.set("graft.lease.backend",
-      classOf[graft.streaming.S3HttpLockBackend].getName)
-    try runLifecycleFuzz()
-    finally {
-      conf.unset("graft.lease.backend")
-      sys.props -= "graft.lease.s3.endpoint"
-      sys.props -= "graft.lease.s3.signer"
-      sys.props -= "graft.lease.s3.accessKey"
-      sys.props -= "graft.lease.s3.secretKey"
-    }
-  }
-
   private def runLifecycleFuzz(): Unit = {
     // one ingest thread (batch ids must stay monotonic per the stats
     // store's fresh-checkpoint guard) + three maintenance threads
@@ -3007,58 +2985,44 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("store lease: a lock on a flat-namespace object store is " +
-      "REJECTED at acquire; the explicit override and a pluggable " +
-      "backend both proceed") {
+      "REJECTED at acquire; the explicit override proceeds through the " +
+      "settle-and-double-read-back fallback") {
     val conf = spark.sparkContext.hadoopConfiguration
     val tmp = java.nio.file.Files
       .createTempDirectory("graft-lease-probe").toString
+    val root = s"s3a://$tmp/store"
+    val lockOps = new java.util.concurrent.ConcurrentLinkedQueue[String]
     // a local-disk-backed FileSystem that REPORTS scheme s3a — the
     // probe must reject on the scheme alone, before any IO
-    conf.set("fs.s3a.impl", classOf[FlatObjectStoreFs].getName)
-    conf.setBoolean("fs.s3a.impl.disable.cache", true)
-    val root = s"s3a://$tmp/store"
-    try {
+    FaultyLocalFs.withScheme(conf, "s3a") {
+      case (op, p) if p.getName == ".store.lock" => lockOps.add(op)
+    } {
       val e = intercept[IllegalStateException] {
         Streaming.withStoreLock(spark, Seq(root), timeoutMs = 500L) {
           fail("body must not run on a rejected object-store lease")
         }
       }
       assert(e.getMessage.contains("flat-namespace") &&
-        e.getMessage.contains("graft.lease.backend") &&
-        e.getMessage.contains("graft.lease.assumeAtomicCreate"),
-        s"rejection must name both escape hatches: ${e.getMessage}")
+        e.getMessage.contains("HDFS/posix") &&
+        e.getMessage.contains("graft.lease.assumeAtomicCreate") &&
+        !e.getMessage.contains("graft.lease.backend"),
+        s"rejection must name both ways out: ${e.getMessage}")
+      assert(lockOps.isEmpty, s"the probe touched the lock: $lockOps")
 
       // explicit override: proceeds through the settle-verify
-      // fallback (the mock is local-disk-backed, so it really locks)
+      // fallback (the mock is local-disk-backed, so it really locks):
+      // one create, then two spaced read-backs before the body runs
       conf.setBoolean("graft.lease.assumeAtomicCreate", true)
-      conf.setLong("graft.lease.settleMs", 1L)
-      var ran = false
-      Streaming.withStoreLock(spark, Seq(root),
-        timeoutMs = 5000L) { ran = true }
-      assert(ran, "override did not run the body")
-      assert(!new java.io.File(s"$tmp/.store.lock").exists(),
-        "lock not released after override run")
-      conf.unset("graft.lease.assumeAtomicCreate")
-      conf.unset("graft.lease.settleMs")
-
-      // pluggable backend: owns its semantics, skips the probe; its
-      // acquire/release are actually invoked and fence correctly
-      CountingLockBackend.reset()
-      conf.set("graft.lease.backend",
-        classOf[CountingLockBackend].getName)
-      var ran2 = false
-      Streaming.withStoreLock(spark, Seq(root),
-        timeoutMs = 5000L) { ran2 = true }
-      assert(ran2, "custom backend did not run the body")
-      assert(CountingLockBackend.acquires.get() >= 1 &&
-        CountingLockBackend.releases.get() === 1,
-        "custom backend's acquire/release were not driven")
-    } finally {
-      conf.unset("graft.lease.backend")
-      conf.unset("graft.lease.assumeAtomicCreate")
-      conf.unset("graft.lease.settleMs")
-      conf.unset("fs.s3a.impl")
-      conf.unset("fs.s3a.impl.disable.cache")
+      try {
+        var ran = false
+        Streaming.withStoreLock(spark, Seq(root), timeoutMs = 5000L) {
+          assert(lockOps.toArray.toSeq === Seq("create", "open", "open"))
+          ran = true
+        }
+        assert(ran, "override did not run the body")
+        assert(!new java.io.File(s"$tmp/.store.lock").exists(),
+          "lock not released after override run")
+      } finally conf.unset("graft.lease.assumeAtomicCreate")
     }
   }
 
@@ -3095,34 +3059,45 @@ class StreamingSpec extends SparkSpec {
     val conf = spark.sparkContext.hadoopConfiguration
     val tmp = java.nio.file.Files
       .createTempDirectory("graft-lease-flaky").toString
-    try {
-      // two SDK-shaped RuntimeExceptions on the acquire poll, then
-      // normal grants: the documented ConditionalPutClient contract
-      // ("a throwing acquire poll is contention; re-poll") must hold
-      // at the withStoreLock layer, not just in the scaladoc — a
-      // one-blip client error must not abort the maintenance body
-      FlakyPollLockBackend.reset(failures = 2)
-      conf.set("graft.lease.backend",
-        classOf[FlakyPollLockBackend].getName)
+    val acquires = new java.util.concurrent.atomic.AtomicInteger(0)
+    val threw = new java.util.concurrent.atomic.AtomicInteger(0)
+    val remaining = new java.util.concurrent.atomic.AtomicInteger(0)
+    def reset(failures: Int): Unit = {
+      acquires.set(0); threw.set(0); remaining.set(failures)
+    }
+    // the lock's create throws an SDK-shaped RuntimeException (an
+    // IOException would read as plain contention) while `remaining`
+    // lasts, then creates normally
+    FaultyLocalFs.withScheme(conf, "flakypoll") {
+      case ("create", p) if p.getName.endsWith(".lock") =>
+        acquires.incrementAndGet()
+        if (remaining.getAndDecrement() > 0) {
+          threw.incrementAndGet()
+          throw new RuntimeException("synthetic store outage")
+        }
+    } {
+      // two throwing acquire polls, then normal grants: a throwing
+      // acquire poll is contention, so the lease re-polls — a
+      // one-blip filesystem error must not abort the maintenance body
+      reset(failures = 2)
       var ran = false
-      Streaming.withStoreLock(spark, Seq(s"$tmp/store"),
+      Streaming.withStoreLock(spark, Seq(s"flakypoll://$tmp/store"),
         timeoutMs = 10000L) { ran = true }
       assert(ran, "transient poll errors aborted the body")
-      assert(FlakyPollLockBackend.threw.get() === 2 &&
-        FlakyPollLockBackend.acquires.get() >= 3,
+      assert(threw.get() === 2 && acquires.get() >= 3,
         "the throwing polls were not retried through")
-      // a backend that NEVER stops throwing must not spin forever:
+      // a filesystem that NEVER stops throwing must not spin forever:
       // the deadline converts it into a loud failure that names the
-      // backend's error instead of a nonexistent holder
-      FlakyPollLockBackend.reset(failures = Int.MaxValue)
+      // poll error instead of a nonexistent holder
+      reset(failures = Int.MaxValue)
       val e = intercept[IllegalStateException] {
-        Streaming.withStoreLock(spark, Seq(s"$tmp/store2"),
+        Streaming.withStoreLock(spark, Seq(s"flakypoll://$tmp/store2"),
           timeoutMs = 400L) { fail("body must not run — every poll throws") }
       }
       assert(e.getMessage.contains("polls kept failing") &&
         e.getMessage.contains("store outage"),
         s"timeout did not name the poll error: ${e.getMessage}")
-    } finally conf.unset("graft.lease.backend")
+    }
   }
 
   test("store lease: a throwing breakStale is retried like a throwing " +
@@ -3138,22 +3113,34 @@ class StreamingSpec extends SparkSpec {
         "dead-holder/xyz".getBytes("UTF-8"))
       assert(lf.setLastModified(System.currentTimeMillis() - 3600000L))
     }
-    try {
-      conf.set("graft.lease.backend",
-        classOf[FlakyBreakLockBackend].getName)
-      FlakyBreakLockBackend.reset(failures = 1)
+    val breaks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val threw = new java.util.concurrent.atomic.AtomicInteger(0)
+    val remaining = new java.util.concurrent.atomic.AtomicInteger(0)
+    def reset(failures: Int): Unit = {
+      breaks.set(0); threw.set(0); remaining.set(failures)
+    }
+    // the break's claim-by-rename throws a RuntimeException (one that
+    // escapes breakStale) while `remaining` lasts, then renames
+    FaultyLocalFs.withScheme(conf, "flakybreak") {
+      case ("rename", to) if to.getName.contains(".lock.break.") =>
+        breaks.incrementAndGet()
+        if (remaining.getAndDecrement() > 0) {
+          threw.incrementAndGet()
+          throw new RuntimeException("synthetic break outage")
+        }
+    } {
+      reset(failures = 1)
       plantStale(s"$tmp/store")
       var ran = false
-      Streaming.withStoreLock(spark, Seq(s"$tmp/store"),
+      Streaming.withStoreLock(spark, Seq(s"flakybreak://$tmp/store"),
         timeoutMs = 10000L, staleAfterMs = 1000L) { ran = true }
       assert(ran, "one throwing break aborted the waiter")
-      assert(FlakyBreakLockBackend.threw.get() === 1 &&
-        FlakyBreakLockBackend.breaks.get() >= 2,
+      assert(threw.get() === 1 && breaks.get() >= 2,
         "the throwing break was not retried")
-      FlakyBreakLockBackend.reset(failures = Int.MaxValue)
+      reset(failures = Int.MaxValue)
       plantStale(s"$tmp/store2")
       val e = intercept[IllegalStateException] {
-        Streaming.withStoreLock(spark, Seq(s"$tmp/store2"),
+        Streaming.withStoreLock(spark, Seq(s"flakybreak://$tmp/store2"),
           timeoutMs = 500L, staleAfterMs = 1000L) {
           fail("body must not run — the stale lease is unbreakable")
         }
@@ -3161,7 +3148,7 @@ class StreamingSpec extends SparkSpec {
       assert(e.getMessage.contains("break attempts kept failing") &&
         e.getMessage.contains("break outage"),
         s"deadline did not name the break error: ${e.getMessage}")
-    } finally conf.unset("graft.lease.backend")
+    }
   }
 
   test("store lease: 8 contenders through a backend whose acquire AND " +
@@ -3170,17 +3157,30 @@ class StreamingSpec extends SparkSpec {
     val conf = spark.sparkContext.hadoopConfiguration
     val tmp = java.nio.file.Files
       .createTempDirectory("graft-lease-chaos").toString
-    try {
-      ChaosPollLockBackend.reset()
-      conf.set("graft.lease.backend",
-        classOf[ChaosPollLockBackend].getName)
+    val acquirePolls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val mtimePolls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val threw = new java.util.concurrent.atomic.AtomicInteger(0)
+    // deterministic chaos: the lock's create throws every 3rd call and
+    // its getFileStatus (the mtime poll) every 5th; grants and releases
+    // go through in between
+    FaultyLocalFs.withScheme(conf, "chaospoll") {
+      case ("create", p) if p.getName.endsWith(".lock") &&
+          acquirePolls.incrementAndGet() % 3 == 0 =>
+        threw.incrementAndGet()
+        throw new RuntimeException("chaos: acquire poll failed")
+      case ("getFileStatus", p) if p.getName.endsWith(".lock") &&
+          mtimePolls.incrementAndGet() % 5 == 0 =>
+        threw.incrementAndGet()
+        throw new java.io.IOException("chaos: mtime poll failed")
+    } {
       val inBody = new java.util.concurrent.atomic.AtomicInteger(0)
       val maxSeen = new java.util.concurrent.atomic.AtomicInteger(0)
       val done = new java.util.concurrent.atomic.AtomicInteger(0)
       val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
       val ths = (1 to 8).map { _ =>
         new Thread(() => {
-          try Streaming.withStoreLock(spark, Seq(s"$tmp/store"),
+          try Streaming.withStoreLock(spark,
+            Seq(s"chaospoll://$tmp/store"),
             timeoutMs = 30000L, staleAfterMs = 60000L) {
             val n = inBody.incrementAndGet()
             maxSeen.getAndUpdate(m => math.max(m, n))
@@ -3197,9 +3197,10 @@ class StreamingSpec extends SparkSpec {
         s"${maxSeen.get()} holders were inside the lease at once")
       assert(done.get() === 8,
         s"only ${done.get()}/8 bodies ran — a poll error starved a waiter")
-      assert(ChaosPollLockBackend.threw.get() >= 1,
-        "chaos backend never actually threw — the test exercised nothing")
-    } finally conf.unset("graft.lease.backend")
+      assert(threw.get() >= 1,
+        "chaos filesystem never actually threw — the test exercised " +
+          "nothing")
+    }
   }
 
   test("compactors heal a crashed previous compaction before deciding " +
@@ -3593,19 +3594,22 @@ class StreamingSpec extends SparkSpec {
     // a planted non-lease finding the pass must still return: a stale
     // swap backup beside the store
     new java.io.File(s"$tmp/.store.stats.old").mkdirs()
-    conf.set("graft.lease.backend",
-      classOf[ThrowingAuditLockBackend].getName)
-    try {
-      val f = Streaming.fsckStore(spark, store).collect()
+    // every read of the lock throws IOException — the common outage
+    // shape (hadoop-aws wraps AWS errors in it)
+    FaultyLocalFs.withScheme(conf, "throwaudit") {
+      case (_, p) if p.getName.endsWith(".lock") =>
+        throw new java.io.IOException("synthetic persistent SDK outage")
+    } {
+      val f = Streaming.fsckStore(spark, s"throwaudit://$store").collect()
         .map(r => (r.getString(0), r.getString(2), r.getString(3)))
       val lease = f.filter(_._1 == "lease")
       assert(lease.length === 1 && lease(0)._2 === "warn" &&
-        lease(0)._3.contains("ThrowingAuditLockBackend") &&
+        lease(0)._3.contains("synthetic persistent SDK outage") &&
         lease(0)._3.contains("UNKNOWN"),
         s"throwing backend not degraded to a named warn: ${f.toSeq}")
       assert(f.exists(x => x._1 == "swap" && x._2 == "warn"),
         s"the non-lease finding was lost to the backend error: ${f.toSeq}")
-    } finally conf.unset("graft.lease.backend")
+    }
   }
 
   test("export shard sizing self-calibrates: the derived count tracks " +
@@ -3883,171 +3887,4 @@ class StreamingSpec extends SparkSpec {
       e.getMessage.contains("fsckStore"),
       s"torn registry must surface as a named error: ${e.getMessage}")
   }
-}
-
-/** A local-disk-backed FileSystem that REPORTS scheme `s3a` — the
-  * lease capability probe must reject it on the scheme alone, before
-  * any IO; with the explicit override it behaves like a real (local)
-  * filesystem so the fallback path can be driven end to end. */
-class FlatObjectStoreFs
-    extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("s3a:///")
-  override def getScheme: String = "s3a"
-}
-
-/** A [[graft.streaming.LockBackend]] that counts its invocations —
-  * proves `graft.lease.backend` is resolved, skips the probe, and is
-  * actually driven for acquire/release. Locks on local disk via the
-  * default trait mechanics plus a plain create. */
-class CountingLockBackend extends graft.streaming.LockBackend {
-  override def tryAcquire(fs: org.apache.hadoop.fs.FileSystem,
-      lock: HPath): Option[String] = {
-    CountingLockBackend.acquires.incrementAndGet()
-    val token = java.util.UUID.randomUUID().toString
-    try {
-      val out = fs.create(lock, false)
-      try out.write(token.getBytes("UTF-8")) finally out.close()
-      Some(token)
-    } catch { case _: java.io.IOException => None }
-  }
-  override def release(fs: org.apache.hadoop.fs.FileSystem,
-      lock: HPath, token: String): Unit = {
-    CountingLockBackend.releases.incrementAndGet()
-    super.release(fs, lock, token)
-  }
-}
-
-object CountingLockBackend {
-  val acquires = new java.util.concurrent.atomic.AtomicInteger(0)
-  val releases = new java.util.concurrent.atomic.AtomicInteger(0)
-  def reset(): Unit = { acquires.set(0); releases.set(0) }
-}
-
-/** A [[graft.streaming.LockBackend]] whose acquire poll THROWS an
-  * SDK-shaped RuntimeException for the first N calls, then grants via
-  * a plain local create — drives withStoreLock's poll-resilience
-  * contract (a throwing poll is contention, not failure; a persistent
-  * outage fails loudly at the deadline). */
-class FlakyPollLockBackend extends graft.streaming.LockBackend {
-  override def tryAcquire(fs: org.apache.hadoop.fs.FileSystem,
-      lock: HPath): Option[String] = {
-    FlakyPollLockBackend.acquires.incrementAndGet()
-    if (FlakyPollLockBackend.remaining.getAndDecrement() > 0) {
-      FlakyPollLockBackend.threw.incrementAndGet()
-      throw new RuntimeException("synthetic store outage")
-    }
-    val token = java.util.UUID.randomUUID().toString
-    try {
-      val out = fs.create(lock, false)
-      try out.write(token.getBytes("UTF-8")) finally out.close()
-      Some(token)
-    } catch { case _: java.io.IOException => None }
-  }
-}
-
-object FlakyPollLockBackend {
-  val acquires = new java.util.concurrent.atomic.AtomicInteger(0)
-  val threw = new java.util.concurrent.atomic.AtomicInteger(0)
-  val remaining = new java.util.concurrent.atomic.AtomicInteger(0)
-  def reset(failures: Int): Unit = {
-    acquires.set(0); threw.set(0); remaining.set(failures)
-  }
-}
-
-/** A [[graft.streaming.LockBackend]] whose acquire poll throws every
-  * 3rd call and whose mtime poll throws every 5th — deterministic
-  * chaos for the mutual-exclusion-under-poll-errors test. Grants and
-  * releases are the plain local mechanics in between. */
-class ChaosPollLockBackend extends graft.streaming.LockBackend {
-  override def tryAcquire(fs: org.apache.hadoop.fs.FileSystem,
-      lock: HPath): Option[String] = {
-    if (ChaosPollLockBackend.acquirePolls.incrementAndGet() % 3 == 0) {
-      ChaosPollLockBackend.threw.incrementAndGet()
-      throw new RuntimeException("chaos: acquire poll failed")
-    }
-    // O_EXCL create: 8 threads race THIS grant path, and hadoop's
-    // local create(overwrite = false) is check-then-create — a racy
-    // grant here would make the exclusion assertion flaky for the
-    // test backend's own reasons, not the lease layer's
-    val token = java.util.UUID.randomUUID().toString
-    try {
-      val f = new java.io.File(fs.makeQualified(lock).toUri.getPath)
-      Option(f.getParentFile)
-        .foreach(p => java.nio.file.Files.createDirectories(p.toPath))
-      java.nio.file.Files.write(f.toPath, token.getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      Some(token)
-    } catch { case _: java.io.IOException => None }
-  }
-  override def mtime(fs: org.apache.hadoop.fs.FileSystem,
-      lock: HPath): Option[Long] = {
-    if (ChaosPollLockBackend.mtimePolls.incrementAndGet() % 5 == 0) {
-      ChaosPollLockBackend.threw.incrementAndGet()
-      throw new RuntimeException("chaos: mtime poll failed")
-    }
-    super.mtime(fs, lock)
-  }
-}
-
-object ChaosPollLockBackend {
-  val acquirePolls = new java.util.concurrent.atomic.AtomicInteger(0)
-  val mtimePolls = new java.util.concurrent.atomic.AtomicInteger(0)
-  val threw = new java.util.concurrent.atomic.AtomicInteger(0)
-  def reset(): Unit = {
-    acquirePolls.set(0); mtimePolls.set(0); threw.set(0)
-  }
-}
-
-/** A [[graft.streaming.LockBackend]] whose breakStale throws for the
-  * first N calls, then delegates — drives the stale-branch poll
-  * resilience (a throwing break is retried; a persistent one fails
-  * at the deadline naming the error). */
-class FlakyBreakLockBackend extends graft.streaming.LockBackend {
-  override def tryAcquire(fs: org.apache.hadoop.fs.FileSystem,
-      lock: HPath): Option[String] = {
-    val token = java.util.UUID.randomUUID().toString
-    try {
-      val f = new java.io.File(fs.makeQualified(lock).toUri.getPath)
-      Option(f.getParentFile)
-        .foreach(p => java.nio.file.Files.createDirectories(p.toPath))
-      java.nio.file.Files.write(f.toPath, token.getBytes("UTF-8"),
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      Some(token)
-    } catch { case _: java.io.IOException => None }
-  }
-  override def breakStale(fs: org.apache.hadoop.fs.FileSystem,
-      lock: HPath, m: Long): Unit = {
-    FlakyBreakLockBackend.breaks.incrementAndGet()
-    if (FlakyBreakLockBackend.remaining.getAndDecrement() > 0) {
-      FlakyBreakLockBackend.threw.incrementAndGet()
-      throw new RuntimeException("synthetic break outage")
-    }
-    super.breakStale(fs, lock, m)
-  }
-}
-
-object FlakyBreakLockBackend {
-  val breaks = new java.util.concurrent.atomic.AtomicInteger(0)
-  val threw = new java.util.concurrent.atomic.AtomicInteger(0)
-  val remaining = new java.util.concurrent.atomic.AtomicInteger(0)
-  def reset(failures: Int): Unit = {
-    breaks.set(0); threw.set(0); remaining.set(failures)
-  }
-}
-
-/** A backend whose every audit-side read throws IOException — the
-  * COMMON cloud-outage shape (hadoop-aws wraps AWS errors in it; the
-  * repo's S3 template client throws it on non-2xx) — fsck must
-  * degrade its lease finding to a named warn, not abort the pass or
-  * silently swallow the error. */
-class ThrowingAuditLockBackend extends graft.streaming.LockBackend {
-  override def tryAcquire(fs: org.apache.hadoop.fs.FileSystem,
-      lock: HPath): Option[String] =
-    throw new java.io.IOException("synthetic persistent SDK outage")
-  override def mtime(fs: org.apache.hadoop.fs.FileSystem,
-      lock: HPath): Option[Long] =
-    throw new java.io.IOException("synthetic persistent SDK outage")
-  override def readToken(fs: org.apache.hadoop.fs.FileSystem,
-      lock: HPath): Option[String] =
-    throw new java.io.IOException("synthetic persistent SDK outage")
 }

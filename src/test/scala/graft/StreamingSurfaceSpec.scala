@@ -27,6 +27,12 @@ class StreamingSurfaceSpec extends AnyFunSuite {
   private def code(src: String): String =
     literalOrComment.replaceAllIn(src, _ => "")
 
+  /** Source text with only the comments blanked out. */
+  private def codeAndLiterals(src: String): String =
+    literalOrComment.replaceAllIn(src, m =>
+      if (m.matched.startsWith("/")) ""
+      else scala.util.matching.Regex.quoteReplacement(m.matched))
+
   private def scalaFiles(dir: String): Seq[java.nio.file.Path] = {
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
     try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
@@ -60,5 +66,22 @@ class StreamingSurfaceSpec extends AnyFunSuite {
 
   test("every named lifecycle entry point is still a public def") {
     assert((lifecycle -- publicDefs).toSeq.sorted === Nil)
+  }
+
+  test("the store lease reads no graft.lease.* key but " +
+      "assumeAtomicCreate, and streaming/ loads no class by name") {
+    val main = scalaFiles("src/main/scala")
+      .map(p => p -> codeAndLiterals(read(p)))
+    val otherKeys = for {
+      (p, src) <- main
+      m <- "graft\\.lease\\.(?!assumeAtomicCreate\\b)[\\w.]*".r
+        .findAllMatchIn(src)
+    } yield s"${p.getFileName}: ${m.matched}"
+    assert(otherKeys === Nil)
+    val forName = main.collect {
+      case (p, src) if p.toString.contains("/streaming/") &&
+          src.contains("Class.forName") => p.getFileName.toString
+    }
+    assert(forName === Nil)
   }
 }
