@@ -1276,58 +1276,63 @@ object Dedup {
     * physical plan). Existence semantics throughout: a boilerplate
     * bucket with millions of store rows collapses map-side to one
     * surviving band key, never a pair expansion. The in-batch pass
-    * joins the batch's own band rows the same way. */
+    * reads the same grouping of the batch's band keys, each with its
+    * lowest id ([[suppressedProbed]]). */
   def admitAgainstIndex(batch: DataFrame, textCol: String, idCol: String,
                         index: DataFrame, numHashes: Int = 8,
                         bands: Int = 4, shingleSize: Int = 3): DataFrame = {
-    // checkpointed: the banded signatures feed three joins below plus
-    // the final semi-join — without materialization each branch would
-    // re-run the dominant row-local shingle hashing over the batch
+    // checkpointed: the banded signatures feed the key aggregation and
+    // the suppression join below — without materialization each branch
+    // would re-run the dominant row-local shingle hashing over the batch
     val probe = minhashIndex(Scale.widen(batch), textCol, idCol,
       numHashes, bands, shingleSize).localCheckpoint()
     admitProbed(batch, idCol, probe, index)
   }
 
   /** [[admitAgainstIndex]] with the batch's band rows already computed
-    * (and materialized) by the caller — the streaming sink derives the
-    * touched-bucket prune set from the same probe frame, so the
-    * signature work runs once per micro-batch. */
+    * (and materialized) by the caller — the streaming sink also writes
+    * the admitted docs' rows of the same probe frame to its index, so
+    * the signature work runs once per micro-batch. */
   private[graft] def admitProbed(batch: DataFrame, idCol: String,
                                  probe: DataFrame,
-                                 index: DataFrame): DataFrame = {
-    // a doc is suppressed if ANY of its bands hits the store. Join
-    // order is chosen so the corpus-scale index is the STREAMED side
-    // of a broadcast join: broadcast the batch's distinct band keys,
-    // semi-join the index against them (output ≤ matching index rows,
-    // collapsed map-side by the distinct), then mark the batch docs
-    // whose bands survived. No Exchange ever touches the index.
-    val probeKeys = probe.select("band_idx", "band_hash").distinct()
-    val hitKeys = index
-      .join(broadcast(probeKeys), Seq("band_idx", "band_hash"), "left_semi")
-      .select("band_idx", "band_hash").distinct()
-    val hitByStore = probe
-      .join(broadcast(hitKeys), Seq("band_idx", "band_hash"), "left_semi")
-      .select(col("id")).distinct()
-    // in-batch: drop docs sharing a band bucket with a lower-id batch
-    // doc. Explicit aliases on both sides — resolving via dataset-id
-    // disambiguation on a self-joined checkpoint is one refactor away
-    // from a trivially-true predicate.
-    val later = probe.select(col("band_idx").as("bi_a"),
-      col("band_hash").as("bh_a"), col("id").as("id_a"))
-    val earlier = probe.select(col("band_idx").as("bi_b"),
-      col("band_hash").as("bh_b"), col("id").as("id_b"))
-    val dupInBatch = later.join(earlier,
-        col("bi_a") === col("bi_b") && col("bh_a") === col("bh_b") &&
-          col("id_a") > col("id_b"))
-      .select(col("id_a").as("id")).distinct()
-    // admission is batch MINUS suppressed (not probe minus suppressed):
-    // a NULL-text doc has no band rows at all — its minhash is
-    // undefined, it collides with nothing, and it is ADMITTED,
-    // matching the SQL semantics where its NULL band_hash never joins
-    val suppressed = hitByStore.unionByName(dupInBatch).distinct()
-      .withColumnRenamed("id", idCol)
-    batch.join(suppressed, Seq(idCol), "left_anti")
+                                 index: DataFrame): DataFrame =
+    dropSuppressed(batch, idCol, suppressedProbed(probe, index))
+
+  /** The ids (column `id`) of the `probe` docs [[admitAgainstIndex]]
+    * turns away: a doc is suppressed if ANY of its band keys is in the
+    * standing `index`, or is shared with a lower-id batch doc. One
+    * keyed pass: the batch's band keys are grouped once, each with its
+    * lowest id, and every later frame joins against that broadcast.
+    * Join order keeps the corpus-scale index the STREAMED side of a
+    * broadcast join: its semi-join against the batch keys collapses
+    * map-side (the distinct) before anything shuffles, so no Exchange
+    * ever touches the index, and a boilerplate key with millions of
+    * store rows survives as one hit. An id may repeat in the output. */
+  private[graft] def suppressedProbed(probe: DataFrame,
+                                      index: DataFrame): DataFrame = {
+    val key = Seq("band_idx", "band_hash")
+    val keyed = probe.groupBy(key.map(col): _*)
+      .agg(min(col("id")).as("__first_id"))
+    val hits = index
+      .join(broadcast(keyed.select(key.map(col): _*)), key, "left_semi")
+      .select(key.map(col): _*).distinct()
+      .withColumn("__hit", lit(true))
+    probe.join(broadcast(keyed), key)
+      .join(broadcast(hits), key, "left")
+      .where(col("id") > col("__first_id") || col("__hit").isNotNull)
+      .select(col("id"))
   }
+
+  /** `rows` without the ids in `suppressed` ([[suppressedProbed]]),
+    * broadcast into a left-anti join on `idCol`. Applied to the batch
+    * it is the admitted set; applied to the probe, the admitted docs'
+    * band rows. A NULL-text doc has no band rows, so it is never
+    * suppressed and the batch keeps it, matching the SQL semantics
+    * where its NULL band_hash never joins. */
+  private[graft] def dropSuppressed(rows: DataFrame, idCol: String,
+                                    suppressed: DataFrame): DataFrame =
+    rows.join(broadcast(suppressed.select(col("id").as(idCol))),
+      Seq(idCol), "left_anti")
 
   /** Bottom-k sketch of the distinct-token set per key: the k smallest
     * md5(token) digests, one fixed-size mergeable summary per corpus

@@ -149,7 +149,7 @@ private[graft] object LockBackend {
         restoreOrPark(fs, claim, lock).foreach { orphan =>
           throw new IllegalStateException(
             s"store lease break claimed a LIVE lock $lock and could " +
-              s"not restore it (path stayed occupied); parked it at " +
+              s"not restore it (the path was occupied); parked it at " +
               s"$orphan — resolve by hand before resuming")
         }
     }
@@ -235,18 +235,36 @@ private[graft] object LockBackend {
     s"$who/${java.util.UUID.randomUUID()}"
   }
 
-  /** Restore a claimed/captured file back to the lock path, retrying
-    * while a competitor transiently occupies it; on persistent
-    * failure park the file at a `.orphan.<uuid>` sibling (the live
-    * holder's lease evidence for a human to adjudicate — NEVER
-    * delete it) and return the orphan path. `None` = restored. */
+  /** Restore a claimed/captured file back to the lock path without
+    * ever replacing a lock that is there: a newcomer may have taken
+    * the vacated path, and overwriting its lock would grant the lease
+    * twice. If the path is occupied, park the file at a
+    * `.orphan.<uuid>` sibling (the live holder's lease evidence for a
+    * human to adjudicate — NEVER delete it) and return the orphan
+    * path. `None` = restored.
+    *
+    * `rename` cannot restore safely everywhere: `RawLocalFileSystem`'s
+    * replaces its destination. On local disk the restore is a hard
+    * link to the lock path, which the kernel refuses if the path
+    * exists (like [[tryAcquire]]'s `O_EXCL` create), and the claim is
+    * removed after. Elsewhere it is a rename after an occupancy check;
+    * HDFS's rename refuses an existing destination by itself. */
   private def restoreOrPark(fs: FileSystem, claim: HPath,
       lock: HPath): Option[HPath] = {
-    val restoreDeadline = System.currentTimeMillis() + 10000L
-    var restored = fs.rename(claim, lock)
-    while (!restored && System.currentTimeMillis() < restoreDeadline) {
-      Thread.sleep(25)
-      restored = fs.rename(claim, lock)
+    val restored = fs match {
+      case _: LocalFileSystem | _: RawLocalFileSystem =>
+        val linked =
+          try {
+            java.nio.file.Files.createLink(localFile(fs, lock).toPath,
+              localFile(fs, claim).toPath)
+            true
+          } catch { case _: java.io.IOException => false }
+        if (linked) fs.delete(claim, false)
+        linked
+      case _ =>
+        !fs.exists(lock) &&
+          (try fs.rename(claim, lock)
+          catch { case _: java.io.IOException => false })
     }
     if (restored) None
     else {

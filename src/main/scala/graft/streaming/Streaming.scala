@@ -60,16 +60,39 @@ private[graft] final class SwapWait(waitMs: Long) {
 object Streaming {
 
   /** The Append-mode micro-batch writer every store sink shares: each
-    * non-empty batch goes to `f` with its batch id. No-data batches
-    * (watermark advancement) must not touch the store. */
+    * batch goes to `f` with its batch id. No-data batches (watermark
+    * advancement) must not touch the store, so `f` tests emptiness:
+    * the curation sinks read it from their quality gate's checkpoint
+    * ([[curationIngestGated]]) rather than spend a job on it here. */
   private def batchSink(input: DataFrame, checkpoint: String)(
       f: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     input.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) f(batch, batchId)
+        f(batch, batchId)
       }
+
+  /** Runs `f` with `name` as the description of the Spark jobs it
+    * starts, and restores the caller's description after: each step of
+    * a micro-batch names its jobs to listeners and the UI. */
+  private def inStep[T](spark: SparkSession, name: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try f finally sc.setJobDescription(caller)
+  }
+
+  /** `df` local-checkpointed, with the number of its rows where
+    * `counted` holds, observed by the checkpoint's own job: the
+    * emptiness tests of a micro-batch cost no action of their own. */
+  private def checkpointCounting(df: DataFrame,
+      counted: Column = lit(true)): (DataFrame, Long) = {
+    val rows = org.apache.spark.sql.Observation()
+    val cp = df.observe(rows, count(when(counted, 1)).as("n"))
+      .localCheckpoint()
+    (cp, rows.get("n").asInstanceOf[Long])
+  }
 
   private type HPath = org.apache.hadoop.fs.Path
 
@@ -118,20 +141,22 @@ object Streaming {
       return // checkpoint replay of a merged batch
     }
     deltas.foreach { case (part, delta) =>
-      // a part's merge is additive (mergeAggDelta) unless the caller
-      // supplies a custom fold — e.g. the unit guards of the `meta` and
-      // `units` parts, which check the prior before merging
+      // the prior is read with the delta's declared schema: each part
+      // was written by this merge from a delta of the same shape, and
+      // inferring it from the footers would cost a Spark job per part
       val prior =
         if (fs.exists(new HPath(dir, part.name)))
-          Some(spark.read.parquet(s"$statsDir/${part.name}"))
+          Some(spark.read.schema(delta.schema)
+            .parquet(s"$statsDir/${part.name}"))
         else None
+      // a part's merge sums its measures per key unless the caller
+      // supplies a custom fold — e.g. the unit guards of the `meta` and
+      // `units` parts, which check the prior before merging
+      val sums = part.measures.map(m => sum(col(m)).as(m))
       val merged = customMerge.get(part.name) match {
         case Some(f) => f(prior, delta)
-        case None => prior match {
-          case Some(p) => graft.ops.Warehouse.mergeAggDelta(
-            p, delta, part.keys, part.measures)
-          case None => delta
-        }
+        case None => prior.fold(delta)(p => p.unionByName(delta)
+          .groupBy(part.keys.map(col): _*).agg(sums.head, sums.tail: _*))
       }
       merged.write.parquet(s"$tmp/${part.name}")
     }
@@ -179,7 +204,8 @@ object Streaming {
                          statsDir: String, checkpoint: String,
                          n: Int = 8) =
     batchSink(docs, checkpoint) { (batch, batchId) =>
-      mergeBenchmarkNgramBatch(batch, textCol, statsDir, batchId, n)
+      if (!batch.isEmpty)
+        mergeBenchmarkNgramBatch(batch, textCol, statsDir, batchId, n)
     }
 
   private[graft] def mergeBenchmarkNgramBatch(batch: DataFrame,
@@ -220,13 +246,17 @@ object Streaming {
         },
         "ngrams" -> { (prior, delta) =>
           prior match {
-            case Some(p0) =>
-              // a pre-watermark store carries no first_batch: stamp 0
+            case Some(_) =>
+              // read with its own footers, not the delta's schema: an
+              // older store's layout differs. A pre-watermark store
+              // carries no first_batch: stamp 0
               // ("registered since forever") so the first sweep over
               // an upgraded store still scans every gram. A pre-rename
               // store carries the count as n_docs: adopt it as
               // n_batches (it always WAS the batch count — see the
               // sink's comment)
+              val p0 = batch.sparkSession.read
+                .parquet(s"$statsDir/ngrams")
               val p1 = if (p0.columns.contains("n_batches")) p0
                 else p0.withColumnRenamed("n_docs", "n_batches")
               val p = if (p1.columns.contains("first_batch")) p1
@@ -351,26 +381,45 @@ object Streaming {
     // remove it so the standing read only sees complete prior batches
     fs.delete(new HPath(dir, s"batch=$batchId"), true)
     // band the batch ONCE; the same frame feeds the admission joins
-    // and (filtered to admitted ids) the index write
-    val probe = graft.ops.Dedup.minhashIndex(batch, textCol, idCol,
-      numHashes, bands, shingleSize).localCheckpoint()
-    val standing = dedupIndexScan(spark, indexDir, Some(DedupIndexKeySchema))
-      .getOrElse(probe.limit(0)).select("band_idx", "band_hash")
-    val admitted = graft.ops.Dedup.admitProbed(batch, idCol, probe, standing)
-      .localCheckpoint()
-    // guard on the WRITE FRAME itself: a batch whose admitted rows
-    // carry no band rows (all-null-text, or only band-less docs
-    // admitted) must write NOTHING — the skip is deterministic, so a
-    // replayed batch skips identically, and no batch= dir without
-    // data ever reaches a reader that infers the index schema
-    val bandRows = probe.join(
-        admitted.select(col(idCol).as("id")), Seq("id"), "left_semi")
-      .withColumn("bh", dedupIndexBucket(col("band_hash")))
-      .localCheckpoint()
-    if (!bandRows.isEmpty)
-      bandRows.sortWithinPartitions("bh", "band_hash")
-        .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-    admitted
+    // and (less the suppressed ids) the index write
+    val probe = inStep(spark, "probe") {
+      graft.ops.Dedup.minhashIndex(batch, textCol, idCol, numHashes, bands,
+        shingleSize).localCheckpoint()
+    }
+    try {
+      val standing =
+        dedupIndexScan(spark, indexDir, Some(DedupIndexKeySchema))
+          .getOrElse(probe.limit(0)).select("band_idx", "band_hash")
+      // the suppressed ids are decided once and drop out of both the
+      // batch (the admitted payload) and the probe (the index rows)
+      val suppressed = inStep(spark, "admit") {
+        graft.ops.Dedup.suppressedProbed(probe, standing).localCheckpoint()
+      }
+      try {
+        // a doc has band rows iff its text is not null, so the admitted
+        // checkpoint counts the docs that bring rows to the index
+        val (admitted, indexedDocs) = inStep(spark, "admit") {
+          checkpointCounting(
+            graft.ops.Dedup.dropSuppressed(batch, idCol, suppressed),
+            col(textCol).isNotNull)
+        }
+        // a batch whose admitted rows carry no band rows (all-null-text,
+        // or only band-less docs admitted) must write NOTHING — the skip
+        // is deterministic, so a replayed batch skips identically, and no
+        // batch= dir without data ever reaches a reader that infers the
+        // index schema
+        if (indexedDocs > 0L) inStep(spark, "index write") {
+          graft.ops.Dedup.dropSuppressed(probe, "id", suppressed)
+            // one file per batch partition: the probe is widened for
+            // the signature work, not for the index layout
+            .coalesce(batch.rdd.getNumPartitions)
+            .withColumn("bh", dedupIndexBucket(col("band_hash")))
+            .sortWithinPartitions("bh", "band_hash")
+            .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
+        }
+        admitted
+      } finally graft.ops.Scale.releaseLocalCheckpoint(suppressed)
+    } finally graft.ops.Scale.releaseLocalCheckpoint(probe)
   }
 
   /** The columns the admission probe reads of a MinHash dedup index:
@@ -630,8 +679,10 @@ object Streaming {
     * standing state), and the stats merge is guarded by the `_batch`
     * high-water mark — a replayed id rewrites identical files and
     * skips the already-folded stats, whatever point the crash hit.
-    * Per-batch cost: O(batch + touched index buckets + store size);
-    * the corpus is never rescanned. */
+    * Per-batch cost: the writes are O(batch); the reads are the
+    * standing index's two band-key columns, streamed through a
+    * broadcast join, and the stats store. The corpus is never
+    * rescanned. */
   def curationIngestSink(docs: DataFrame, textCol: String, idCol: String,
                          rootDir: String, checkpoint: String,
                          minQuality: Double,
@@ -849,30 +900,40 @@ object Streaming {
       lenLo: Double, lenHi: Double, benchmarkDir: Option[String],
       deconMinHits: Long)(admit: DataFrame => DataFrame): Unit = {
     requireCorpusSchema(batch, rootDir)
-    val qualGated = batch.where(
-      graft.ops.Text.qualityScore(col(textCol)) >= minQuality)
-      .localCheckpoint()
-    // a fully quality-gated-out batch performs NO effects: writing an
-    // empty index/ or corpus/ batch= dir would break schema inference
-    // on the next batch's standing reads (a replay re-gates to the
-    // same empty set, so the skip is deterministic; the stats
-    // high-water mark advances with the next non-empty batch)
-    if (qualGated.isEmpty) return
-    // decontamination rides between the quality gate and the dedup
-    // admission: the standing index must never admit (and so protect)
-    // a document the registry says is benchmark-contaminated. The
-    // pinned decision keeps the skip below deterministic under replay
-    val gated = benchmarkDir.fold(qualGated)(bd =>
-      deconGatePinned(qualGated, textCol, idCol, rootDir, batchId,
-        bd, deconMinHits).localCheckpoint())
-    // without the decon gate `gated` is `qualGated`, known non-empty
-    if (benchmarkDir.nonEmpty && gated.isEmpty) return
-    withStoreLock(batch.sparkSession,
-        Seq(s"$rootDir/index", s"$rootDir/corpus")) {
-      healCompactRoot(batch.sparkSession, s"$rootDir/index")
-      healCurationCorpusRoot(batch.sparkSession, s"$rootDir/corpus")
-      ingestTail(admit(gated), textCol, rootDir, batchId, lenLo, lenHi)
+    val spark = batch.sparkSession
+    // every checkpoint of the batch is released before this returns:
+    // the next batch must not find this one's blocks pinned
+    val (qualGated, qualRows) = inStep(spark, "gate") {
+      checkpointCounting(batch.where(
+        graft.ops.Text.qualityScore(col(textCol)) >= minQuality))
     }
+    try {
+      // a fully quality-gated-out (or empty) batch performs NO effects:
+      // writing an empty index/ or corpus/ batch= dir would break schema
+      // inference on the next batch's standing reads (a replay re-gates
+      // to the same empty set, so the skip is deterministic; the stats
+      // high-water mark advances with the next non-empty batch)
+      if (qualRows == 0L) return
+      // decontamination rides between the quality gate and the dedup
+      // admission: the standing index must never admit (and so protect)
+      // a document the registry says is benchmark-contaminated. The
+      // pinned decision keeps the skip below deterministic under replay
+      val (gated, gatedRows) = benchmarkDir.fold((qualGated, qualRows))(bd =>
+        inStep(spark, "gate") {
+          checkpointCounting(deconGatePinned(qualGated, textCol, idCol,
+            rootDir, batchId, bd, deconMinHits))
+        })
+      try {
+        if (gatedRows == 0L) return
+        withStoreLock(spark, Seq(s"$rootDir/index", s"$rootDir/corpus")) {
+          healCompactRoot(spark, s"$rootDir/index")
+          healCurationCorpusRoot(spark, s"$rootDir/corpus")
+          val admitted = admit(gated)
+          try ingestTail(admitted, textCol, rootDir, batchId, lenLo, lenHi)
+          finally graft.ops.Scale.releaseLocalCheckpoint(admitted)
+        }
+      } finally graft.ops.Scale.releaseLocalCheckpoint(gated)
+    } finally graft.ops.Scale.releaseLocalCheckpoint(qualGated)
   }
 
   /** Pinned per-batch decontamination gate for the curation-ingest
@@ -3034,40 +3095,52 @@ object Streaming {
   private[graft] def ingestTail(admitted: DataFrame, textCol: String,
       rootDir: String, batchId: Long, lenLo: Double,
       lenHi: Double): Unit = {
-    admitted.write.mode("overwrite")
-      .parquet(s"$rootDir/corpus/batch=$batchId")
-    mergeStoreBatch(s"$rootDir/stats", batchId, Seq(
-      StorePart("hist", Seq("word"), Seq("cnt")) ->
-        graft.ops.Bpe.wordHistogram(admitted, textCol),
-      StorePart("lens", Seq("bucket"), Seq("n")) ->
-        admitted.groupBy(graft.ops.Profiling.psiBucket(
-          length(col(textCol)).cast("double"), lenLo, lenHi, 10)
-          .as("bucket"))
-          .agg(count(lit(1)).as("n")),
-      // the length-bucket bounds are a UNIT: an ingest reconfigured
-      // mid-stream would silently mix bucket scales into the
-      // accumulated counts, and the sweep's stats-delta pin needs the
-      // bounds to bucket tombstoned docs the same way. A pre-unit store
-      // stamps them at its first post-upgrade merge
-      StorePart("units", Seq("len_lo", "len_hi"), Seq("n_batches")) ->
-        admitted.sparkSession.range(1)
-          .select(lit(lenLo).as("len_lo"), lit(lenHi).as("len_hi"),
-            lit(1L).as("n_batches"))),
-      customMerge = Map("units" -> { (prior, delta) =>
-        prior.foreach { p =>
-          val stored = p.select("len_lo", "len_hi").collect()
-            .map(r => (r.getDouble(0), r.getDouble(1))).toSeq
-          require(stored == Seq((lenLo, lenHi)),
-            s"curation stats store at $rootDir/stats was built with " +
-              s"length-bucket bounds ${stored.mkString(",")} but this " +
-              s"ingest is configured with ($lenLo,$lenHi) — the " +
-              "bucket units would silently diverge; match the bounds " +
-              "or rebuild the stats store")
-        }
-        prior.map(p => graft.ops.Warehouse.mergeAggDelta(
-            p, delta, Seq("len_lo", "len_hi"), Seq("n_batches")))
-          .getOrElse(delta)
-      }))
+    val spark = admitted.sparkSession
+    inStep(spark, "payload") {
+      admitted.write.mode("overwrite")
+        .parquet(s"$rootDir/corpus/batch=$batchId")
+    }
+    // the one `units` row, built on the driver
+    def units(nBatches: Long): DataFrame = {
+      import org.apache.spark.sql.types._
+      spark.createDataFrame(java.util.List.of(
+          Row(lenLo, lenHi, nBatches)),
+        StructType(Seq(StructField("len_lo", DoubleType),
+          StructField("len_hi", DoubleType),
+          StructField("n_batches", LongType))))
+    }
+    inStep(spark, "stats") {
+      mergeStoreBatch(s"$rootDir/stats", batchId, Seq(
+        StorePart("hist", Seq("word"), Seq("cnt")) ->
+          graft.ops.Bpe.wordHistogram(admitted, textCol),
+        StorePart("lens", Seq("bucket"), Seq("n")) ->
+          admitted.groupBy(graft.ops.Profiling.psiBucket(
+            length(col(textCol)).cast("double"), lenLo, lenHi, 10)
+            .as("bucket"))
+            .agg(count(lit(1)).as("n")),
+        // the length-bucket bounds are a UNIT: an ingest reconfigured
+        // mid-stream would silently mix bucket scales into the
+        // accumulated counts, and the sweep's stats-delta pin needs the
+        // bounds to bucket tombstoned docs the same way. A pre-unit
+        // store stamps them at its first post-upgrade merge
+        StorePart("units", Seq("len_lo", "len_hi"), Seq("n_batches")) ->
+          units(1L)),
+        customMerge = Map("units" -> { (prior, _) =>
+          // the guard's collect also yields the prior's batch count, so
+          // the merged row is built on the driver too
+          val stored = prior.map(_.collect().toSeq)
+          stored.foreach { rows =>
+            val bounds = rows.map(r => (r.getDouble(0), r.getDouble(1)))
+            require(bounds == Seq((lenLo, lenHi)),
+              s"curation stats store at $rootDir/stats was built with " +
+                s"length-bucket bounds ${bounds.mkString(",")} but this " +
+                s"ingest is configured with ($lenLo,$lenHi) — the " +
+                "bucket units would silently diverge; match the bounds " +
+                "or rebuild the stats store")
+          }
+          units(1L + stored.fold(0L)(_.head.getLong(2)))
+        }))
+    }
   }
 
   /** The length-bucket bounds stamped into a curation stats store's

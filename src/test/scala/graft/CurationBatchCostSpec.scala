@@ -6,8 +6,8 @@ import graft.streaming.Streaming
 /** Keeps the curation micro-batch O(batch) in files and Spark jobs: a
   * batch on top of a standing store writes a few index files however
   * many band-hash buckets it touches, lists no directory tree in a
-  * Spark job, and starts no more jobs than it did when this spec was
-  * written. */
+  * Spark job, starts no more jobs than it did when this spec was
+  * last measured, and releases every checkpoint it took. */
 class CurationBatchCostSpec extends SparkSpec {
   import spark.implicits._
 
@@ -23,7 +23,13 @@ class CurationBatchCostSpec extends SparkSpec {
       numHashes = 8, bands = 4, shingleSize = 3)
     ingest(0)
     ingest(1)
+    def stored(): Set[Int] =
+      spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val before = stored()
     val jobs = jobsStartedBy(ingest(2))
+    // no RDD the batch stored outlives it
+    assert(stored() -- before === Set.empty,
+      "the batch left its checkpoints pinned")
     val parts = new java.io.File(s"$root/index/batch=2").listFiles()
       .filter(_.getName.endsWith(".parquet"))
     val buckets = Streaming.readDedupIndex(spark, s"$root/index")
@@ -33,7 +39,9 @@ class CurationBatchCostSpec extends SparkSpec {
       s"${parts.length} index files for $buckets buckets")
     assert(jobs.filter(_.startsWith("Listing leaf files")) === Nil)
     // the count measured in this session shape (local[2], 2 shuffle
-    // partitions)
-    assert(jobs.size <= 30, s"${jobs.size} jobs")
+    // partitions); each step of the batch names its jobs
+    val perStep = jobs.groupBy(identity).view.mapValues(_.size).toSeq
+      .sortBy(_._1).map { case (s, n) => s"$s: $n" }.mkString(", ")
+    assert(jobs.size <= 22, s"${jobs.size} jobs ($perStep)")
   }
 }

@@ -203,6 +203,82 @@ class HadoopLockBackendContractSpec extends SparkSpec {
     }
   }
 
+  /** The race a lease break can lose twice: a competing breaker
+    * re-grants the lease between this break's staleness observation
+    * and its claim rename, so the claim captures a FRESH lock and must
+    * restore it; a newcomer then takes the vacated lock path before
+    * the restore. The filesystem under test calls [[beforeClaim]] just
+    * before the claim rename and [[afterClaim]] just after it. */
+  private final class BreakRace(lock: HPath) {
+    private val file = java.nio.file.Paths.get(lock.toUri.getPath)
+    private var observed = 0L
+    private var claimed, joined = false
+    def beforeClaim(): Unit = if (!claimed) {
+      claimed = true
+      java.nio.file.Files.write(file, "fresh-token".getBytes("UTF-8"))
+      java.nio.file.Files.setLastModifiedTime(file,
+        java.nio.file.attribute.FileTime.fromMillis(observed + 5000L))
+    }
+    def afterClaim(): Unit = if (claimed && !joined) {
+      joined = true
+      java.nio.file.Files.write(file, "newcomer-token".getBytes("UTF-8"),
+        java.nio.file.StandardOpenOption.CREATE_NEW)
+    }
+
+    /** Breaks the observed-stale lock through `fs`: the restore must
+      * not replace the newcomer's lock, so it parks the claim and the
+      * break fails loudly. */
+    def run(fs: FileSystem): Unit = {
+      java.nio.file.Files.createDirectories(file.getParent)
+      java.nio.file.Files.write(file, "stale-token".getBytes("UTF-8"))
+      observed = LockBackend.mtime(fs, lock).get
+      val e = intercept[IllegalStateException] {
+        LockBackend.breakStale(fs, lock, observed)
+      }
+      assert(joined, "the newcomer never took the vacated path")
+      assert(e.getMessage.contains("parked"), e.getMessage)
+      assert(LockBackend.readToken(fs, lock) === Some("newcomer-token"),
+        "the restore replaced the newcomer's lock")
+      val orphans = file.getParent.toFile.listFiles()
+        .filter(_.getName.startsWith(".store.lock.orphan."))
+      assert(orphans.length === 1, "the claimed live lock was not parked")
+      assert(new String(java.nio.file.Files.readAllBytes(
+        orphans.head.toPath), "UTF-8") === "fresh-token")
+    }
+  }
+
+  private def isClaim(p: HPath): Boolean = p.getName.contains(".break.")
+
+  test("a break that claims a live lock never restores it over a " +
+      "newcomer's lock, on filesystems whose rename replaces the " +
+      "destination") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val tmp = java.nio.file.Files
+      .createTempDirectory("graft-restore").toString
+    // local disk, where the restore is a hard link
+    val local = new BreakRace(new HPath(s"file://$tmp/local/.store.lock"))
+    val raw = new org.apache.hadoop.fs.RawLocalFileSystem {
+      override def rename(src: HPath, dst: HPath): Boolean = {
+        if (isClaim(dst)) local.beforeClaim()
+        val renamed = super.rename(src, dst)
+        if (isClaim(dst)) local.afterClaim()
+        renamed
+      }
+    }
+    raw.initialize(java.net.URI.create("file:///"), conf)
+    local.run(raw)
+    // an unknown scheme, where the restore checks the path first
+    val lock = new HPath(s"restore://$tmp/other/.store.lock")
+    val other = new BreakRace(lock)
+    FaultyLocalFs.withScheme(conf, "restore") {
+      case ("rename", dst) if isClaim(dst) => other.beforeClaim()
+      // breakStale's first call after the claim rename reads its mtime
+      case ("getFileStatus", p) if isClaim(p) => other.afterClaim()
+    } {
+      other.run(lock.getFileSystem(conf))
+    }
+  }
+
   test("on a filesystem with no known atomic create, a grant needs " +
       "two spaced read-backs of the winner's token: a competing write " +
       "that lands during the settle is refused") {
