@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.GraftListenerBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -10,7 +11,8 @@ import scala.jdk.CollectionConverters._
 /** Plan-audit utility (dev tool; not part of the Verify/Bench contract): for
   * each listed query, the formatted physical plan, then per run the
   * DataFrame construction time, the execution time (`toRdd.count` of
-  * the planned query, like Bench) and the Spark jobs it ran.
+  * the planned query, like Bench), the Spark jobs it ran and the
+  * classes Spark's code generator compiled for it.
   *
   * Usage: runMain graft.Explain <q1,q2,...> [sfDir] [repeat] [outDir] [suffix]
   *
@@ -20,9 +22,12 @@ import scala.jdk.CollectionConverters._
 object Explain {
 
   /** One timed run: `jobs` holds (job id, wall seconds) per Spark job
-    * the run submitted, construction included. */
+    * the run submitted, construction included; `compiles` counts the
+    * generated classes compiled during the run (a warm run whose plans
+    * are all in the code cache compiles none). */
   final case class Run(query: String, run: Int, rows: Long,
-      constructS: Double, executeS: Double, jobs: Seq[(Int, Double)])
+      constructS: Double, executeS: Double, jobs: Seq[(Int, Double)],
+      compiles: Long)
 
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
@@ -64,6 +69,7 @@ object Explain {
       (1 to repeat).map { i =>
         GraftListenerBus.drain(sc)
         ended.clear()
+        val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         // rebuild the DataFrame each run (like Bench): a reused df would
         // skip whole stages via shuffle-output reuse and time ~nothing
@@ -73,10 +79,11 @@ object Explain {
         val t2 = System.nanoTime()
         GraftListenerBus.drain(sc)
         val r = Run(name, i, rows, (t1 - t0) / 1e9, (t2 - t1) / 1e9,
-          ended.asScala.toSeq.sortBy(_._1))
+          ended.asScala.toSeq.sortBy(_._1),
+          CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0)
         println(f"[explain] $name run $i: ${r.rows} rows, construct " +
           f"${r.constructS}%.3f s, execute ${r.executeS}%.3f s, " +
-          s"${r.jobs.size} jobs")
+          s"${r.jobs.size} jobs, ${r.compiles} compiles")
         r.jobs.foreach { case (id, s) => println(f"[job] $id%4d $s%7.3f s") }
         r
       }

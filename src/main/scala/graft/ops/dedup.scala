@@ -318,8 +318,10 @@ object Dedup {
             .as("cluster_id"),
           col("cluster_id").as("__prev"))
         .cache()
+      // a count, not `limit(1)`: a code-generated limit compiles a new
+      // class per call (its counter is named from a JVM-wide sequence)
       val changed = next.filter(col("cluster_id") =!= col("__prev"))
-        .limit(1).count() > 0
+        .count() > 0
       backing.unpersist()
       backing = next
       labels = next.select("id", "cluster_id")
@@ -329,11 +331,9 @@ object Dedup {
     // the final labels cache must be COMPLETE before the edge blocks
     // are released (the checkpoint truncated lineage, so a later
     // recompute of an unmaterialized cache partition has nothing to
-    // read). A converged exit already materialized every partition —
-    // its change-filter scanned the whole frame to find nothing — but
-    // a maxIter-truncated exit stopped at the first changed row, and a
-    // maxIter = 1 call never enters the loop at all.
-    if (!converged) labels.queryExecution.toRdd.count()
+    // read). Every round's change count scanned the whole frame, so
+    // only a maxIter = 1 call, which never enters the loop, has not.
+    if (iter == 1) labels.queryExecution.toRdd.count()
     Scale.releaseLocalCheckpoint(edges)
     labels
   }

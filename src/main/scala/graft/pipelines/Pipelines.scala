@@ -181,10 +181,12 @@ object Pipelines {
 
   /** V2 crawl-sanity gate (reference: sf_html_data.py:95-106): the root
     * page must have status 200; fires the alert and lets the run continue.
-    * Plans as filter+limit(1) — no full scan once a bad row is found. */
+    * A filtered count, not `limit(1)`: Spark names a code-generated
+    * limit's counter from a JVM-wide sequence, so a limit plan compiles
+    * a new class on every call. */
   def homepageGate(df: DataFrame, cfg: SiteConfig, alert: Alert): Boolean = {
     val bad = df.filter(col("Address") === cfg.rootUrl &&
-      col("Status Code") =!= 200).limit(1).count() > 0
+      col("Status Code") =!= 200).count() > 0
     if (bad) alert(s"crawl sanity: root ${cfg.rootUrl} returned non-200")
     !bad
   }

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
+  StringType, StructField, StructType}
 
 /** Per-EPISODE swap-wait bookkeeping for the schema gate's
   * absent-root-with-backup state: one deadline + exponential backoff
@@ -44,7 +46,7 @@ private[graft] final class SwapWait(waitMs: Long) {
   * against a standing benchmark n-gram registry
   * ([[Streaming.benchmarkIndexSink]]), near-dup admitted against a
   * standing index (MinHash LSH or exact Jaccard), written as payload
-  * under `corpus/batch=<id>/`, and folded into the `stats/` store
+  * under `corpus/batch=<id>/`, and aggregated into the `stats/` store
   * ([[Streaming.curationIngestSink]] /
   * [[Streaming.curationIngestSinkExact]]). Around the ingest sit the
   * store's maintenance passes: retroactive decontamination sweeps,
@@ -52,8 +54,9 @@ private[graft] final class SwapWait(waitMs: Long) {
   * and exports, and `fsck` audits.
   *
   * Every effect is exactly-once under a checkpoint replay: per-batch
-  * directories are deterministic paths rewritten identically, and the
-  * aggregate stores swap wholesale behind a `_batch` high-water mark.
+  * directories are deterministic paths rewritten identically behind a
+  * `_batch` high-water mark, and maintenance passes swap a store
+  * wholesale.
   * Writers and maintenance passes on one root serialize through the
   * store lease ([[Streaming.withStoreLock]]).
   */
@@ -96,31 +99,36 @@ object Streaming {
 
   private type HPath = org.apache.hadoop.fs.Path
 
-  /** One sub-table of an incrementally-maintained stats store:
-    * `name/` parquet under the store dir, merged per batch with
-    * [[graft.ops.Warehouse.mergeAggDelta]] on `keys` over `measures`. */
-  private[graft] case class StorePart(name: String, keys: Seq[String],
-                                      measures: Seq[String])
+  /** The swap pair of a store replaced wholesale (the benchmark
+    * registry per batch, the curation stats store per maintenance
+    * pass): the backup a crashed swap leaves, and the scratch. */
+  private def statsBackup(dir: HPath): HPath =
+    new HPath(dir.getParent, s".${dir.getName}.stats.old")
+  private def statsTmp(dir: HPath): HPath =
+    new HPath(dir.getParent, s".${dir.getName}.stats.tmp")
 
-  /** Fold one micro-batch's delta tables into a stats store, replacing
-    * the store directory WHOLESALE via
+  /** One sub-table of the benchmark registry: `name/` parquet under
+    * the store dir, rebuilt per batch by `merge(prior, delta)`, where
+    * the prior (None before the first batch) is read with the delta's
+    * declared schema. */
+  private case class StorePart(name: String, delta: DataFrame,
+      merge: (Option[DataFrame], DataFrame) => DataFrame)
+
+  /** Fold one micro-batch's delta tables into the benchmark registry,
+    * replacing the store directory WHOLESALE via
     * [[graft.ops.Warehouse.atomicSwap]] with a `_batch` high-water
-    * mark — the shared exactly-once machinery of the curation stats
-    * store and the benchmark registry. A crash leaves either the old
-    * store (the checkpoint replays the batch; the merge reruns) or the
-    * new one (the replayed id ≤ `_batch` and is skipped); a half-merged
-    * state is unrepresentable because the whole store swaps in one
-    * rename. */
-  private[graft] def mergeStoreBatch(statsDir: String, batchId: Long,
-      deltas: Seq[(StorePart, DataFrame)],
-      customMerge: Map[String, (Option[DataFrame], DataFrame) => DataFrame]
-        = Map.empty): Unit = {
-    require(deltas.nonEmpty)
-    val spark = deltas.head._2.sparkSession
+    * mark. A crash leaves either the old store (the checkpoint replays
+    * the batch; the merge reruns) or the new one (the replayed id ≤
+    * `_batch` and is skipped); a half-merged state is unrepresentable
+    * because the whole store swaps in one rename. */
+  private def mergeStoreBatch(statsDir: String, batchId: Long,
+      parts: Seq[StorePart]): Unit = {
+    require(parts.nonEmpty)
+    val spark = parts.head.delta.sparkSession
     val dir = new HPath(statsDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val backup = new HPath(dir.getParent, s".${dir.getName}.stats.old")
-    val tmp = new HPath(dir.getParent, s".${dir.getName}.stats.tmp")
+    val backup = statsBackup(dir)
+    val tmp = statsTmp(dir)
     graft.ops.Warehouse.restoreFromBackup(fs, dir, backup)
     fs.delete(tmp, true)
     val markFile = new HPath(dir, "_batch")
@@ -140,44 +148,18 @@ object Streaming {
           "original checkpoint, or a new store directory.")
       return // checkpoint replay of a merged batch
     }
-    deltas.foreach { case (part, delta) =>
+    parts.foreach { part =>
       // the prior is read with the delta's declared schema: each part
       // was written by this merge from a delta of the same shape, and
       // inferring it from the footers would cost a Spark job per part
       val prior =
         if (fs.exists(new HPath(dir, part.name)))
-          Some(spark.read.schema(delta.schema)
+          Some(spark.read.schema(part.delta.schema)
             .parquet(s"$statsDir/${part.name}"))
         else None
-      // a part's merge sums its measures per key unless the caller
-      // supplies a custom fold — e.g. the unit guards of the `meta` and
-      // `units` parts, which check the prior before merging
-      val sums = part.measures.map(m => sum(col(m)).as(m))
-      val merged = customMerge.get(part.name) match {
-        case Some(f) => f(prior, delta)
-        case None => prior.fold(delta)(p => p.unionByName(delta)
-          .groupBy(part.keys.map(col): _*).agg(sums.head, sums.tail: _*))
-      }
-      merged.write.parquet(s"$tmp/${part.name}")
+      part.merge(prior, part.delta).write.parquet(s"$tmp/${part.name}")
     }
-    // carry top-level marker files OTHER maintainers own (e.g. the
-    // stats repair's _sweep_subtracted) across the swap — the merge
-    // rebuilds only its own parts and _batch, and dropping a foreign
-    // marker would silently reset that maintainer's progress
-    if (fs.exists(dir))
-      fs.listStatus(dir).toSeq
-        .filter(st => st.isFile && st.getPath.getName.startsWith("_") &&
-          st.getPath.getName != "_batch" &&
-          st.getPath.getName != "_SUCCESS")
-        .foreach { st =>
-          org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
-            new HPath(tmp, st.getPath.getName), false,
-            spark.sparkContext.hadoopConfiguration)
-        }
-    val out = fs.create(new HPath(tmp, "_batch"), true)
-    try out.write(batchId.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeLongMarker(fs, new HPath(tmp, "_batch"), batchId)
     graft.ops.Warehouse.atomicSwap(fs, dir, tmp, backup)
   }
 
@@ -212,26 +194,9 @@ object Streaming {
       textCol: String, statsDir: String, batchId: Long,
       n: Int): Unit =
     mergeStoreBatch(statsDir, batchId, Seq(
-      StorePart("meta", Seq("n"), Seq("n_batches")) ->
-        batch.sparkSession.range(1)
+      StorePart("meta", batch.sparkSession.range(1)
           .select(lit(n).as("n"), lit(1L).as("n_batches")),
-      // n_batches, not n_docs: benchGramDigests distincts per delta,
-      // so the per-gram count here is always 1 and the sum-merge
-      // yields the number of registry BATCHES containing the gram —
-      // the column is named for what it actually counts
-      StorePart("ngrams", Seq("h"), Seq("n_batches")) ->
-        graft.ops.Dedup.benchGramDigests(batch, textCol, n)
-          .groupBy(col("__h").as("h"))
-          .agg(count(lit(1)).as("n_batches"))
-          // first_batch = the registry batch that INTRODUCED the gram
-          // — the watermark column [[retroDecontaminate]] prunes on,
-          // so each sweep broadcasts only the grams registered since
-          // the previous sweep. min-merged below: a gram re-registered
-          // by a later benchmark keeps its earliest batch (it was
-          // already sweepable then; re-scanning it would be redundant)
-          .withColumn("first_batch", lit(batchId))),
-      customMerge = Map(
-        "meta" -> { (prior, delta) =>
+        { (prior, delta) =>
           prior.foreach { p =>
             val stored = p.select("n").collect().map(_.getInt(0)).toSeq
             require(stored == Seq(n),
@@ -243,8 +208,23 @@ object Streaming {
           prior.map(p => graft.ops.Warehouse.mergeAggDelta(
               p, delta, Seq("n"), Seq("n_batches")))
             .getOrElse(delta)
-        },
-        "ngrams" -> { (prior, delta) =>
+        }),
+      // n_batches, not n_docs: benchGramDigests distincts per delta,
+      // so the per-gram count here is always 1 and the sum-merge
+      // yields the number of registry BATCHES containing the gram —
+      // the column is named for what it actually counts
+      StorePart("ngrams",
+        graft.ops.Dedup.benchGramDigests(batch, textCol, n)
+          .groupBy(col("__h").as("h"))
+          .agg(count(lit(1)).as("n_batches"))
+          // first_batch = the registry batch that INTRODUCED the gram
+          // — the watermark column [[retroDecontaminate]] prunes on,
+          // so each sweep broadcasts only the grams registered since
+          // the previous sweep. min-merged below: a gram re-registered
+          // by a later benchmark keeps its earliest batch (it was
+          // already sweepable then; re-scanning it would be redundant)
+          .withColumn("first_batch", lit(batchId)),
+        { (prior, delta) =>
           prior match {
             case Some(_) =>
               // read with its own footers, not the delta's schema: an
@@ -266,7 +246,7 @@ object Streaming {
                   min("first_batch").as("first_batch"))
             case None => delta
           }
-        }))
+        })))
 
   /** The standing (h, n_batches) benchmark gram-digest table of a
     * [[benchmarkIndexSink]] — n_batches counts the registry BATCHES
@@ -329,7 +309,7 @@ object Streaming {
   private def readableStoreDir(spark: SparkSession, statsDir: String): String = {
     val dir = new HPath(statsDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val backup = new HPath(dir.getParent, s".${dir.getName}.stats.old")
+    val backup = statsBackup(dir)
     if (!fs.exists(dir) && fs.exists(backup)) backup.toString else statsDir
   }
 
@@ -660,9 +640,9 @@ object Streaming {
     * admission against the standing banded index
     * ([[mergeDedupIndexBatch]] — never re-bands history, appends the
     * admitted band rows under `index/batch=<id>/`), (3) write
-    * the admitted PAYLOADS under `corpus/batch=<id>/`, and (4) fold
-    * the admitted batch into the standing stats (word histogram for
-    * tokenizer refresh + length drift histogram) under `stats/`.
+    * the admitted PAYLOADS under `corpus/batch=<id>/`, and (4) write
+    * the admitted batch's own stats (word histogram for tokenizer
+    * refresh + length drift histogram) under `stats/`.
     * The composition — gate before dedup, dedup before stats — is the
     * order a production ingest runs: stats and tokenizers must see
     * exactly the corpus that survived, or they train on what was
@@ -676,13 +656,13 @@ object Streaming {
     * Exactly-once across ALL FOUR effects under one replay: the index
     * and payload writes are deterministic per-batch paths (crash
     * leftovers deleted, rewritten identically against the pre-crash
-    * standing state), and the stats merge is guarded by the `_batch`
+    * standing state), and the stats parts commit through the `_batch`
     * high-water mark — a replayed id rewrites identical files and
-    * skips the already-folded stats, whatever point the crash hit.
+    * skips the already-committed stats, whatever point the crash hit.
     * Per-batch cost: the writes are O(batch); the reads are the
     * standing index's two band-key columns, streamed through a
-    * broadcast join, and the stats store. The corpus is never
-    * rescanned. */
+    * broadcast join, and the stats store's one-row `units` stamp. The
+    * corpus is never rescanned. */
   def curationIngestSink(docs: DataFrame, textCol: String, idCol: String,
                          rootDir: String, checkpoint: String,
                          minQuality: Double,
@@ -894,7 +874,7 @@ object Streaming {
     * `admit`: schema check, quality gate, the optional pinned
     * decontamination gate, then — under the index and corpus leases —
     * `admit` on the surviving rows, whose admitted subset
-    * [[ingestTail]] writes as payload and folds into the stats. */
+    * [[ingestTail]] writes as payload and as its stats parts. */
   private def curationIngestGated(batch: DataFrame, textCol: String,
       idCol: String, rootDir: String, batchId: Long, minQuality: Double,
       lenLo: Double, lenHi: Double, benchmarkDir: Option[String],
@@ -1382,26 +1362,18 @@ object Streaming {
           .localCheckpoint() // small (tombstoned docs); aggregated twice
         val tmpD = new HPath(deltaRoot, s".sweep=$m.tmp")
         rfs.delete(tmpD, true)
-        graft.ops.Bpe.wordHistogram(deadDocs, textCol, Seq("batch"))
-          .write.parquet(s"$tmpD/hist")
-        deadDocs.groupBy(col("batch"),
-            graft.ops.Profiling.psiBucket(
-              length(col(textCol)).cast("double"), lenLo, lenHi, 10)
-              .as("bucket"))
-          .agg(count(lit(1)).as("n"))
-          .write.parquet(s"$tmpD/lens")
+        statsAggregates(deadDocs, textCol, lenLo, lenHi, Seq("batch"))
+          .foreach { case (part, delta) =>
+            delta.write.parquet(s"$tmpD/${part.name}")
+          }
         rfs.mkdirs(deltaRoot)
         rfs.rename(tmpD, new HPath(deltaRoot, s"sweep=$m"))
     }
     // commit order matters: _sweep first (the tombstones' commit
     // point), _sweep_corpus second — a crash between them only makes
     // the next sweep rescan already-tombstoned rows
-    for ((f, v) <- Seq(sweepFile -> m, corpusSweepFile -> cm)) {
-      val o = rfs.create(f, true)
-      try o.write(v.toString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally o.close()
-    }
+    for ((f, v) <- Seq(sweepFile -> m, corpusSweepFile -> cm))
+      writeLongMarker(rfs, f, v)
     // count from the committed files, not a recompute of the plan
     readParquetIfReadable(spark, out.toString).map(_.count())
       .getOrElse(0L)
@@ -1565,12 +1537,11 @@ object Streaming {
       val statsDir = s"$rootDir/stats"
       val dir = new HPath(statsDir)
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val backup = new HPath(dir.getParent, s".${dir.getName}.stats.old")
-      val tmp = new HPath(dir.getParent, s".${dir.getName}.stats.tmp")
-      graft.ops.Warehouse.restoreFromBackup(fs, dir, backup)
+      graft.ops.Warehouse.restoreFromBackup(fs, dir, statsBackup(dir))
       if (!fs.exists(dir)) return // nothing folded yet, nothing stale
-      val markFile = new HPath(dir, "_batch")
-      val storedMark = readLongMarker(fs, markFile).get
+      // an unreadable mark is repaired too: the corpus scan below needs
+      // none of the stored state
+      val storedMark = scala.util.Try(statsMark(fs, dir)).getOrElse(-1L)
       // cover any COMMITTED payload batch the stats never folded (a
       // crash between payload write and stats fold): the corpus scan
       // below counts its rows, so its replay must become a stats
@@ -1580,35 +1551,21 @@ object Streaming {
       val okIds = committedBatchDirIds(fs, new HPath(s"$rootDir/corpus"))
       val committedIds = okIds.filter(_ >= 0L)
       val mark = math.max(storedMark,
-        if (committedIds.isEmpty) -1L else committedIds.max).toString
-      fs.delete(tmp, true)
+        if (committedIds.isEmpty) -1L else committedIds.max)
       val clean = readCleanCorpus(spark, rootDir)
         .where(col("batch").isInCollection(okIds))
-      graft.ops.Bpe.wordHistogram(clean, textCol)
-        .write.parquet(s"$tmp/hist")
-      clean.groupBy(graft.ops.Profiling.psiBucket(
-          length(col(textCol)).cast("double"), lenLo, lenHi, 10)
-          .as("bucket"))
-        .agg(count(lit(1)).as("n"))
-        .write.parquet(s"$tmp/lens")
       // re-stamp the length-bucket unit from this repair's own params
       // (also upgrades a pre-unit store in place) and mark every
       // committed sweep as subtracted — the recompute read the CLEAN
       // corpus, so all tombstones to date are already reflected and a
       // later incremental subtract must not re-apply them
-      spark.range(1).select(lit(lenLo).as("len_lo"),
-          lit(lenHi).as("len_hi"), lit(1L).as("n_batches"))
-        .write.parquet(s"$tmp/units")
       val sweepMark = readLongMarker(fs,
         new HPath(s"$rootDir/decon/_sweep")).getOrElse(-1L)
-      for ((f, v) <- Seq("_batch" -> mark,
-          "_sweep_subtracted" -> sweepMark.toString)) {
-        val out = fs.create(new HPath(tmp, f), true)
-        try out.write(v.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      graft.ops.Warehouse.atomicSwap(fs, dir, tmp, backup)
+      swapStatsStore(spark, statsDir,
+        statsAggregates(clean, textCol, lenLo, lenHi),
+        Some(spark.createDataFrame(java.util.List.of(
+          Row(lenLo, lenHi, 1L)), unitsSchema)),
+        Seq("_batch" -> mark, "_sweep_subtracted" -> sweepMark))
     }
 
   /** The O(tombstoned-docs) sibling of [[rebuildCurationStats]]:
@@ -1641,21 +1598,14 @@ object Streaming {
       val statsDir = s"$rootDir/stats"
       val dir = new HPath(statsDir)
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val backup = new HPath(dir.getParent, s".${dir.getName}.stats.old")
-      val tmp = new HPath(dir.getParent, s".${dir.getName}.stats.tmp")
-      graft.ops.Warehouse.restoreFromBackup(fs, dir, backup)
+      graft.ops.Warehouse.restoreFromBackup(fs, dir, statsBackup(dir))
       if (!fs.exists(dir)) return 0L // nothing folded yet
       val sweepMark = readLongMarker(fs,
         new HPath(s"$rootDir/decon/_sweep")).getOrElse(-1L)
       val applied = readLongMarker(fs,
         new HPath(dir, "_sweep_subtracted")).getOrElse(-1L)
       if (sweepMark <= applied) return 0L // coherent already
-      val statsMark = scala.util.Try(
-          readLongMarker(fs, new HPath(dir, "_batch"))).toOption.flatten
-        .getOrElse(throw new IllegalStateException(
-          s"stats store at $statsDir has no readable _batch mark — " +
-            "the store is torn (fsckStore flags this state); repair " +
-            "with rebuildCurationStats, which rewrites the mark"))
+      val mark = statsMark(fs, dir)
       val corpusRoot = new HPath(s"$rootDir/corpus")
       val okIds = committedBatchDirIds(fs, corpusRoot)
         .filter(_ >= 0L).toSet
@@ -1708,7 +1658,7 @@ object Streaming {
           val touched = (hist.toSeq ++ lens.toSeq)
             .flatMap(_.select(col("batch").cast("long")).distinct()
               .collect().map(_.getLong(0))).toSet
-          if (touched.exists(b => b > statsMark ||
+          if (touched.exists(b => b > mark ||
               (presentIds.contains(b) && !okIds.contains(b))))
             holding = true // stats have not folded that batch yet
           else {
@@ -1737,25 +1687,15 @@ object Streaming {
                 "folded stats; repair with rebuildCurationStats")
             out.where(col(measure) > 0)
         }
-      fs.delete(tmp, true)
-      minus(spark.read.parquet(s"$statsDir/hist"), hists.toSeq,
-        "word", "cnt").write.parquet(s"$tmp/hist")
-      minus(spark.read.parquet(s"$statsDir/lens"), lenss.toSeq,
-        "bucket", "n").write.parquet(s"$tmp/lens")
-      // a pre-unit-stamp store has no units part — preserve the
-      // absence rather than throwing a raw read error mid-repair (the
-      // deltas themselves never touch units; only rebuildCurationStats
-      // upgrades the stamp in place)
-      readParquetIfReadable(spark, s"$statsDir/units")
-        .foreach(_.write.parquet(s"$tmp/units"))
-      for ((f, v) <- Seq("_batch" -> statsMark.toString,
-          "_sweep_subtracted" -> last.toString)) {
-        val out = fs.create(new HPath(tmp, f), true)
-        try out.write(v.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
-      graft.ops.Warehouse.atomicSwap(fs, dir, tmp, backup)
+      // the units stamp is carried as it stands — a pre-unit-stamp
+      // store keeps its absence (the deltas never touch units; only
+      // rebuildCurationStats upgrades the stamp in place)
+      swapStatsStore(spark, statsDir, Seq(
+          HistPart -> minus(readStatsPart(spark, statsDir, HistPart),
+            hists.toSeq, "word", "cnt"),
+          LensPart -> minus(readStatsPart(spark, statsDir, LensPart),
+            lenss.toSeq, "bucket", "n")),
+        None, Seq("_batch" -> mark, "_sweep_subtracted" -> last))
       pending.count(k => k <= last && k > applied).toLong
     }
 
@@ -2396,7 +2336,7 @@ object Streaming {
     // ---- maintained trees: an atomicSwap rename pair leaves dotted
     // siblings exactly when a maintenance write crashed. Two swap
     // families exist: compactions use `.<tree>.compact.*` and the
-    // per-batch stats merge (mergeStoreBatch / rebuildCurationStats)
+    // stats store's swaps (rebuild / subtract / compaction folds)
     // uses `.<tree>.stats.*` — audit both for every tree. The CORPUS
     // compaction scratch is special: the move-carry compaction
     // relocates retained dirs into it, so it can hold their ONLY copy
@@ -2550,6 +2490,25 @@ object Streaming {
                 "pass instead of a window read", false))
         }
       if (exists(s"$rootDir/stats")) {
+        // the stats commit point: an unreadable mark fails every
+        // ingest batch; parts above it are a batch that died before
+        // its commit, skipped by readers and rewritten by its replay
+        val stats = new HPath(s"$rootDir/stats")
+        scala.util.Try(statsMark(fs, stats)) match {
+          case scala.util.Failure(e) =>
+            out += (("stats", s"$rootDir/stats/_batch", "error",
+              e.getMessage, false))
+          case scala.util.Success(mark) =>
+            for (part <- statsParts;
+                p <- statsPartDirs(fs, stats, part, mark)._2) {
+              val path = s"$rootDir/stats/${part.name}/${p.getName}"
+              out += (("stats", path, "warn",
+                "stats part above the _batch mark — a batch that died " +
+                  "before its commit; readers skip it, the batch's " +
+                  "replay rewrites it and the next maintenance pass " +
+                  "drops it", healDelete(path)))
+            }
+        }
         val sub = readLong(s"$rootDir/stats/_sweep_subtracted")
           .getOrElse(-1L)
         // only when committed sweep DIRS sit in the un-subtracted
@@ -2649,9 +2608,9 @@ object Streaming {
 
   /** O(metadata) integrity audit of ONE standing store directory —
     * the generic form of [[fsckCurationStore]] for stores that live
-    * outside a curation root: aggregate stores fed by
-    * [[mergeStoreBatch]] (the benchmark n-gram registry, a curation
-    * stats store) and batch-dir index stores (dedup / exact-Jaccard).
+    * outside a curation root: the benchmark n-gram registry
+    * ([[mergeStoreBatch]]), a curation stats store, and batch-dir
+    * index stores (dedup / exact-Jaccard).
     * Checks both swap families, the `_batch` mark's readability,
     * `batch=` dirs without `_SUCCESS` (the replayable-trailing-batch
     * signature), and the exact index's embedded `df_table` swap pair.
@@ -3089,9 +3048,9 @@ object Streaming {
 
   /** The payload + stats tail every curation-ingest variant shares
     * (the LSH gate above, the exact-Jaccard gate below): write the
-    * admitted rows under `corpus/batch=<id>/` and fold them into the
-    * standing word-histogram and length-drift stats — stats see
-    * exactly the corpus that survived, whatever gate decided it. */
+    * admitted rows under `corpus/batch=<id>/` and their own stats
+    * aggregates under `stats/` — stats see exactly the corpus that
+    * survived, whatever gate decided it. */
   private[graft] def ingestTail(admitted: DataFrame, textCol: String,
       rootDir: String, batchId: Long, lenLo: Double,
       lenHi: Double): Unit = {
@@ -3100,47 +3059,219 @@ object Streaming {
       admitted.write.mode("overwrite")
         .parquet(s"$rootDir/corpus/batch=$batchId")
     }
-    // the one `units` row, built on the driver
-    def units(nBatches: Long): DataFrame = {
-      import org.apache.spark.sql.types._
-      spark.createDataFrame(java.util.List.of(
-          Row(lenLo, lenHi, nBatches)),
-        StructType(Seq(StructField("len_lo", DoubleType),
-          StructField("len_hi", DoubleType),
-          StructField("n_batches", LongType))))
-    }
     inStep(spark, "stats") {
-      mergeStoreBatch(s"$rootDir/stats", batchId, Seq(
-        StorePart("hist", Seq("word"), Seq("cnt")) ->
-          graft.ops.Bpe.wordHistogram(admitted, textCol),
-        StorePart("lens", Seq("bucket"), Seq("n")) ->
-          admitted.groupBy(graft.ops.Profiling.psiBucket(
-            length(col(textCol)).cast("double"), lenLo, lenHi, 10)
-            .as("bucket"))
-            .agg(count(lit(1)).as("n")),
-        // the length-bucket bounds are a UNIT: an ingest reconfigured
-        // mid-stream would silently mix bucket scales into the
-        // accumulated counts, and the sweep's stats-delta pin needs the
-        // bounds to bucket tombstoned docs the same way. A pre-unit
-        // store stamps them at its first post-upgrade merge
-        StorePart("units", Seq("len_lo", "len_hi"), Seq("n_batches")) ->
-          units(1L)),
-        customMerge = Map("units" -> { (prior, _) =>
-          // the guard's collect also yields the prior's batch count, so
-          // the merged row is built on the driver too
-          val stored = prior.map(_.collect().toSeq)
-          stored.foreach { rows =>
-            val bounds = rows.map(r => (r.getDouble(0), r.getDouble(1)))
-            require(bounds == Seq((lenLo, lenHi)),
-              s"curation stats store at $rootDir/stats was built with " +
-                s"length-bucket bounds ${bounds.mkString(",")} but this " +
-                s"ingest is configured with ($lenLo,$lenHi) — the " +
-                "bucket units would silently diverge; match the bounds " +
-                "or rebuild the stats store")
-          }
-          units(1L + stored.fold(0L)(_.head.getLong(2)))
-        }))
+      writeStatsBatch(admitted, textCol, s"$rootDir/stats", batchId,
+        lenLo, lenHi)
     }
+  }
+
+  // ---- the curation stats store (`<root>/stats`) ----------------------
+  // Two additive parts, `hist` (word -> cnt) and `lens` (length bucket
+  // -> n), each kept as one aggregate per ingest batch under
+  // `<part>/batch=<id>/`; the `units` stamp (the length-bucket bounds);
+  // the `_batch` mark (the highest folded batch id) and the
+  // `_sweep_subtracted` mark of [[subtractTombstonedStats]]. A part dir
+  // above `_batch` is an uncommitted replay and is never read. The
+  // maintenance passes (rebuild, subtract, compaction) swap the whole
+  // store for one folded `batch=-1` dir per part. A store written
+  // before the per-batch layout keeps each part's files directly under
+  // `<part>/`: they read as one committed part, and the first ingest
+  // batch moves them into `batch=-1/`. Only [[writeStatsBatch]],
+  // [[swapStatsStore]] and [[statsPartDirs]] know this layout.
+
+  /** An additive part of the stats store: a count `measure` per key. */
+  private[graft] case class StatsPart(name: String, key: StructField,
+      measure: String) {
+    def schema: StructType =
+      StructType(Seq(key, StructField(measure, LongType)))
+  }
+  private[graft] val HistPart =
+    StatsPart("hist", StructField("word", StringType), "cnt")
+  private[graft] val LensPart =
+    StatsPart("lens", StructField("bucket", IntegerType), "n")
+  private val statsParts = Seq(HistPart, LensPart)
+
+  private val unitsSchema = StructType(Seq(StructField("len_lo", DoubleType),
+    StructField("len_hi", DoubleType), StructField("n_batches", LongType)))
+
+  /** The one derivation of the stats parts from documents: the word
+    * histogram and the length-bucket counts of `docs`, also grouped by
+    * `by` (the sweep pins its delta per corpus batch). */
+  private def statsAggregates(docs: DataFrame, textCol: String,
+      lenLo: Double, lenHi: Double,
+      by: Seq[String] = Nil): Seq[(StatsPart, DataFrame)] = Seq(
+    HistPart -> graft.ops.Bpe.wordHistogram(docs, textCol, by),
+    LensPart -> docs.groupBy(by.map(col) :+
+        graft.ops.Profiling.psiBucket(length(col(textCol)).cast("double"),
+          lenLo, lenHi, 10).as("bucket"): _*)
+      .agg(count(lit(1)).as("n")))
+
+  /** The data of `part` as stored: the committed `batch=<id>` dirs (id
+    * at most `mark`) plus the files of the older flat layout, and the
+    * uncommitted dirs above the mark. */
+  private def statsPartDirs(fs: org.apache.hadoop.fs.FileSystem,
+      statsDir: HPath, part: StatsPart,
+      mark: Long): (Seq[HPath], Seq[HPath]) = {
+    val root = new HPath(statsDir, part.name)
+    val children = if (!fs.exists(root)) Seq.empty
+      else fs.listStatus(root).toSeq
+    val flat = children.filter(st => st.isFile &&
+        !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(_.getPath)
+    val dirs = children.filter(_.isDirectory).map(_.getPath)
+      .flatMap(p => scala.util.Try(
+        p.getName.stripPrefix("batch=").toLong).toOption.map(_ -> p))
+    val (committed, above) = dirs.partition(_._1 <= mark)
+    (flat ++ committed.sortBy(_._1).map(_._2), above.map(_._2))
+  }
+
+  /** The `_batch` mark of a stats store, -1 before the first batch. */
+  private def statsMark(fs: org.apache.hadoop.fs.FileSystem,
+      dir: HPath): Long =
+    scala.util.Try(readLongMarker(fs, new HPath(dir, "_batch")))
+      .getOrElse(throw new IllegalStateException(
+        s"stats store at $dir has an unreadable _batch mark — repair " +
+          "with rebuildCurationStats, which rewrites it"))
+      .getOrElse(-1L)
+
+  /** The folded view of one stats part: its count summed by key over
+    * the committed parts. Side-effect-free (see [[readableStoreDir]]);
+    * the parts are read with their declared schema, so no footer job. */
+  private[graft] def readStatsPart(spark: SparkSession, statsDir: String,
+      part: StatsPart): DataFrame = {
+    val dir = new HPath(readableStoreDir(spark, statsDir))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val paths = statsPartDirs(fs, dir, part, statsMark(fs, dir))._1
+    val stored =
+      if (paths.isEmpty) spark.createDataFrame(
+        java.util.List.of[Row](), part.schema)
+      else spark.read.schema(part.schema).parquet(paths.map(_.toString): _*)
+    stored.groupBy(part.key.name).agg(sum(part.measure).as(part.measure))
+  }
+
+  /** Appends one ingest batch to the stats store: its own `hist` and
+    * `lens` aggregates as `batch=<id>` parts, one file each, then the
+    * `_batch` mark. No prior part is read. The mark is the commit
+    * point: a crash before it leaves parts above the mark that readers
+    * skip and the replay overwrites; a replayed id at or below the mark
+    * writes nothing. The length-bucket bounds are a unit: the first
+    * batch stamps them into `units`, and every batch checks its own
+    * against the stamp. */
+  private def writeStatsBatch(admitted: DataFrame, textCol: String,
+      statsDir: String, batchId: Long, lenLo: Double,
+      lenHi: Double): Unit = {
+    val spark = admitted.sparkSession
+    val dir = new HPath(statsDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.ops.Warehouse.restoreFromBackup(fs, dir, statsBackup(dir))
+    fs.delete(statsTmp(dir), true)
+    val mark = statsMark(fs, dir)
+    if (batchId <= mark) {
+      // batchId == mark is the normal exactly-once skip (the last
+      // folded batch replaying after a crash). Anything BELOW the
+      // mark is the FRESH-CHECKPOINT signature: a new stream pointed
+      // at an existing store silently no-ops every batch until its
+      // ids pass the mark — data loss by misconfiguration, so say it
+      // loudly on every skipped batch, not only batch 0.
+      if (batchId < mark)
+        System.err.println(s"[store] WARNING: batch $batchId < _batch " +
+          s"mark $mark at $statsDir — this looks like a FRESH " +
+          "checkpoint pointed at an existing store; its batches are " +
+          s"being silently skipped until ids exceed $mark. Use the " +
+          "original checkpoint, or a new store directory.")
+      return
+    }
+    // an ingest reconfigured mid-stream would silently mix bucket
+    // scales into the accumulated counts, and the sweep's delta pin
+    // needs the bounds to bucket tombstoned docs the same way. A store
+    // written before the stamp gets it at its first batch after
+    readStatsUnits(spark, statsDir) match {
+      case Some(bounds) =>
+        require(bounds == ((lenLo, lenHi)),
+          s"curation stats store at $statsDir was built with " +
+            s"length-bucket bounds $bounds but this ingest is " +
+            s"configured with ($lenLo,$lenHi) — the bucket units would " +
+            "silently diverge; match the bounds or rebuild the stats " +
+            "store")
+      case None =>
+        spark.createDataFrame(java.util.List.of(Row(lenLo, lenHi, 1L)),
+            unitsSchema)
+          .write.mode("overwrite").parquet(s"$statsDir/units")
+    }
+    statsParts.foreach(p => adoptFlatPart(fs, dir, p))
+    // no `_SUCCESS` marker: the mark below commits the parts, and the
+    // store's file count grows by each batch's parts alone
+    statsAggregates(admitted, textCol, lenLo, lenHi).foreach {
+      case (part, agg) =>
+        agg.coalesce(1).write.mode("overwrite")
+          .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+          .parquet(s"$statsDir/${part.name}/batch=$batchId")
+    }
+    writeLongMarker(fs, new HPath(dir, "_batch"), batchId)
+  }
+
+  /** Moves the files of an older flat-layout part into its
+    * `batch=-1/` dir, one rename per file. Readers take the flat files
+    * and the dirs together, so every intermediate state reads the same
+    * counts and a crash mid-move is finished by the next batch. */
+  private def adoptFlatPart(fs: org.apache.hadoop.fs.FileSystem,
+      statsDir: HPath, part: StatsPart): Unit = {
+    // no batch dir is at or below Long.MinValue: only the flat files
+    val flat = statsPartDirs(fs, statsDir, part, Long.MinValue)._1
+    if (flat.nonEmpty) {
+      val folded = new HPath(statsDir, s"${part.name}/batch=-1")
+      fs.mkdirs(folded)
+      flat.foreach(f => require(fs.rename(f, new HPath(folded, f.getName)),
+        s"could not move $f into $folded"))
+      fs.delete(new HPath(statsDir, s"${part.name}/_SUCCESS"), false)
+    }
+  }
+
+  /** Replaces the stats store wholesale, through the `.stats.stats.*`
+    * swap pair: each part becomes the one folded `batch=-1` dir of its
+    * frame, the `units` stamp is `units` (or the current stamp carried
+    * unchanged, or none), and the marks are `marks`. A crash leaves the
+    * old store or the new one. Callers hold the store's lease. */
+  private def swapStatsStore(spark: SparkSession, statsDir: String,
+      parts: Seq[(StatsPart, DataFrame)], units: Option[DataFrame],
+      marks: Seq[(String, Long)]): Unit = {
+    val dir = new HPath(statsDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = statsTmp(dir)
+    fs.delete(tmp, true)
+    parts.foreach { case (part, folded) =>
+      folded.write.parquet(s"$tmp/${part.name}/batch=-1")
+    }
+    units match {
+      case Some(u) => u.write.parquet(s"$tmp/units")
+      case None => carryBatchDir(spark, fs, new HPath(dir, "units"),
+        new HPath(tmp, "units"))
+    }
+    marks.foreach { case (f, v) => writeLongMarker(fs, new HPath(tmp, f), v) }
+    graft.ops.Warehouse.atomicSwap(fs, dir, tmp, statsBackup(dir))
+  }
+
+  /** Folds the stats store's committed parts into one `batch=-1` dir
+    * per part, so the parts an ingest appends stay bounded; parts above
+    * the mark (an uncommitted replay, rewritten by the replay) drop
+    * out. A no-op when every part is folded already. Callers hold the
+    * store's lease. */
+  private def foldStats(spark: SparkSession, statsDir: String): Unit = {
+    val dir = new HPath(statsDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    graft.ops.Warehouse.restoreFromBackup(fs, dir, statsBackup(dir))
+    if (!fs.exists(dir)) return
+    val mark = statsMark(fs, dir)
+    val folded = statsParts.forall { p =>
+      val (committed, above) = statsPartDirs(fs, dir, p, mark)
+      above.isEmpty && committed.map(_.getName) == Seq("batch=-1")
+    }
+    if (folded) return
+    swapStatsStore(spark, statsDir,
+      statsParts.map(p => p -> readStatsPart(spark, statsDir, p)), None,
+      Seq("_batch" -> mark) ++ readLongMarker(fs,
+        new HPath(dir, "_sweep_subtracted")).map("_sweep_subtracted" -> _))
   }
 
   /** The length-bucket bounds stamped into a curation stats store's
@@ -3152,7 +3283,7 @@ object Streaming {
     val units = new HPath(s"$rootStr/units")
     val fs = units.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(units)) None
-    else spark.read.parquet(units.toString)
+    else spark.read.schema(unitsSchema).parquet(units.toString)
       .select("len_lo", "len_hi").collect().toSeq match {
         case Seq(one) => Some((one.getDouble(0), one.getDouble(1)))
         case _ => None
@@ -3201,12 +3332,12 @@ object Streaming {
   def readCurationCorpus(spark: SparkSession, rootDir: String): DataFrame =
     spark.read.parquet(s"$rootDir/corpus")
 
-  /** Read the `hist` part of a curation stats store (`<root>/stats`)
-    * as the (word, cnt) frame [[graft.ops.Bpe.trainBpeOnHistogram]]
-    * consumes. Side-effect-free
-    * (see [[readableStoreDir]]). */
+  /** The word histogram of a curation stats store (`<root>/stats`):
+    * the (word, cnt) frame [[graft.ops.Bpe.trainBpeOnHistogram]]
+    * consumes, summed over the store's committed parts.
+    * Side-effect-free (see [[readableStoreDir]]). */
   def readWordHistogram(spark: SparkSession, statsDir: String): DataFrame =
-    spark.read.parquet(s"${readableStoreDir(spark, statsDir)}/hist")
+    readStatsPart(spark, statsDir, HistPart)
 
   /** The ONE definition of a store root's lease path —
     * `.<name>.lock` SIBLING to the root (the maintenance swap renames
@@ -3528,6 +3659,14 @@ object Streaming {
       finally in.close()
     }
 
+  /** Writes a little Long marker file [[readLongMarker]] reads. */
+  private def writeLongMarker(fs: org.apache.hadoop.fs.FileSystem,
+                              p: HPath, v: Long): Unit = {
+    val o = fs.create(p, true)
+    try o.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally o.close()
+  }
+
   /** Heal a possibly-crashed previous compaction of `root` BEFORE a
     * compactor inspects the tree: a crash between [[graft.ops
     * .Warehouse.atomicSwap]]'s two renames leaves the data only in
@@ -3674,10 +3813,11 @@ object Streaming {
     * collapse the per-batch `corpus/batch=<id>/` payload dirs into a
     * size-targeted `corpus/batch=-1/` file set — the file-count
     * maintenance the ingest root needs alongside [[compactDedupIndex]]
-    * (run that on `<root>/index`); the `stats/` stores are
-    * swap-maintained and never accumulate dirs. Same live-stream
+    * (run that on `<root>/index`) — and folds the `stats/` store's
+    * per-batch parts into one `batch=-1` part each. Same live-stream
     * lease (on the `corpus` subtree — the ingest merge holds the
-    * index and corpus leases together) and keep-last-batch rule as
+    * index and corpus leases together — plus `stats`, which the other
+    * stats passes take) and keep-last-batch rule as
     * [[compactDedupIndex]]: the
     * highest batch dir is carried unchanged so a crash-interrupted
     * trailing batch replays against exactly the state it wrote. */
@@ -3708,8 +3848,9 @@ object Streaming {
     * full rewrite. */
   def compactCurationCorpus(spark: SparkSession, rootDir: String,
       purgeTombstoned: Boolean = false): Unit =
-    withStoreLock(spark, Seq(s"$rootDir/corpus")) {
+    withStoreLock(spark, Seq(s"$rootDir/corpus", s"$rootDir/stats")) {
       compactCurationCorpusBody(spark, rootDir, purgeTombstoned)
+      foldStats(spark, s"$rootDir/stats")
     }
 
   private def compactCurationCorpusBody(spark: SparkSession,
@@ -3809,12 +3950,8 @@ object Streaming {
         moveBatchDir(fsi, new HPath(s"$rootDir/corpus/batch=$p"),
           new HPath(s"$tmp/batch=$p")))
     }
-    if (tomb.nonEmpty && fs.exists(new HPath(s"$rootDir/decon"))) {
-      val o = fs.create(purgeFile, true)
-      try o.write(sweepMark.toString.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally o.close()
-    }
+    if (tomb.nonEmpty && fs.exists(new HPath(s"$rootDir/decon")))
+      writeLongMarker(fs, purgeFile, sweepMark)
   }
 
   /** Offline (re)build of an exact-Jaccard index from its

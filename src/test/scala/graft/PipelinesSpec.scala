@@ -138,6 +138,20 @@ class PipelinesSpec extends SparkSpec {
     assert(slim.count() === 6) // ...but the run continued
   }
 
+  test("homepageGate: two jobs a call, and a repeated call compiles no " +
+      "generated class") {
+    var alerts = List.empty[String]
+    def gate(file: String): Unit = Pipelines.homepageGate(
+      Pipelines.readCsv(spark, res(file)), SiteConfig(), m => alerts ::= m)
+    gate("internal_html_bad_root.csv")
+    assert(alerts.size === 1)
+    val (jobs, late) = jobStartsOf(gate("internal_html_bad_root.csv"))
+    assert(alerts.size === 2)
+    assert(jobs.size <= 2, jobs)
+    assert(jobs.map(_._2).sum + late === 0L,
+      s"a repeated gate compiled classes: $jobs, $late after")
+  }
+
   test("E3 midoco: German dates, locale decimals, lead time, coercion, umlauts") {
     val raw = Pipelines.readCsvLatin1(spark, res("midoco_report.csv"))
     val out = Pipelines.midoco(raw, runDate)

@@ -1224,8 +1224,9 @@ class StreamingSpec extends SparkSpec {
     def cleanHist() = graft.ops.Bpe.wordHistogram(
       Streaming.readCleanCorpus(spark, tmp), "text")
       .collect().map(_.toSeq).toSet
-    def storedLens() = spark.read.parquet(s"$tmp/stats/lens")
-      .collect().map(_.toSeq).toSet
+    def storedLens() =
+      Streaming.readStatsPart(spark, s"$tmp/stats", Streaming.LensPart)
+        .collect().map(_.toSeq).toSet
     def cleanLens() = Streaming.readCleanCorpus(spark, tmp)
       .groupBy(graft.ops.Profiling.psiBucket(
         length(col("text")).cast("double"), 0.0, 1000.0, 10)
@@ -1627,7 +1628,7 @@ class StreamingSpec extends SparkSpec {
       Streaming.readCleanCorpus(spark, root)
         .select("doc_id").collect().map(_.getLong(0)).toSet
     def hist(root: String): Set[(String, Long)] =
-      spark.read.parquet(s"$root/stats/hist")
+      Streaming.readWordHistogram(spark, s"$root/stats")
         .where(col("cnt") =!= 0L)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSet
     // ---- canonical sequential control
@@ -3458,14 +3459,14 @@ class StreamingSpec extends SparkSpec {
       "text", s"$tmp/bench", 0L, n = 8)
     assert(Streaming.retroDecontaminate(spark, tmp, "text", "doc_id",
       s"$tmp/bench") === 0L)
-    val histBefore = spark.read.parquet(s"$tmp/stats/hist")
+    val histBefore = Streaming.readWordHistogram(spark, s"$tmp/stats")
       .collect().map(_.toSeq).toSet
     // the all-clean sweep applies as a marker-only advance — no raw
     // AnalysisException from the absent units part
     assert(Streaming.subtractTombstonedStats(spark, tmp) === 1L)
     assert(!new java.io.File(s"$tmp/stats/units").exists(),
       "repair must not conjure a units part the store never had")
-    assert(spark.read.parquet(s"$tmp/stats/hist")
+    assert(Streaming.readWordHistogram(spark, s"$tmp/stats")
       .collect().map(_.toSeq).toSet === histBefore)
     assert(Streaming.subtractTombstonedStats(spark, tmp) === 0L)
   }
