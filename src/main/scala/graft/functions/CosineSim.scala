@@ -24,8 +24,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * materializes the products array). This is the hottest loop of the
   * similarity family — brute-force/IVF paths evaluate dim (or
   * dim × nlist) multiplications per row — and a fused primitive loop
-  * inside whole-stage codegen removes all of that (measured ~8× on the
-  * ScaleProbe brute-force path).
+  * inside whole-stage codegen removes all of that (measured 2.2× on
+  * brute-force and 9× on IVF top-k over 40k vectors, PERF.md).
   */
 case class CosineSimExpression(left: Expression, right: Expression)
     extends BinaryExpression {

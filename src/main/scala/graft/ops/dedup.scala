@@ -377,17 +377,14 @@ object Dedup {
     * (its token stream fed two concurrent shuffle stages that would
     * otherwise race to hash the corpus twice) is gone, and with it a
     * full re-hash pass per invocation. The packed frame is cache()'d
-    * when `pin` (default) — it feeds every join branch, but lazily:
-    * the in-memory relation dedupes the subtree within one execution
-    * without an eager barrier (measured ~2x over a second checkpoint
-    * at sf0.1). Callers that materialize the result themselves pass
-    * `pin = false` so the same rows aren't stored twice. LRU eviction
+    * — it feeds every join branch, but lazily: the in-memory relation
+    * dedupes the subtree within one execution without an eager barrier
+    * (measured ~2x over a second checkpoint at sf0.1). LRU eviction
     * bounds the footprint across calls; rows are fixed-width,
     * corpus-linear. Returns (__id, __ord, __sz). */
   private[graft] def orderedShingleSets(df0: DataFrame, textCol: String,
                                       idCol: String, n: Int,
-                                      dfTable: Option[DataFrame] = None,
-                                      pin: Boolean = true
+                                      dfTable: Option[DataFrame] = None
                                      ): DataFrame = {
     val df = Scale.widen(df0)
     val shingled = df.where(col(textCol).isNotNull)
@@ -420,7 +417,7 @@ object Dedup {
         array_sort(collect_list(struct(col("__df"), col("__h")))),
         s => s.getField("__h")).as("__ord"))
       .withColumn("__sz", size(col("__ord")))
-    if (pin) packed.cache() else packed
+    packed.cache()
   }
 
   /** Frozen (h, df) shingle document-frequency table for a reference
@@ -430,16 +427,13 @@ object Dedup {
     * per-batch recomputed order would silently invalidate every
     * prefix already stored in the index). Vocabulary-sized, and
     * CACHED — "frozen" means computed once: without the pin every
-    * [[orderedShingleSets]] consumer (one per micro-batch in the
-    * streaming sink) would re-scan the reference corpus to rebuild
-    * it. cache(), not localCheckpoint(): cached blocks lost to
-    * executor decommission recompute from lineage, where a
-    * checkpoint-block loss would fail every later micro-batch of a
-    * long-lived sink. Long-lived production indexes persist the table
-    * WITH the index and re-read it across sessions
-    * ([[graft.streaming.Streaming.writeJaccardDfTable]] /
-    * `readJaccardDfTable` — compaction carries it through the root
-    * swap); this in-session pin covers one index lifetime. */
+    * [[orderedShingleSets]] consumer (one per admitted batch) would
+    * re-scan the reference corpus to rebuild it. cache(), not
+    * localCheckpoint(): cached blocks lost to executor decommission
+    * recompute from lineage, where a checkpoint-block loss would fail
+    * every later admission against a long-lived index. The pin covers one session: an index kept
+    * across sessions must keep the table with it, since its stored
+    * prefixes are valid only under the order they were built with. */
   def shingleDfTable(df: DataFrame, textCol: String, n: Int): DataFrame =
     Scale.widen(df).where(col(textCol).isNotNull)
       .select(explode(array_distinct(transform(
@@ -508,15 +502,10 @@ object Dedup {
                                     t: Double): Column =
     sb * t <= sa + lit(1e-9) && sa * t <= sb + lit(1e-9)
 
-  /** Log2 size band of a shingle-set size — the secondary partition
-    * dimension of the standing prefix tree (`szb=` under `jb=`):
-    * `length(bin(sz)) - 1` is an EXACT integer ⌊log2 sz⌋ (no
-    * floating-point log whose representation error could misplace a
-    * power-of-two row). A size-compatibility envelope then prunes
-    * whole band directories: a batch whose sizes span [mn, mx] can
-    * only match store rows with sz in [t·mn, mx/t], i.e. bands
-    * [⌊log2(t·mn)⌋, ⌊log2(mx/t)⌋] — read I/O bounded by the batch's
-    * size envelope, not index age. */
+  /** Log2 size band of a shingle-set size: `length(bin(sz)) - 1` is
+    * an EXACT integer ⌊log2 sz⌋ (no floating-point log whose
+    * representation error could misplace a power-of-two row). The
+    * batch side of [[sizeEnvelopePredicate]] groups by it. */
   private[graft] def jaccardSizeBand(sz: Column): Column =
     (length(bin(sz.cast("long"))) - 1).cast("int")
 
@@ -529,12 +518,6 @@ object Dedup {
     (math.max(1L, math.floor(mn * t - 1e-6).toLong),
       math.ceil(mx / t + 1e-6).toLong)
 
-  /** Driver-side ⌊log2 x⌋ for x ≥ 1 — the Scala twin of
-    * [[jaccardSizeBand]] (bit-exact: both are the position of the
-    * highest set bit). */
-  private[graft] def jaccardSizeBandOf(x: Long): Int =
-    63 - java.lang.Long.numberOfLeadingZeros(math.max(1L, x))
-
   /** The standing-prefix prune predicate for a batch of ordered sets:
     * PER-BAND size envelopes, OR'd. Grouping the batch by its own
     * ⌊log2 sz⌋ band and deriving one [t·mn, mx/t] envelope per band
@@ -542,14 +525,11 @@ object Dedup {
     * one huge document no longer widens a single global envelope to
     * the whole store (each contributes only its own band's envelope).
     * At most 64 bands exist, so the OR chain stays trivially small;
-    * partition pruning evaluates it against `szb=` directory values
-    * and parquet row-group min/max stats evaluate the `sz BETWEEN`
-    * ranges. `hasSzb = false` (a store written before the size-banded
-    * layout) keeps the row-level `sz` ranges and drops the directory
-    * dimension. An empty batch (no shingleable docs) yields `false` —
-    * nothing in the store can match it. */
+    * on a parquet-backed prefix, row-group min/max stats evaluate the
+    * `sz BETWEEN` ranges. An empty batch (no shingleable docs) yields
+    * `false` — nothing in the store can match it. */
   private[graft] def sizeEnvelopePredicate(bsets: DataFrame,
-      minJaccard: Double, hasSzb: Boolean): Column = {
+      minJaccard: Double): Column = {
     val bands = bsets
       .groupBy(jaccardSizeBand(col("__sz")).as("__b"))
       .agg(min("__sz").as("mn"), max("__sz").as("mx"))
@@ -558,19 +538,14 @@ object Dedup {
     else bands.map { r =>
       val (lo, hi) = sizeEnvelope(r.getAs[Number]("mn").longValue,
         r.getAs[Number]("mx").longValue, minJaccard)
-      val bySz = col("sz").between(lo, hi)
-      if (hasSzb)
-        bySz && col("szb").between(
-          jaccardSizeBandOf(lo), jaccardSizeBandOf(hi))
-      else bySz
+      col("sz").between(lo, hi)
     }.reduce(_ || _)
   }
 
   /** Exploded prefix rows `(h, id, pos, sz)` of an
     * [[orderedShingleSets]] frame — the probe/index row shape shared
-    * by [[jaccardIndexTables]], [[admitAgainstJaccardIndex]] and the
-    * streaming Jaccard index sink, so the prefix-length rule lives in
-    * exactly one place. */
+    * by [[jaccardIndexTables]] and [[admitAgainstJaccardIndex]], so the
+    * prefix-length rule lives in exactly one place. */
   private[graft] def prefixRows(sets: DataFrame, t: Double): DataFrame =
     sets.select(col("__id"), col("__sz"),
         posexplode(slice(col("__ord"), lit(1),
@@ -584,9 +559,7 @@ object Dedup {
     * prefix digest, [[sizeCompatible]] filter, then the PPJoin
     * positional filter over min collision positions (min over all
     * shared prefix tokens only loosens the bound — prunes no true
-    * pair). Both inputs are [[prefixRows]]-shaped. Shared by the
-    * batch admission gate and the streaming sink so the filter
-    * thresholds cannot drift apart. */
+    * pair). Both inputs are [[prefixRows]]-shaped. */
   private[graft] def storeCandidates(storePrefix: DataFrame,
       batchPrefix: DataFrame, t: Double): DataFrame = {
     val bp = batchPrefix.select(col("h"), col("id").as("id_new"),
@@ -727,19 +700,18 @@ object Dedup {
     // concurrent-stage race exists here (the collect is sequential
     // driver code), unlike the self-ordering path inside
     // orderedShingleSets where eager stays required. The internal
-    // cache stays ON (pin default): the checkpoint blocks are
-    // per-invocation, while the cached ordering is what any identical
-    // later invocation in the session resolves to.
+    // cache stays on: the checkpoint blocks are per-invocation, while
+    // the cached ordering is what any identical later invocation in
+    // the session resolves to.
     val bsets = orderedShingleSets(batch, textCol, idCol, n,
       Some(dfTable)).localCheckpoint(eager = false)
     // size-envelope prune BEFORE the probe: store rows outside every
     // batch band's [t·mn, mx/t] cannot be size-compatible with ANY
     // batch row, so the filter is semantics-free; on a parquet-backed
-    // prefix it prunes szb= band directories (and row groups via the
-    // pushed sz ranges), bounding read I/O by the batch's PER-BAND
-    // size envelopes even when the batch itself mixes sizes
-    val pruned = prefix.where(sizeEnvelopePredicate(bsets, minJaccard,
-      prefix.columns.contains("szb")))
+    // prefix it prunes row groups via the pushed sz ranges, bounding
+    // read I/O by the batch's PER-BAND size envelopes even when the
+    // batch itself mixes sizes
+    val pruned = prefix.where(sizeEnvelopePredicate(bsets, minJaccard))
     val cand = storeCandidates(pruned, prefixRows(bsets, minJaccard),
       minJaccard)
     val byStore = verifySuppressed(cand,

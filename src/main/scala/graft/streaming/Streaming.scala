@@ -45,10 +45,9 @@ private[graft] final class SwapWait(waitMs: Long) {
   * Each micro-batch is quality-gated, optionally decontaminated
   * against a standing benchmark n-gram registry
   * ([[Streaming.benchmarkIndexSink]]), near-dup admitted against a
-  * standing index (MinHash LSH or exact Jaccard), written as payload
-  * under `corpus/batch=<id>/`, and aggregated into the `stats/` store
-  * ([[Streaming.curationIngestSink]] /
-  * [[Streaming.curationIngestSinkExact]]). Around the ingest sit the
+  * standing MinHash LSH index, written as payload under
+  * `corpus/batch=<id>/`, and aggregated into the `stats/` store
+  * ([[Streaming.curationIngestSink]]). Around the ingest sit the
   * store's maintenance passes: retroactive decontamination sweeps,
   * stats rebuild and repair, compaction, named snapshots with diffs
   * and exports, and `fsck` audits.
@@ -65,8 +64,8 @@ object Streaming {
   /** The Append-mode micro-batch writer every store sink shares: each
     * batch goes to `f` with its batch id. No-data batches (watermark
     * advancement) must not touch the store, so `f` tests emptiness:
-    * the curation sinks read it from their quality gate's checkpoint
-    * ([[curationIngestGated]]) rather than spend a job on it here. */
+    * the curation sink reads it from its quality gate's checkpoint
+    * ([[curationIngestBatch]]) rather than spend a job on it here. */
   private def batchSink(input: DataFrame, checkpoint: String)(
       f: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     input.writeStream
@@ -313,13 +312,11 @@ object Streaming {
     if (!fs.exists(dir) && fs.exists(backup)) backup.toString else statsDir
   }
 
-  /** Number of hash buckets a band hash (or a Jaccard digest / id)
-    * maps to, and the MinHash index's bucketing function. In the
-    * MinHash dedup index `bh` is a DATA column each batch's files are
-    * sorted by, so Parquet row-group min/max narrow a bucket probe; the
-    * exact-Jaccard index partitions its `jb=`/`ab=` dirs by the same
-    * count. A layout constant of both indexes, not a tunable per
-    * call. */
+  /** Number of hash buckets a band hash maps to, and the MinHash
+    * index's bucketing function. In the MinHash dedup index `bh` is a
+    * DATA column each batch's files are sorted by, so Parquet row-group
+    * min/max narrow a bucket probe. A layout constant of the index,
+    * not a tunable per call. */
   private[graft] val DedupIndexBuckets = 64
   private[graft] def dedupIndexBucket(bandHash: Column): Column =
     pmod(crc32(bandHash), lit(DedupIndexBuckets)).cast("int")
@@ -449,190 +446,6 @@ object Streaming {
     dedupIndexScan(spark, indexDir, None)
       .getOrElse(spark.read.parquet(indexDir))
       .select("id", "text_hash", "band_idx", "band_hash", "batch", "bh")
-
-  private[graft] def jaccardPrefixBucket(h: Column): Column =
-    pmod(crc32(h), lit(DedupIndexBuckets)).cast("int")
-  private[graft] def jaccardArrayBucket(id: Column): Column =
-    pmod(crc32(id.cast("string")), lit(DedupIndexBuckets)).cast("int")
-
-  /** EXACT-Jaccard admission of one batch — the exact-threshold form
-    * of [[mergeDedupIndexBatch]] (whose LSH banding is
-    * probabilistic): order the batch's shingle sets under the FROZEN
-    * `dfTable` ([[graft.ops.Dedup.shingleDfTable]], pinned at index
-    * creation), admit documents below `minJaccard` against every
-    * stored and every earlier in-batch document (recall exactly 1.0),
-    * and append the admitted rows to the two-table layout:
-    * `prefix/batch=<id>/jb=<k>/szb=<b>/` (candidate probe rows, bucketed
-    * by digest with a ⌊log2 sz⌋ size band) and
-    * `arrays/batch=<id>/ab=<k>/` (packed digest sets for verification,
-    * bucketed by id). Reads prune both trees, so per-batch I/O is
-    * O(batch + matched rows), never O(index). Exactly-once by the
-    * [[mergeDedupIndexBatch]] discipline. Returns the admitted subset
-    * (materialized). */
-  private[graft] def mergeJaccardIndexBatch(batch: DataFrame,
-      textCol: String, idCol: String, indexDir: String, batchId: Long,
-      dfTable: DataFrame, n: Int, minJaccard: Double): DataFrame =
-    withStoreLock(batch.sparkSession, Seq(indexDir)) {
-      healCompactRoot(batch.sparkSession, indexDir)
-      mergeJaccardIndexBody(batch, textCol, idCol, indexDir, batchId,
-        dfTable, n, minJaccard)
-    }
-
-  private def mergeJaccardIndexBody(batch: DataFrame,
-      textCol: String, idCol: String, indexDir: String, batchId: Long,
-      dfTable: DataFrame, n: Int, minJaccard: Double): DataFrame = {
-    val spark = batch.sparkSession
-    val dir = new HPath(indexDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new HPath(dir, s"prefix/batch=$batchId"), true)
-    fs.delete(new HPath(dir, s"arrays/batch=$batchId"), true)
-    val hasPrior = fs.exists(new HPath(dir, "prefix")) &&
-      fs.listStatus(new HPath(dir, "prefix"))
-        .exists(_.getPath.getName.startsWith("batch="))
-    // the tree's prefix layout is FIXED at its first write: a store
-    // created before the size-banded (`szb=`) layout keeps jb=-only
-    // dirs — mixing partition depths under one tree would break
-    // partition discovery; rebuildJaccardIndex migrates old stores
-    val bandedLayout = !hasPrior ||
-      spark.read.parquet(s"$indexDir/prefix").columns.contains("szb")
-    val bsets = graft.ops.Dedup.orderedShingleSets(batch, textCol, idCol,
-      n, Some(dfTable), pin = false) // the checkpoint is the only pin
-      .localCheckpoint()
-    // candidate generation / size / positional / verify logic is the
-    // SHARED batch-admission machinery (Dedup.prefixRows /
-    // storeCandidates / verifySuppressed) — only the standing-table
-    // fetches (bucket-pruned reads) live here
-    val bpref = graft.ops.Dedup.prefixRows(bsets, minJaccard)
-      .localCheckpoint()
-    // materialized BEFORE the tree writes below: the admission plan
-    // reads the standing trees, and a caller (the exact curation
-    // ingest) actions the returned frame AFTER this batch's own dirs
-    // land — a lazy plan re-listing the tree then could suppress the
-    // batch against itself
-    val admitted: DataFrame = (
-      if (!hasPrior) {
-        // first batch: in-batch dedup only (over the already-ordered
-        // sets — no re-shingling)
-        val inBatch = graft.ops.Dedup.pairsFromOrdered(bsets, minJaccard)
-          .select(col("id_b").as(idCol)).distinct()
-        batch.join(inBatch, Seq(idCol), "left_anti")
-      } else {
-        // probe tree pruned on BOTH partition dimensions: the jb=
-        // buckets the batch's digests hash into AND the szb= size
-        // bands its size-compatibility envelope can reach — a large
-        // batch that touches all digest buckets still reads only the
-        // band dirs inside [t·mn, mx/t], so admission I/O is bounded
-        // by the batch's size envelope, not index age
-        val touched = bpref
-          .select(jaccardPrefixBucket(col("h")).as("jb"))
-          .distinct().collect().map(_.getInt(0))
-        // an old (jb=-only) store prunes on jb + the row-level sz
-        // ranges alone — no szb= directory dimension to push
-        val standingPrefix = spark.read.parquet(s"$indexDir/prefix")
-          .where(col("jb").isin(touched.toSeq: _*) &&
-            graft.ops.Dedup.sizeEnvelopePredicate(bsets, minJaccard,
-              bandedLayout))
-          .drop((Seq("batch", "jb") ++
-            (if (bandedLayout) Seq("szb") else Nil)): _*)
-        // candidate store ids first (cheap fixed-width joins), then
-        // fetch ONLY their ab= buckets for verification
-        val cand = graft.ops.Dedup
-          .storeCandidates(standingPrefix, bpref, minJaccard)
-          .localCheckpoint()
-        val abTouched = cand
-          .select(jaccardArrayBucket(col("id_store")).as("ab"))
-          .distinct().collect().map(_.getInt(0))
-        val standingArrays =
-          if (abTouched.isEmpty)
-            // schema from the batch's own sets — never a parquet read
-            // of a tree that may hold no data files yet
-            bsets.select(col("__id").as("id_store"),
-              col("__ord").as("__A")).limit(0)
-          else spark.read.parquet(s"$indexDir/arrays")
-            .where(col("ab").isin(abTouched.toSeq: _*))
-            .select(col("id").as("id_store"), col("ord").as("__A"))
-        val byStore = graft.ops.Dedup
-          .verifySuppressed(cand, standingArrays, bsets, minJaccard)
-          .select(col("id_new").as(idCol))
-        val inBatch = graft.ops.Dedup.pairsFromOrdered(bsets, minJaccard)
-          .select(col("id_b").as(idCol))
-        batch.join(byStore.unionByName(inBatch).distinct(), Seq(idCol),
-          "left_anti")
-      }).localCheckpoint()
-    // guard on the WRITE FRAMES themselves: a batch that contributes
-    // no indexable rows (all-null-text batch, or only shingle-less
-    // docs among the admitted) must write NOTHING — a batch= dir
-    // holding only _SUCCESS would make the next batch's standing read
-    // fail parquet schema inference and wedge the stream on every
-    // replay. The two frames are empty together (every shingled doc
-    // has a prefix of length >= 1), so the trees stay in step.
-    val admittedIds = admitted.select(col(idCol).as("id"))
-      .localCheckpoint()
-    val arrRows = bsets.select(col("__id").as("id"),
-        col("__ord").as("ord"), col("__sz").as("sz"))
-      .join(admittedIds, Seq("id"), "left_semi")
-      .withColumn("ab", jaccardArrayBucket(col("id")))
-      .localCheckpoint()
-    val prefRows0 = bpref.join(admittedIds, Seq("id"), "left_semi")
-      .withColumn("jb", jaccardPrefixBucket(col("h")))
-    val prefRows = (
-      if (bandedLayout) prefRows0.withColumn("szb",
-        graft.ops.Dedup.jaccardSizeBand(col("sz")))
-      else prefRows0).localCheckpoint()
-    if (!arrRows.isEmpty)
-      arrRows.write.mode("overwrite").partitionBy("ab")
-        .parquet(s"$indexDir/arrays/batch=$batchId")
-    if (!prefRows.isEmpty)
-      prefRows.write.mode("overwrite")
-        .partitionBy((if (bandedLayout) Seq("jb", "szb")
-          else Seq("jb")): _*)
-        .parquet(s"$indexDir/prefix/batch=$batchId")
-    admitted
-  }
-
-  /** The admitted (id, ord, sz) sets of an exact-Jaccard index
-    * ([[mergeJaccardIndexBatch]]) (plus
-    * `batch`/`ab` partition columns); admitted ids = `distinct(id)`. */
-  def readJaccardIndexArrays(spark: SparkSession,
-                             indexDir: String): DataFrame =
-    spark.read.parquet(s"$indexDir/arrays")
-
-  /** Persist the frozen [[graft.ops.Dedup.shingleDfTable]] under the
-    * index root (`df_table/`) — the cross-session form of the pin the
-    * in-session cache() provides: an index's prefix invariants are
-    * only valid under the EXACT order it was built with, so the order
-    * must be stored WITH the index, written once at index creation
-    * and re-read ([[readJaccardDfTable]]) by every later session's
-    * sink or admission call. Written under the
-    * [[graft.ops.Warehouse.atomicSwap]] discipline — a plain
-    * overwrite crashing mid-write could leave the order absent or
-    * TRUNCATED, silently invalidating every stored prefix. */
-  def writeJaccardDfTable(dfTable: DataFrame, indexDir: String): Unit =
-    // one swap discipline, one backup-naming scheme: the shared
-    // heal + tmp-write + atomicSwap helper, applied to the df_table
-    // subdir (backup `.df_table.compact.old`, which
-    // [[readJaccardDfTable]] and [[compactJaccardIndex]] both know);
-    // under the INDEX root's lease — the order pin must not race a
-    // compaction that copies df_table through its root swap
-    withStoreLock(dfTable.sparkSession, Seq(indexDir)) {
-      swapInCompacted(dfTable.sparkSession, s"$indexDir/df_table") {
-        (tmp, _) => dfTable.write.mode("overwrite").parquet(tmp)
-      }
-    }
-
-  /** Re-read a [[writeJaccardDfTable]] snapshot (falling back to the
-    * swap backup if a writer crashed mid-rename — reads never heal,
-    * per the store-read discipline; a table missing from BOTH
-    * locations errors against the primary path), cached like a fresh
-    * [[graft.ops.Dedup.shingleDfTable]] so per-batch consumers share
-    * one read. */
-  def readJaccardDfTable(spark: SparkSession, indexDir: String): DataFrame = {
-    val dir = new HPath(s"$indexDir/df_table")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val backup = compactBackupPath(dir)
-    val p = if (!fs.exists(dir) && fs.exists(backup)) backup else dir
-    spark.read.parquet(p.toString).cache()
-  }
 
   /** END-TO-END streaming corpus curation in ONE exactly-once sink:
     * per micro-batch, (1) quality-gate on
@@ -859,26 +672,16 @@ object Streaming {
     }
   }
 
+  /** One [[curationIngestSink]] batch: schema check, quality gate,
+    * the optional pinned decontamination gate, then — under the index
+    * and corpus leases — [[mergeDedupIndexBody]]'s admission of the
+    * surviving rows, whose admitted subset [[ingestTail]] writes as
+    * payload and as its stats parts. */
   private[graft] def curationIngestBatch(batch: DataFrame, textCol: String,
       idCol: String, rootDir: String, batchId: Long, minQuality: Double,
       lenLo: Double, lenHi: Double, numHashes: Int, bands: Int,
       shingleSize: Int, benchmarkDir: Option[String] = None,
-      deconMinHits: Long = 1L): Unit =
-    curationIngestGated(batch, textCol, idCol, rootDir, batchId,
-        minQuality, lenLo, lenHi, benchmarkDir, deconMinHits) { gated =>
-      mergeDedupIndexBody(gated, textCol, idCol, s"$rootDir/index",
-        batchId, numHashes, bands, shingleSize)
-    }
-
-  /** The ingest both curation sinks share around their dedup gate
-    * `admit`: schema check, quality gate, the optional pinned
-    * decontamination gate, then — under the index and corpus leases —
-    * `admit` on the surviving rows, whose admitted subset
-    * [[ingestTail]] writes as payload and as its stats parts. */
-  private def curationIngestGated(batch: DataFrame, textCol: String,
-      idCol: String, rootDir: String, batchId: Long, minQuality: Double,
-      lenLo: Double, lenHi: Double, benchmarkDir: Option[String],
-      deconMinHits: Long)(admit: DataFrame => DataFrame): Unit = {
+      deconMinHits: Long = 1L): Unit = {
     requireCorpusSchema(batch, rootDir)
     val spark = batch.sparkSession
     // every checkpoint of the batch is released before this returns:
@@ -908,7 +711,8 @@ object Streaming {
         withStoreLock(spark, Seq(s"$rootDir/index", s"$rootDir/corpus")) {
           healCompactRoot(spark, s"$rootDir/index")
           healCurationCorpusRoot(spark, s"$rootDir/corpus")
-          val admitted = admit(gated)
+          val admitted = mergeDedupIndexBody(gated, textCol, idCol,
+            s"$rootDir/index", batchId, numHashes, bands, shingleSize)
           try ingestTail(admitted, textCol, rootDir, batchId, lenLo, lenHi)
           finally graft.ops.Scale.releaseLocalCheckpoint(admitted)
         }
@@ -917,7 +721,7 @@ object Streaming {
   }
 
   /** Pinned per-batch decontamination gate for the curation-ingest
-    * sinks: drop batch rows sharing ≥ `minHits` n-grams with the
+    * sink: drop batch rows sharing ≥ `minHits` n-grams with the
     * standing benchmark registry at `benchmarkDir`
     * ([[benchmarkIndexSink]]), and PIN the dropped-id set under
     * `rootDir/decon/batch=<id>/` so a crash replay re-applies the
@@ -1502,8 +1306,7 @@ object Streaming {
     * carry the contributions folded in when the now-tombstoned rows
     * were admitted. This is the UNIVERSAL repair — recompute both
     * parts from [[readCleanCorpus]] in one scan and swap the store
-    * wholesale (the [[rebuildJaccardIndex]] discipline applied to
-    * stats); it needs nothing pinned, so it also repairs stores whose
+    * wholesale; it needs nothing pinned, so it also repairs stores whose
     * sweeps predate the delta pins. The everyday repair is
     * [[subtractTombstonedStats]] — O(tombstoned docs), no corpus
     * scan, crash-safe via its swap-committed marker. Pass the SAME
@@ -1945,8 +1748,8 @@ object Streaming {
     * SELF-CALIBRATING expansion factor: [[measuredExpansion]]
     * re-encodes one bounded pinned parquet file with the target codec
     * and measures the actual ratio, so the sizing is exact for every
-    * codec and corpus shape forever (falling back to the
-    * ExportProbe-measured table — plain ≈ 3×, gzip ≈ 0.6×,
+    * codec and corpus shape forever (falling back to a table
+    * measured on a multi-GB corpus — plain ≈ 3×, gzip ≈ 0.6×,
     * zstd ≈ 0.55× — only when calibration cannot encode). A 100 TB
     * snapshot thus fans out to enough write tasks instead of wedging
     * a fixed or mis-guessed shard count into straggler/OOM
@@ -2027,8 +1830,8 @@ object Streaming {
     * is structurally wrong however well it measures: the candidate
     * file can only witness ITS batch's compressibility, and a corpus
     * whose batches differ wildly (a replicated-boilerplate backfill
-    * beside random-ish hex dumps; ExportProbe's `skew` fixture
-    * measured a gzip export landing ONE 1.66 GB shard against the
+    * beside random-ish hex dumps; a measured `skew` fixture (PERF.md)
+    * landed a gzip export as ONE 1.66 GB shard against the
     * 512 MB target this way, and plain landing 117 shards of 33 MB —
     * a 15× file-count explosion at the other extreme) can make the
     * estimate land the mean shard far from target in either
@@ -2151,12 +1954,12 @@ object Streaming {
     * measure, or a codec the runtime cannot encode). Codec-aware:
     * sizing compressed exports by the uncompressed-JSON factor would
     * cut every shard to a fraction of the target and multiply the
-    * file count at 100 TB. Factors are ExportProbe-measured on a
+    * file count at 100 TB. Factors were measured on a
     * multi-GB corpus (PERF.md round 12): plain JSONL ran 2.94× the
     * snappy-parquet bytes, gzip 0.57× (cross-row text compression
     * beats parquet's per-page snappy); zstd is gzip-pegged slightly
-    * tighter (text-sink zstd needs native hadoop, absent where the
-    * probe runs). Rounded UP from the measurement: an overestimated
+    * tighter (text-sink zstd needs native hadoop, absent where it was
+    * measured). Rounded UP from the measurement: an overestimated
     * factor errs toward slightly smaller shards, never oversized
     * ones. */
   private def derivedShardCount(parquetBytes: Long,
@@ -2178,7 +1981,7 @@ object Streaming {
     * re-encoded as JSONL under `scratch` with the target codec and
     * its output bytes measured, so the factor tracks the actual data
     * shape and codec instead of a table of guesses — the r11 gzip
-    * guess was 1.75× off until ExportProbe measured it, and a factor
+    * guess was 1.75× off until it was measured, and a factor
     * measured on ONE corpus still drifts on another (compressibility
     * is data-dependent). Padded ×1.1 so estimation error lands on
     * slightly-small shards, never oversized ones. None when there is
@@ -2381,27 +2184,6 @@ object Streaming {
             "crashed swap scratch; never read, overwritten by the " +
               "next maintenance write",
           if (corpusCarry) healCorpus(tmp) else healDelete(tmp)))
-    }
-    // ---- the exact-Jaccard index's frozen-order df_table has its
-    // own swap pair INSIDE the index tree (writeJaccardDfTable)
-    locally {
-      val target = s"$rootDir/index/df_table"
-      val backup = s"$rootDir/index/.df_table.compact.old"
-      val tmp = s"$rootDir/index/.df_table.compact.tmp"
-      if (exists(backup) && !exists(target))
-        out += (("swap", backup, "error",
-          "a df_table swap died between its two renames; the backup " +
-            "holds the frozen-order table — the next jaccard " +
-            "compaction restores it", healRestore(backup, target)))
-      else if (exists(backup))
-        out += (("swap", backup, "warn",
-          "stale df_table backup from a completed swap; deleted at " +
-            "the next jaccard compaction, safe to remove by hand",
-          healDelete(backup)))
-      if (exists(tmp))
-        out += (("swap", tmp, "warn",
-          "crashed df_table swap scratch; never read, overwritten " +
-            "by the next rebuild", healDelete(tmp)))
     }
     // ---- corpus batch dirs: _SUCCESS marks a complete write; a bare
     // dir is the replayable-trailing-batch signature
@@ -2609,11 +2391,11 @@ object Streaming {
   /** O(metadata) integrity audit of ONE standing store directory —
     * the generic form of [[fsckCurationStore]] for stores that live
     * outside a curation root: the benchmark n-gram registry
-    * ([[mergeStoreBatch]]), a curation stats store, and batch-dir
-    * index stores (dedup / exact-Jaccard).
-    * Checks both swap families, the `_batch` mark's readability,
+    * ([[mergeStoreBatch]]), a curation stats store, and the MinHash
+    * dedup index.
+    * Checks both swap families, the `_batch` mark's readability, and
     * `batch=` dirs without `_SUCCESS` (the replayable-trailing-batch
-    * signature), and the exact index's embedded `df_table` swap pair.
+    * signature).
     * Same finding schema and heal discipline as [[fsckCurationStore]]
     * — and safe to heal here: no store outside the curation corpus is
     * compacted by move-carry, so these scratches never hold an only
@@ -2660,9 +2442,6 @@ object Streaming {
     for (fam <- Seq("stats", "compact"))
       swapPair(s"$parent/.$name.$fam.old", s"$parent/.$name.$fam.tmp",
         storeDir, fam)
-    swapPair(s"$storeDir/.df_table.compact.old",
-      s"$storeDir/.df_table.compact.tmp", s"$storeDir/df_table",
-      "df_table")
     if (exists(s"$storeDir/_batch") &&
         scala.util.Try(readLongMarker(fs,
           new HPath(s"$storeDir/_batch"))).toOption.flatten.isEmpty)
@@ -2675,15 +2454,11 @@ object Streaming {
     // crashed-holder signature worth surfacing
     leaseFinding(fs, storeDir).foreach(out += _)
     // batch dirs live directly under the store (dedup index)
-    // or under the exact index's prefix/ and arrays/ subtrees
-    for (sub <- Seq("", "/prefix", "/arrays");
-        root = s"$storeDir$sub"
-        if fs.exists(new HPath(root));
-        n <- fs.listStatus(new HPath(root)).toSeq
-          .map(_.getPath.getName)
+    for (st <- if (fs.exists(dir)) fs.listStatus(dir).toSeq else Nil;
+        n = st.getPath.getName
         if n.startsWith("batch=")
-        if !exists(s"$root/$n/_SUCCESS"))
-      out += (("store", s"$root/$n", "warn",
+        if !exists(s"$storeDir/$n/_SUCCESS"))
+      out += (("store", s"$storeDir/$n", "warn",
         "batch dir without _SUCCESS — a torn write; the stream's " +
           "replay of this batch id deletes and rewrites it", false))
     import spark.implicits._
@@ -3046,11 +2821,10 @@ object Streaming {
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** The payload + stats tail every curation-ingest variant shares
-    * (the LSH gate above, the exact-Jaccard gate below): write the
+  /** The payload + stats tail of a curation-ingest batch: write the
     * admitted rows under `corpus/batch=<id>/` and their own stats
     * aggregates under `stats/` — stats see exactly the corpus that
-    * survived, whatever gate decided it. */
+    * survived the gates. */
   private[graft] def ingestTail(admitted: DataFrame, textCol: String,
       rootDir: String, batchId: Long, lenLo: Double,
       lenHi: Double): Unit = {
@@ -3290,43 +3064,6 @@ object Streaming {
       }
   }
 
-  /** [[curationIngestSink]] with the EXACT-Jaccard admission gate in
-    * place of the LSH one — the quality-over-throughput composition:
-    * gate → [[mergeJaccardIndexBatch]]'s standing-index admission (recall
-    * exactly 1.0 at `minJaccard`, no band-coincidence suppression) →
-    * payload → stats, all four effects exactly-once under one replay
-    * discipline. `dfTable` is the frozen order pinned at index
-    * creation ([[writeJaccardDfTable]] / [[readJaccardDfTable]]).
-    * Costs more per batch than the LSH gate (ordering pass + exact
-    * verification); pick it when a missed near-dup is worse than the
-    * extra compute. */
-  def curationIngestSinkExact(docs: DataFrame, textCol: String,
-      idCol: String, rootDir: String, checkpoint: String,
-      dfTable: DataFrame, minQuality: Double = 0.5,
-      lenLo: Double = 0.0, lenHi: Double = 5000.0, n: Int = 3,
-      minJaccard: Double = 0.5,
-      benchmarkDir: Option[String] = None,
-      deconMinHits: Long = 1L) =
-    batchSink(docs, checkpoint) { (batch, batchId) =>
-      curationIngestBatchExact(batch, textCol, idCol, rootDir,
-        batchId, minQuality, lenLo, lenHi, dfTable, n, minJaccard,
-        benchmarkDir, deconMinHits)
-    }
-
-  private[graft] def curationIngestBatchExact(batch: DataFrame,
-      textCol: String, idCol: String, rootDir: String, batchId: Long,
-      minQuality: Double, lenLo: Double, lenHi: Double,
-      dfTable: DataFrame, n: Int, minJaccard: Double,
-      benchmarkDir: Option[String] = None,
-      deconMinHits: Long = 1L): Unit =
-    // the decon pin keys on the INGEST batch id, so the two gate
-    // variants share it
-    curationIngestGated(batch, textCol, idCol, rootDir, batchId,
-        minQuality, lenLo, lenHi, benchmarkDir, deconMinHits) { gated =>
-      mergeJaccardIndexBody(gated, textCol, idCol, s"$rootDir/index",
-        batchId, dfTable, n, minJaccard)
-    }
-
   /** The admitted corpus of a [[curationIngestSink]] (payload rows +
     * the `batch` partition column). */
   def readCurationCorpus(spark: SparkSession, rootDir: String): DataFrame =
@@ -3442,7 +3179,7 @@ object Streaming {
     * Liveness is the lease file's modification time: a HEARTBEAT
     * daemon refreshes every held lock's mtime each `staleAfterMs / 4`
     * for as long as the body runs, so a legitimate holder of ANY
-    * duration — a whole-corpus [[rebuildJaccardIndex]] pass included
+    * duration — a whole-corpus [[rebuildCurationStats]] pass included
     * — never reads as dead; only a lock whose mtime has STOPPED
     * advancing for `staleAfterMs` is stale (its holder crashed — the
     * tree state heals separately via the swap-backup discipline).
@@ -3605,16 +3342,16 @@ object Streaming {
     }
   }
 
-  /** Swap a freshly-written `<indexDir>.compact.tmp` tree into place
-    * with [[graft.ops.Warehouse.atomicSwap]] discipline (heal first,
-    * backup-rename window, crash-recoverable). */
   /** The ONE definition of the compaction-swap backup path — shared
-    * by [[swapInCompacted]], [[healCompactRoot]] and
-    * [[readJaccardDfTable]]'s crash-fallback so the scheme cannot
-    * drift between writer, healer and reader. */
+    * by [[swapInCompacted]], [[healCompactRoot]] and the corpus schema
+    * check's mid-swap test so the scheme cannot drift between writer,
+    * healer and reader. */
   private def compactBackupPath(dir: HPath): HPath =
     new HPath(dir.getParent, s".${dir.getName}.compact.old")
 
+  /** Swap a freshly-written `<indexDir>.compact.tmp` tree into place
+    * with [[graft.ops.Warehouse.atomicSwap]] discipline (heal first,
+    * backup-rename window, crash-recoverable). */
   private def swapInCompacted(spark: SparkSession, indexDir: String)(
       write: (String, org.apache.hadoop.fs.FileSystem) => Unit): Unit = {
     val dir = new HPath(indexDir)
@@ -3952,148 +3689,5 @@ object Streaming {
     }
     if (tomb.nonEmpty && fs.exists(new HPath(s"$rootDir/decon")))
       writeLongMarker(fs, purgeFile, sweepMark)
-  }
-
-  /** Offline (re)build of an exact-Jaccard index from its
-    * ADMITTED corpus under a NEW frozen order — the drift path the
-    * sink pins away: as the corpus grows past the reference snapshot
-    * the original [[graft.ops.Dedup.shingleDfTable]] described,
-    * prefix lengths derive from stale document frequencies, so
-    * now-common shingles sit in prefixes and candidate counts creep
-    * up (decisions stay EXACT — DedupSpec asserts admission is
-    * order-independent — only the pruning the order exists for
-    * degrades). Re-deriving the order and re-indexing from source is
-    * the honest refresh for the exact-dedup store: writes the
-    * `prefix/batch=-1/jb=` + `arrays/batch=-1/ab=` layout plus the new
-    * `df_table/` under ONE atomic swap. A resuming stream appends above
-    * `-1` — pass it the NEW order ([[readJaccardDfTable]]). `corpus`
-    * must be the admitted documents (e.g. the payloads backing
-    * `readJaccardIndexArrays` ids) — rebuild re-indexes, it does not
-    * re-dedup — documents admitted between the `corpus` snapshot and
-    * the rebuild's lease acquisition are absent from the rebuilt
-    * index, so snapshot as close to the rebuild as practical (merges
-    * that queue BEHIND the lease are safe: they re-run after the swap
-    * and append above `batch=-1`). Runs under the index root's store
-    * lease for its whole corpus pass. */
-  def rebuildJaccardIndex(spark: SparkSession, corpus: DataFrame,
-                          textCol: String, idCol: String,
-                          indexDir: String, n: Int = 3,
-                          minJaccard: Double = 0.5): Unit =
-    withStoreLock(spark, Seq(indexDir)) {
-      rebuildJaccardIndexBody(spark, corpus, textCol, idCol, indexDir,
-        n, minJaccard)
-    }
-
-  private def rebuildJaccardIndexBody(spark: SparkSession,
-      corpus: DataFrame, textCol: String, idCol: String,
-      indexDir: String, n: Int, minJaccard: Double): Unit = {
-    val frozen = graft.ops.Dedup.shingleDfTable(corpus, textCol, n)
-    val (arrays0, prefix) = graft.ops.Dedup.jaccardIndexTables(
-      corpus, textCol, idCol, n, minJaccard, frozen)
-    // materialized so the corpus-ordering shuffle feeds both tree
-    // writes from one pass; and a corpus with nothing indexable must
-    // FAIL here, not write _SUCCESS-only partitioned batch=-1 dirs
-    // that would wedge every later merge's schema inference
-    val arrays = arrays0.localCheckpoint()
-    require(!arrays.isEmpty,
-      "rebuildJaccardIndex: corpus yields no shingle sets (empty, or " +
-        "all-null text) — refusing to write an empty index layout")
-    swapInCompacted(spark, indexDir) { (tmp, _) =>
-      arrays.withColumn("ab", jaccardArrayBucket(col("id")))
-        .repartition(DedupIndexBuckets, col("ab"))
-        .sortWithinPartitions("ab", "id")
-        .write.mode("overwrite").partitionBy("ab")
-        .parquet(s"$tmp/arrays/batch=-1")
-      prefix.withColumn("jb", jaccardPrefixBucket(col("h")))
-        .withColumn("szb", graft.ops.Dedup.jaccardSizeBand(col("sz")))
-        .repartition(DedupIndexBuckets, col("jb"))
-        .sortWithinPartitions("jb", "szb", "sz", "h")
-        .write.mode("overwrite").partitionBy("jb", "szb")
-        .parquet(s"$tmp/prefix/batch=-1")
-      frozen.write.mode("overwrite").parquet(s"$tmp/df_table")
-    }
-  }
-
-  /** Offline compaction for an exact-Jaccard index: collapse
-    * BOTH trees' per-batch dirs — `prefix/batch=<id>/jb=<k>/` into a
-    * single `prefix/batch=-1/jb=<k>/` (sorted by digest, so point
-    * probes prune parquet row groups) and `arrays/batch=<id>/ab=<k>/`
-    * into `arrays/batch=-1/ab=<k>/` (sorted by id, for the
-    * verification fetch) — under ONE atomic swap of the index root,
-    * so a reader never sees one tree compacted and the other not.
-    * Same live-stream lease, admission-parity guarantee and
-    * keep-last-batch rule as [[compactDedupIndex]]; the highest id
-    * over BOTH trees is the carried batch, so a merge that crashed
-    * between its arrays and prefix writes replays cleanly (its orphan
-    * arrays dir is deleted-and-redecided, never folded). */
-  def compactJaccardIndex(spark: SparkSession, indexDir: String): Unit =
-    withStoreLock(spark, Seq(indexDir)) {
-      compactJaccardIndexBody(spark, indexDir)
-    }
-
-  private def compactJaccardIndexBody(spark: SparkSession,
-      indexDir: String): Unit = {
-    healCompactRoot(spark, indexDir)
-    // also heal a crashed writeJaccardDfTable swap NOW (compaction is
-    // a writer, so healing is allowed): the root swap below only
-    // carries what it copies — an unconsumed `.df_table.compact.old`
-    // would be renamed away with the old root and destroyed
-    healCompactRoot(spark, s"$indexDir/df_table")
-    val fs = new HPath(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val pIds = batchDirIds(fs, new HPath(s"$indexDir/prefix"))
-    val aIds = batchDirIds(fs, new HPath(s"$indexDir/arrays"))
-    if ((pIds ++ aIds).isEmpty) return // no data yet (df_table-only ok)
-    val keep = (pIds ++ aIds).max
-    if ((pIds ++ aIds).filterNot(id => id == keep || id == -1L).isEmpty)
-      return // {batch=-1, latest} only: nothing to consolidate
-    swapInCompacted(spark, indexDir) { (tmp, fsi) =>
-      def fold(tree: String, ids: Seq[Long], bucket: String,
-               partCols: Seq[String], sort: Seq[String]): Unit = {
-        val foldIds = ids.filterNot(_ == keep)
-        if (foldIds.toSet == Set(-1L))
-          // this tree is already consolidated — carry batch=-1
-          // unchanged instead of an identity rewrite
-          carryBatchDir(spark, fsi,
-            new HPath(s"$indexDir/$tree/batch=-1"),
-            new HPath(s"$tmp/$tree/batch=-1"))
-        else if (foldIds.nonEmpty)
-          // (never write an EMPTY batch=-1: a _SUCCESS-only
-          // partitioned dir would wedge later schema inference)
-          spark.read.parquet(s"$indexDir/$tree")
-            .where(col("batch") =!= keep).drop("batch")
-            .repartition(DedupIndexBuckets, col(bucket))
-            .sortWithinPartitions(sort.map(col): _*)
-            .write.mode("overwrite").partitionBy(partCols: _*)
-            .parquet(s"$tmp/$tree/batch=-1")
-        carryBatchDir(spark, fsi,
-          new HPath(s"$indexDir/$tree/batch=$keep"),
-          new HPath(s"$tmp/$tree/batch=$keep"))
-      }
-      // prefix rows sort by (szb, sz) within each jb bucket: the
-      // admission read pushes an `sz BETWEEN` envelope filter, so
-      // sz-ordered row groups let parquet min/max stats skip the
-      // out-of-envelope span of every compacted file (the digest join
-      // is a join, not a filter — h-ordering could not prune reads).
-      // A store written before the size-banded layout stays on its
-      // jb=-only layout (same guard as the streaming merge — a
-      // rebuildJaccardIndex migrates it)
-      val bandedLayout = pIds.isEmpty ||
-        spark.read.parquet(s"$indexDir/prefix").columns
-          .contains("szb")
-      val (pParts, pSort) =
-        if (bandedLayout) (Seq("jb", "szb"), Seq("jb", "szb", "sz", "h"))
-        else (Seq("jb"), Seq("jb", "sz", "h"))
-      fold("prefix", pIds, "jb", pParts, pSort)
-      fold("arrays", aIds, "ab", Seq("ab"), Seq("ab", "id"))
-      // the persisted frozen order ([[writeJaccardDfTable]]) lives
-      // under the same root and must survive the swap — it IS the
-      // index's validity contract
-      val dfT = new HPath(s"$indexDir/df_table")
-      if (fsi.exists(dfT))
-        org.apache.hadoop.fs.FileUtil.copy(fsi, dfT, fsi,
-          new HPath(s"$tmp/df_table"), false,
-          spark.sparkContext.hadoopConfiguration)
-    }
   }
 }

@@ -24,14 +24,13 @@ class EntryPointsSpec extends AnyFunSuite {
     } === Seq("graft/GraftSession.scala"))
   }
 
-  test("only the seven entry points define a main") {
+  test("only the five entry points define a main") {
     val mains = sources.collect {
       case (f, src) if src.contains("def main(") ||
         src.matches("(?s).*extends\\s+App\\b.*") => f
     }.toSet
     assert(mains === Set("graft/Bench.scala", "graft/Verify.scala",
-      "graft/Explain.scala", "graft/ScaleProbe.scala",
-      "graft/ExportProbe.scala", "graft/pipelines/RunAll.scala",
+      "graft/Explain.scala", "graft/pipelines/RunAll.scala",
       "graft/streaming/LifecycleDemo.scala"))
   }
 }

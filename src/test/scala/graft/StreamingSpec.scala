@@ -43,285 +43,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("curationIngestSinkExact: gate -> EXACT-Jaccard dedup -> payload " +
-      "-> stats; parity with the sequential batch admission; replay no-op") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ingestx").toString
-    val junk = "@@@@ #### !!!! %%%% @@@@ #### !!!! %%%%"
-    val prose1 = "the river rises slowly through the spring and floods " +
-      "the lower meadows before the first haying"
-    val prose2 = "glass furnaces along the coast burned driftwood and " +
-      "kelp ash to melt sand into pale green bottles"
-    val prose3 = "the survey marked every boundary stone and recorded " +
-      "the field names the parish had used for centuries"
-    val scores = Seq(junk, prose1, prose2, prose3).toDF("t")
-      .select(graft.ops.Text.qualityScore(col("t")))
-      .collect().map(_.getDouble(0))
-    val minQ = (scores.head + scores.tail.min) / 2
-    val b1 = Seq((1L, prose1), (2L, junk), (3L, prose2))
-    val b2 = Seq((10L, prose1 + " x"), // near-dup of admitted 1 -> out
-      (11L, prose3),                   // novel -> admitted
-      (12L, junk))                     // gated out before dedup
-    val frozen = graft.ops.Dedup.shingleDfTable(
-      (b1 ++ b2).toDF("doc_id", "text"), "text", 3).localCheckpoint()
-    val in = MemoryStream[(Long, String)]
-    val q = Streaming.curationIngestSinkExact(
-      in.toDF().toDF("doc_id", "text"), "text", "doc_id", tmp,
-      s"$tmp/ckpt", frozen, minQuality = minQ, minJaccard = 0.5).start()
-    try {
-      in.addData(b1.toIndexedSeq: _*); q.processAllAvailable()
-      in.addData(b2.toIndexedSeq: _*); q.processAllAvailable()
-      val corpus = Streaming.readCurationCorpus(spark, tmp)
-      val ids = corpus.select("doc_id").collect().map(_.getLong(0)).toSet
-      // parity with the SEQUENTIAL batch admission over the gated rows
-      val g1 = b1.toDF("doc_id", "text")
-        .where(graft.ops.Text.qualityScore(col("text")) >= minQ)
-      val g2 = b2.toDF("doc_id", "text")
-        .where(graft.ops.Text.qualityScore(col("text")) >= minQ)
-      val (ar1, pr1) = graft.ops.Dedup.jaccardIndexTables(
-        g1, "text", "doc_id", 3, 0.5, frozen)
-      val seq2 = graft.ops.Dedup.admitAgainstJaccardIndex(
-          g2, "text", "doc_id", ar1, pr1, 3, 0.5, frozen)
-        .select("doc_id").collect().map(_.getLong(0)).toSet
-      assert(ids === g1.select("doc_id").collect().map(_.getLong(0)).toSet
-        ++ seq2)
-      assert(ids === Set(1L, 3L, 11L), s"exact gate admitted: $ids")
-      // the exact index holds exactly the admitted (shingled) docs
-      assert(Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-        .select("id").distinct().collect().map(_.getLong(0)).toSet === ids)
-      // stats saw exactly the admitted corpus
-      val hist = Streaming.readWordHistogram(spark, s"$tmp/stats")
-      val expect = graft.ops.Bpe.wordHistogram(
-        corpus.select("doc_id", "text"), "text")
-      assert(hist.count() === expect.count())
-      assert(hist.unionAll(expect).distinct().count() === expect.count())
-      // end-to-end crash replay of batch 1: all four effects no-op
-      val before = (corpus.collect().map(_.toSeq).toSet,
-        hist.collect().map(_.toSeq).toSet)
-      // same length-bucket bounds as the sink's default — the units
-      // guard rejects a reconfigured replay
-      Streaming.curationIngestBatchExact(b2.toDF("doc_id", "text"),
-        "text", "doc_id", tmp, 1L, minQ, 0.0, 5000.0, frozen, 3, 0.5)
-      assert((Streaming.readCurationCorpus(spark, tmp)
-          .collect().map(_.toSeq).toSet,
-        Streaming.readWordHistogram(spark, s"$tmp/stats")
-          .collect().map(_.toSeq).toSet) === before)
-      // the jaccard compactor composes with the exact ingest root
-      val payloadPre = Streaming.readCurationCorpus(spark, tmp)
-        .drop("batch").collect().map(_.toSeq).toSet
-      Streaming.compactCurationCorpus(spark, tmp)
-      Streaming.compactJaccardIndex(spark, s"$tmp/index")
-      assert(Streaming.readCurationCorpus(spark, tmp)
-        .drop("batch").collect().map(_.toSeq).toSet === payloadPre)
-      Streaming.curationIngestBatchExact(
-        Seq((20L, prose2.replace("green", "amber")))
-          .toDF("doc_id", "text"),
-        "text", "doc_id", tmp, 2L, minQ, 0.0, 5000.0, frozen, 3, 0.5)
-      // near-dup of stored 3 at t=0.5 -> suppressed by the standing gate
-      assert(Streaming.readCurationCorpus(spark, tmp)
-        .select("doc_id").collect().map(_.getLong(0)).toSet === ids)
-    } finally q.stop()
-  }
-
-  test("mergeJaccardIndexBatch: exact-threshold dedup matches the " +
-      "sequential batch-admission replay; crash-replay rewrites " +
-      "identical content") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-jix").toString
-    val d1 = "the quick brown fox jumps over the lazy dog tonight again"
-    val d2 = "glass furnaces along the coast burned driftwood and kelp ash"
-    val d3 = "rivers carve canyons slowly through layered sandstone walls"
-    val b1 = Seq((1L, d1), (2L, d2),
-      (3L, d1.replace("dog", "cat")))        // in-batch near-dup of 1
-    val b2 = Seq((10L, d1),                  // exact dup of stored 1
-      (11L, d2.replace("kelp", "peat")),     // near-dup of stored 2
-      (12L, d3))                             // novel
-    val frozen = graft.ops.Dedup.shingleDfTable(
-      (b1 ++ b2).toDF("doc_id", "text"), "text", 3)
-      .localCheckpoint()
-    Streaming.mergeJaccardIndexBatch(b1.toDF("doc_id", "text"), "text",
-      "doc_id", s"$tmp/index", 0L, frozen, 3, 0.5)
-    Streaming.mergeJaccardIndexBatch(b2.toDF("doc_id", "text"), "text",
-      "doc_id", s"$tmp/index", 1L, frozen, 3, 0.5)
-    val ids = Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-      .select("id").distinct().collect().map(_.getLong(0)).toSet
-    // sequential batch replay with the SAME frozen order
-    val (ar1, pr1) = graft.ops.Dedup.jaccardIndexTables(
-      b1.toDF("doc_id", "text")
-        .join(Seq(1L, 2L).toDF("doc_id"), Seq("doc_id"), "left_semi"),
-      "text", "doc_id", 3, 0.5, frozen)
-    val adm2 = graft.ops.Dedup.admitAgainstJaccardIndex(
-        b2.toDF("doc_id", "text"), "text", "doc_id", ar1, pr1,
-        3, 0.5, frozen)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(ids === Set(1L, 2L) ++ adm2)
-    assert(ids === Set(1L, 2L, 12L), s"admitted set diverged: $ids")
-    // crash replay of batch 1: identical content re-decided against
-    // the pre-crash standing state
-    val before = Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-      .collect().map(_.toSeq).toSet
-    Streaming.mergeJaccardIndexBatch(b2.toDF("doc_id", "text"), "text",
-      "doc_id", s"$tmp/index", 1L, frozen, 3, 0.5)
-    val after = Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-      .collect().map(_.toSeq).toSet
-    assert(after === before)
-    // compaction: both trees collapse to batch=-1 under ONE atomic
-    // swap; standing rows and a fresh batch's admission decision are
-    // identical before and after
-    val b3 = Seq((20L, d3.replace("walls", "cliffs")), (21L, d1))
-      .toDF("doc_id", "text")
-    def admit3() = graft.ops.Dedup.admitAgainstJaccardIndex(b3, "text",
-        "doc_id",
-        spark.read.parquet(s"$tmp/index/arrays").drop("batch", "ab"),
-        spark.read.parquet(s"$tmp/index/prefix").drop("batch", "jb"),
-        3, 0.5, frozen)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val rowsPre = Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-      .drop("batch", "ab").collect().map(_.toSeq).toSet
-    val admitPre = admit3()
-    // the frozen order persisted WITH the index round-trips: a later
-    // session re-reading it decides admission identically
-    Streaming.writeJaccardDfTable(frozen, s"$tmp/index")
-    val reread = Streaming.readJaccardDfTable(spark, s"$tmp/index")
-    assert(graft.ops.Dedup.admitAgainstJaccardIndex(b3, "text",
-        "doc_id",
-        spark.read.parquet(s"$tmp/index/arrays").drop("batch", "ab"),
-        spark.read.parquet(s"$tmp/index/prefix").drop("batch", "jb"),
-        3, 0.5, reread)
-      .select("doc_id").collect().map(_.getLong(0)).toSet === admitPre)
-    Streaming.compactJaccardIndex(spark, s"$tmp/index")
-    assert(Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-      .drop("batch", "ab").collect().map(_.toSeq).toSet === rowsPre)
-    assert(admit3() === admitPre)
-    // the persisted frozen order survives the root swap
-    assert(Streaming.readJaccardDfTable(spark, s"$tmp/index")
-      .collect().map(_.toSeq).toSet ===
-      frozen.collect().map(_.toSeq).toSet)
-    // replay of the carried latest batch (1) after compaction:
-    // its dir was NOT folded, so delete-and-redecide reproduces
-    // identical standing content
-    Streaming.mergeJaccardIndexBatch(b2.toDF("doc_id", "text"), "text",
-      "doc_id", s"$tmp/index", 1L, frozen, 3, 0.5)
-    assert(Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-      .drop("batch", "ab").collect().map(_.toSeq).toSet === rowsPre)
-    // crashed writeJaccardDfTable swap (order only in the backup):
-    // the reader falls back, and a subsequent compaction heals the
-    // backup BEFORE the root swap instead of destroying it
-    import java.nio.file.{Files => JF, Paths, StandardCopyOption}
-    JF.move(Paths.get(s"$tmp/index/df_table"),
-      Paths.get(s"$tmp/index/.df_table.compact.old"),
-      StandardCopyOption.ATOMIC_MOVE)
-    assert(Streaming.readJaccardDfTable(spark, s"$tmp/index")
-      .collect().map(_.toSeq).toSet ===
-      frozen.collect().map(_.toSeq).toSet)
-    Streaming.mergeJaccardIndexBatch(
-      Seq((30L, d2 + " entirely new words appended here"))
-        .toDF("doc_id", "text"),
-      "text", "doc_id", s"$tmp/index", 3L, frozen, 3, 0.5)
-    Streaming.compactJaccardIndex(spark, s"$tmp/index")
-    assert(Streaming.readJaccardDfTable(spark, s"$tmp/index")
-      .collect().map(_.toSeq).toSet ===
-      frozen.collect().map(_.toSeq).toSet)
-    // a post-compaction merge appends above batch=-1 and decides
-    // identically (21 is stored 1's exact dup -> suppressed)
-    Streaming.mergeJaccardIndexBatch(b3, "text", "doc_id",
-      s"$tmp/index", 2L, frozen, 3, 0.5)
-    val idsAfter = Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-      .select("id").distinct().collect().map(_.getLong(0)).toSet
-    assert(idsAfter === Set(1L, 2L, 12L) ++ admitPre)
-    // OFFLINE REBUILD under a freshly-derived order: the admitted
-    // corpus re-indexes into the batch=-1 layout + new df_table
-    // under one swap; admission stays EXACT (order-independent)
-    // and the stream appends above -1 with the new order
-    val admittedDocs = (b1 ++ b2).toDF("doc_id", "text")
-      .join(idsAfter.toSeq.toDF("doc_id"), Seq("doc_id"), "left_semi")
-    Streaming.rebuildJaccardIndex(spark, admittedDocs, "text",
-      "doc_id", s"$tmp/index", 3, 0.5)
-    assert(Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-      .select("id").distinct().collect().map(_.getLong(0)).toSet
-      === idsAfter)
-    val frozen2 = Streaming.readJaccardDfTable(spark, s"$tmp/index")
-    Streaming.mergeJaccardIndexBatch(
-      Seq((40L, d1),                           // dup of stored 1
-        (41L, "brand new unrelated content about migratory geese"))
-        .toDF("doc_id", "text"),
-      "text", "doc_id", s"$tmp/index", 5L, frozen2, 3, 0.5)
-    assert(Streaming.readJaccardIndexArrays(spark, s"$tmp/index")
-      .select("id").distinct().collect().map(_.getLong(0)).toSet
-      === idsAfter + 41L)
-  }
-
-  test("jaccard index written before the size-banded layout: merges and " +
-      "compaction fall back to the jb=-only prune and keep the layout") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-jbc").toString
-    val d1 = "the quick brown fox jumps over the lazy dog tonight again"
-    val d2 = "glass furnaces along the coast burned driftwood and kelp ash"
-    val d3 = "rivers carve canyons slowly through layered sandstone walls"
-    val d4 = "brand new unrelated content about migratory geese flying"
-    val all = Seq((1L, d1), (2L, d2), (10L, d1.replace("dog", "cat")),
-      (12L, d3), (20L, d2), (21L, d4))
-    val frozen = graft.ops.Dedup.shingleDfTable(
-      all.toDF("doc_id", "text"), "text", 3).localCheckpoint()
-    def run(dir: String, downgradeAfterTwo: Boolean): Set[Long] = {
-      Streaming.mergeJaccardIndexBatch(
-        Seq((1L, d1), (2L, d2)).toDF("doc_id", "text"),
-        "text", "doc_id", dir, 0L, frozen, 3, 0.5)
-      Streaming.mergeJaccardIndexBatch(
-        Seq((10L, d1.replace("dog", "cat")), (12L, d3))
-          .toDF("doc_id", "text"),
-        "text", "doc_id", dir, 1L, frozen, 3, 0.5)
-      if (downgradeAfterTwo) {
-        // rewrite the prefix tree to the PRE-szb layout: jb=-only
-        // dirs, no szb column — the store an older build left behind
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        new java.io.File(s"$dir/prefix").listFiles()
-          .filter(_.getName.startsWith("batch=")).foreach { bd =>
-            val side = s"$dir/.downgrade.tmp"
-            spark.read.parquet(bd.toString).drop("szb")
-              .write.mode("overwrite").partitionBy("jb").parquet(side)
-            fs.delete(new HPath(bd.toString), true)
-            assert(fs.rename(new HPath(side), new HPath(bd.toString)))
-          }
-        assert(!spark.read.parquet(s"$dir/prefix").columns
-          .contains("szb"))
-      }
-      // resumed stream: 20 is stored 2's exact dup (suppressed via
-      // the standing read — the path that crashed on unresolved szb),
-      // 21 is novel
-      Streaming.mergeJaccardIndexBatch(
-        Seq((20L, d2), (21L, d4)).toDF("doc_id", "text"),
-        "text", "doc_id", dir, 2L, frozen, 3, 0.5)
-      Streaming.compactJaccardIndex(spark, dir)
-      // a post-compaction merge replays cleanly too (carried batch)
-      Streaming.mergeJaccardIndexBatch(
-        Seq((20L, d2), (21L, d4)).toDF("doc_id", "text"),
-        "text", "doc_id", dir, 2L, frozen, 3, 0.5)
-      Streaming.readJaccardIndexArrays(spark, dir)
-        .select("id").distinct().collect().map(_.getLong(0)).toSet
-    }
-    val bandedIds = run(s"$tmp/banded", downgradeAfterTwo = false)
-    val oldIds = run(s"$tmp/old", downgradeAfterTwo = true)
-    // admission decisions are layout-invariant (the szb= dimension is
-    // an I/O prune, never semantics)
-    assert(oldIds === bandedIds)
-    assert(oldIds === Set(1L, 2L, 12L, 21L))
-    // the old store STAYED on its layout: new batch dirs and the
-    // compacted batch=-1 are jb=-only (no mixed partition depths)
-    assert(!spark.read.parquet(s"$tmp/old/prefix").columns
-      .contains("szb"))
-    assert(spark.read.parquet(s"$tmp/banded/prefix").columns
-      .contains("szb"))
-    // rebuildJaccardIndex migrates the old store to the banded layout
-    val adm = all.toDF("doc_id", "text")
-      .join(oldIds.toSeq.toDF("doc_id"), Seq("doc_id"), "left_semi")
-    Streaming.rebuildJaccardIndex(spark, adm, "text", "doc_id",
-      s"$tmp/old", 3, 0.5)
-    assert(spark.read.parquet(s"$tmp/old/prefix").columns
-      .contains("szb"))
-    assert(Streaming.readJaccardIndexArrays(spark, s"$tmp/old")
-      .select("id").distinct().collect().map(_.getLong(0)).toSet
-      === oldIds)
-  }
-
   test("curationIngestSink: gate -> dedup -> payload -> stats in one " +
       "exactly-once pass; crash-replay is a no-op end to end") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-ingest").toString
@@ -419,32 +140,6 @@ class StreamingSpec extends SparkSpec {
       "text", "doc_id", tmpC, 1L, minQ, 0.0, 1000.0, 8, 4, 3)
     assert(Streaming.readCurationCorpus(spark, tmpC)
       .select("doc_id").collect().map(_.getLong(0)).toSet === Set(2L))
-
-    // exact-Jaccard index: batch 0 all null-text (nothing shingles —
-    // short docs fall back to a whole-doc shingle, so only null is
-    // truly indexless)
-    val tmpJ = java.nio.file.Files.createTempDirectory("graft-jix0").toString
-    val frozen = graft.ops.Dedup.shingleDfTable(
-      Seq((1L, prose)).toDF("doc_id", "text"), "text", 3)
-    Streaming.mergeJaccardIndexBatch(
-      Seq((1L, null.asInstanceOf[String])).toDF("doc_id", "text"),
-      "text", "doc_id", s"$tmpJ/index", 0L, frozen, 3, 0.5)
-    assert(!new java.io.File(s"$tmpJ/index/prefix").exists())
-    Streaming.mergeJaccardIndexBatch(
-      Seq((2L, prose)).toDF("doc_id", "text"),
-      "text", "doc_id", s"$tmpJ/index", 1L, frozen, 3, 0.5)
-    assert(Streaming.readJaccardIndexArrays(spark, s"$tmpJ/index")
-      .select("id").collect().map(_.getLong(0)).toSet === Set(2L))
-    // mixed LATER batch: a null-text doc (admitted but indexless) plus
-    // a dup of a stored doc (suppressed) — the write FRAMES are empty
-    // even though batch, bsets and admitted are all non-empty, so no
-    // batch=2 dir may appear in either tree
-    Streaming.mergeJaccardIndexBatch(
-      Seq((3L, null.asInstanceOf[String]), (4L, prose))
-        .toDF("doc_id", "text"),
-      "text", "doc_id", s"$tmpJ/index", 2L, frozen, 3, 0.5)
-    assert(!new java.io.File(s"$tmpJ/index/arrays/batch=2").exists())
-    assert(!new java.io.File(s"$tmpJ/index/prefix/batch=2").exists())
 
     // MinHash dedup index: batch 0 all null text, so no band hash at all
     val tmpH = java.nio.file.Files.createTempDirectory("graft-mix0").toString
@@ -2391,10 +2086,6 @@ class StreamingSpec extends SparkSpec {
     // / rebuildCurationStats), NOT .compact.* — plant the real name
     Files.createDirectories(Paths.get(s"$tmp/.stats.stats.old"))
     Files.createDirectories(Paths.get(s"$tmp/.index.compact.old"))
-    // the exact-sink's df_table swaps INSIDE the index tree; with no
-    // df_table present, its backup is the mid-swap error state
-    Files.createDirectories(
-      Paths.get(s"$tmp/index/.df_table.compact.old"))
     Files.delete(Paths.get(s"$tmp/corpus/batch=0/_SUCCESS"))
     Files.createDirectories(
       Paths.get(s"$tmp/decon/tombstones/sweep=99"))
@@ -2427,7 +2118,6 @@ class StreamingSpec extends SparkSpec {
       ("swap", "warn", ".corpus.compact.tmp"),
       ("swap", "warn", ".stats.stats.old"),
       ("swap", "warn", ".index.compact.old"),
-      ("swap", "error", "index/.df_table.compact.old"),
       ("corpus", "warn", "corpus/batch=0"),
       ("decon", "warn", "decon/tombstones/sweep=99"),
       ("decon", "error", "decon/tombstones/sweep=0"),
@@ -2448,18 +2138,16 @@ class StreamingSpec extends SparkSpec {
     assert(Streaming.fsckCurationStore(spark, tmp).collect()
       .forall(!_.getBoolean(4)))
     // heal pass: exactly the safe classes repair (scratch, stale
-    // backup, mid-swap restore, ahead-of-mark sweep, snapshot tmp) —
+    // backup, ahead-of-mark sweep, snapshot tmp) —
     // operator-decision and replay findings stay put
     val healed = Streaming.fsckCurationStore(spark, tmp, heal = true)
       .where(col("healed")).collect()
       .map(_.getString(1).stripPrefix(s"$tmp/")).toSet
     assert(healed === Set(".corpus.compact.tmp", ".stats.stats.old",
-      ".index.compact.old", "index/.df_table.compact.old",
+      ".index.compact.old",
       "decon/tombstones/sweep=99", "decon/statsdelta/sweep=99",
       "decon/statsdelta/.sweep=99.tmp", "decon/hits/base=99",
       "snapshots/.z.tmp"))
-    // the mid-swap df_table backup was RESTORED, not deleted
-    assert(new java.io.File(s"$tmp/index/df_table").isDirectory)
     val after = Streaming.fsckCurationStore(spark, tmp).collect()
       .map(r => (r.getString(0), r.getString(2),
         r.getString(1).stripPrefix(s"$tmp/"))).toSet
@@ -2488,9 +2176,9 @@ class StreamingSpec extends SparkSpec {
       "turning hubs that would outlast the iron tyres"
     val docs = Seq((1L, prose1), (3L, prose3), (5L, prose5))
       .toDF("doc_id", "text")
-    // an aggregate store, a banded dedup index, and a compacted
-    // exact-Jaccard index — all healthy, all must audit EMPTY (the
-    // real false-positive test: _SUCCESS placement, df_table pair)
+    // an aggregate store, a dedup index, and a compacted dedup index
+    // — all healthy, all must audit EMPTY (the real false-positive
+    // test: _SUCCESS placement after a root swap)
     Streaming.mergeBenchmarkNgramBatch(
       docs.toDF("bid", "text"), "text", s"$tmp/reg", 0L, n = 8)
     Streaming.mergeDedupIndexBatch(docs, "text", "doc_id",
@@ -2498,16 +2186,14 @@ class StreamingSpec extends SparkSpec {
     Streaming.mergeDedupIndexBatch(
       Seq((7L, prose5 + " entirely new tail")).toDF("doc_id", "text"),
       "text", "doc_id", s"$tmp/dix", 1L)
-    val frozen = graft.ops.Dedup.shingleDfTable(docs, "text", 3)
-    Streaming.mergeJaccardIndexBatch(docs, "text", "doc_id",
-      s"$tmp/jix", 0L, frozen, n = 3, minJaccard = 0.8)
-    Streaming.mergeJaccardIndexBatch(
+    Streaming.mergeDedupIndexBatch(docs, "text", "doc_id",
+      s"$tmp/cdix", 0L)
+    Streaming.mergeDedupIndexBatch(
       Seq((9L, prose1 + " with a divergent ending")).toDF(
         "doc_id", "text"),
-      "text", "doc_id", s"$tmp/jix", 1L, frozen, n = 3,
-      minJaccard = 0.8)
-    Streaming.compactJaccardIndex(spark, s"$tmp/jix")
-    for (s <- Seq("reg", "dix", "jix"))
+      "text", "doc_id", s"$tmp/cdix", 1L)
+    Streaming.compactDedupIndex(spark, s"$tmp/cdix")
+    for (s <- Seq("reg", "dix", "cdix"))
       assert(Streaming.fsckStore(spark, s"$tmp/$s").isEmpty,
         s"store $s should audit clean")
     // plant one defect per class
@@ -2518,8 +2204,6 @@ class StreamingSpec extends SparkSpec {
     val dixBatch = new java.io.File(s"$tmp/dix").listFiles()
       .map(_.getName).filter(_.startsWith("batch=")).head
     Files.delete(Paths.get(s"$tmp/dix/$dixBatch/_SUCCESS"))
-    Files.createDirectories(
-      Paths.get(s"$tmp/jix/.df_table.compact.tmp"))
     // a STALE lease (crashed holder) is surfaced; a FRESH one is a
     // live holder and is not
     Files.write(Paths.get(s"$tmp/.reg.lock"), "tok".getBytes("UTF-8"))
@@ -2539,7 +2223,7 @@ class StreamingSpec extends SparkSpec {
       Files.write(Paths.get(s"$tmp/$husk"), "tok".getBytes("UTF-8"))
       Files.setLastModifiedTime(Paths.get(s"$tmp/$husk"), old)
     }
-    Files.write(Paths.get(s"$tmp/.jix.lock.break.dddd"),
+    Files.write(Paths.get(s"$tmp/.cdix.lock.break.dddd"),
       "tok".getBytes("UTF-8"))
     def got(s: String) = Streaming.fsckStore(spark, s"$tmp/$s")
       .collect().map(r => (r.getString(0), r.getString(2),
@@ -2553,14 +2237,11 @@ class StreamingSpec extends SparkSpec {
       ("store", "warn", s"dix/$dixBatch"), // fresh lock: no finding
       ("lease", "warn", ".dix.lock.break.bbbb"),
       ("lease", "warn", ".dix.lock.release.cccc")))
-    assert(got("jix") === Set( // fresh break claim: no finding
-      ("swap", "warn", "jix/.df_table.compact.tmp")))
+    assert(got("cdix") === Set()) // fresh break claim: no finding
     // heal clears the safe classes; the mark and torn dir stay put
     val healed = Streaming.fsckStore(spark, s"$tmp/reg", heal = true)
       .where(col("healed")).collect().map(_.getString(1)).toSet
     assert(healed === Set(s"$tmp/.reg.stats.old"))
-    Streaming.fsckStore(spark, s"$tmp/jix", heal = true)
-    assert(got("jix") === Set.empty)
     // the mark, the torn dir, and the lease debris need an operator /
     // a replay — never auto-healed. The stale lease is gone as a SIDE
     // EFFECT of the heal's own serialization: acquiring the store
@@ -3704,8 +3385,8 @@ class StreamingSpec extends SparkSpec {
     // crush it, gzip ~9x beyond snappy) and the LARGEST parquet file,
     // so it IS the calibration candidate at test scale; batches 1-2:
     // distinct sha512 hex (snappy near-1x, gzip ~0.55x) carrying the
-    // OUTPUT-byte majority — the exact shape the ExportProbe skew
-    // fixture measured landing one 3.2x-target shard at full scale
+    // OUTPUT-byte majority — the exact shape of the skew fixture that
+    // landed one 3.2x-target shard at full scale (PERF.md)
     import spark.implicits._
     val compressible = spark.range(9000L).toDF("doc_id")
       .selectExpr("doc_id", "repeat(md5(cast(doc_id as string)), 200) as text")

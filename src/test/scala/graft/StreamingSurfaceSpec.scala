@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 /** Keeps `object Streaming` down to the curation store: a public def
   * that nothing outside `Streaming.scala` calls — no registry query,
-  * pipeline, entry point, dev probe or perfbench workload — fails here
+  * pipeline, entry point or perfbench workload — fails here
   * unless it is one of the curation store's lifecycle entry points
   * named below. A caller is a qualified `Streaming.<name>` outside
   * comments and string literals. */
@@ -14,11 +14,11 @@ class StreamingSurfaceSpec extends AnyFunSuite {
   /** Curation-store readers, writers and maintenance passes that users
     * and the specs drive directly but no program entry point calls. */
   private val lifecycle = Set(
-    "compactCurationCorpus", "curationIngestSinkExact", "deconAudit",
+    "compactCurationCorpus", "compactDedupIndex", "deconAudit",
     "decontaminateAgainstIndex", "dropSnapshot", "fsckStore",
     "listSnapshots", "readBenchmarkNgrams", "readCurationTombstones",
-    "readDedupIndex", "readJaccardDfTable", "readJaccardIndexArrays",
-    "readWordHistogram", "rebuildJaccardIndex", "writeJaccardDfTable")
+    "readDedupIndex", "readSnapshot", "readWordHistogram",
+    "rebuildCurationStats")
 
   private val literalOrComment =
     """(?s)/\*.*?\*/|//[^\n]*|\"{3}.*?\"{3}|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\\n])'""".r
